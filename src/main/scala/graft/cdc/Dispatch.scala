@@ -322,7 +322,9 @@ object Dispatch {
     * via [[graft.sources.ManifestTable.mergeDv]] — updated keys' current
     * positions join the deletion vector and the batch APPENDS as a new data
     * version alongside the partitions' existing files, so per-batch WRITE
-    * I/O is O(batch rows), not O(touched partitions) (VERDICT r12 #1: the
+    * I/O is O(batch rows + accumulated deletes) — the deletion vector is
+    * rewritten whole until the next compaction — not O(touched
+    * partitions) (VERDICT r12 #1: the
     * copy-on-write leg's write amplification was the engine's largest at
     * 100 TB with hot partitions). Same partCol-immutable-per-key contract.
     *
@@ -354,10 +356,14 @@ object Dispatch {
         else {
           ManifestTable.mergeDv(deduped, targetPath, schema, mergeKey,
             Some(partCol), statsCols = statsCols)
-          if ((batchId + 1) % compactEvery == 0)
+          val compacting = (batchId + 1) % compactEvery == 0
+          if (compacting)
             ManifestTable.compact(spark, targetPath, schema, Some(partCol),
               statsCols = statsCols)
-          ManifestTable.vacuum(spark, targetPath, retainVersions = 1)
+          // keep one version per version this batch published: the version
+          // the batch started from is where a change-feed reader one batch
+          // behind resumes, and its manifest and DV must survive
+          ManifestTable.vacuum(spark, targetPath, retainVersions = if (compacting) 2 else 1)
         }
         ()
       }

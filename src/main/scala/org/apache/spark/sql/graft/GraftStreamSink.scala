@@ -16,7 +16,8 @@ import graft.sources.ManifestTable
   *  - default: BLIND APPEND (O(batch) write, commutes with any concurrent
   *    commit) — the event-log / audit-log sink.
   *  - `mergeKey = k1[,k2…]`: keyed MERGE per micro-batch
-  *    ([[ManifestTable.mergeDv]], O(batch + matched positions)) — the
+  *    ([[ManifestTable.mergeDv]], O(batch + accumulated deletes) written:
+  *    the DV is rewritten whole until `compactEvery` folds it) — the
   *    continuously-upserted table.
   *  - `mergeKey` + `cdf = true`: the batch carries `_change_type` rows (a
   *    [[GraftChangeFeedSource]] feed): inserts/update-postimages upsert,
@@ -170,8 +171,10 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
               ManifestTable.mergeDvSpec(ups0.limit(0), root, tableSchema, mergeKeys,
                 spec, Nil, Nil, Some(dels), delParts)
           } else if (nUps + nDels > 0)
+            // no delete rows: no delete leg, so the position scan stays on
+            // the touched partitions whatever the spec
             ManifestTable.mergeDvSpec(ups0, root, tableSchema, mergeKeys, spec,
-              Nil, Nil, Some(dels), delParts)
+              Nil, Nil, Some(dels).filter(_ => nDels > 0), delParts)
         } else if (mergeKeys.nonEmpty) {
           val checked = graft.sources.Checks.enforce(batch,
             graft.sources.Checks.forTable(spark, root))

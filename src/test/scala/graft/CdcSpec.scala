@@ -617,6 +617,67 @@ class CdcSpec extends SparkSuite {
     assert(!new java.io.File(s"$tgt/v00000003/p=y").exists())
   }
 
+  test("merge-on-read CDC with inline compaction feeds a change-feed replica one batch behind") {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.sources.ManifestTable
+    val partSchema = StructType(Seq(
+      StructField("id", StringType), StructField("p", StringType),
+      StructField("v", LongType)))
+    val base = Files.createTempDirectory("cdc-mor-cdf").toFile.getAbsolutePath
+    val env = new java.io.File(base, "env")
+    assert(env.mkdirs())
+    val (tgt, rep) = (s"$base/target", s"$base/replica")
+    // the last-wins state the envelopes describe: id -> (p, v)
+    var want = Map.empty[String, (String, Long)]
+    val rnd = new scala.util.Random(17)
+    // one batch file, written beside the watched dir and renamed in: each
+    // batch inserts 6 fresh keys and updates 4 existing ones
+    def land(b: Int): Unit = {
+      val fresh = (0 until 6).map(i => s"k$b-$i")
+      val upd = rnd.shuffle(want.keys.toSeq.sorted).take(4)
+      val lines = (fresh ++ upd).zipWithIndex.map { case (id, i) =>
+        val op = if (want.contains(id)) "update" else "insert"
+        val p = want.get(id).map(_._1).getOrElse("p" + rnd.nextInt(4))
+        val v = b * 100L + i
+        want += id -> (p, v)
+        f"""{"operationType":"$op","documentKey":"$id","fullDocument":"{\\"id\\":\\"$id\\",\\"p\\":\\"$p\\",\\"v\\":$v}","clusterTime":"2024-01-01T00:$b%02d:$i%02d.000Z"}"""
+      }
+      val tmp = new java.io.File(base, s"b$b.json")
+      Files.write(tmp.toPath, lines.mkString("\n").getBytes("UTF-8"))
+      Files.move(tmp.toPath, new java.io.File(env, s"b$b.json").toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    def rowsOf(root: String) = ManifestTable.read(spark, root, partSchema)
+      .as[(String, String, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    land(0)
+    val cdc = Dispatch.runMergeOnRead(spark, env.getAbsolutePath, tgt, s"$base/ck-cdc",
+      partSchema, identity, "id", "id", "v", partCol = "p",
+      trigger = Trigger.ProcessingTime(0L), compactEvery = 2)
+    try {
+      cdc.processAllAvailable()
+      val replica = spark.readStream.format("graft").schema(partSchema)
+        .option("key", "id").load(tgt)
+        .writeStream.format("graft")
+        .option("partitionBy", "p").option("mergeKey", "id").option("cdf", "true")
+        .option("checkpointLocation", s"$base/ck-replica")
+        .trigger(Trigger.ProcessingTime(0L))
+        .start(rep)
+      try {
+        replica.processAllAvailable()
+        // closed loop: the replica trails each CDC batch, and every second
+        // CDC batch publishes two versions (merge, then compact)
+        for (b <- 1 to 6) {
+          land(b)
+          cdc.processAllAvailable()
+          replica.processAllAvailable()
+        }
+      } finally replica.stop()
+    } finally cdc.stop()
+    assert(rowsOf(tgt) == want)
+    assert(rowsOf(rep) == want)
+  }
+
   test("ST1-ST7 end-to-end: file-replayed stream -> foreachBatch -> parquet target") {
     import spark.implicits._
     val dir = Files.createTempDirectory("cdc-env").toFile

@@ -158,16 +158,7 @@ class PropertySpec extends SparkSuite {
   }
 
   test("folded convergence check runs fewer jobs than the diff-join loop") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
-    val sc = spark.sparkContext
-    val group = s"cc-jobs-${System.nanoTime()}"
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (group == js.properties.getProperty("spark.jobGroup.id"))
-          counter.incrementAndGet()
-    }
     // the r03-shape loop: same propagate round, but convergence is a
     // SEPARATE diff-join count() job — kept here as the comparison twin for
     // the VERDICT r03 #6 assertion (folding halves the per-round job count)
@@ -192,29 +183,17 @@ class PropertySpec extends SparkSuite {
         labels = next
       }
     }
-    sc.addSparkListener(listener)
-    try {
-      val pairs = (1L until 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-      val nodes = (1L to 8L).toDF("doc_id")
-      // warm-up outside the job group: codegen/AQE first-run noise
-      Dedup.connectedComponents(pairs, nodes, "doc_id").collect()
-      sc.setJobGroup(group, "folded")
-      Dedup.connectedComponents(pairs, nodes, "doc_id").collect()
-      org.apache.spark.graft.ListenerDrain.drain(sc)
-      val folded = counter.getAndSet(0)
-      sc.setJobGroup(group, "diff-join")
-      diffJoinCC(pairs, nodes)
-      org.apache.spark.graft.ListenerDrain.drain(sc)
-      val unfolded = counter.get()
-      // measured 41 vs 75 on this input (the diff-join adds ~4 AQE jobs per
-      // round). Per-round job counts are AQE-scheduling internals that shift
-      // across Spark upgrades, so assert only the INVARIANT the folding
-      // optimization guarantees — strictly fewer jobs — not a pinned ratio.
-      assert(folded < unfolded, s"folded=$folded unfolded=$unfolded")
-    } finally {
-      sc.removeSparkListener(listener)
-      sc.clearJobGroup()
-    }
+    val pairs = (1L until 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val nodes = (1L to 8L).toDF("doc_id")
+    // warm-up outside the count: codegen/AQE first-run noise
+    Dedup.connectedComponents(pairs, nodes, "doc_id").collect()
+    val folded = jobsIn(Dedup.connectedComponents(pairs, nodes, "doc_id").collect())
+    val unfolded = jobsIn(diffJoinCC(pairs, nodes))
+    // measured 41 vs 75 on this input (the diff-join adds ~4 AQE jobs per
+    // round). Per-round job counts are AQE-scheduling internals that shift
+    // across Spark upgrades, so assert only the INVARIANT the folding
+    // optimization guarantees — strictly fewer jobs — not a pinned ratio.
+    assert(folded < unfolded, s"folded=$folded unfolded=$unfolded")
   }
 
   test("packing invariants hold across random workloads") {
@@ -381,36 +360,60 @@ class PropertySpec extends SparkSuite {
       }
       ManifestTable.commit(init.toDF("k1", "k2", "p", "v"), root, Some("p"))
       val v0 = ManifestTable.currentVersion(spark, root).get
-      for (_ <- 1 to 3) {
-        val ups = (1 to 8).map(_ => randKey()).distinct.map { k =>
+      // the model state at every committed version
+      var states = Map(v0 -> model)
+      // `upParts`: the partitions the upsert leg appends to. Appending to
+      // all three lets changes() skip its DV diff; a batch confined to p0
+      // whose deletes land elsewhere needs that diff to see them
+      def merge(hinted: Boolean, upParts: Set[String] = Set("p0", "p1", "p2")): Unit = {
+        val ups = ((0L to 2L).map(k1 => (k1, rnd.nextInt(5).toLong)) ++
+          (1 to 8).map(_ => randKey())).filter(k => upParts(partOf(k))).distinct.map { k =>
           (k, rnd.nextLong() % 1000)
         }
         val dels = (1 to 5).map(_ => randKey()).distinct
         // model replay of ONE merge commit: deletes and upsert supersessions
         // mask pre-merge copies; a key in both legs keeps the upsert
         model = (model -- dels -- ups.map(_._1)) ++ ups.map { case (k, v) => k -> v }
-        ManifestTable.mergeDv(
+        // hinted: the delete leg names its partitions, so the position scan
+        // is restricted; unhinted: the full-snapshot scan
+        val v = ManifestTable.mergeDv(
           ups.map { case (k, v) => (k._1, k._2, partOf(k), v) }.toDF("k1", "k2", "p", "v"),
           root, schema, Seq("k1", "k2"), Some("p"), Nil, Nil,
           Some(dels.map(k => (k._1, k._2)).toDF("k1", "k2")),
-          Some(dels.map(k => ManifestTable.partDirName("p", partOf(k))).distinct))
+          if (hinted) Some(dels.map(k => ManifestTable.partDirName("p", partOf(k))).distinct)
+          else None)
+        states += v -> model
       }
+      merge(hinted = true)
+      merge(hinted = true)
+      // a deleteWhere commit moves the DV without appending anything
+      model = model.filter { case (_, v) => v % 2 != 0 }
+      states += ManifestTable.deleteWhere(spark, root, schema, col("v") % 2 === 0) -> model
+      merge(hinted = true)
+      merge(hinted = false)
+      merge(hinted = true, upParts = Set("p0"))
       val got = ManifestTable.read(spark, root, schema)
         .as[(Long, Long, String, Long)].collect()
         .map(r => (r._1, r._2) -> r._4).toMap
       assert(got == model, s"seed $seed final state")
-      // the net change feed over the whole range equals the model diff
-      val vN = ManifestTable.currentVersion(spark, root).get
-      val ch = ManifestTable.changes(spark, root, schema, Seq("k1", "k2"), v0, vN)
-        .select("_change_type", "k1", "k2")
-        .as[(String, Long, Long)].collect()
-      val initM = init.map(r => (r._1, r._2) -> r._4).toMap
-      val expIns = model.keySet -- initM.keySet
-      val expDel = initM.keySet -- model.keySet
-      val expUpd = (model.keySet & initM.keySet).filter(k => model(k) != initM(k))
-      assert(ch.collect { case ("insert", a, b) => (a, b) }.toSet == expIns, s"seed $seed ins")
-      assert(ch.collect { case ("delete", a, b) => (a, b) }.toSet == expDel, s"seed $seed del")
-      assert(ch.collect { case ("update_postimage", a, b) => (a, b) }.toSet == expUpd, s"seed $seed upd")
+      // the net change feed equals the model diff on every adjacent window,
+      // on a window spanning merge commits around the deleteWhere, and
+      // on the whole range
+      val vs = states.keys.toSeq.sorted
+      val windows = vs.zip(vs.tail) ++ Seq((vs(1), vs(4)), (vs.head, vs.last))
+      windows.foreach { case (a, b) =>
+        val ch = ManifestTable.changes(spark, root, schema, Seq("k1", "k2"), a, b)
+          .select("_change_type", "k1", "k2")
+          .as[(String, Long, Long)].collect()
+        val (before, after) = (states(a), states(b))
+        val expIns = after.keySet -- before.keySet
+        val expDel = before.keySet -- after.keySet
+        val expUpd = (after.keySet & before.keySet).filter(k => after(k) != before(k))
+        val w = s"seed $seed window ($a, $b)"
+        assert(ch.collect { case ("insert", x, y) => (x, y) }.toSet == expIns, s"$w ins")
+        assert(ch.collect { case ("delete", x, y) => (x, y) }.toSet == expDel, s"$w del")
+        assert(ch.collect { case ("update_postimage", x, y) => (x, y) }.toSet == expUpd, s"$w upd")
+      }
     }
   }
 

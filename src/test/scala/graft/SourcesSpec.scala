@@ -1564,6 +1564,57 @@ class SourcesSpec extends SparkSuite {
     assert(ManifestTable.versions(spark, root).size == 4)
   }
 
+  test("changes() over a mergeDv batch that appends to every partition runs no Spark job") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val root = java.nio.file.Files.createTempDirectory("mandvcover").toString + "/t"
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("p", StringType), StructField("v", LongType)))
+    def rows(xs: (Long, String, Long)*) = xs.toDF("k", "p", "v")
+    def part(p: String) = ManifestTable.partDirName("p", p)
+    def feed(a: Long, b: Long) = ManifestTable.changes(spark, root, schema, "k", a, b)
+      .as[(String, Long, String, Long)].collect().toSet
+    ManifestTable.commit(rows((1L, "a", 10L), (2L, "b", 20L), (3L, "b", 30L)), root, Some("p"))
+    // appends to p=a only: deleting k=3 changes p=b's masking, not its
+    // entries, so changes() must diff the DVs to find it
+    val v1 = ManifestTable.mergeDv(rows((1L, "a", 11L)), root, schema, Seq("k"), Some("p"),
+      Nil, Nil, Some(Seq(3L).toDF("k")), Some(Seq(part("b"))))
+    assert(feed(v1 - 1, v1) == Set(("update_preimage", 1L, "a", 10L),
+      ("update_postimage", 1L, "a", 11L), ("delete", 3L, "b", 30L)))
+    // appends to both partitions: every DV change lies inside them
+    val v2 = ManifestTable.mergeDv(rows((4L, "a", 40L), (5L, "b", 50L)), root, schema,
+      Seq("k"), Some("p"), Nil, Nil, Some(Seq(2L).toDF("k")), Some(Seq(part("b"))))
+    assert(jobsIn(ManifestTable.changes(spark, root, schema, "k", v2 - 1, v2)) == 0)
+    assert(feed(v2 - 1, v2) ==
+      Set(("insert", 4L, "a", 40L), ("insert", 5L, "b", 50L), ("delete", 2L, "b", 20L)))
+  }
+
+  test("a two-leg mergeDv runs no more Spark jobs than the same batch upsert-only") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("p", StringType), StructField("v", LongType)))
+    def rows(xs: (Long, String, Long)*) = xs.toDF("k", "p", "v")
+    def part(p: String) = ManifestTable.partDirName("p", p)
+    // two tables in the same state, each already carrying a DV
+    val roots = Seq("a", "b").map(n =>
+      java.nio.file.Files.createTempDirectory(s"mandvjobs-$n").toString + "/t")
+    roots.foreach { root =>
+      ManifestTable.commit((1L to 40L).map(k => (k, s"q${k % 4}", k)).toDF("k", "p", "v"),
+        root, Some("p"))
+      ManifestTable.mergeDv(rows((1L, "q1", 100L)), root, schema, Seq("k"), Some("p"),
+        Nil, Nil, None, None)
+    }
+    val batch = rows((5L, "q1", 500L), (41L, "q1", 41L), (2L, "q2", 200L))
+    val upsertOnly = jobsIn(ManifestTable.mergeDv(batch, roots(0), schema, Seq("k"),
+      Some("p"), Nil, Nil, None, None))
+    val twoLeg = jobsIn(ManifestTable.mergeDv(batch, roots(1), schema, Seq("k"),
+      Some("p"), Nil, Nil, Some(Seq(3L, 7L).toDF("k")), Some(Seq(part("q3")))))
+    assert(twoLeg <= upsertOnly, s"two-leg $twoLeg jobs, upsert-only $upsertOnly")
+    assert(ManifestTable.read(spark, roots(1), schema).select("k").as[Long].collect().toSet ==
+      (1L to 41L).toSet -- Set(3L, 7L))
+  }
+
   test("composite-key changes() and replicate() fold a dup-keyed table correctly") {
     import spark.implicits._
     import graft.sources.ManifestTable
