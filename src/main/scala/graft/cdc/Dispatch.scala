@@ -226,59 +226,22 @@ object Dispatch {
       StructField("clusterTime", StringType)))).json(dir))
   }
 
-  /** ST1-ST7 wired end-to-end: stream envelopes → foreachBatch(applyBatch) →
-    * manifest-committed target ([[graft.sources.ManifestTable]]; read the
-    * accumulated state back with `ManifestTable.read`). `Trigger
-    * .AvailableNow` is the reference's hourly cron (ST7) in streaming
-    * clothes; pass `ProcessingTime` for a long-running tail.
-    *
-    * Each micro-batch reads the current snapshot, merges, and commits the
-    * next immutable version; the manifest rename is the one atomic step, so
-    * a crash at any instant leaves the table at the old or new snapshot —
-    * never partial, no startup recovery pass (this replaced the r2-r11
-    * `.bak` swap-rename dance, whose recovery leg the old scaladoc spent
-    * three paragraphs on).
-    */
-  def run(spark: SparkSession, envelopeDir: String, targetPath: String,
-          checkpoint: String, docSchema: StructType,
-          promote: DataFrame => DataFrame, rawKey: String, mergeKey: String,
-          tieCol: String,
-          trigger: Trigger = Trigger.AvailableNow(),
-          statsCols: Seq[String] = Nil): StreamingQuery = {
-    import graft.sources.ManifestTable
-    fileCdcSource(spark, envelopeDir).writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val schema = promoteSchema(spark, docSchema, promote)
-        val target =
-          if (ManifestTable.exists(spark, targetPath))
-            ManifestTable.read(spark, targetPath, schema)
-          else
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              schema)
-        val merged = applyBatch(target, batch, docSchema, promote, rawKey, mergeKey, tieCol)
-        ManifestTable.commit(merged, targetPath, partCol = None,
-          statsCols = statsCols)
-        ManifestTable.vacuum(spark, targetPath, retainVersions = 1)
-        ()
-      }
-      .start()
-  }
-
-  /** The 100 TB form of [[run]]: the target is PARTITIONED on `partCol` and
-    * each micro-batch rewrites only the partitions its keys touch
-    * ([[Upsert.mergePartitionPruned]] + dynamic partition overwrite) — per-
-    * batch I/O is O(touched partitions), not O(target). [[run]]'s swap-rewrite
-    * of the whole target was the one remaining scale-killer (VERDICT r02).
+  /** ST1-ST7 wired end-to-end as a copy-on-write stream: envelopes →
+    * `foreachBatch` → a manifest-committed target PARTITIONED on `partCol`
+    * ([[graft.sources.ManifestTable]]; read the accumulated state back with
+    * `ManifestTable.read`). Each micro-batch rewrites only the partitions its
+    * keys touch ([[Upsert.mergePartitionPruned]]) — per-batch I/O is
+    * O(touched partitions), not O(target). `Trigger.AvailableNow` is the
+    * reference's hourly cron (ST7) in streaming clothes; pass
+    * `ProcessingTime` for a long-running tail.
     *
     * CONTRACT: `partCol` must be IMMUTABLE PER KEY — derived from the merge
     * key (e.g. a hash prefix) or a never-updated attribute. An update that
     * moves a key to a new partition value would merge into the NEW partition
     * while the stale row in the old partition is outside the pruned read and
     * survives as a duplicate. This is the same restriction lakehouse MERGEs
-    * place on partition-evolution; [[run]] (full merge) has no such
-    * restriction.
+    * place on partition-evolution; the batch form [[applyBatch]] (full
+    * merge) has no such restriction.
     *
     * The commit is a [[graft.sources.ManifestTable]] version: the merged
     * TOUCHED partitions land in a fresh immutable version dir (O(touched)
@@ -318,21 +281,25 @@ object Dispatch {
       .start()
   }
 
-  /** The merge-on-read form of [[runPartitioned]]: each micro-batch commits
-    * via [[graft.sources.ManifestTable.mergeDv]] — updated keys' current
+  /** The merge-on-read form of [[runPartitioned]]: each micro-batch's
+    * upsert leg, deduped and promoted, goes through the keyed-merge
+    * [[org.apache.spark.sql.graft.GraftStreamSink]] — the one apply path
+    * for change batches, shared with `writeStream.format("graft")` and
+    * [[graft.sources.ManifestTable.replicate]]. The sink creates the table
+    * on the first batch and merges every later one with
+    * [[graft.sources.ManifestTable.mergeDv]]: updated keys' current
     * positions join the deletion vector and the batch APPENDS as a new data
-    * version alongside the partitions' existing files, so per-batch WRITE
-    * I/O is O(batch rows + accumulated deletes) — the deletion vector is
-    * rewritten whole until the next compaction — not O(touched
-    * partitions) (VERDICT r12 #1: the
-    * copy-on-write leg's write amplification was the engine's largest at
-    * 100 TB with hot partitions). Same partCol-immutable-per-key contract.
+    * version, so per-batch WRITE I/O is O(batch rows + accumulated deletes)
+    * — the deletion vector is rewritten whole until the next compaction —
+    * not O(touched partitions) (VERDICT r12 #1). Same partCol-immutable-per-
+    * key contract.
     *
-    * Read cost grows with the append log; every `compactEvery` batches the
-    * stream folds the log back into one clean version via
-    * [[graft.sources.ManifestTable.compact]] — the Delta merge-on-read +
-    * OPTIMIZE pairing, inline because this driver is the table's single
-    * writer. Deletes are dropped as in every reference-shaped sink (ST5);
+    * EXACTLY-ONCE: the stream's batch id rides the commit's manifest (the
+    * sink's `#batch` record), so a batch replayed after its commit landed
+    * publishes nothing. Every `compactEvery` batches the sink folds the
+    * append log into one clean version, and it vacuums after every batch
+    * keeping the version a change-feed reader one batch behind resumes
+    * from. Deletes are dropped as in every reference-shaped sink (ST5);
     * compose with `ManifestTable.deleteWhere` when propagation is wanted.
     */
   def runMergeOnRead(spark: SparkSession, envelopeDir: String, targetPath: String,
@@ -340,32 +307,15 @@ object Dispatch {
                      promote: DataFrame => DataFrame, rawKey: String,
                      mergeKey: String, tieCol: String, partCol: String,
                      trigger: Trigger = Trigger.AvailableNow(),
-                     statsCols: Seq[String] = Nil,
                      compactEvery: Int = 32): StreamingQuery = {
-    import graft.sources.ManifestTable
     require(compactEvery >= 1, s"compactEvery=$compactEvery")
+    val sink = new org.apache.spark.sql.graft.GraftStreamSink(spark.sqlContext,
+      targetPath, Some(partCol), Seq(mergeKey), cdf = false, compactEvery)
     fileCdcSource(spark, envelopeDir).writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val schema = promoteSchema(spark, docSchema, promote)
-        val deduped = promote(upsertLeg(batch, docSchema, rawKey, tieCol))
-        if (!ManifestTable.exists(spark, targetPath))
-          ManifestTable.commit(deduped, targetPath, Some(partCol),
-            statsCols = statsCols)
-        else {
-          ManifestTable.mergeDv(deduped, targetPath, schema, mergeKey,
-            Some(partCol), statsCols = statsCols)
-          val compacting = (batchId + 1) % compactEvery == 0
-          if (compacting)
-            ManifestTable.compact(spark, targetPath, schema, Some(partCol),
-              statsCols = statsCols)
-          // keep one version per version this batch published: the version
-          // the batch started from is where a change-feed reader one batch
-          // behind resumes, and its manifest and DV must survive
-          ManifestTable.vacuum(spark, targetPath, retainVersions = if (compacting) 2 else 1)
-        }
-        ()
+        sink.addBatch(batchId, promote(upsertLeg(batch, docSchema, rawKey, tieCol)))
       }
       .start()
   }

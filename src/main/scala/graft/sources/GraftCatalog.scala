@@ -1147,7 +1147,7 @@ private[sources] object FieldIds {
         // steady state. Some(empty) = genuinely id-less (path-first root,
         // or a declared pre-field-id table) — the common case, zero retries.
         def loadNow(st: (Long, Long)): Option[Map[String, Int]] =
-          if (st == (-1L, -1L) && !hasStaged(fs, root)) Some(Map.empty[String, Int])
+          if (st == (-1L, -1L) && !GraftDdl.hasStaged(spark, root)) Some(Map.empty[String, Int])
           else GraftDdl.load(spark, root).map(d => parse(d.props))
         // An id-carrying table's sidecar cannot legitimately become id-less
         // mid-process: an empty/missing read here means a CONCURRENT
@@ -1180,7 +1180,7 @@ private[sources] object FieldIds {
         // published sidecar is still absent — a persistent load failure
         // there is the same poisoning hazard, not a sidecar-less root
         // (ADVICE r21)
-        if (loaded.isEmpty && (st != (-1L, -1L) || hasStaged(fs, root)))
+        if (loaded.isEmpty && (st != (-1L, -1L) || GraftDdl.hasStaged(spark, root)))
           throw new IllegalStateException(
             s"field-id sidecar for $root is unreadable: ${GraftDdl.FileName} " +
               "(or its staged-#ddl authority) exists but did not load after " +
@@ -1195,14 +1195,6 @@ private[sources] object FieldIds {
               "id-less data file would fail every later read of this table)")
         memo.put(root, (st, ids))
         enable(spark, ids)
-    }
-  }
-
-  private def hasStaged(fs: FileSystem, root: String): Boolean = {
-    val rootP = new Path(root)
-    fs.exists(rootP) && fs.listStatus(rootP).exists { st =>
-      val n = st.getPath.getName
-      n.startsWith(GraftDdl.StagedPrefix) && n.endsWith(".json")
     }
   }
 
@@ -1452,13 +1444,14 @@ private[sources] object GraftDdl {
     name
   }
 
-  /** The staged-DDL authority, if one is live: the NEWEST retained
-    * manifest carrying a `#ddl` directive whose staged file still exists
-    * (i.e. an RTAS committed but its sidecar promotion has not completed).
-    * Gated on a cheap staged-file listing so the common no-RTAS load never
-    * scans manifests.
+  /** Name of the live staged-DDL authority, if any: the NEWEST retained
+    * manifest's `#ddl` directive, when the staged file it names still
+    * exists (i.e. an RTAS committed but its sidecar promotion has not
+    * completed). Gated on a cheap staged-file listing so the common no-RTAS
+    * load never scans manifests. A staged file no directive names is
+    * pre-publish crash debris, never authority — vacuum sweeps it.
     */
-  private def stagedAuthority(spark: SparkSession, root: String): Option[(Path, Ddl)] = {
+  private def stagedName(spark: SparkSession, root: String): Option[String] = {
     val rootP = new Path(root)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(rootP)) return None
@@ -1469,14 +1462,24 @@ private[sources] object GraftDdl {
       .flatMap(v => ManifestTable.directiveOf(spark, root, v, "ddl"))
       .nextOption()                       // ONLY the newest directive counts
       .filter(stagedNames.contains)       // promoted already -> sidecar rules
-      .flatMap { name =>
-        val p = new Path(rootP, name)
-        // a CONCURRENT loader can promote-and-delete between our listing
-        // and this read — by then the sidecar it installed is authoritative
-        try Some((p, parse(readBytes(fs, p))))
-        catch { case _: java.io.FileNotFoundException => None }
-      }
   }
+
+  /** Whether the table's schema authority may live ONLY in a staged file
+    * while `_ddl.json` is still absent — the one case where a sidecar-less
+    * root is not simply id-less ([[FieldIds.of]], [[PartSpecs.of]]).
+    */
+  def hasStaged(spark: SparkSession, root: String): Boolean =
+    stagedName(spark, root).isDefined
+
+  private def stagedAuthority(spark: SparkSession, root: String): Option[(Path, Ddl)] =
+    stagedName(spark, root).flatMap { name =>
+      val p = new Path(root, name)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // a CONCURRENT loader can promote-and-delete between our listing
+      // and this read — by then the sidecar it installed is authoritative
+      try Some((p, parse(readBytes(fs, p))))
+      catch { case _: java.io.FileNotFoundException => None }
+    }
 
   /** Parse a STAGED sidecar by name without promoting it — the write
     * seam's lookahead for commits that flip the schema atomically with

@@ -153,8 +153,10 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
     * `cdf` (with `mergeKey`: fold a `_change_type` change-feed batch —
     * upserts + deletes — making readStream→writeStream continuous
     * replication), `compactEvery` (fold the merge-on-read append log into
-    * one clean version every N batches and vacuum with one version
-    * retained — the inline OPTIMIZE cadence). The batch id rides a
+    * one clean version every N batches — the inline OPTIMIZE cadence — and
+    * vacuum after every batch, keeping one version per version the batch
+    * published, so a change-feed reader one batch behind keeps its
+    * version; 0, the default, does no maintenance). The batch id rides a
     * `#batch` directive inside each manifest commit (one atomic rename),
     * so crash replays are exactly-once in every mode, blind append
     * included.

@@ -2703,21 +2703,28 @@ object ManifestTable {
       appendEntries = true, dvStage = dvStage, mergeRules = true, ndv = ndv)
   }
 
-  private val WatermarkName = "_replica.watermark"
-
   /** Incrementally replicate `srcRoot`'s committed changes into a replica
     * table — the cross-system sync the reference's Mongo→BigQuery loop IS
     * (reference: src/process_insert_update_weather_data.py:166-187),
-    * restated over the change feed: each unapplied source version becomes
-    * ONE [[mergeDv]] commit (inserts + update postimages as the upsert
-    * batch, deletes as the delete leg), so replication cost is O(changed
-    * rows) per version, never O(table). A fresh replica seeds from the
-    * source's current snapshot. Progress rides a watermark file in the
-    * replica root, advanced AFTER each applied commit — at-least-once, and
-    * replays are idempotent (keyed merge; deleting an absent key is a
-    * no-op). Run at a cadence inside the source's vacuum retention window,
-    * the standard CDC-consumer contract ([[changes]] needs both manifests
-    * on disk). Returns the number of source versions applied.
+    * restated over the change feed and applied through the change-feed
+    * [[org.apache.spark.sql.graft.GraftStreamSink]] (`cdf = true`), the
+    * one keyed-apply path for change batches. A fresh replica is seeded as
+    * one batch: the source's current snapshot as all-`insert` rows (the
+    * shape [[org.apache.spark.sql.graft.GraftChangeFeedSource]] emits for
+    * its first batch), with the source version as its batch id. Each
+    * unapplied source version `v` then becomes one sink batch with id `v`
+    * — [[changes]] since the last applied version, inserts + update
+    * postimages upserting and deletes deleting in ONE [[mergeDv]] commit —
+    * so replication cost is O(changed rows) per version, never O(table).
+    *
+    * Progress is the sink's record — the `#batch` directive that rides
+    * each commit's manifest ∪ the `_sink.batch.N` marker — so it is
+    * EXACTLY-ONCE: a commit and its progress land in one atomic rename,
+    * and the marker survives a compaction or vacuum of the replica. A
+    * target that exists without that record is refused as "not a
+    * replica". Run at a cadence inside the source's vacuum retention
+    * window, the standard CDC-consumer contract ([[changes]] needs both
+    * manifests on disk). Returns the number of source versions applied.
     */
   def replicate(spark: SparkSession, srcRoot: String, dstRoot: String,
                 schema: StructType, key: String,
@@ -2728,54 +2735,27 @@ object ManifestTable {
   def replicate(spark: SparkSession, srcRoot: String, dstRoot: String,
                 schema: StructType, keys: Seq[String],
                 partCol: Option[String]): Int = {
-    import org.apache.spark.sql.functions.col
-    val (dstFs, dstP) = fsOf(spark, dstRoot)
-    val wmPath = new Path(dstP, WatermarkName)
-    def writeWm(v: Long): Unit = {
-      val out = dstFs.create(wmPath, true)
-      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    }
-    def readWm(): Long = {
-      val in = dstFs.open(wmPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
-    if (!exists(spark, dstRoot)) {
+    import org.apache.spark.sql.functions.{col, lit}
+    val sink = new org.apache.spark.sql.graft.GraftStreamSink(spark.sqlContext,
+      dstRoot, partCol, keys, cdf = true)
+    var from = sink.lastCommitted()
+    var seeded = 0
+    if (from < 0) {
+      require(!exists(spark, dstRoot),
+        s"replicate: $dstRoot exists but carries no sink batch record — not a replica of $srcRoot")
       val cur = currentVersion(spark, srcRoot).getOrElse(
         throw new IllegalStateException(s"replicate: source $srcRoot has no committed version"))
-      commit(read(spark, srcRoot, schema, Some(cur)), dstRoot, partCol)
-      writeWm(cur)
-      return 1
+      sink.addBatch(cur, read(spark, srcRoot, schema, Some(cur))
+        .select(lit("insert").as("_change_type") +: schema.fieldNames.toSeq.map(col): _*))
+      from = cur
+      seeded = 1
     }
-    require(dstFs.exists(wmPath),
-      s"replicate: $dstRoot exists but carries no $WatermarkName — not a replica of $srcRoot")
-    var wm = readWm()
-    val pending = versions(spark, srcRoot).filter(_ > wm)
-    var applied = 0
+    val pending = versions(spark, srcRoot).filter(_ > from)
     pending.foreach { v =>
-      val ch = changes(spark, srcRoot, schema, keys, wm, v).localCheckpoint()
-      try {
-        val ups = ch.filter(col("_change_type").isin("insert", "update_postimage"))
-          .drop("_change_type")
-        val delCols = (keys ++ partCol.toSeq).distinct
-        val dels = ch.filter(col("_change_type") === "delete")
-          .select(delCols.map(col): _*)
-        // CDF delete rows carry their partition value — restrict the delete
-        // leg's position scan to exactly those dirs (O(touched), never the
-        // whole replica); the collect is bounded by partitions-with-deletes
-        val delParts = partCol.map { pc =>
-          dels.select(col(pc)).distinct().collect()
-            .map(r => partDirName(pc, r.get(0))).toSeq
-        }
-        if (!ch.isEmpty)
-          mergeDv(ups, dstRoot, schema, keys, partCol, Nil, Nil,
-            deleteKeys = Some(dels), deletePartitions = delParts)
-        writeWm(v)
-        wm = v
-        applied += 1
-      } finally org.apache.spark.sql.graft.Checkpoints.release(ch)
+      sink.addBatch(v, changes(spark, srcRoot, schema, keys, from, v))
+      from = v
     }
-    applied
+    seeded + pending.size
   }
 
   /** OPTIMIZE — small-file compaction: rewrite the CURRENT snapshot into a

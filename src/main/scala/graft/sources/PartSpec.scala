@@ -430,7 +430,7 @@ object PartSpecs {
         // full load only on miss (first touch per process / sidecar change);
         // a staged-#ddl RTAS authority is honored like FieldIds.of does
         val specs =
-          if (stamp == ((-1L, -1L)) && !hasStaged(fs, root)) Seq.empty[PartSpec]
+          if (stamp == ((-1L, -1L)) && !GraftDdl.hasStaged(spark, root)) Seq.empty[PartSpec]
           else GraftDdl.load(spark, root).toSeq.flatMap { d =>
             d.schema.toSeq.flatMap { sch =>
               val cur = d.partCol.map(r => PartSpec.parse(r, sch))
@@ -440,14 +440,6 @@ object PartSpecs {
           }
         memo.put(root, (stamp, specs))
         specs
-    }
-  }
-
-  private def hasStaged(fs: org.apache.hadoop.fs.FileSystem, root: String): Boolean = {
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    fs.exists(rootP) && fs.listStatus(rootP).exists { st =>
-      val n = st.getPath.getName
-      n.startsWith(GraftDdl.StagedPrefix) && n.endsWith(".json")
     }
   }
 

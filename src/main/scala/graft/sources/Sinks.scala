@@ -9,19 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** S9/S10/S11: bulk append. One API covers the reference's three insert
-    * shapes (single-row, multi-row, bulk) because batching is the engine's
-    * default, not an optimization (SURVEY.md §4).
-    */
-  def append(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
-
-  /** Partitioned append — the 100 TB shape: co-locate by the column later
-    * merges/point-lookups prune on.
-    */
-  def appendPartitioned(df: DataFrame, path: String, partCol: String): Unit =
-    df.write.mode("append").partitionBy(partCol).parquet(path)
-
   /** S13: dead-letter sink — failed rows as JSON, index-tagged and stamped
     * the way the reference names its S3 objects
     * (reference: src/ingest_weather_data.py:35-45). The stamp is formatted
@@ -52,7 +39,7 @@ object Sinks {
                     schema: org.apache.spark.sql.types.StructType,
                     deadLetterPath: String, runTs: java.sql.Timestamp): Long = {
     val (ok, bad) = graft.ops.Integrity.nullAudit(df, schema)
-    append(ok, path)
+    ok.write.mode("append").parquet(path)
     val nBad = bad.count()
     if (nBad > 0)
       deadLetter(bad.withColumn("null_violations",
@@ -63,91 +50,6 @@ object Sinks {
   /** S14: local JSON dump (reference: src/extract_coordinates.py:21-24). */
   def jsonDump(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)
-
-  /** Small-file compaction: rewrite a parquet dir into `targetFiles` files
-    * (one file per partition directory when `partCol` is set — each
-    * partition value's rows collapse into a single task, so `targetFiles`
-    * there only caps concurrent write tasks; a hot partition still lands in
-    * one file). Streaming appends and per-batch merges accrete small files
-    * whose per-file open/footer cost eventually dominates scans at 100 TB;
-    * periodic compaction is the standard fix.
-    *
-    * SINGLE-WRITER: like every no-lakehouse-format rewrite in this engine,
-    * compaction must not race appends — an append landing mid-rewrite would
-    * be swapped out with the old dir. Run it from the maintenance window or
-    * the owning streaming driver between batches.
-    *
-    * Crash safety: temp-dir + swap with a `_graft_compacted` marker and
-    * NUMBERED backup slots (`.bak`, `.bak1`, `.bak2`, …). The invariant the
-    * protocol maintains at every instant is that the union of the target and
-    * the backup slots holds every row — `.compact_tmp` is always redundant,
-    * so recovery may discard it unconditionally, and no backup is deleted
-    * until the rebuilt target has committed (rename(tmp -> target) done).
-    * The old single-`.bak` protocol deleted the backup BEFORE the commit
-    * rename, so a crash in that window stranded the backup-only rows in a
-    * tmp dir recovery never consulted (ADVICE r03). The marker distinguishes
-    * "backups are stale leftovers of a COMPLETED swap" (deletable) from "the
-    * swap crashed and appends recreated the target" (union everything).
-    * Backups are deleted highest-slot-first so the surviving slots always
-    * form a prefix and probing for the first missing name finds them all.
-    * Schema-evolved dirs merge footers so no column is dropped; partition-
-    * column type inference is disabled for the rewrite so values round-trip
-    * verbatim ('00123' stays part=00123, never part=123).
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-              targetFiles: Int, partCol: Option[String] = None): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    def slot(k: Int) = new org.apache.hadoop.fs.Path(
-      if (k == 0) path + ".bak" else path + ".bak" + k)
-    def liveSlots(): Seq[org.apache.hadoop.fs.Path] =
-      Iterator.from(0).map(slot).takeWhile(fs.exists).toSeq
-    val marker = new org.apache.hadoop.fs.Path(p, "_graft_compacted")
-    val tmp = path + ".compact_tmp"
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    // Crash recovery FIRST (the CDC sink lesson, ADVICE r02). tmp is
-    // discardable by invariant; what to read depends on the marker.
-    fs.delete(tmpPath, true)
-    val baks = liveSlots()
-    val readPaths: Seq[String] =
-      if (fs.exists(p) && fs.exists(marker)) {
-        // completed swap: target supersedes every backup slot
-        baks.reverse.foreach(fs.delete(_, true))
-        Seq(path)
-      } else if (fs.exists(p)) {
-        // original data, or appends recreated the target after a crashed
-        // swap — the target and every backup slot hold real (disjoint) rows
-        path +: baks.map(_.toString)
-      } else {
-        require(baks.nonEmpty, s"compact: $path does not exist")
-        baks.map(_.toString) // crash between rename(tgt->slot) and commit
-      }
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val inferPrev = spark.conf.get(inferKey)
-    try {
-      spark.conf.set(inferKey, "false")
-      val df = spark.read.option("mergeSchema", "true").parquet(readPaths: _*)
-      partCol match {
-        case Some(pc) =>
-          df.repartition(targetFiles, col(pc))
-            .write.mode("overwrite").partitionBy(pc).parquet(tmp)
-        case None =>
-          df.repartition(targetFiles).write.mode("overwrite").parquet(tmp)
-      }
-    } finally spark.conf.set(inferKey, inferPrev)
-    fs.create(new org.apache.hadoop.fs.Path(tmpPath, "_graft_compacted")).close()
-    // Swap: park the target in the NEXT free slot (existing backups stay
-    // put), commit tmp, and only then clear the slots — every pre-commit
-    // crash leaves the data reachable via the target-absent/union branches.
-    if (fs.exists(p)) {
-      val free = slot(liveSlots().size)
-      require(fs.rename(p, free), s"compact: rename $p -> $free failed")
-    }
-    require(fs.rename(tmpPath, p),
-      s"compact: rename $tmp -> $p failed — previous data intact in backup slots")
-    liveSlots().reverse.foreach(fs.delete(_, true))
-  }
 
   /** Bucketed catalog table: pre-hash-partitioned and sorted on the join/
     * merge key so repeated joins between co-bucketed tables run with NO

@@ -4,14 +4,23 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
 
 import graft.sources.ManifestTable
 
 /** Structured-Streaming SINK for [[graft.sources.ManifestTable]] —
   * `df.writeStream.format("graft").option(…).start(root)` — the write half
   * of the continuous lakehouse loop (the read half is
-  * [[GraftChangeFeedSource]]). Three per-batch commit shapes:
+  * [[GraftChangeFeedSource]]) and the ONE keyed-apply path for change
+  * batches. Three callers drive it:
+  *
+  *  - `writeStream.format("graft")` ([[graft.sources.GraftSource]]);
+  *  - [[graft.cdc.Dispatch.runMergeOnRead]], which hands it each CDC
+  *    micro-batch's deduped upsert leg;
+  *  - [[graft.sources.ManifestTable.replicate]], which hands it the source
+  *    snapshot as its seed batch and then one change-feed batch per source
+  *    version, the version as the batch id.
+  *
+  * Three per-batch commit shapes:
   *
   *  - default: BLIND APPEND (O(batch) write, commutes with any concurrent
   *    commit) — the event-log / audit-log sink.
@@ -27,17 +36,27 @@ import graft.sources.ManifestTable
   *    (src/process_insert_update_weather_data.py:166-187) as one
   *    declarative pipeline with no driver code in the middle.
   *
+  * The first batch creates the table in every shape.
+  *
+  * MAINTENANCE, when `compactEvery > 0`: batch `b` compacts when
+  * `b > 0 && b % compactEvery == 0`, and every batch ends with a vacuum
+  * keeping one version per version it published (2 on a compaction batch,
+  * else 1), so a change-feed reader one batch behind still finds the
+  * version it resumes from. `compactEvery = 0` does no maintenance.
+  *
   * EXACTLY-ONCE: Structured Streaming replays the same `batchId` after a
   * crash; every table commit of a batch carries a `#batch\t<id>` directive
   * INSIDE the manifest ([[ManifestTable.withBatchId]]) — commit and
   * batch-id record appear in ONE atomic rename, so there is no window
   * where the data landed but the id didn't (the marker-after-commit gap
   * that would double-append a replayed blind-append batch). A numbered
-  * `_sink.batch.<id>` marker file is still written after the commit purely
-  * as a listing fast path (the id rides the file NAME so it appears
-  * atomically); recovery takes the max of both. One streaming writer per
-  * table, like every manifest committer; the keyed-merge shapes are
-  * additionally idempotent per batch content.
+  * `_sink.batch.<id>` marker file is still written after the commit as a
+  * listing fast path (the id rides the file NAME so it appears
+  * atomically) and as the record that survives a vacuum or compaction
+  * past the last batch commit; recovery takes the max of both
+  * ([[lastCommitted]]). One streaming writer per table, like every
+  * manifest committer; the keyed-merge shapes are additionally idempotent
+  * per batch content.
   *
   * Lives in `org.apache.spark.sql.graft`: the V1 sink seam
   * (`execution.streaming.Sink`) and the streaming→batch plan re-rooting
@@ -71,9 +90,12 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
       .toSeq
   }
 
-  // the manifest directive is the atomic truth; markers are a fast path
-  // that can lag one batch behind after a crash in the marker-write window
-  private def lastCommitted(): Long =
+  /** The highest batch id this sink committed at `root`, -1 when none: the
+    * progress record a caller resumes from. The manifest directive is the
+    * atomic truth; markers are a fast path that can lag one batch behind
+    * after a crash in the marker-write window.
+    */
+  def lastCommitted(): Long =
     (markerIds() ++ ManifestTable.lastBatchId(spark, root)).foldLeft(-1L)(math.max)
 
   private def writeMarker(batchId: Long): Unit = {
@@ -113,8 +135,8 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
     // _change_type column (change-feed rows appended verbatim) — there the
     // old emptiness probe counted every row, so must we
     val ctIdx = if (cdf) data.schema.fieldNames.indexOf("_change_type") else -1
-    val specEarly = activeSpec
-    val srcIdx = specEarly.filter(_.isIdentity)
+    val spec = activeSpec
+    val srcIdx = spec.filter(_.isIdentity)
       .map(sp => data.schema.fieldNames.indexOf(sp.source)).getOrElse(-1)
     val upsAcc = spark.sparkContext.longAccumulator(s"graft.sink.ups.$batchId")
     val delAcc = spark.sparkContext.longAccumulator(s"graft.sink.dels.$batchId")
@@ -140,69 +162,56 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
       delVals.value.asScala.toSeq.distinct
     }
     try {
+      if (cdf) {
+        require(mergeKeys.nonEmpty,
+          "graft sink: cdf mode requires option 'mergeKey' (the table's merge key columns)")
+        require(batch.columns.contains("_change_type"),
+          "graft sink: cdf mode expects a _change_type column (a graft change-feed stream)")
+      }
+      // cdf: inserts and update postimages land, deletes mask, preimages drop
+      val ups = if (!cdf) batch
+        else batch.filter(col("_change_type").isin("insert", "update_postimage"))
+          .drop("_change_type")
+      // CHECK constraints guard the rows that LAND; delete rows carry keys
+      // only and are masks, not writes
+      val checked = graft.sources.Checks.enforce(ups,
+        graft.sources.Checks.forTable(spark, root))
+      // a delete leg only when the batch holds delete rows: without one, the
+      // position scan stays on the touched partitions whatever the spec
+      val dels = Option.when(nDels > 0)(batch.filter(col("_change_type") === "delete")
+        .select((mergeKeys ++ spec.filter(_.isIdentity).map(_.source)).distinct.map(col): _*))
+      // the delete-leg partition hint only holds for identity specs: a
+      // hidden transform's dir value is derivable but an EVOLVED table may
+      // hold old-layout dirs — mergeDvSpec full-scans there
+      val delParts = spec.filter(_.isIdentity).map { sp =>
+        delValsDistinct.map(v => ManifestTable.partDirName(sp.source, v))
+      }
       ManifestTable.withBatchId(batchId) {
-        if (cdf) {
-          require(mergeKeys.nonEmpty,
-            "graft sink: cdf mode requires option 'mergeKey' (the table's merge key columns)")
-          require(batch.columns.contains("_change_type"),
-            "graft sink: cdf mode expects a _change_type column (a graft change-feed stream)")
-          val tableSchema = StructType(data.schema.fields.filterNot(_.name == "_change_type"))
-          val ups = batch.filter(col("_change_type").isin("insert", "update_postimage"))
-            .drop("_change_type")
-          val spec = specEarly
-          // CHECK constraints guard the rows that LAND (upsert postimages);
-          // delete rows carry keys only and are masks, not writes
-          val ups0 = graft.sources.Checks.enforce(ups,
-            graft.sources.Checks.forTable(spark, root))
-          val delCols = (mergeKeys ++ spec.filter(_.isIdentity).map(_.source)).distinct
-          val dels = batch.filter(col("_change_type") === "delete")
-            .select(delCols.map(col): _*)
-          // the delete-leg partition hint only holds for identity specs:
-          // a hidden transform's dir value is derivable but an EVOLVED
-          // table may hold old-layout dirs — mergeDvSpec full-scans there
-          val delParts = spec.filter(_.isIdentity).map { sp =>
-            delValsDistinct.map(v => ManifestTable.partDirName(sp.source, v))
-          }
-          if (!ManifestTable.exists(spark, root)) {
-            ManifestTable.commitSpec(ups0, root, spec)
-            // a mixed first batch (dst dropped while the source checkpoint
-            // survived) must not silently drop its delete rows
-            if (nDels > 0)
-              ManifestTable.mergeDvSpec(ups0.limit(0), root, tableSchema, mergeKeys,
-                spec, Nil, Nil, Some(dels), delParts)
-          } else if (nUps + nDels > 0)
-            // no delete rows: no delete leg, so the position scan stays on
-            // the touched partitions whatever the spec
-            ManifestTable.mergeDvSpec(ups0, root, tableSchema, mergeKeys, spec,
-              Nil, Nil, Some(dels).filter(_ => nDels > 0), delParts)
-        } else if (mergeKeys.nonEmpty) {
-          val checked = graft.sources.Checks.enforce(batch,
-            graft.sources.Checks.forTable(spark, root))
-          if (!ManifestTable.exists(spark, root))
-            ManifestTable.commitSpec(checked, root, activeSpec)
-          else if (nUps > 0)
-            ManifestTable.mergeDvSpec(checked, root, data.schema, mergeKeys,
-              activeSpec, Nil, Nil, None, None)
-        } else {
-          val checked = graft.sources.Checks.enforce(batch,
-            graft.sources.Checks.forTable(spark, root))
-          if (!ManifestTable.exists(spark, root))
-            ManifestTable.commitSpec(checked, root, activeSpec)
-          else if (nUps > 0)
-            ManifestTable.appendSpec(checked, root, activeSpec)
+        if (!ManifestTable.exists(spark, root)) {
+          ManifestTable.commitSpec(checked, root, spec)
+          // a mixed first cdf batch (dst dropped while the source checkpoint
+          // survived) must not silently drop its delete rows
+          dels.foreach(d => ManifestTable.mergeDvSpec(checked.limit(0), root, ups.schema,
+            mergeKeys, spec, Nil, Nil, Some(d), delParts))
+        } else if (nUps + nDels > 0) {
+          if (mergeKeys.isEmpty) ManifestTable.appendSpec(checked, root, spec)
+          else ManifestTable.mergeDvSpec(checked, root, ups.schema, mergeKeys, spec,
+            Nil, Nil, dels, delParts)
         }
       }
       writeMarker(batchId)
       // the merge-on-read + OPTIMIZE pairing, inline: per-batch appends
       // accrete files and DV rows; every `compactEvery` batches the sink
-      // folds the append log into one clean version and vacuums with ONE
-      // version retained (an inline vacuum must keep >= 1 or a concurrent
-      // reader's resolved snapshot is deleted mid-scan)
-      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
-          && ManifestTable.exists(spark, root)) {
-        val tableSchema = ManifestTable.inferSchema(spark, root)
-        ManifestTable.compactSpec(spark, root, tableSchema, activeSpec)
-        ManifestTable.vacuum(spark, root, retainVersions = 1)
+      // folds the append log into one clean version. The vacuum keeps one
+      // version per version this batch published (merge, plus the compact
+      // on a compaction batch): the version the batch started from is where
+      // a change-feed reader one batch behind resumes, and where a
+      // concurrent reader's resolved snapshot may still be mid-scan
+      if (compactEvery > 0) {
+        val compacting = batchId > 0 && batchId % compactEvery == 0
+        if (compacting)
+          ManifestTable.compactSpec(spark, root, ManifestTable.inferSchema(spark, root), spec)
+        ManifestTable.vacuum(spark, root, retainVersions = if (compacting) 2 else 1)
       }
     } finally Checkpoints.release(batch)
   }

@@ -533,6 +533,25 @@ class CatalogSpec extends SparkSuite {
     spark.sql(s"DROP TABLE $t")
   }
 
+  test("an orphan staged DDL file at an id-less root blocks neither reads nor appends") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ddlorphan").toString + "/t"
+    // debris of an RTAS that staged its DDL and crashed before its commit:
+    // no manifest's #ddl directive names the file, and the root has no
+    // _ddl.json, so the table is id-less and the file is not authority
+    val orphan = java.nio.file.Paths.get(root, ".ddl-orphan.json")
+    Files.createDirectories(orphan.getParent)
+    Files.write(orphan, "{}".getBytes("UTF-8"))
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("k", org.apache.spark.sql.types.LongType)
+      .add("s", org.apache.spark.sql.types.StringType)
+    ManifestTable.commit(Seq((1L, "a")).toDF("k", "s"), root, None)
+    ManifestTable.append(Seq((2L, "b")).toDF("k", "s"), root, None)
+    assert(ManifestTable.read(spark, root, schema).as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "b")))
+    assert(Files.exists(orphan), "only vacuum sweeps the debris")
+  }
+
   test("CREATE OR REPLACE TABLE works on both missing and existing tables") {
     wh
     spark.sql("DROP TABLE IF EXISTS gcat.db.t_corp")

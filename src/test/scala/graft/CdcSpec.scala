@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -294,6 +294,16 @@ class CdcSpec extends SparkSuite {
     assert(messages(e).exists(_.contains("malformed fullDocument")))
   }
 
+  // the doc schema of the merge-on-read stream tests, partitioned by `p`
+  private val partSchema = StructType(Seq(
+    StructField("id", StringType), StructField("p", StringType),
+    StructField("v", LongType)))
+
+  // promote for `docSchema` streams: a partition column derived from the
+  // key, so it is immutable per key as the merge-on-read contract requires
+  private val withPart: DataFrame => DataFrame =
+    _.withColumn("p", substring(col("id"), 1, 1))
+
   test("restarted stream resumes from checkpoint and ACCUMULATES the target") {
     import spark.implicits._
     val dir = Files.createTempDirectory("cdc-env2").toFile
@@ -302,8 +312,8 @@ class CdcSpec extends SparkSuite {
     Files.write(new java.io.File(dir, "b1.json").toPath,
       """{"operationType":"insert","documentKey":"a","fullDocument":"{\"id\":\"a\",\"v\":1}","clusterTime":"2024-01-01T00:00:00.000Z"}"""
         .getBytes("UTF-8"))
-    val q1 = Dispatch.run(spark, dir.getAbsolutePath, tgt, ckpt, docSchema,
-      identity, "id", "id", "v")
+    val q1 = Dispatch.runMergeOnRead(spark, dir.getAbsolutePath, tgt, ckpt, docSchema,
+      withPart, "id", "id", "v", partCol = "p")
     q1.awaitTermination(60000)
     // second run, same checkpoint: must read the EXISTING target back (the
     // regression fixed here: a wrong-FS existence check read it as empty and
@@ -311,11 +321,11 @@ class CdcSpec extends SparkSuite {
     Files.write(new java.io.File(dir, "b2.json").toPath,
       """{"operationType":"insert","documentKey":"b","fullDocument":"{\"id\":\"b\",\"v\":2}","clusterTime":"2024-01-02T00:00:00.000Z"}"""
         .getBytes("UTF-8"))
-    val q2 = Dispatch.run(spark, dir.getAbsolutePath, tgt, ckpt, docSchema,
-      identity, "id", "id", "v")
+    val q2 = Dispatch.runMergeOnRead(spark, dir.getAbsolutePath, tgt, ckpt, docSchema,
+      withPart, "id", "id", "v", partCol = "p")
     q2.awaitTermination(60000)
-    val got = graft.sources.ManifestTable.read(spark, tgt, docSchema)
-      .as[(String, Long)].collect().toSet
+    val got = graft.sources.ManifestTable.read(spark, tgt, partSchema)
+      .select("id", "v").as[(String, Long)].collect().toSet
     assert(got == Set(("a", 1L), ("b", 2L)))
     // the inline vacuum retains ONE version behind current: a concurrent
     // reader that resolved manifest 1 just before commit 2 can finish its
@@ -323,10 +333,41 @@ class CdcSpec extends SparkSuite {
     assert(graft.sources.ManifestTable.currentVersion(spark, tgt).contains(2L))
     assert(new java.io.File(s"$tgt/v00000001").exists())
     assert(new java.io.File(s"$tgt/_manifest.00000001").exists())
-    // an offline retain-0 vacuum (no concurrent readers) reclaims them
+    // an offline retain-0 vacuum (no concurrent readers) reclaims them once
+    // a compaction has folded v1's files, which the merge-on-read commit 2
+    // carried forward, into a fresh version
+    graft.sources.ManifestTable.compact(spark, tgt, partSchema, Some("p"))
     graft.sources.ManifestTable.vacuum(spark, tgt)
     assert(!new java.io.File(s"$tgt/v00000001").exists())
     assert(!new java.io.File(s"$tgt/_manifest.00000001").exists())
+  }
+
+  test("a runMergeOnRead batch replayed after its commit landed publishes no new version") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val dir = Files.createTempDirectory("cdc-replay-env").toFile
+    val tgt = Files.createTempDirectory("cdc-replay-tgt").toFile.getAbsolutePath + "/target"
+    val ckpt = Files.createTempDirectory("cdc-replay-ckpt").toFile.getAbsolutePath
+    def land(name: String, lines: String*): Unit =
+      Files.write(new java.io.File(dir, name).toPath, lines.mkString("\n").getBytes("UTF-8"))
+    def runOnce(): Unit = Dispatch.runMergeOnRead(spark, dir.getAbsolutePath, tgt, ckpt,
+      partSchema, identity, "id", "id", "v", partCol = "p").awaitTermination(60000)
+    land("b1.json",
+      """{"operationType":"insert","documentKey":"a","fullDocument":"{\"id\":\"a\",\"p\":\"x\",\"v\":1}","clusterTime":"2024-01-01T00:00:00.000Z"}""")
+    runOnce()
+    land("b2.json",
+      """{"operationType":"update","documentKey":"a","fullDocument":"{\"id\":\"a\",\"p\":\"x\",\"v\":5}","clusterTime":"2024-01-02T00:00:00.000Z"}""",
+      """{"operationType":"insert","documentKey":"b","fullDocument":"{\"id\":\"b\",\"p\":\"y\",\"v\":2}","clusterTime":"2024-01-02T00:00:01.000Z"}""")
+    runOnce()
+    assert(ManifestTable.currentVersion(spark, tgt).contains(2L))
+    // a crash after batch 1's commit landed but before the checkpoint logged
+    // it: the restarted stream re-delivers batch 1 with the same offsets
+    for (n <- Seq("1", ".1.crc")) new java.io.File(s"$ckpt/commits/$n").delete()
+    runOnce()
+    assert(ManifestTable.currentVersion(spark, tgt).contains(2L),
+      "the replayed batch must not publish a second commit")
+    assert(ManifestTable.read(spark, tgt, partSchema).select("id", "v")
+      .as[(String, Long)].collect().toSet == Set(("a", 5L), ("b", 2L)))
   }
 
   test("ST6 retry: shrinking failure set converges within the attempt budget") {
@@ -375,9 +416,6 @@ class CdcSpec extends SparkSuite {
 
   test("partitioned streaming sink leaves untouched partitions byte-identical") {
     import spark.implicits._
-    val partSchema = StructType(Seq(
-      StructField("id", StringType), StructField("p", StringType),
-      StructField("v", LongType)))
     val dir = Files.createTempDirectory("cdc-part-env").toFile
     val tgt = Files.createTempDirectory("cdc-part-tgt").toFile.getAbsolutePath + "/target"
     val ckpt = Files.createTempDirectory("cdc-part-ckpt").toFile.getAbsolutePath
@@ -468,9 +506,6 @@ class CdcSpec extends SparkSuite {
 
   test("merge-on-read streaming sink: O(batch) writes, same state as copy-on-write") {
     import spark.implicits._
-    val partSchema = StructType(Seq(
-      StructField("id", StringType), StructField("p", StringType),
-      StructField("v", LongType)))
     val dir = Files.createTempDirectory("cdc-mor-env").toFile
     val tgt = Files.createTempDirectory("cdc-mor-tgt").toFile.getAbsolutePath + "/target"
     val ckpt = Files.createTempDirectory("cdc-mor-ckpt").toFile.getAbsolutePath
@@ -510,9 +545,6 @@ class CdcSpec extends SparkSuite {
 
   test("CDC commits publish zone maps: point-lookup range prunes the target's files") {
     import spark.implicits._
-    val partSchema = StructType(Seq(
-      StructField("id", StringType), StructField("p", StringType),
-      StructField("v", LongType)))
     val dir = Files.createTempDirectory("cdc-zm-env").toFile
     val tgt = Files.createTempDirectory("cdc-zm-tgt").toFile.getAbsolutePath + "/target"
     val ckpt = Files.createTempDirectory("cdc-zm-ckpt").toFile.getAbsolutePath
@@ -537,9 +569,6 @@ class CdcSpec extends SparkSuite {
 
   test("manifest commit is atomic: a crash mid-commit leaves the OLD snapshot readable") {
     import spark.implicits._
-    val partSchema = StructType(Seq(
-      StructField("id", StringType), StructField("p", StringType),
-      StructField("v", LongType)))
     val dir = Files.createTempDirectory("cdc-crash-env").toFile
     val tgt = Files.createTempDirectory("cdc-crash-tgt").toFile.getAbsolutePath + "/target"
     val ckpt = Files.createTempDirectory("cdc-crash-ckpt").toFile.getAbsolutePath
@@ -582,9 +611,6 @@ class CdcSpec extends SparkSuite {
 
   test("compact interleaves with merge commits: later batches carry forward from the compacted snapshot") {
     import spark.implicits._
-    val partSchema = StructType(Seq(
-      StructField("id", StringType), StructField("p", StringType),
-      StructField("v", LongType)))
     val dir = Files.createTempDirectory("cdc-cpt-env").toFile
     val tgt = Files.createTempDirectory("cdc-cpt-tgt").toFile.getAbsolutePath + "/target"
     val ckpt = Files.createTempDirectory("cdc-cpt-ckpt").toFile.getAbsolutePath
@@ -621,9 +647,6 @@ class CdcSpec extends SparkSuite {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
     import graft.sources.ManifestTable
-    val partSchema = StructType(Seq(
-      StructField("id", StringType), StructField("p", StringType),
-      StructField("v", LongType)))
     val base = Files.createTempDirectory("cdc-mor-cdf").toFile.getAbsolutePath
     val env = new java.io.File(base, "env")
     assert(env.mkdirs())
@@ -690,11 +713,11 @@ class CdcSpec extends SparkSuite {
       """{"operationType":"delete","documentKey":"b","fullDocument":null,"clusterTime":"2024-01-01T00:00:03.000Z"}""")
     Files.write(new java.io.File(dir, "batch1.json").toPath,
       lines.mkString("\n").getBytes("UTF-8"))
-    val q = Dispatch.run(spark, dir.getAbsolutePath, tgt, ckpt, docSchema,
-      identity, rawKey = "id", mergeKey = "id", tieCol = "v")
+    val q = Dispatch.runMergeOnRead(spark, dir.getAbsolutePath, tgt, ckpt, docSchema,
+      withPart, rawKey = "id", mergeKey = "id", tieCol = "v", partCol = "p")
     q.awaitTermination(60000)
-    val got = graft.sources.ManifestTable.read(spark, tgt, docSchema)
-      .as[(String, Long)].collect().toSet
+    val got = graft.sources.ManifestTable.read(spark, tgt, partSchema)
+      .select("id", "v").as[(String, Long)].collect().toSet
     assert(got == Set(("a", 3L), ("b", 7L)))
   }
 }

@@ -74,14 +74,6 @@ class SourcesSpec extends SparkSuite {
     assert(ts == Set("2024-03-01 07:00:00", "2024-03-01 06:46:40"))
   }
 
-  test("S9 append sink accumulates batches like insert_many(ordered=False)") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("sink").toString + "/t"
-    Sinks.append(Seq((1L, "a")).toDF("id", "v"), dir)
-    Sinks.append(Seq((2L, "b")).toDF("id", "v"), dir)
-    assert(spark.read.parquet(dir).count() == 2)
-  }
-
   test("S13 dead-letter sink writes enumerated JSON under a stamped path") {
     import spark.implicits._
     val dir = Files.createTempDirectory("dlq").toString
@@ -449,105 +441,6 @@ class SourcesSpec extends SparkSuite {
     assert(fetched.count() == 2 && failures.isEmpty)
     assert(new java.io.File(dlq).list().forall(_ == "_SUCCESS") ||
       new java.io.File(dlq).list().isEmpty)
-  }
-
-  test("compact collapses small files, preserves data, leaves no debris") {
-    import spark.implicits._
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("compact").toString + "/t"
-    // 8 separate appends -> at least 8 files
-    (1 to 8).foreach { i =>
-      graft.sources.Sinks.append(Seq((i.toLong, s"v$i")).toDF("id", "v"), dir)
-    }
-    def files(d: String) = new java.io.File(d).listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).length
-    assert(files(dir) >= 8)
-    val before = spark.read.parquet(dir).as[(Long, String)].collect().toSet
-    graft.sources.Sinks.compact(spark, dir, targetFiles = 2)
-    assert(files(dir) <= 2)
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet == before)
-    assert(!new java.io.File(dir + ".bak").exists())
-    assert(!new java.io.File(dir + ".compact_tmp").exists())
-  }
-
-  test("compact unions bak + recreated target after a crashed swap; merges schemas") {
-    import spark.implicits._
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("compactc").toString + "/t"
-    // original data, then a schema-evolved append (extra column)
-    graft.sources.Sinks.append(Seq((1L, "a")).toDF("id", "v"), dir)
-    Seq((2L, "b", 0.5)).toDF("id", "v", "score")
-      .write.mode("append").parquet(dir)
-    // simulate a crash between rename(tgt->bak) and rename(tmp->tgt),
-    // followed by an append recreating the target dir
-    new java.io.File(dir).renameTo(new java.io.File(dir + ".bak"))
-    graft.sources.Sinks.append(Seq((3L, "c")).toDF("id", "v"), dir)
-    graft.sources.Sinks.compact(spark, dir, targetFiles = 1)
-    val got = spark.read.parquet(dir)
-    // no row lost from either side, evolved column preserved (null-filled)
-    assert(got.select("id").as[Long].collect().toSet == Set(1L, 2L, 3L))
-    assert(got.columns.toSet == Set("id", "v", "score"))
-    assert(got.filter(col("score").isNotNull).count() == 1)
-    assert(!new java.io.File(dir + ".bak").exists())
-    // a SECOND compact sees the marker and must not re-union anything
-    graft.sources.Sinks.compact(spark, dir, targetFiles = 1)
-    assert(spark.read.parquet(dir).count() == 3)
-  }
-
-  test("compact: crash between parking the target and the commit rename loses nothing") {
-    import spark.implicits._
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("compactw").toString + "/t"
-    // the ADVICE r03 window: a union-branch compact (bak=A, target=B) that
-    // died after parking both sources in backup slots but before
-    // rename(tmp -> target) committed. Old protocol: bak was already
-    // deleted here, so A lived only in tmp and recovery lost it.
-    graft.sources.Sinks.append(Seq((1L, "a")).toDF("id", "v"), dir + ".bak")
-    graft.sources.Sinks.append(Seq((2L, "b")).toDF("id", "v"), dir + ".bak1")
-    // crashed tmp from that run (complete, marker present) — recovery must
-    // not need it: the backup slots alone carry the data
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .write.mode("overwrite").parquet(dir + ".compact_tmp")
-    new java.io.File(dir + ".compact_tmp/_graft_compacted").createNewFile()
-    graft.sources.Sinks.compact(spark, dir, targetFiles = 1)
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet ==
-      Set((1L, "a"), (2L, "b")))
-    for (s <- Seq(".bak", ".bak1", ".compact_tmp"))
-      assert(!new java.io.File(dir + s).exists(), s"$s not cleaned")
-  }
-
-  test("compact: appends recreating the target after a mid-swap crash are unioned") {
-    import spark.implicits._
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("compacta").toString + "/t"
-    // two parked backup slots from a crashed swap, plus fresh appends that
-    // recreated the target before the next compact ran
-    graft.sources.Sinks.append(Seq((1L, "a")).toDF("id", "v"), dir + ".bak")
-    graft.sources.Sinks.append(Seq((2L, "b")).toDF("id", "v"), dir + ".bak1")
-    graft.sources.Sinks.append(Seq((3L, "c")).toDF("id", "v"), dir)
-    graft.sources.Sinks.compact(spark, dir, targetFiles = 1)
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet ==
-      Set((1L, "a"), (2L, "b"), (3L, "c")))
-    for (s <- Seq(".bak", ".bak1", ".bak2", ".compact_tmp"))
-      assert(!new java.io.File(dir + s).exists(), s"$s not cleaned")
-  }
-
-  test("partitioned compact: one file per partition dir, data intact") {
-    import spark.implicits._
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("compactp").toString + "/t"
-    (1 to 6).foreach { i =>
-      graft.sources.Sinks.appendPartitioned(
-        Seq((i.toLong, s"p${i % 2}")).toDF("id", "part"), dir, "part")
-    }
-    val before = spark.read.parquet(dir).as[(Long, String)].collect().toSet
-    graft.sources.Sinks.compact(spark, dir, targetFiles = 4, partCol = Some("part"))
-    for (pv <- Seq("p0", "p1")) {
-      val n = new java.io.File(s"$dir/part=$pv").listFiles()
-        .count(_.getName.endsWith(".parquet"))
-      assert(n == 1, s"partition $pv has $n files")
-    }
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet == before)
   }
 
   test("ManifestTable: snapshot versions flip atomically; vacuum keeps only live data") {
@@ -992,6 +885,50 @@ class SourcesSpec extends SparkSuite {
     }
     assert(dirBytes(s"$dst/v00000002") + dirBytes(s"$dst/v00000003")
       < dirBytes(s"$dst/v00000001") / 4)
+  }
+
+  test("replicate resumes from its sink record after the replica is compacted and vacuumed") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val base = java.nio.file.Files.createTempDirectory("manrepmaint").toString
+    val src = s"$base/src"; val dst = s"$base/dst"
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("p", StringType), StructField("v", LongType)))
+    ManifestTable.commit((0L until 30L).map(i => (i, s"p${i % 3}", i)).toDF("id", "p", "v"),
+      src, Some("p")) // v1
+    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 1)
+    ManifestTable.mergeDv(Seq((1L, "p1", -1L), (100L, "p1", 100L)).toDF("id", "p", "v"),
+      src, schema, "id", Some("p")) // v2
+    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 1)
+    // maintenance on the replica: the compacted manifest is the only one
+    // left, and it carries no #batch record of its own
+    ManifestTable.compact(spark, dst, schema, Some("p"))
+    ManifestTable.vacuum(spark, dst)
+    assert(ManifestTable.versions(spark, dst) == Seq(3L))
+    ManifestTable.mergeDv(Seq((2L, "p2", -2L)).toDF("id", "p", "v"),
+      src, schema, "id", Some("p")) // v3
+    ManifestTable.deleteWhere(spark, src, schema, col("id") === 4L) // v4
+    // progress survived: exactly v3 and v4 apply, nothing replays twice
+    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 2)
+    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 0)
+    def snap(r: String) = ManifestTable.read(spark, r, schema)
+      .as[(Long, String, Long)].collect().toSet
+    assert(snap(dst) == snap(src))
+    assert(snap(dst).size == 30)
+  }
+
+  test("replicate refuses a target that holds no replica progress record") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val base = java.nio.file.Files.createTempDirectory("manrepnot").toString
+    val src = s"$base/src"; val dst = s"$base/dst"
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("p", StringType), StructField("v", LongType)))
+    ManifestTable.commit(Seq((1L, "a", 1L)).toDF("id", "p", "v"), src, Some("p"))
+    ManifestTable.commit(Seq((9L, "a", 9L)).toDF("id", "p", "v"), dst, Some("p"))
+    val e = intercept[IllegalArgumentException](
+      ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")))
+    assert(e.getMessage.contains("not a replica"), e.getMessage)
   }
 
   test("optimistic commit retry: disjoint-partition writers both land; overlap conflicts") {

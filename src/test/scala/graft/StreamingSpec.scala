@@ -581,6 +581,47 @@ class StreamingSpec extends SparkSuite {
     assert(ManifestTable.deletedRowCount(spark, root) <= 2L)
   }
 
+  test("graft sink compactEvery keeps the version a change-feed reader one batch behind resumes from") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    implicit val sq = spark.sqlContext
+    val baseDir = java.nio.file.Files.createTempDirectory("gcomptrail").toString
+    val root = s"$baseDir/t"; val rep = s"$baseDir/rep"
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
+    val src = MemoryStream[(Long, String, Long)]
+    val q = src.toDF().toDF("id", "p", "v")
+      .writeStream.format("graft")
+      .option("partitionBy", "p").option("mergeKey", "id")
+      .option("compactEvery", "2")
+      .option("checkpointLocation", s"$baseDir/ckpt").start(root)
+    // the change-feed reader trails the sink by one batch: it runs after
+    // each sink batch, from the version that batch started from — and every
+    // second sink batch publishes two versions (merge, then compact). It
+    // polls through `replicate` because a live reader stream races the sink
+    // (it usually reads the merge version before the vacuum runs), and a
+    // restarted one re-reads its last committed window, one version
+    // further back than a reader one batch behind
+    def replicate(): Unit = ManifestTable.replicate(spark, root, rep, schema, "id", Some("p"))
+    try {
+      src.addData((1L, "a", 0L), (2L, "b", 0L))
+      q.processAllAvailable()
+      replicate()
+      for (i <- 1L to 6L) {
+        src.addData((1L, "a", i), (2L, "b", i * 10), (100L + i, if (i % 2 == 0) "a" else "b", i))
+        q.processAllAvailable()
+        replicate()
+      }
+    } finally q.stop()
+    def rows(r: String) = ManifestTable.read(spark, r, schema)
+      .as[(Long, String, Long)].collect().toSet
+    assert(rows(root) == (1L to 6L).map(i => (100L + i, if (i % 2 == 0) "a" else "b", i)).toSet
+      + ((1L, "a", 6L)) + ((2L, "b", 60L)))
+    assert(rows(rep) == rows(root))
+  }
+
   test("readStream -> writeStream(cdf): continuous replication with zero driver code") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
