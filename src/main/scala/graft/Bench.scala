@@ -204,7 +204,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     run(
       sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-      cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      cpus = GraftSession.defaultCpus,
       outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench.json"),
       deadlineSec = sys.env.get("SPARK_GRAFT_BENCH_DEADLINE_SEC")
         .map(_.toDouble).getOrElse(DefaultDeadlineSec),
@@ -230,17 +230,7 @@ object Bench {
     // stopping a session the bench didn't create would kill every suite
     // that runs after it in the forked JVM
     val ownsSession = SparkSession.getDefaultSession.isEmpty
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the r15 round artifact's whole 2000-char tail was
-    // localCheckpoint WARN spam — any tail capture must carry timings
-    spark.sparkContext.setLogLevel("ERROR")
-    org.apache.spark.sql.graft.GraftFunctions.installOptimizations(spark)
+    val spark = GraftSession.build(cpus)
     // Per-query warm-up run: whole-stage codegen compiles each query's
     // generated classes on first execution (measured at 3-18s of pure
     // Janino/JIT time on the heavier plans) — steady-state throughput is
@@ -401,23 +391,11 @@ object Bench {
     ordered.foreach { case (name, fn) =>
       if (elapsedSec > deadlineSec) deadlineHit = true
       else {
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          spark.catalog.clearCache()
-          org.apache.spark.sql.graft.Checkpoints.sweep(spark)
-        } catch { case e: Throwable => System.err.println(s"[bench] warm $name: $e") }
+        try GraftSession.noopRun(spark)(fn(spark, sfDir))
+        catch { case e: Throwable => System.err.println(s"[bench] warm $name: $e") }
         val runs = (1 to TimedRuns).map { _ =>
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false }
-          val d = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          // iterative results intentionally keep their final checkpoint
-          // alive; the harness has consumed the output, so drop the blocks
-          // NOW — clearCache() does not (the r6 leak)
-          org.apache.spark.sql.graft.Checkpoints.sweep(spark)
-          if (ok) d else -1.0
+          try GraftSession.noopRun(spark)(fn(spark, sfDir))
+          catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); -1.0 }
         }
         val good = runs.filter(_ >= 0)
         done += ((name, if (good.isEmpty) -1.0 else good.min, runs, loadAvg))
@@ -452,14 +430,10 @@ object Bench {
       if (elapsedSec > deadlineSec) deadlineHit = true
       else if ((la > HotLoadThreshold || flagged.contains(name)) && best >= 0.3) {
         val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable => System.err.println(s"[bench] requeue $name: $e"); false }
-        val d = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        org.apache.spark.sql.graft.Checkpoints.sweep(spark)
-        if (ok) {
+        val d =
+          try GraftSession.noopRun(spark)(fn(spark, sfDir))
+          catch { case e: Throwable => System.err.println(s"[bench] requeue $name: $e"); -1.0 }
+        if (d >= 0) {
           done(i) = (name, math.min(best, d), runs :+ d, la)
           requeued += ((name, la, d))
           emit(done.toSeq, Nil, partial = true, requeued.toSeq)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-curve probe: replicate the sf0.1 inputs in-memory by factors
@@ -23,14 +23,7 @@ object StressBench {
     // (e.g. SPARK_GRAFT_STRESS_FACTORS=1,16,64 for the 64x refresh)
     val factors: Seq[Int] = sys.env.get("SPARK_GRAFT_STRESS_FACTORS")
       .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Seq(1, 4, 16))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     def docsTimes(f: Int): DataFrame = {
       val docs = Tables(spark, sfDir, "documents").select("doc_id", "text")
@@ -1153,7 +1146,6 @@ object StressBench {
     // estimate produces at any threshold). The gap is the price every
     // star-schema query pays when the planner can't see scan sizes.
     if (onlyOps.forall(_.exists("scan_stats".startsWith))) {
-      org.apache.spark.sql.graft.GraftFunctions.installOptimizations(spark)
       for (f <- factors) {
         val wh = java.nio.file.Files.createTempDirectory(s"sst$f").toString
         val cat = s"gss$f"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,17 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.graft.GraftFunctions.installOptimizations(spark)
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
@@ -39,12 +28,7 @@ object Verify {
         naive.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally {
-        // drop any localCheckpoint blocks the query left behind (iterative
-        // results keep their final round pinned by design) — without this
-        // the 110-query dump accumulates block sets just like the r6 bench
-        org.apache.spark.sql.graft.Checkpoints.sweep(spark)
-      }
+      } finally GraftSession.reset(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -2269,12 +2269,27 @@ object ManifestTable {
       stats, blooms, retryable = retryable, ndv = ndv)
   }
 
+  /** Whether the committer-v2 stage write is safe under `conf`. v2's task
+    * commit renames straight into the stage dir and is not atomic per task:
+    * with `spark.speculation` on, a killed duplicate attempt's orphan part
+    * files could survive inside a stage that later publishes, so every
+    * manifest-table write refuses a speculative context.
+    */
+  private[graft] def stageWriteSafe(conf: org.apache.spark.SparkConf): Boolean =
+    !conf.getBoolean("spark.speculation", false)
+
   /** Stage `df` partitioned per `spec` (deriving the physical column when
     * the spec is a hidden transform — partitionBy keeps it OUT of the data
     * files) or unpartitioned.
     */
   private def stageWrite(df: DataFrame, spec: Option[PartSpec], stage: Path,
-                         root: String): Unit =
+                         root: String): Unit = {
+    if (!stageWriteSafe(df.sparkSession.sparkContext.getConf))
+      throw new IllegalStateException(
+        s"manifest-table write to $root refused: spark.speculation is on, and a " +
+          "speculative duplicate task can leave orphan files in a committer-v2 " +
+          "stage that later publishes; run manifest-table writes with " +
+          "spark.speculation=false")
     spec match {
       case Some(s) =>
         val derived = s.derive(df)
@@ -2308,15 +2323,9 @@ object ManifestTable {
         // invisible until publishStaged's atomic manifest rename — the v1
         // committer's job-level two-phase rename only re-moved every file a
         // second time to protect atomicity the manifest protocol already
-        // owns. A failed stage is discarded wholesale either way.
-        // CAVEAT (ADVICE r21): v2's task commit is not atomic per task. A
+        // owns. A failed stage is discarded wholesale either way; a
         // task-commit failure mid-rename aborts the JOB loudly (rename onto
-        // an existing file fails) and the whole stage is discarded — safe —
-        // but with spark.speculation enabled, a dead attempt's orphan part
-        // files could survive inside a stage that later publishes. Keep
-        // speculation OFF on manifest-table write paths (it defaults off;
-        // the deterministic hash repartition above gives retried tasks
-        // identical content either way).
+        // an existing file fails). Speculation is refused above.
         out.write.partitionBy(s.physNames: _*)
           .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
           .mode("overwrite").parquet(stage.toString)
@@ -2324,6 +2333,7 @@ object ManifestTable {
         .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
         .mode("overwrite").parquet(stage.toString)
     }
+  }
 
   // DECLARED (sidecar) tables only — they own the property that opts out;
   // path-first tables keep the legacy task-per-dir write byte-for-byte

@@ -121,6 +121,21 @@ class BenchSpec extends SparkSuite {
     val compact = java.nio.file.Files.readString(java.nio.file.Paths.get(out + ".compact"))
     assert(compact.contains("\"completed\":1"), compact)
     assert(!spark.sparkContext.isStopped)
+    // the sweep ran in GraftSession's config: the engine's optimizer rules
+    // and the runtime Bloom filter
+    val rules = spark.experimental.extraOptimizations
+    assert(rules.contains(org.apache.spark.sql.graft.ReplaceMd5WithFast), rules)
+    assert(rules.contains(org.apache.spark.sql.graft.ForwardV1ScanStats), rules)
+    assert(spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.enabled") == "true")
+  }
+
+  test("GraftSession is the only main code that builds a SparkSession") {
+    import scala.jdk.CollectionConverters._
+    val builders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+      .map(_.toString).toSeq
+    assert(builders == Seq("src/main/scala/graft/GraftSession.scala"), builders)
   }
 
   test("compact tail stays inside the 2000-char capture at 250 queries (r19)") {

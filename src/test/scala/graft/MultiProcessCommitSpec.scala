@@ -106,6 +106,15 @@ class MultiProcessCommitSpec extends SparkSuite {
     } finally ManifestTable.commitArbiter = prev
   }
 
+  test("stage writes refuse a speculative context (committer v2 is not atomic per task)") {
+    import org.apache.spark.SparkConf
+    assert(ManifestTable.stageWriteSafe(new SparkConf(false)))
+    assert(ManifestTable.stageWriteSafe(new SparkConf(false).set("spark.speculation", "false")))
+    assert(!ManifestTable.stageWriteSafe(new SparkConf(false).set("spark.speculation", "true")))
+    // the shared session runs with speculation off, so its writes pass
+    assert(ManifestTable.stageWriteSafe(spark.sparkContext.getConf))
+  }
+
   test("commit timestamps monotonize across skewed writer clocks (#ts = max(prior+1, now))") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-ts-skew").resolve("t").toString
