@@ -48,15 +48,6 @@ object Boilerplate {
       .select(col("id"), col("w"), explode(sequence(lit(1), col("ng"))).as("i"))
       .select(col("id"), gramHash(concat_ws(" ", slice(col("w"), col("i"), lit(n)))).as("gh"))
 
-  /** (gh, df) document frequency per distinct gram — the corpus-level
-    * boilerplate table (join `df >= minDf` back to gram text offline to
-    * inspect the actual templates).
-    */
-  def gramDocFreq(df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame =
-    gramPositions(df, textCol, idCol, n)
-      .distinct()
-      .groupBy("gh").agg(count(lit(1)).as("df"))
-
   /** Per-document boilerplate profile: (idCol, n_grams, n_boiler,
     * boiler_frac) — every input doc appears (short docs as 0/0/0.0).
     * `boiler_frac` is position-weighted (a gram repeated inside one doc

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ManifestScan
 import org.apache.spark.sql.types.StructType
 
 /** Minimal manifest-committed table — the transactional-MERGE seam the CDC
@@ -785,9 +786,8 @@ object ManifestTable {
     * bounds how far back this reaches). `schema` pins column types across
     * versions (include the partition column — Spark resolves it from the
     * hive-style dir names); columns absent from older physical files read
-    * as NULL, which is exactly additive schema evolution. Partition dirs
-    * group by their data version so each version contributes ONE scan
-    * relation listing only its live partitions — the partition-pruned read.
+    * as NULL, which is exactly additive schema evolution. The live dirs of
+    * every data version share ONE scan relation per partition layout.
     */
   def read(spark: SparkSession, root: String, schema: StructType,
            asOfVersion: Option[Long] = None): DataFrame = {
@@ -875,62 +875,56 @@ object ManifestTable {
   private def readSnapshot(spark: SparkSession, root: String, schema0: StructType,
                            v: Long, withMeta: Boolean,
                            restrictTo: Option[Set[String]] = None): DataFrame = {
+    val (fs, rootP) = fsOf(spark, root)
+    val entries = entriesOf(fs, rootP, v)
+      .filter { case (p, _) => restrictTo.forall(_.contains(p)) }
+    scanFiles(spark, root, schema0, dvOf(fs, rootP, v), liveFiles(fs, rootP, entries), withMeta)
+  }
+
+  /** `(qualified data version dir, file)` for every data file under the
+    * given manifest entries — each live dir listed once.
+    */
+  private def liveFiles(fs: FileSystem, rootP: Path,
+                        entries: Seq[(String, Long)]): Seq[(Path, FileStatus)] =
+    entries.distinct.flatMap { case (name, dataV) =>
+      val vdir = fs.makeQualified(new Path(rootP, "v" + fmt(dataV)))
+      listDataStatus(fs, if (name.isEmpty) vdir else new Path(vdir, name)).map(vdir -> _)
+    }
+
+  /** The scan of `files` under `schema0` with deletion vector `dv` (if any)
+    * anti-joined out: one file-source relation per partition layout
+    * ([[ManifestScan.relations]]), however many data versions hold the
+    * files. `withMeta = true` keeps the `__f`/`__pos` file identity columns
+    * (scheme-free path + parquet row index) the DV machinery keys on;
+    * otherwise the result carries exactly `schema0`.
+    */
+  private def scanFiles(spark: SparkSession, root: String, schema0: StructType,
+                        dv: Option[Long], files: Seq[(Path, FileStatus)],
+                        withMeta: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     // resolve columns by FIELD ID when the table declares ids ([[FieldIds]])
     // — files written under since-renamed names surface under the current
     // name with values intact; id-less tables read by name as ever
     val schema = FieldIds.attach(schema0, FieldIds.of(spark, root))
-    val (fs, rootP) = fsOf(spark, root)
-    val entries = entriesOf(fs, rootP, v)
-      .filter { case (p, _) => restrictTo.forall(_.contains(p)) }
-    val dv = dvOf(fs, rootP, v)
     val needMeta = withMeta || dv.isDefined
-    def withM(df: DataFrame): DataFrame =
-      if (needMeta)
-        df.select(col("*"), normPath(col("_metadata.file_path")).as("__f"),
-          col("_metadata.row_index").as("__pos"))
-      else df
+    val cols = schema.fieldNames.toSeq.map(col)
+    val meta = Seq(normPath(col("_metadata.file_path")).as("__f"),
+      col("_metadata.row_index").as("__pos"))
     val metaSchema = StructType(schema.fields
       :+ org.apache.spark.sql.types.StructField("__f", org.apache.spark.sql.types.StringType)
       :+ org.apache.spark.sql.types.StructField("__pos", org.apache.spark.sql.types.LongType))
-    // re-select each relation to its contract BEFORE the union: a HIDDEN
-    // partition spec's dir column is not in the requested schema, and
-    // Spark appends inferred dir columns anyway (probed r18) — and under
-    // partition EVOLUTION different data versions append differently-named
-    // columns, which would break unionByName
-    val wanted: Seq[org.apache.spark.sql.Column] =
-      if (needMeta) schema.fieldNames.toSeq.map(col) :+ col("__f") :+ col("__pos")
-      else schema.fieldNames.toSeq.map(col)
+    // re-select each relation to its contract BEFORE the union: file
+    // sources put partition columns LAST whatever the schema order
+    val rels = ManifestScan.relations(spark, schema, files)
+      .map(_.select(cols ++ (if (needMeta) meta else Nil): _*))
+    // no files (e.g. an all-invalid first batch) is an empty table
     val assembled =
-      if (entries.isEmpty) {
-        // a committed version whose snapshot held zero partitions (e.g. an
-        // all-invalid first batch) — an empty table, not an error
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          if (needMeta) metaSchema else schema)
-      } else {
-        // one relation per data version listing its live partition dirs —
-        // a partition appended to by [[mergeDv]] contributes from EVERY
-        // version its entries name, unioned here
-        entries.groupBy(_._2).map { case (dataV, parts) =>
-          val base = s"$root/v${fmt(dataV)}"
-          val names = parts.map(_._1).distinct.sorted
-          val rel =
-            if (names == Seq("")) withM(spark.read.schema(schema).parquet(base))
-            else withM(spark.read.option("basePath", base).schema(schema)
-              .parquet(names.map(p => s"$base/$p"): _*))
-          rel.select(wanted: _*)
-        }.reduce(_ unionByName _)
-      }
-    val masked = dv match {
-      case Some(d) => assembled.join(
-        readDv(spark, root, d), Seq("__f", "__pos"), "left_anti")
-      case None => assembled
-    }
-    // file sources surface partition columns LAST whatever the requested
-    // schema order — always re-select so the contract is exactly `schema`
-    if (withMeta)
-      masked.select((schema.fieldNames.map(col) :+ col("__f") :+ col("__pos")).toSeq: _*)
-    else masked.select(schema.fieldNames.map(col).toSeq: _*)
+      if (rels.isEmpty) spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], if (needMeta) metaSchema else schema)
+      else rels.reduce(_ unionByName _)
+    val masked = dv.fold(assembled)(d =>
+      assembled.join(readDv(spark, root, d), Seq("__f", "__pos"), "left_anti"))
+    masked.select(cols ++ (if (withMeta) Seq(col("__f"), col("__pos")) else Nil): _*)
   }
 
   // ===================== zone maps (file skipping) ======================
@@ -958,18 +952,27 @@ object ManifestTable {
     * isNotNull), so a version committed with bloomCols but no statsCols
     * would silently lose that file from every pruned scan (ADVICE r12).
     */
-  private def listDataFiles(fs: FileSystem, vdir: Path): Seq[String] = {
-    def files(p: Path): Seq[Path] = fs.listStatus(p).toSeq.flatMap { st =>
+  private def listDataFiles(fs: FileSystem, vdir: Path): Seq[String] =
+    listDataStatus(fs, vdir).map(relTo(fs, vdir))
+
+  /** Every data file under `dir`, recursively — the listing behind
+    * [[listDataFiles]] and the snapshot scan.
+    */
+  private def listDataStatus(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap { st =>
       val n = st.getPath.getName
       if (n.startsWith("_") || n.startsWith(".")) Nil
-      else if (st.isDirectory) files(st.getPath)
-      else Seq(st.getPath)
+      else if (st.isDirectory) listDataStatus(fs, st.getPath)
+      else Seq(st)
     }
-    // listStatus returns scheme-qualified paths (file:/…) — qualify the
-    // base the same way or the relative-path strip silently no-ops
+
+  /** A listed file's path relative to `vdir`. listStatus returns scheme-
+    * qualified paths (file:/…) — qualify the base the same way or the
+    * strip silently no-ops.
+    */
+  private def relTo(fs: FileSystem, vdir: Path): FileStatus => String = {
     val base = fs.makeQualified(vdir).toString
-    files(vdir).map(f =>
-      fs.makeQualified(f).toString.stripPrefix(base).stripPrefix("/"))
+    st => fs.makeQualified(st.getPath).toString.stripPrefix(base).stripPrefix("/")
   }
 
   /** Read each parquet file's footer under `vdir` and merge row-group
@@ -1286,7 +1289,7 @@ object ManifestTable {
       val kept: Seq[String] = sel match {
         case Left(dirs) => listDataFiles(fs, vdir).filter(rel =>
           dirs.contains("") || dirs.exists(d => rel.startsWith(d + "/")))
-        case Right(files) => files
+        case Right(files) => files.map(_._1)
       }
       if (kept.isEmpty) Nil
       else {
@@ -1506,21 +1509,6 @@ object ManifestTable {
     }
   }
 
-  /** On-disk bytes the given hints leave readable in snapshot `v` — the
-    * PRUNED scan's size estimate the catalog reports to Catalyst
-    * ([[GraftV1ScanImpl.estimateStatistics]]), so join planning sees a
-    * point-pruned slice of a huge table as broadcastable instead of the
-    * DSv2 default (Long.Max = never auto-broadcast). Pure driver metadata:
-    * one file listing per surviving (data version, dir) — no footer reads,
-    * no data I/O. Always a SUPERSET of what the scan will read (the
-    * pruning contract), so it never under-reports a join side.
-    */
-  def estimatePrunedBytes(spark: SparkSession, root: String, v: Long,
-                          ranges: Seq[ColRange],
-                          points: Seq[(String, Any)] = Nil,
-                          pointsAny: Seq[(String, Seq[Any])] = Nil): Long =
-    estimatePruned(spark, root, v, ranges, points, pointsAny)._1
-
   /** `(bytes, rows, ndv)` the given hints leave readable in snapshot `v` —
     * one pruned plan, one file listing, all three estimates. Rows come
     * from the `_stats` sidecars' per-file footer counts; `None` when ANY
@@ -1549,14 +1537,11 @@ object ManifestTable {
     var haveRows = dvOf(fs, rootP, v).isEmpty
     val perFile = Seq.newBuilder[Map[String, Array[Long]]]
     plan.foreach { case (dv, sel) =>
-      val vdir = new Path(rootP, "v" + fmt(dv))
-      val withLen = listDataFilesWithLen(fs, vdir)
       val kept: Seq[(String, Long)] = sel match {
-        case Left(dirs) => withLen.filter { case (rel, _) =>
-          dirs.contains("") || dirs.exists(d => rel.startsWith(d + "/")) }
-        case Right(files) =>
-          val lens = withLen.toMap
-          files.flatMap(f => lens.get(f).map(f -> _))
+        case Left(dirs) => listDataFilesWithLen(fs, new Path(rootP, "v" + fmt(dv)))
+          .filter { case (rel, _) =>
+            dirs.contains("") || dirs.exists(d => rel.startsWith(d + "/")) }
+        case Right(files) => files.map { case (rel, st) => rel -> st.getLen }
       }
       bytes += kept.map(_._2).sum
       if (kept.nonEmpty) {
@@ -1649,13 +1634,10 @@ object ManifestTable {
     val (plan, _) = planPrune(spark, root, v, ranges, points, pointsAny)
     plan.foreach { case (dataV, sel) =>
       val vdir = new Path(rootP, "v" + fmt(dataV))
-      val withLen = listDataFilesWithLen(fs, vdir)
       val kept: Seq[(String, Long)] = sel match {
-        case Left(dirs) => withLen.filter { case (rel, _) =>
+        case Left(dirs) => listDataFilesWithLen(fs, vdir).filter { case (rel, _) =>
           dirs.exists(d => rel.startsWith(d + "/")) }
-        case Right(files) =>
-          val lens = withLen.toMap
-          files.flatMap(f => lens.get(f).map(f -> _))
+        case Right(files) => files.map { case (rel, st) => rel -> st.getLen }
       }
       kept.foreach { case (rel, len) =>
         val key = dirValues(rel.substring(0, math.max(rel.lastIndexOf('/'), 0)))
@@ -1668,19 +1650,12 @@ object ManifestTable {
     Some((leaves, groups.toSeq.map { case (k, b) => (k, b.result()) }))
   }
 
-  private def listDataFilesWithLen(fs: FileSystem, vdir: Path): Seq[(String, Long)] = {
-    def files(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) files(st.getPath)
-        else Seq(st)
-      }
-    val base = fs.makeQualified(vdir).toString
-    files(vdir).map(st => (fs.makeQualified(st.getPath).toString
-      .stripPrefix(base).stripPrefix("/"), st.getLen))
-  }
+  private def listDataFilesWithLen(fs: FileSystem, vdir: Path): Seq[(String, Long)] =
+    if (!fs.exists(vdir)) Nil
+    else {
+      val relOf = relTo(fs, vdir)
+      listDataStatus(fs, vdir).map(st => relOf(st) -> st.getLen)
+    }
 
   /** `(keptDirs, totalDirs)` the given hints leave readable in the current
     * snapshot — the observable partition-level pruning effect (file-level
@@ -1700,7 +1675,7 @@ object ManifestTable {
   private def planPrune(spark: SparkSession, root: String, v: Long,
                         ranges: Seq[ColRange], points: Seq[(String, Any)],
                         pointsAny: Seq[(String, Seq[Any])] = Nil)
-      : (Map[Long, Either[Seq[String], Seq[String]]], (Int, Int)) = {
+      : (Map[Long, Either[Seq[String], Seq[(String, FileStatus)]]], (Int, Int)) = {
     val (fs, rootP) = fsOf(spark, root)
     val entries = entriesOf(fs, rootP, v)
     // PARTITION-DIR pruning before any file listing: hints on the
@@ -1724,10 +1699,12 @@ object ManifestTable {
         // universe = the version dir's actual files, never the sidecar key
         // sets — a file missing its sidecar entry (all-NULL bloom column,
         // partial stats) defaults to KEPT, the only correct superset
-        val live = listDataFiles(fs, new Path(rootP, "v" + fmt(dv)))
-          .filter(rel =>
-            partDirs.contains("") || partDirs.exists(p => rel.startsWith(p + "/")))
-        val kept = live.filter { rel =>
+        val vdir = new Path(rootP, "v" + fmt(dv))
+        val relOf = relTo(fs, vdir)
+        val live = listDataStatus(fs, vdir).map(st => relOf(st) -> st)
+          .filter { case (rel, _) =>
+            partDirs.contains("") || partDirs.exists(p => rel.startsWith(p + "/")) }
+        val kept = live.filter { case (rel, _) =>
           val zoneOk = stats.flatMap(_.get(rel))
             .forall(z => survives(z, ranges))
           val bloomOk = points.forall { case (c, value) =>
@@ -1741,7 +1718,7 @@ object ManifestTable {
           zoneOk && bloomOk && anyOk
         }
         keptN += kept.size; totalN += live.size
-        dv -> Right(kept.sorted)
+        dv -> Right(kept.sortBy(_._1))
       }
     }
     (plan, (keptN, totalN))
@@ -1758,9 +1735,6 @@ object ManifestTable {
                  ranges: Seq[ColRange],
                  points: Seq[(String, Any)] = Nil,
                  pointsAny: Seq[(String, Seq[Any])] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    // by-id column resolution for id-carrying tables, as in [[readSnapshot]]
-    val schema = FieldIds.attach(schema0, FieldIds.of(spark, root))
     // resolve the manifest version ONCE — a second currentVersion() lookup
     // for the DV could race a concurrent commit and pair version N's files
     // with version N+1's (possibly absent) deletion vector
@@ -1768,44 +1742,14 @@ object ManifestTable {
       throw new IllegalStateException(s"manifest table $root has no committed version"))
     val (plan, _) = planPrune(spark, root, v, ranges, points, pointsAny)
     val (fs, rootP) = fsOf(spark, root)
-    val dv = dvOf(fs, rootP, v)
-    def withM(df: DataFrame): DataFrame =
-      if (dv.isDefined)
-        df.select(col("*"), normPath(col("_metadata.file_path")).as("__f"),
-          col("_metadata.row_index").as("__pos"))
-      else df
-    // per-relation re-select before the union, as in [[readSnapshot]]:
-    // hidden/evolved partition specs make Spark append dir columns the
-    // requested schema doesn't carry, with names varying per data version
-    val wanted: Seq[org.apache.spark.sql.Column] =
-      if (dv.isDefined) schema.fieldNames.toSeq.map(col) :+ col("__f") :+ col("__pos")
-      else schema.fieldNames.toSeq.map(col)
-    val relations = plan.toSeq.flatMap { case (dataV, sel) =>
-      val base = s"$root/v${fmt(dataV)}"
-      val rel = sel match {
-        case Left(partDirs) =>
-          if (partDirs == Seq(""))
-            Some(withM(spark.read.schema(schema).parquet(base)))
-          else Some(withM(spark.read.option("basePath", base).schema(schema)
-            .parquet(partDirs.map(p => s"$base/$p"): _*)))
-        case Right(Nil) => None
-        case Right(files) =>
-          Some(withM(spark.read.option("basePath", base).schema(schema)
-            .parquet(files.map(f => s"$base/$f"): _*)))
-      }
-      rel.map(_.select(wanted: _*))
+    // the survivors planPrune already listed go to the scan as they are
+    val files = plan.toSeq.flatMap {
+      case (dataV, Left(partDirs)) => liveFiles(fs, rootP, partDirs.map(_ -> dataV))
+      case (dataV, Right(kept)) =>
+        val vdir = fs.makeQualified(new Path(rootP, "v" + fmt(dataV)))
+        kept.map(f => vdir -> f._2)
     }
-    if (relations.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val assembled = relations.reduce(_ unionByName _)
-      val masked = dv match {
-        case Some(d) => assembled.join(
-          readDv(spark, root, d), Seq("__f", "__pos"), "left_anti")
-        case None => assembled
-      }
-      masked.select(schema.fieldNames.map(col).toSeq: _*)
-    }
+    scanFiles(spark, root, schema0, dvOf(fs, rootP, v), files, withMeta = false)
   }
 
   /** [[readPruned]] with the skipping hints derived from the PREDICATE
@@ -2481,17 +2425,7 @@ object ManifestTable {
       throw new IllegalStateException(s"manifest table $root has no committed version"))
     val entries = entriesOf(fs, rootP, v)
     require(entries.nonEmpty, s"manifest table $root version $v holds no partitions")
-    entries.groupBy(_._2).map { case (dataV, parts) =>
-      val base = s"$root/v${fmt(dataV)}"
-      val names = parts.map(_._1).distinct.sorted
-      val rel =
-        if (names == Seq("")) spark.read.option("mergeSchema", "true").parquet(base)
-        else spark.read.option("mergeSchema", "true").option("basePath", base)
-          .parquet(names.map(p => s"$base/$p"): _*)
-      rel.schema
-    }.reduce { (a, b) =>
-      StructType(a.fields ++ b.fields.filterNot(f => a.fieldNames.contains(f.name)))
-    }
+    ManifestScan.inferSchema(spark, liveFiles(fs, rootP, entries))
   }
 
   /** MERGE with O(changed rows) write amplification — the merge-on-read

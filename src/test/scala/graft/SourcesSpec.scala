@@ -2054,6 +2054,119 @@ class SourcesSpec extends SparkSuite {
     assert(aFiles.count(_.length() < (target * 2) / 5) <= 2,
       aFiles.map(_.length()).sorted.mkString(","))
   }
+
+  test("S14 jsonDump writes a JSON dir that reads back row for row") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("jdump").toString + "/out"
+    val rows = Seq(("p1", 21.03, Some("Ha Noi")), ("p2", 16.07, None))
+    Sinks.jsonDump(rows.toDF("id", "lat", "vi"), dir)
+    Sinks.jsonDump(rows.take(1).toDF("id", "lat", "vi"), dir) // overwrites
+    val schema = StructType(Seq(StructField("id", StringType),
+      StructField("lat", DoubleType), StructField("vi", StringType)))
+    assert(spark.read.schema(schema).json(dir).as[(String, Double, Option[String])]
+      .collect().toSeq == rows.take(1))
+  }
+
+  /** Merge-on-read table: a 120-row commit over 12 int partitions, then
+    * `batches` mergeDv commits each updating one key and inserting one per
+    * partition — 12 × (batches + 1) live dirs and a deletion vector. Returns
+    * (root, schema, the last-wins model).
+    */
+  private def morTable(batches: Int): (String, StructType, Set[(Long, Int, Long)]) = {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val root = Files.createTempDirectory("mansnap").toString + "/t"
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("p", IntegerType), StructField("v", LongType)))
+    val base = (0L until 120L).map(i => (i, (i % 12).toInt, 0L))
+    ManifestTable.commit(base.toDF("id", "p", "v"), root, Some("p"))
+    var model = base.map(r => r._1 -> r).toMap
+    for (b <- 1 to batches) {
+      val batch = (0 until 12).flatMap(p => Seq((p.toLong, p, b.toLong),
+        (1000L * b + p, p, b.toLong)))
+      ManifestTable.mergeDv(batch.toDF("id", "p", "v"), root, schema, "id", Some("p"))
+      model ++= batch.map(r => r._1 -> r)
+    }
+    (root, schema, model.values.toSet)
+  }
+
+  private def fileScans(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+
+  test("snapshot read: 36+ live dirs over 4 data versions build one relation and run no job") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val (root, schema, model) = morTable(3)
+    var df: org.apache.spark.sql.DataFrame = null
+    // an InMemoryFileIndex over this many dirs starts a parallel listing job
+    assert(jobsIn { df = ManifestTable.read(spark, root, schema) } == 0)
+    val dirs = df.inputFiles.map(f => new org.apache.hadoop.fs.Path(new java.net.URI(f)).getParent)
+    assert(dirs.distinct.length >= 36, dirs.distinct.length)
+    // exactly one table scan beside the deletion-vector scan, whatever the
+    // number of data versions
+    val scans = fileScans(df)
+    assert(scans.size == 2 && scans.count(_.output.exists(_.name == "id")) == 1,
+      scans.map(_.output.map(_.name).mkString(",")).mkString(" | "))
+    assert(df.as[(Long, Int, Long)].collect().toSet == model)
+    assert(ManifestTable.readWithMeta(spark, root, schema).count() == model.size)
+    assert(ManifestTable.readPruned(spark, root, schema, Nil)
+      .as[(Long, Int, Long)].collect().toSet == model)
+    // schema inference: one footer-merge job over all four data versions
+    var inferred: StructType = null
+    assert(jobsIn { inferred = ManifestTable.inferSchema(spark, root) } == 1)
+    // the dir column comes last, as a directory read reports it
+    assert(inferred == StructType(Seq(StructField("id", LongType),
+      StructField("v", LongType), StructField("p", IntegerType))))
+  }
+
+  test("snapshot read: int, date and string partition values round-trip; a filter lists one dir") {
+    import graft.sources.ManifestTable
+    val cases: Seq[(DataType, Seq[Any])] = Seq(
+      IntegerType -> Seq(1, -5, null),
+      DateType -> Seq(java.sql.Date.valueOf("2024-01-02"), java.sql.Date.valueOf("1999-12-31"), null),
+      StringType -> Seq("a b", "x/y", "k=v", null))
+    for ((dt, values) <- cases) {
+      val root = Files.createTempDirectory("manpart").toString + "/t"
+      val schema = StructType(Seq(StructField("id", LongType), StructField("p", dt)))
+      val rows = values.zipWithIndex.flatMap { case (v, i) =>
+        Seq(org.apache.spark.sql.Row(i.toLong, v), org.apache.spark.sql.Row(i + 10L, v)) }
+      ManifestTable.commit(spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2), schema), root, Some("p"))
+      val df = ManifestTable.read(spark, root, schema)
+      assert(df.collect().toSet == rows.toSet, dt)
+      for (v <- values.filter(_ != null)) {
+        val hit = df.filter(col("p") === lit(v))
+        assert(hit.collect().toSet == rows.filter(_.get(1) == v).toSet, v)
+        val listed = fileScans(hit).flatMap(_.selectedPartitions.toPartitionArray)
+          .map(_.toPath.getParent.getName).distinct
+        assert(listed.toSeq == Seq(ManifestTable.partDirName("p", v)), listed.mkString(","))
+      }
+      assert(df.filter(col("p").isNull).count() == 2, dt)
+    }
+  }
+
+  test("snapshot read: an unpartitioned-era layout beside an identity layout reads every row once") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val root = Files.createTempDirectory("manmix").toString + "/t"
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("p", IntegerType), StructField("v", LongType)))
+    val base = (0L until 40L).map(i => (i, (i % 4).toInt, 0L))
+    ManifestTable.commit(base.toDF("id", "p", "v"), root, None) // the "" entry
+    var model = base.map(r => r._1 -> r).toMap
+    for (b <- 1 to 2) {
+      val batch = Seq((b.toLong, b % 4, b.toLong), (100L + b, 1, b.toLong))
+      ManifestTable.mergeDv(batch.toDF("id", "p", "v"), root, schema, "id", Some("p"))
+      model ++= batch.map(r => r._1 -> r)
+    }
+    val df = ManifestTable.read(spark, root, schema)
+    assert(df.as[(Long, Int, Long)].collect().toSet == model.values.toSet)
+    // one table relation per layout, not per data version
+    assert(fileScans(df).count(_.output.exists(_.name == "id")) == 2)
+    assert(ManifestTable.inferSchema(spark, root) == StructType(Seq(
+      StructField("id", LongType), StructField("p", IntegerType), StructField("v", LongType))))
+  }
 }
 
 /** Deterministic fake fetch client for the S1 keyed-fetch tests — file-scope
