@@ -2174,6 +2174,22 @@ private[sources] class GraftV1ScanImpl(root: String, tableSchema: StructType,
   override def description(): String =
     s"GraftScan(root=$root, asOf=$asOf, columns=${required.fieldNames.mkString(",")})"
 
+  private var planned: Option[ManifestTable.PrunePlan] = None
+
+  /** ONE pruned plan per scan and version: the statistics estimate and the
+    * read of the same version share its listing and sidecar loads.
+    */
+  private def planAt(v: Long): ManifestTable.PrunePlan = synchronized {
+    planned.filter(_.v == v).getOrElse {
+      val (ranges, points, pointsAny) =
+        if (asOf.isDefined) (Nil, Nil, Nil) // historical reads skip nothing
+        else GraftRelation.hints(filters)
+      val p = ManifestTable.planPrune(SparkSession.active, root, v, ranges, points, pointsAny)
+      planned = Some(p)
+      p
+    }
+  }
+
   /** POST-PRUNING size AND row count from manifest metadata (file lengths
     * + the `_stats` sidecars' per-file footer row counts — no data I/O),
     * so Catalyst's join planning sees what the scan will actually read: a
@@ -2194,12 +2210,7 @@ private[sources] class GraftV1ScanImpl(root: String, tableSchema: StructType,
     val (bytes: Long, rows: Option[Long], ndv: Map[String, Long]) =
       ManifestTable.currentVersion(spark, root) match {
         case None => (0L, Some(0L), Map.empty[String, Long])
-        case Some(cur) =>
-          val v = asOf.getOrElse(cur)
-          val (ranges, points, pointsAny) =
-            if (asOf.isDefined) (Nil, Nil, Nil) // historical reads skip nothing
-            else GraftRelation.hints(filters)
-          ManifestTable.estimatePruned(spark, root, v, ranges, points, pointsAny)
+        case Some(cur) => ManifestTable.estimatePruned(spark, root, planAt(asOf.getOrElse(cur)))
       }
     val sized = math.max(1L, (bytes * factor).toLong)
     // per-column NDV from the bloom columns' merged KMV sketches (exactly
@@ -2261,13 +2272,14 @@ private[sources] class GraftV1ScanImpl(root: String, tableSchema: StructType,
     stats
 
   override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new GraftV1TableScan(context, root, tableSchema, required, filters, asOf)
+    new GraftV1TableScan(context, root, tableSchema, required, asOf, planAt)
       .asInstanceOf[T]
 }
 
 private[sources] class GraftV1TableScan(ctx: SQLContext, root: String,
                                         tableSchema: StructType, required: StructType,
-                                        filters: Array[Filter], asOf: Option[Long])
+                                        asOf: Option[Long],
+                                        planAt: Long => ManifestTable.PrunePlan)
     extends BaseRelation with TableScan {
 
   override def sqlContext: SQLContext = ctx
@@ -2277,22 +2289,15 @@ private[sources] class GraftV1TableScan(ctx: SQLContext, root: String,
   override def buildScan(): RDD[Row] = {
     val ss = ctx.sparkSession
     val wantsMeta = required.fieldNames.exists(n => n == "__f" || n == "__pos")
-    if (asOf.isEmpty && ManifestTable.currentVersion(ss, root).isEmpty) {
+    val cur = ManifestTable.currentVersion(ss, root)
+    val frame =
       // created-but-never-committed table: an empty relation, not an error
-      ss.createDataFrame(ss.sparkContext.emptyRDD[Row], required)
-        .queryExecution.toRdd.asInstanceOf[RDD[Row]]
-    } else if (wantsMeta) {
-      ManifestTable.readWithMeta(ss, root, tableSchema, asOf)
-        .select(required.fieldNames.map(col).toIndexedSeq: _*)
-        .queryExecution.toRdd.asInstanceOf[RDD[Row]]
-    } else if (asOf.isDefined) {
-      ManifestTable.read(ss, root, tableSchema, asOf)
-        .select(required.fieldNames.map(col).toIndexedSeq: _*)
-        .queryExecution.toRdd.asInstanceOf[RDD[Row]]
-    } else {
-      // current-version data-only scan: exactly the V1 relation's pruned path
-      GraftRelation(ctx, root, tableSchema, None).buildScan(required.fieldNames, filters)
-    }
+      if (asOf.isEmpty && cur.isEmpty) ss.createDataFrame(ss.sparkContext.emptyRDD[Row], required)
+      else if (wantsMeta) ManifestTable.readWithMeta(ss, root, tableSchema, asOf)
+      // data-only scan: the plan the statistics used
+      else ManifestTable.readPruned(ss, root, tableSchema, planAt(asOf.getOrElse(cur.get)))
+    frame.select(required.fieldNames.map(col).toIndexedSeq: _*)
+      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
 }
 

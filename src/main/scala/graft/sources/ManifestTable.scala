@@ -142,13 +142,14 @@ object ManifestTable {
           e: java.util.Map.Entry[String, (Long, Long, String)]): Boolean = size > 256
     })
 
-  /** Drop every memoized manifest body under `rootPrefix` — called by
-    * table-dropping paths so a recreate at the same path starts cold.
+  /** Drop every memoized manifest body and deletion vector under
+    * `rootPrefix` — called by table-dropping paths so a recreate at the
+    * same path starts cold.
     */
-  private[sources] def invalidateBodyCache(rootPrefix: String): Unit =
-    bodyCache.synchronized {
-      bodyCache.keySet.removeIf(_.startsWith(rootPrefix))
-    }
+  private[sources] def invalidateBodyCache(rootPrefix: String): Unit = {
+    bodyCache.synchronized(bodyCache.keySet.removeIf(_.startsWith(rootPrefix)))
+    dvCache.synchronized(dvCache.keySet.removeIf(_.startsWith(rootPrefix)))
+  }
 
   private def manifestBody(fs: FileSystem, root: Path, v: Long): String = {
     val p = new Path(root, ManifestPrefix + fmt(v))
@@ -167,7 +168,7 @@ object ManifestTable {
     }
   }
 
-  /** The deletion-vector dataset version a manifest points at, if any. */
+  /** The deletion-vector version (`d<v>`) a manifest points at, if any. */
   private def dvOf(fs: FileSystem, root: Path, v: Long): Option[Long] =
     manifestBody(fs, root, v).linesIterator
       .find(_.startsWith("#dv\t")).map(_.stripPrefix("#dv\t").toLong)
@@ -497,8 +498,8 @@ object ManifestTable {
     * top level lost the race — the nested payload is pulled back out to a
     * fresh stage and the claim retries against the now-occupied number.
     *
-    * `dvStage = Some(dir)`: this commit carries its OWN deletion-vector
-    * dataset (base DV ∪ this batch's masked positions — the [[mergeDv]]
+    * `dvStage = Some(dir)`: this commit carries its OWN deletion vector
+    * (base DV ∪ this batch's masked positions — the [[mergeDv]]
     * shape); the staged DV is claimed into `d<myNext>` alongside the data
     * claim and the manifest's `#dv` points at it. Its positions and DV
     * union were computed against the base snapshot, so on a collision it
@@ -597,7 +598,7 @@ object ManifestTable {
         // inside this commit's touched partitions.
         if (touchedNames.nonEmpty && newDv != dvCarry0) {
           val hit = touchedNames.filter(
-            dvDeltaPartitions(spark, root, dvCarry0, newDv).contains)
+            dvDeltaDirs(spark, root, dvCarry0, newDv).contains)
           if (hit.nonEmpty)
             throw new IllegalStateException(
               "commit conflict: a concurrent DELETE changed the deletion vector inside " +
@@ -627,7 +628,7 @@ object ManifestTable {
     // the version number our data dir currently sits at (None: still staged)
     var stageCur = stage
     var dirAt: Option[Long] = None
-    // likewise for the staged DV dataset (claimed as d<number>)
+    // likewise for the staged DV (claimed as d<number>)
     var dvAt: Option[Long] = None
     def srcDir: Path = dirAt.map(v => new Path(rootP, "v" + fmt(v))).getOrElse(stageCur)
     // rename + marker verification; a lost same-number race nests our
@@ -675,7 +676,7 @@ object ManifestTable {
         if (stats.nonEmpty) writeStats(fs, rootP, myNext, stats)
         if (blooms.nonEmpty) writeBlooms(fs, rootP, myNext, blooms)
         if (ndv.nonEmpty) writeNdv(fs, rootP, myNext, ndv)
-        // claim the staged DV dataset into d<myNext>. Safe to reclaim a
+        // claim the staged DV into d<myNext>. Safe to reclaim a
         // pre-existing d-dir: every DV writer stages and claims its data
         // dir FIRST (deleteWhere included), so a d<myNext> with no
         // manifest at myNext belongs to a writer whose v<myNext> claim
@@ -823,23 +824,142 @@ object ManifestTable {
     */
   private def normPath(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.regexp_replace
-    regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+    regexp_replace(c, SchemeRx, "/")
   }
+  private val SchemeRx = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
 
-  private def dvDir(root: String, d: Long): String = s"$root/d${fmt(d)}"
+  /** The [[normPath]] key of a listed data file: Spark's `_metadata.file_path`
+    * is the path's URI string (spaces and `%` escaped), not `Path.toString`.
+    */
+  private def fileKey(p: Path): String = p.toUri.toString.replaceFirst(SchemeRx, "/")
 
-  /** Deletion-vector file schema — fixed by [[GraftDeltaWrite.DelSchema]]
-    * and every DV writer. Supplying it on read skips parquet schema
-    * inference (a driver-side footer merge + its listing) per DV-masked
-    * scan — measured as a recurring 1-task job in every DML lifecycle
-    * query (r22).
+  // ---------------- deletion vectors (per-file row bitmaps) ---------------
+  //
+  // A deletion vector maps each data file's [[normPath]] key (`__f`) to a
+  // Roaring bitmap of its masked parquet row indexes (`__pos`) — the Delta
+  // and Iceberg v3 DV shape. `d<v>/` holds ONE driver-written file of them
+  // (`DvFile`), so a DV commit runs no Spark write job and a masked scan no
+  // broadcast job: readers load it on the driver and filter the scan.
+  // SCALE: the whole DV lives on the driver, compressed — the broadcast
+  // anti-join it replaced collected it there too under the broadcast
+  // threshold — and [[compact]] folds it away.
+
+  private type Dv = Map[String, org.roaringbitmap.RoaringBitmap]
+  private val DvFile = "positions.roaring"
+  private val DvMagic = 0x47445631 // "GDV1"
+
+  /** Schema of a DV written as parquet by an older build — the one format
+    * [[decodeLegacyDv]] still reads.
     */
   private val DvSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("__f", org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("__pos", org.apache.spark.sql.types.LongType)))
 
-  private def readDv(spark: SparkSession, root: String, d: Long): DataFrame =
-    spark.read.schema(DvSchema).parquet(dvDir(root, d))
+  /** Decoded DVs by `d<v>` dir, memoized like [[manifestBody]]: validated
+    * by the bitmap file's (mtime, len) — a parquet-era dir by its own mtime
+    * and len -1, so a bitmap file at the same path never matches it — and
+    * cleared by [[invalidateBodyCache]]. Entries are shared by concurrent
+    * tasks and never mutated after decode.
+    */
+  private val dvCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, (Long, Long, Dv)](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, (Long, Long, Dv)]): Boolean =
+        size > 64
+    })
+
+  /** Deletion vector `d<d>` of `root` as per-file bitmaps, on the driver. */
+  private def dvBitmaps(spark: SparkSession, root: String, d: Long): Dv = {
+    val (fs, rootP) = fsOf(spark, root)
+    val dir = new Path(rootP, "d" + fmt(d))
+    val file = new Path(dir, DvFile)
+    val st = try Some(fs.getFileStatus(file)) catch { case _: java.io.FileNotFoundException => None }
+    val (mtime, len) = st.fold((fs.getFileStatus(dir).getModificationTime, -1L))(s =>
+      (s.getModificationTime, s.getLen))
+    val hit = dvCache.get(dir.toString)
+    if (hit != null && hit._1 == mtime && hit._2 == len) hit._3
+    else {
+      val dv = if (st.isEmpty) decodeLegacyDv(spark, dir) else {
+        val in = new java.io.DataInputStream(new java.io.BufferedInputStream(fs.open(file)))
+        try {
+          if (in.readInt() != DvMagic)
+            throw new IllegalStateException(s"$file is not a graft deletion vector")
+          Seq.fill(in.readInt()) {
+            val f = in.readUTF()
+            val b = new org.roaringbitmap.RoaringBitmap
+            b.deserialize(in)
+            f -> b
+          }.toMap
+        } finally in.close()
+      }
+      dvCache.put(dir.toString, (mtime, len, dv))
+      dv
+    }
+  }
+
+  /** A `d<v>` dir written before DVs were bitmap files: parquet
+    * `(__f, __pos)` rows, decoded with one collect (then cached).
+    */
+  private def decodeLegacyDv(spark: SparkSession, dir: Path): Dv =
+    bitmapsOf(spark.read.schema(DvSchema).parquet(dir.toString).collect().iterator
+      .map(r => (r.getString(0), r.getLong(1))))
+
+  /** `(__f, __pos)` pairs → fresh per-file bitmaps (duplicates collapse). */
+  private def bitmapsOf(it: Iterator[(String, Long)]): Dv = {
+    val m = scala.collection.mutable.HashMap.empty[String, org.roaringbitmap.RoaringBitmap]
+    it.foreach { case (f, pos) =>
+      if (pos < 0 || pos > Int.MaxValue) throw new IllegalStateException(
+        s"deletion vector: row index $pos of $f is outside [0, 2^31) — refusing to mask it")
+      m.getOrElseUpdate(f, new org.roaringbitmap.RoaringBitmap).add(pos.toInt)
+    }
+    m.foreach(_._2.runOptimize())
+    m.toMap
+  }
+
+  /** The union of two DVs; both inputs stay untouched (cached bitmaps are shared). */
+  private def orDv(a: Dv, b: Dv): Dv =
+    b.foldLeft(a) { case (acc, (f, bm)) =>
+      acc.updated(f, acc.get(f).fold(bm)(org.roaringbitmap.RoaringBitmap.or(_, bm)))
+    }
+
+  /** Stage `base ∪ positions` — positions collected as per-partition bitmaps
+    * in ONE job — as one bitmap file in a fresh `.stage-*-dv` dir, ready
+    * for [[publishStaged]]'s claim into `d<v>`.
+    */
+  private def stageDv(spark: SparkSession, root: String, base: Option[Long],
+                      positions: DataFrame): Path = {
+    val (fs, rootP) = fsOf(spark, root)
+    val added = positions.select("__f", "__pos").queryExecution.toRdd.mapPartitions(it =>
+      Iterator(bitmapsOf(it.map(r => (r.getUTF8String(0).toString, r.getLong(1))))))
+      .collect().foldLeft(Map.empty: Dv)(orDv)
+    val dv = orDv(base.fold(Map.empty: Dv)(dvBitmaps(spark, root, _)), added)
+    val dir = new Path(rootP, ".stage-" + java.util.UUID.randomUUID().toString.take(12) + "-dv")
+    val out = new java.io.DataOutputStream(
+      new java.io.BufferedOutputStream(fs.create(new Path(dir, DvFile), true)))
+    try {
+      out.writeInt(DvMagic)
+      out.writeInt(dv.size)
+      dv.foreach { case (f, b) => out.writeUTF(f); b.serialize(out) }
+    } finally out.close()
+    dir
+  }
+
+  /** Partition dirs whose masking differs between DVs `a` and `b`,
+    * compared file by file on the driver. The dir is the key's segments
+    * between its `v########` data-version dir and the file name, URI-
+    * decoded back to the on-disk name the manifest entries use.
+    */
+  private def dvDeltaDirs(spark: SparkSession, root: String,
+                          a: Option[Long], b: Option[Long]): Set[String] =
+    if (a == b) Set.empty
+    else {
+      val Seq(da, db) = Seq(a, b).map(_.fold(Map.empty: Dv)(dvBitmaps(spark, root, _)))
+      (da.keySet ++ db.keySet).filter(f => da.get(f) != db.get(f)).map { f =>
+        val segs = new java.net.URI(f).getPath.split('/')
+        val at = segs.lastIndexWhere(s =>
+          s.length == 9 && s.head == 'v' && s.tail.forall(_.isDigit), segs.length - 2)
+        segs.slice(at + 1, segs.length - 1).mkString("/")
+      }
+    }
 
   /** The table's physical partition column, recovered from the current
     * manifest's hive-style entry names (`col=value`) — None for an
@@ -865,10 +985,11 @@ object ManifestTable {
       .escapePathName(String.valueOf(x))
   }
 
-  /** The snapshot of manifest `v`, with the version's deletion vector (if
-    * any) anti-joined out. `withMeta = true` keeps the `__f`/`__pos` file
-    * identity columns (scheme-free path + parquet row index) the DV
-    * machinery keys on; otherwise the result carries exactly `schema`.
+  /** The snapshot of manifest `v`, with the rows the version's deletion
+    * vector (if any) masks filtered out. `withMeta = true` keeps the
+    * `__f`/`__pos` file identity columns (scheme-free path + parquet row
+    * index) the DV machinery keys on; otherwise the result carries exactly
+    * `schema`.
     * `restrictTo` limits assembly to the named partition dirs (the
     * [[changes]] pruning path).
     */
@@ -891,10 +1012,10 @@ object ManifestTable {
       listDataStatus(fs, if (name.isEmpty) vdir else new Path(vdir, name)).map(vdir -> _)
     }
 
-  /** The scan of `files` under `schema0` with deletion vector `dv` (if any)
-    * anti-joined out: one file-source relation per partition layout
-    * ([[ManifestScan.relations]]), however many data versions hold the
-    * files. `withMeta = true` keeps the `__f`/`__pos` file identity columns
+  /** The scan of `files` under `schema0` with the rows deletion vector
+    * `dv` (if any) masks filtered out: one file-source relation per
+    * partition layout ([[ManifestScan.relations]]), however many data
+    * versions hold the files. `withMeta = true` keeps the `__f`/`__pos` file identity columns
     * (scheme-free path + parquet row index) the DV machinery keys on;
     * otherwise the result carries exactly `schema0`.
     */
@@ -922,8 +1043,13 @@ object ManifestTable {
       if (rels.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], if (needMeta) metaSchema else schema)
       else rels.reduce(_ unionByName _)
-    val masked = dv.fold(assembled)(d =>
-      assembled.join(readDv(spark, root, d), Seq("__f", "__pos"), "left_anti"))
+    // the DV rides a broadcast variable (no job) into a position filter
+    val masked = dv.map(dvBitmaps(spark, root, _)).filter(_.nonEmpty).fold(assembled) { m =>
+      val bc = spark.sparkContext.broadcast(m)
+      val live = org.apache.spark.sql.functions.udf((f: String, pos: Long) =>
+        !bc.value.get(f).exists(b => pos <= Int.MaxValue && b.contains(pos.toInt)))
+      assembled.filter(live(col("__f"), col("__pos")))
+    }
     masked.select(cols ++ (if (withMeta) Seq(col("__f"), col("__pos")) else Nil): _*)
   }
 
@@ -1282,21 +1408,14 @@ object ManifestTable {
                            ranges: Seq[ColRange], points: Seq[(String, Any)],
                            pointsAny: Seq[(String, Seq[Any])])
       : Seq[Map[String, Array[Long]]] = {
-    val (plan, _) = planPrune(spark, root, v, ranges, points, pointsAny)
     val (fs, rootP) = fsOf(spark, root)
-    plan.toSeq.flatMap { case (dv, sel) =>
-      val vdir = new Path(rootP, "v" + fmt(dv))
-      val kept: Seq[String] = sel match {
-        case Left(dirs) => listDataFiles(fs, vdir).filter(rel =>
-          dirs.contains("") || dirs.exists(d => rel.startsWith(d + "/")))
-        case Right(files) => files.map(_._1)
-      }
+    planPrune(spark, root, v, ranges, points, pointsAny).kept.toSeq.flatMap { case (dv, kept) =>
       if (kept.isEmpty) Nil
       else {
         // a kept file with NO sketch line for a column means that version
         // never harvested it
         val sketches = loadNdv(fs, rootP, dv).getOrElse(Map.empty)
-        kept.map(rel => sketches.getOrElse(rel, Map.empty))
+        kept.map(f => sketches.getOrElse(f._1, Map.empty))
       }
     }
   }
@@ -1370,17 +1489,9 @@ object ManifestTable {
                   pointsAny: Seq[(String, Seq[Any])] = Nil): (Int, Int) = {
     val v = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"manifest table $root has no committed version"))
-    planPrune(spark, root, v, ranges, points, pointsAny)._2
+    planPrune(spark, root, v, ranges, points, pointsAny).counts
   }
 
-  /** Per data version: either Left(partitionDirs) when no sidecar exists
-    * (dir read, no pruning) or Right(keptRelPaths); plus (kept, total)
-    * counts. A file survives when its zone maps can intersect every range
-    * AND its Bloom filters might contain every conjunctive point AND, per
-    * `pointsAny` entry, might contain AT LEAST ONE of the listed values —
-    * the IN-list probe (the "fetch N rows by key" pattern: a file provably
-    * lacking every key in the list skips).
-    */
   /** Does the (possibly NESTED — composite specs write
     * `ts_day=…/user_id_bucket=…`) hive-style dir path survive the
     * conjunctive hints? Segments are independent constraints: the dir
@@ -1529,21 +1640,21 @@ object ManifestTable {
                      ranges: Seq[ColRange],
                      points: Seq[(String, Any)] = Nil,
                      pointsAny: Seq[(String, Seq[Any])] = Nil)
+      : (Long, Option[Long], Map[String, Long]) =
+    estimatePruned(spark, root, planPrune(spark, root, v, ranges, points, pointsAny))
+
+  /** [[estimatePruned]] of an already planned prune — one plan serves a
+    * catalog scan's statistics and its read ([[readPruned]]).
+    */
+  private[graft] def estimatePruned(spark: SparkSession, root: String, plan: PrunePlan)
       : (Long, Option[Long], Map[String, Long]) = {
-    val (plan, _) = planPrune(spark, root, v, ranges, points, pointsAny)
     val (fs, rootP) = fsOf(spark, root)
     var bytes = 0L
     var rows = 0L
-    var haveRows = dvOf(fs, rootP, v).isEmpty
+    var haveRows = dvOf(fs, rootP, plan.v).isEmpty
     val perFile = Seq.newBuilder[Map[String, Array[Long]]]
-    plan.foreach { case (dv, sel) =>
-      val kept: Seq[(String, Long)] = sel match {
-        case Left(dirs) => listDataFilesWithLen(fs, new Path(rootP, "v" + fmt(dv)))
-          .filter { case (rel, _) =>
-            dirs.contains("") || dirs.exists(d => rel.startsWith(d + "/")) }
-        case Right(files) => files.map { case (rel, st) => rel -> st.getLen }
-      }
-      bytes += kept.map(_._2).sum
+    plan.kept.foreach { case (dv, kept) =>
+      bytes += kept.map(_._2.getLen).sum
       if (kept.nonEmpty) {
         if (haveRows) loadStats(fs, rootP, dv) match {
           case None => haveRows = false
@@ -1631,31 +1742,16 @@ object ManifestTable {
         (0 until b.n).foreach(i => groups(Seq(i)) = Seq.newBuilder)
       case _ => ()
     }
-    val (plan, _) = planPrune(spark, root, v, ranges, points, pointsAny)
-    plan.foreach { case (dataV, sel) =>
-      val vdir = new Path(rootP, "v" + fmt(dataV))
-      val kept: Seq[(String, Long)] = sel match {
-        case Left(dirs) => listDataFilesWithLen(fs, vdir).filter { case (rel, _) =>
-          dirs.exists(d => rel.startsWith(d + "/")) }
-        case Right(files) => files.map { case (rel, st) => rel -> st.getLen }
-      }
-      kept.foreach { case (rel, len) =>
+    planPrune(spark, root, v, ranges, points, pointsAny).kept.foreach { case (_, kept) =>
+      kept.foreach { case (rel, st) =>
         val key = dirValues(rel.substring(0, math.max(rel.lastIndexOf('/'), 0)))
           .getOrElse(throw new IllegalStateException(
             s"spjLayout: live file $rel escaped the checked layout"))
-        groups.getOrElseUpdate(key, Seq.newBuilder) +=
-          ((fs.makeQualified(new Path(vdir, rel)).toString, len))
+        groups.getOrElseUpdate(key, Seq.newBuilder) += ((st.getPath.toString, st.getLen))
       }
     }
     Some((leaves, groups.toSeq.map { case (k, b) => (k, b.result()) }))
   }
-
-  private def listDataFilesWithLen(fs: FileSystem, vdir: Path): Seq[(String, Long)] =
-    if (!fs.exists(vdir)) Nil
-    else {
-      val relOf = relTo(fs, vdir)
-      listDataStatus(fs, vdir).map(st => relOf(st) -> st.getLen)
-    }
 
   /** `(keptDirs, totalDirs)` the given hints leave readable in the current
     * snapshot — the observable partition-level pruning effect (file-level
@@ -1672,10 +1768,24 @@ object ManifestTable {
     (dirs.count(d => dirSurvives(d, specsByPhys, ranges, points, pointsAny)), dirs.size)
   }
 
-  private def planPrune(spark: SparkSession, root: String, v: Long,
-                        ranges: Seq[ColRange], points: Seq[(String, Any)],
-                        pointsAny: Seq[(String, Seq[Any])] = Nil)
-      : (Map[Long, Either[Seq[String], Seq[(String, FileStatus)]]], (Int, Int)) = {
+  /** A pruned snapshot: manifest version `v` and, per data version, the
+    * data files (path relative to the version dir, status) the hints keep;
+    * `counts` = (kept, total) files over the versions that carry sidecars.
+    */
+  private[graft] final case class PrunePlan(v: Long, kept: Map[Long, Seq[(String, FileStatus)]],
+                                            counts: (Int, Int))
+
+  /** Lists only the partition dirs that survive the hints (the version dir
+    * itself only for an unpartitioned `""` entry). A listed file survives
+    * when its zone maps can intersect every range AND its Bloom filters
+    * might contain every conjunctive point AND, per `pointsAny` entry,
+    * might contain AT LEAST ONE of the listed values — the IN-list probe
+    * (the "fetch N rows by key" pattern: a file provably lacking every key
+    * in the list skips). Versions without sidecars keep every listed file.
+    */
+  private[graft] def planPrune(spark: SparkSession, root: String, v: Long,
+                               ranges: Seq[ColRange], points: Seq[(String, Any)],
+                               pointsAny: Seq[(String, Seq[Any])] = Nil): PrunePlan = {
     val (fs, rootP) = fsOf(spark, root)
     val entries = entriesOf(fs, rootP, v)
     // PARTITION-DIR pruning before any file listing: hints on the
@@ -1690,20 +1800,18 @@ object ManifestTable {
       dirSurvives(dirName, specsByPhys, ranges, points, pointsAny)
     var keptN = 0; var totalN = 0
     val plan = entries.groupBy(_._2).map { case (dv, parts) =>
-      val partDirs = parts.map(_._1).distinct.filter(partSurvives).sorted
-      val stats = loadStats(fs, rootP, dv)
-      val blooms = loadBlooms(fs, rootP, dv)
-      if (partDirs.isEmpty) dv -> Right(Nil) // every partition dir pruned
-      else if (stats.isEmpty && blooms.isEmpty) dv -> Left(partDirs)
+      val partDirs = parts.map(_._1).distinct.filter(partSurvives)
+      val vdir = fs.makeQualified(new Path(rootP, "v" + fmt(dv)))
+      val relOf = relTo(fs, vdir)
+      // universe = the surviving dirs' actual files, never the sidecar key
+      // sets — a file missing its sidecar entry (all-NULL bloom column,
+      // partial stats) defaults to KEPT, the only correct superset
+      val live = (if (partDirs.contains("")) Seq(vdir) else partDirs.map(new Path(vdir, _)))
+        .flatMap(listDataStatus(fs, _)).map(st => relOf(st) -> st)
+      val stats = if (live.isEmpty) None else loadStats(fs, rootP, dv)
+      val blooms = if (live.isEmpty) None else loadBlooms(fs, rootP, dv)
+      if (stats.isEmpty && blooms.isEmpty) dv -> live
       else {
-        // universe = the version dir's actual files, never the sidecar key
-        // sets — a file missing its sidecar entry (all-NULL bloom column,
-        // partial stats) defaults to KEPT, the only correct superset
-        val vdir = new Path(rootP, "v" + fmt(dv))
-        val relOf = relTo(fs, vdir)
-        val live = listDataStatus(fs, vdir).map(st => relOf(st) -> st)
-          .filter { case (rel, _) =>
-            partDirs.contains("") || partDirs.exists(p => rel.startsWith(p + "/")) }
         val kept = live.filter { case (rel, _) =>
           val zoneOk = stats.flatMap(_.get(rel))
             .forall(z => survives(z, ranges))
@@ -1718,10 +1826,10 @@ object ManifestTable {
           zoneOk && bloomOk && anyOk
         }
         keptN += kept.size; totalN += live.size
-        dv -> Right(kept.sortBy(_._1))
+        dv -> kept.sortBy(_._1)
       }
     }
-    (plan, (keptN, totalN))
+    PrunePlan(v, plan, (keptN, totalN))
   }
 
   /** [[read]] with zone-map file skipping: files whose per-column [min,
@@ -1740,16 +1848,20 @@ object ManifestTable {
     // with version N+1's (possibly absent) deletion vector
     val v = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"manifest table $root has no committed version"))
-    val (plan, _) = planPrune(spark, root, v, ranges, points, pointsAny)
+    readPruned(spark, root, schema0, planPrune(spark, root, v, ranges, points, pointsAny))
+  }
+
+  /** [[readPruned]] of an already planned prune: its files and its
+    * version's deletion vector, with no further listing.
+    */
+  private[graft] def readPruned(spark: SparkSession, root: String, schema0: StructType,
+                                plan: PrunePlan): DataFrame = {
     val (fs, rootP) = fsOf(spark, root)
-    // the survivors planPrune already listed go to the scan as they are
-    val files = plan.toSeq.flatMap {
-      case (dataV, Left(partDirs)) => liveFiles(fs, rootP, partDirs.map(_ -> dataV))
-      case (dataV, Right(kept)) =>
-        val vdir = fs.makeQualified(new Path(rootP, "v" + fmt(dataV)))
-        kept.map(f => vdir -> f._2)
+    val files = plan.kept.toSeq.flatMap { case (dataV, kept) =>
+      val vdir = fs.makeQualified(new Path(rootP, "v" + fmt(dataV)))
+      kept.map(f => vdir -> f._2)
     }
-    scanFiles(spark, root, schema0, dvOf(fs, rootP, v), files, withMeta = false)
+    scanFiles(spark, root, schema0, dvOf(fs, rootP, plan.v), files, withMeta = false)
   }
 
   /** [[readPruned]] with the skipping hints derived from the PREDICATE
@@ -1916,39 +2028,6 @@ object ManifestTable {
       .select(keys.map(col): _*).distinct()
   }
 
-  /** Partition dirs whose deletion-vector masking differs between the two
-    * DV datasets — the sym-diff of masked positions → files → partition
-    * dirs, bounded by partitions-with-deletes, so the collect is
-    * manifest-sized. The partition dir is located STRUCTURALLY (the segment
-    * after the v######## data-version dir) rather than by stripping a root
-    * prefix — normPath keeps a URI authority (s3a bucket, hdfs namenode) as
-    * a leading path segment that a root-path prefix strip would silently
-    * fail to match.
-    */
-  private def dvDeltaPartitions(spark: SparkSession, root: String,
-                                a: Option[Long], b: Option[Long]): Set[String] = {
-    import org.apache.spark.sql.functions.col
-    if (a == b) return Set.empty
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        org.apache.spark.sql.types.StructField("__f", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("__pos", org.apache.spark.sql.types.LongType))))
-    def dvDf(o: Option[Long]) =
-      o.map(x => readDv(spark, root, x)).getOrElse(empty)
-    val da = dvDf(a); val db = dvDf(b)
-    db.exceptAll(da).unionByName(da.exceptAll(db))
-      .select(col("__f")).distinct().collect().map { r =>
-        val segs = r.getString(0).split('/')
-        val isVer = (x: String) => x.length == 9 && x.head == 'v' &&
-          x.tail.forall(_.isDigit)
-        if (segs.length >= 2 && isVer(segs(segs.length - 2))) ""
-        else if (segs.length >= 3 && isVer(segs(segs.length - 3)))
-          segs(segs.length - 2)
-        else ""
-      }.toSet
-  }
-
   /** CHANGE DATA FEED between two committed manifests — the incremental-
     * consumer contract: the NET row-level difference between the `fromV`
     * and `toV` snapshots, tagged `insert` / `delete` / `update_preimage` /
@@ -1960,10 +2039,8 @@ object ManifestTable {
     * intermediate event iterates adjacent `(v, v+1)` pairs, as the CdcSpec
     * chain test does. The manifest already records
     * which partition dirs moved to a new data version; partitions whose
-    * deletion-vector masking changed are recovered from the DV delta's file
-    * paths — a Spark diff of the two endpoint DVs, skipped when the data
-    * changes already cover every partition (every [[mergeDv]] batch that
-    * appends to each partition).
+    * deletion-vector masking changed come from comparing the two endpoint
+    * DVs' bitmaps file by file on the driver — no Spark job.
     * Untouched partitions are never opened — at 100 TB a merge commit that
     * rewrote 3 of 10k partitions feeds downstream consumers by scanning
     * exactly those 3 on both sides.
@@ -2025,14 +2102,8 @@ object ManifestTable {
     def entrySets(v: Long): Map[String, Set[Long]] =
       entriesOf(fs, rootP, v).groupBy(_._1).map { case (p, es) => p -> es.map(_._2).toSet }
     val eF = entrySets(fromV); val eT = entrySets(toV)
-    val dF = dvOf(fs, rootP, fromV); val dT = dvOf(fs, rootP, toV)
-    val changedData = (eF.keySet ++ eT.keySet).filter(p => eF.get(p) != eT.get(p))
-    // partitions whose DV masking changed only matter outside changedData:
-    // when the data changes cover every partition, skip the DV diff's jobs
-    val dvParts =
-      if ((eF.keySet ++ eT.keySet).subsetOf(changedData)) Set.empty[String]
-      else dvDeltaPartitions(spark, root, dF, dT)
-    val affected = changedData ++ dvParts
+    val affected = (eF.keySet ++ eT.keySet).filter(p => eF.get(p) != eT.get(p)) ++
+      dvDeltaDirs(spark, root, dvOf(fs, rootP, fromV), dvOf(fs, rootP, toV))
     val cdfSchema = StructType(
       org.apache.spark.sql.types.StructField("_change_type",
         org.apache.spark.sql.types.StringType) +: schema.fields)
@@ -2060,11 +2131,11 @@ object ManifestTable {
 
   /** DELETE ... WHERE as MERGE-ON-READ — the deletion-vector mechanism
     * (Delta DVs / Iceberg positional deletes): no data file is rewritten;
-    * the matching rows' (file, row-index) positions are appended to a
-    * deletion-vector dataset (`d<version>/`, plain parquet of `__f`/`__pos`)
+    * the matching rows' (file, row-index) positions are OR-ed into the
+    * base DV's per-file row bitmaps, written as one file in `d<version>/`,
     * and the next manifest points at it with a `#dv` directive. Readers
-    * anti-join the DV during [[read]]/[[readPruned]] assembly, so the
-    * delete is visible atomically at the manifest rename while costing
+    * filter the masked positions out during [[read]]/[[readPruned]]
+    * assembly, so the delete is visible atomically at the manifest rename while costing
     * O(matching rows) write I/O — at 100 TB, deleting one user's rows
     * rewrites kilobytes, not the terabyte-scale files holding them.
     *
@@ -2083,32 +2154,18 @@ object ManifestTable {
     */
   def deleteWhere(spark: SparkSession, root: String, schema: StructType,
                   predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.col
     val (fs, rootP) = fsOf(spark, root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"manifest table $root has no committed version"))
-    val newDel = readSnapshot(spark, root, schema, cur, withMeta = true)
-      .filter(predicate).select(col("__f"), col("__pos"))
-    val allDel = dvOf(fs, rootP, cur) match {
-      case Some(d) => readDv(spark, root, d).unionByName(newDel)
-      case None => newDel
-    }
     // STAGE the DV and claim at publish like every other commit: writing
-    // d<next> directly would occupy the number for the whole Spark job,
-    // and a concurrent claimed committer would reclaim-or-corrupt it (the
-    // d-dir is unverifiable without the claim protocol). The data stage is
-    // an empty claim vehicle — the committed v-dir holds no files and no
-    // entry references it. Positions dedupe at write (a key in both merge
-    // legs lands twice upstream; readers anti-join either way, but
-    // [[rowCount]]/[[deletedRowCount]] subtract).
-    val tag = java.util.UUID.randomUUID().toString.take(12)
-    val dvStage = new Path(rootP, s".stage-$tag-dv")
-    // no dedupe needed: newDel's positions are unique (one row, one
-    // position) and DISJOINT from the base DV (readSnapshot anti-joins it
-    // — a masked row can't match the predicate again), so the union
-    // preserves the stored-DV uniqueness invariant without a shuffle
-    allDel.write.mode("overwrite").parquet(dvStage.toString)
-    val stage = new Path(rootP, s".stage-$tag")
+    // d<next> directly would occupy the number while the positions are
+    // collected, and a concurrent claimed committer would reclaim-or-corrupt
+    // it (the d-dir is unverifiable without the claim protocol). The data
+    // stage is an empty claim vehicle — the committed v-dir holds no files
+    // and no entry references it.
+    val dvStage = stageDv(spark, root, dvOf(fs, rootP, cur),
+      readSnapshot(spark, root, schema, cur, withMeta = true).filter(predicate))
+    val stage = new Path(rootP, dvStage.getName.stripSuffix("-dv"))
     fs.mkdirs(stage)
     publishStaged(spark, root, stage, Some(cur), entriesOf(fs, rootP, cur),
       Nil, dvOf(fs, rootP, cur), Nil, Nil, retryable = false,
@@ -2434,7 +2491,8 @@ object ManifestTable {
     * vector, and the batch itself lands as a fresh data version the
     * manifest adds ALONGSIDE each touched partition's existing entries —
     * one atomic commit, bytes written = O(batch rows + accumulated
-    * deletes) — the DV is rewritten whole (base ∪ this batch's positions)
+    * deletes) — the DV's per-file bitmap file is rewritten whole (base ∪
+    * this batch's positions, OR-ed on the driver from ONE positions job)
     * every commit until [[compact]] drops it — never O(touched partitions).
     * The copy-on-write alternative
     * ([[graft.ops.Upsert.mergePartitionPruned]] + [[commit]]) rewrites every
@@ -2454,7 +2512,7 @@ object ManifestTable {
     * winners that changed no existing file and left the DV untouched
     * (blind [[append]]s — the staged positions stay valid); any other
     * winner (rewrite, delete, another merge — its DV pointer names a
-    * dataset this commit's base DV ∪ positions union did not see) fails
+    * DV this commit's base DV ∪ positions union did not see) fails
     * loudly: re-run the merge against the current snapshot, or route
     * concurrent merge writers through one committing driver.
     *
@@ -2465,7 +2523,7 @@ object ManifestTable {
     * keep the delete leg O(touched) instead of a full-table position scan.
     *
     * Read cost grows with accumulated appends (more files per partition,
-    * a growing DV anti-join) — schedule [[compact]] to fold the append log
+    * a growing DV to load and filter by) — schedule [[compact]] to fold the append log
     * back into one clean version, exactly Delta's merge-on-read + OPTIMIZE
     * pairing. Returns the committed manifest version.
     */
@@ -2524,32 +2582,20 @@ object ManifestTable {
     val curDv = dvOf(fs, rootP, cur)
     val mixed = spec.exists(s => mixedLayout(curEntries, s))
     // DV delta = positions of the upsert keys ∪ the DELETE leg's keys (WHEN
-    // MATCHED DELETE: masked WITHOUT an append) from ONE DV-masked scan. The
-    // left-semi join emits each position once whatever the key duplicates,
-    // so the delta is duplicate-free and disjoint from the base DV without a
-    // shuffle ([[rowCount]] never double-subtracts). The scan reads the
-    // touched partitions (partCol immutable per key) ∪ `deletePartitions`;
-    // deleted keys may live anywhere, so a delete leg without that hint, an
-    // unpartitioned table or a mixed layout scans the full snapshot.
+    // MATCHED DELETE: masked WITHOUT an append) from ONE DV-masked scan,
+    // collected as bitmaps and OR-ed into the base DV on the driver. The
+    // scan reads the touched partitions (partCol immutable per key) ∪
+    // `deletePartitions`; deleted keys may live anywhere, so a delete leg
+    // without that hint, an unpartitioned table or a mixed layout scans the
+    // full snapshot.
     val keySet = (batch +: deleteKeys.toSeq).map(_.select(keys.map(col): _*))
       .reduce(_ unionByName _)
     val deleteRestrict = deleteKeys.fold(Option(Seq.empty[String]))(_ => deletePartitions)
     val restrict =
       if (mixed) None else for (_ <- spec; d <- deleteRestrict) yield touchedNames.toSet ++ d
-    val newDel = readSnapshot(spark, root, schema, cur, withMeta = true, restrict)
-      .join(broadcast(keySet), keys, "left_semi")
-      .select(col("__f"), col("__pos"))
-    val allDel = curDv match {
-      case Some(d) => readDv(spark, root, d).unionByName(newDel)
-      case None => newDel
-    }
-    val dvStage = new Path(rootP,
-      ".stage-" + java.util.UUID.randomUUID().toString.take(12) + "-dv")
-    // a restricted scan writes at most one DV file per core (a narrow
-    // coalesce, no shuffle), else a file per split of the DV read and of the
-    // scan; a full-snapshot scan keeps its split parallelism
-    restrict.fold(allDel)(_ => allDel.coalesce(spark.sparkContext.defaultParallelism))
-      .write.mode("overwrite").parquet(dvStage.toString)
+    val dvStage = stageDv(spark, root, curDv,
+      readSnapshot(spark, root, schema, cur, withMeta = true, restrict)
+        .join(broadcast(keySet), keys, "left_semi"))
     val stats =
       if (statsCols.nonEmpty) harvestStats(fs, stage, statsCols) else Nil
     val (blooms, ndv) =
@@ -2603,7 +2649,6 @@ object ManifestTable {
                       batch0: Option[DataFrame], positions: Option[DataFrame],
                       spec: Option[PartSpec], statsCols: Seq[String] = Nil,
                       bloomCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.col
     val batch = batch0.map(b => FieldIds.attachDf(b, fieldIdsForWrite(spark, root)))
     val (fs, rootP) = fsOf(spark, root)
     val stage = new Path(rootP,
@@ -2619,22 +2664,9 @@ object ManifestTable {
       }
       case None => Nil
     }
-    val dvStage = positions.map { pos =>
-      // dedupe the DELTA only (O(changed rows)): Spark's row-level rewrite
-      // can emit a rowId once per matched source row; the accumulated base
-      // DV is duplicate-free by construction and disjoint from the delta
-      // (the DML scan reads the DV-masked pinned snapshot)
-      val newDel = pos.select(col("__f"), col("__pos"))
-        .dropDuplicates("__f", "__pos")
-      val allDel = dvOf(fs, rootP, baseVersion) match {
-        case Some(d) => readDv(spark, root, d).unionByName(newDel)
-        case None => newDel
-      }
-      val ds = new Path(rootP,
-        ".stage-" + java.util.UUID.randomUUID().toString.take(12) + "-dv")
-      allDel.write.mode("overwrite").parquet(ds.toString)
-      ds
-    }
+    // Spark's row-level rewrite can emit a rowId once per matched source
+    // row; the bitmaps collapse the duplicates
+    val dvStage = positions.map(stageDv(spark, root, dvOf(fs, rootP, baseVersion), _))
     val stats =
       if (statsCols.nonEmpty && batch.isDefined) harvestStats(fs, stage, statsCols) else Nil
     val (blooms, ndv) =
@@ -3067,11 +3099,11 @@ object ManifestTable {
   }
 
   /** Row count of the current snapshot from METADATA only: live data
-    * files' parquet footer row counts, minus the deletion vector's
-    * positions in those files — O(files) footer reads plus one
-    * DV-relation-sized scan, never a data scan (the `SELECT count(*)`
-    * fast path a lakehouse serves from its manifest). DV positions in
-    * files a later rewrite superseded are inert and are NOT subtracted.
+    * files' parquet footer row counts, minus the cardinalities of those
+    * files' deletion-vector bitmaps — O(files) footer reads and no Spark
+    * job, never a data scan (the `SELECT count(*)` fast path a lakehouse
+    * serves from its manifest). DV bitmaps of files a later rewrite
+    * superseded are inert and are NOT subtracted.
     */
   def rowCount(spark: SparkSession, root: String): Long = {
     import scala.jdk.CollectionConverters._
@@ -3080,54 +3112,23 @@ object ManifestTable {
     val v = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"manifest table $root has no committed version"))
     val (fs, rootP) = fsOf(spark, root)
-    val entries = entriesOf(fs, rootP, v)
-    // live files per data version, restricted to that version's live
-    // partition dirs. Two path forms per file: the qualified one for the
-    // footer read, and the DV-match one normalized EXACTLY like normPath
-    // (scheme stripped, URI authority KEPT as a leading segment — an s3a
-    // bucket / hdfs namenode would silently never match under
-    // toUri.getPath, which drops the authority)
-    val liveFiles: Seq[(Path, String)] = entries.groupBy(_._2).toSeq
-      .flatMap { case (dv, parts) =>
-        val vdir = new Path(rootP, "v" + fmt(dv))
-        val dirs = parts.map(_._1).distinct
-        listDataFiles(fs, vdir).filter(rel =>
-          dirs.contains("") || dirs.exists(p => rel.startsWith(p + "/")))
-          .map { rel =>
-            val q = fs.makeQualified(new Path(vdir, rel))
-            (q, q.toString.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-          }
-      }
-    val total = liveFiles.map { case (p, _) =>
+    val files = liveFiles(fs, rootP, entriesOf(fs, rootP, v)).map(_._2.getPath)
+    val total = files.map { p =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, fs.getConf))
       try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
       finally reader.close()
     }.sum
-    val masked = dvOf(fs, rootP, v) match {
-      case None => 0L
-      case Some(d) =>
-        // distributed: the DV can be deleted-rows-sized; the live-file
-        // list (O(files), already on the driver) broadcasts. Positions
-        // dedupe defensively — tables written before DVs deduped at
-        // commit may carry a pair twice
-        import org.apache.spark.sql.functions.broadcast
-        val liveDf = spark.createDataset(liveFiles.map(_._2))(
-          org.apache.spark.sql.Encoders.STRING).toDF("__f")
-        readDv(spark, root, d).dropDuplicates("__f", "__pos")
-          .join(broadcast(liveDf), Seq("__f"), "left_semi").count()
-    }
-    total - masked
+    val dv = dvOf(fs, rootP, v).fold(Map.empty: Dv)(dvBitmaps(spark, root, _))
+    total - files.flatMap(p => dv.get(fileKey(p))).map(_.getLongCardinality).sum
   }
 
   /** Rows currently masked by the table's deletion vector (0 when none) —
-    * the purge-backlog gauge for [[detail]]'s consumers.
+    * the purge-backlog gauge for [[detail]]'s consumers; no Spark job.
     */
   def deletedRowCount(spark: SparkSession, root: String): Long = {
     val cur = currentVersion(spark, root).getOrElse(return 0L)
     val (fs, rootP) = fsOf(spark, root)
-    dvOf(fs, rootP, cur)
-      .map(d => readDv(spark, root, d)
-        .dropDuplicates("__f", "__pos").count()).getOrElse(0L)
+    dvOf(fs, rootP, cur).fold(0L)(dvBitmaps(spark, root, _).values.map(_.getLongCardinality).sum)
   }
 
   /** Exact global (min, max) of a top-level NUMERIC column across the

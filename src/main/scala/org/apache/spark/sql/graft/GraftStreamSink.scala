@@ -26,8 +26,8 @@ import graft.sources.ManifestTable
   *    commit) — the event-log / audit-log sink.
   *  - `mergeKey = k1[,k2…]`: keyed MERGE per micro-batch
   *    ([[ManifestTable.mergeDv]], O(batch + accumulated deletes) written:
-  *    the DV is rewritten whole until `compactEvery` folds it) — the
-  *    continuously-upserted table.
+  *    the DV's one bitmap file is rewritten whole until `compactEvery`
+  *    folds it) — the continuously-upserted table.
   *  - `mergeKey` + `cdf = true`: the batch carries `_change_type` rows (a
   *    [[GraftChangeFeedSource]] feed): inserts/update-postimages upsert,
   *    deletes delete, preimages drop — so

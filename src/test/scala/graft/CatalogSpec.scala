@@ -112,6 +112,49 @@ class CatalogSpec extends SparkSuite {
       "the whole MERGE must land as ONE commit")
   }
 
+  test("a catalog SELECT on a table with a deletion vector plans with no job, collects with one") {
+    val t = freshTable("tdvjobs")
+    spark.sql(s"INSERT INTO $t VALUES (1, 'a', 'x'), (2, 'b', 'y'), (3, 'c', 'x')")
+    spark.sql(s"DELETE FROM $t WHERE k = 2")
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsIn { df = spark.sql(s"SELECT k, v FROM $t"); df.queryExecution.executedPlan } == 0)
+    var got: Array[org.apache.spark.sql.Row] = null
+    assert(jobsIn { got = df.collect() } == 1)
+    assert(got.map(_.getLong(0)).toSet == Set(1L, 3L))
+  }
+
+  test("DV masking is exact under partition values 'a b', 'k=v' and 'x/y' through SQL DML") {
+    import spark.implicits._
+    val t = freshTable("tesc")
+    val root = s"$wh/db/tesc"
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, v STRING, p STRING")
+    spark.sql(s"INSERT INTO $t VALUES (1, 'a', 'a b'), (2, 'b', 'a b'), (3, 'c', 'k=v'), " +
+      "(4, 'd', 'k=v'), (5, 'e', 'x/y'), (6, 'f', 'x/y')")
+    var model = rowsOf(t)
+    def check(step: String): Unit = {
+      assert(rowsOf(t) == model, step)
+      assert(ManifestTable.read(spark, root, schema).as[(Long, String, String)]
+        .collect().toSet == model, step)
+      assert(ManifestTable.rowCount(spark, root) == model.size, step)
+    }
+    spark.sql(s"DELETE FROM $t WHERE k = 1") // the metadata-only DV commit
+    model -= ((1L, "a", "a b"))
+    check("delete")
+    spark.sql(s"UPDATE $t SET v = 'D' WHERE k = 4")
+    model = model - ((4L, "d", "k=v")) + ((4L, "D", "k=v"))
+    check("update")
+    Seq((5L, "DEL", "x/y"), (6L, "F", "x/y"), (7L, "g", "a b")).toDF("k", "v", "p")
+      .createOrReplaceTempView("esc_src")
+    spark.sql(
+      s"""MERGE INTO $t tgt USING esc_src src ON tgt.k = src.k
+         |WHEN MATCHED AND src.v = 'DEL' THEN DELETE
+         |WHEN MATCHED THEN UPDATE SET v = src.v
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    model = model - ((5L, "e", "x/y")) - ((6L, "f", "x/y")) + ((6L, "F", "x/y")) + ((7L, "g", "a b"))
+    check("merge")
+    assert(ManifestTable.deletedRowCount(spark, root) == 4L)
+  }
+
   test("VERSION AS OF time travel reads the pinned snapshot") {
     val t = freshTable("t7")
     spark.sql(s"INSERT INTO $t VALUES (1, 'a', 'x')")

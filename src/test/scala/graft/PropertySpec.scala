@@ -362,9 +362,17 @@ class PropertySpec extends SparkSuite {
       val v0 = ManifestTable.currentVersion(spark, root).get
       // the model state at every committed version
       var states = Map(v0 -> model)
-      // `upParts`: the partitions the upsert leg appends to. Appending to
-      // all three lets changes() skip its DV diff; a batch confined to p0
-      // whose deletes land elsewhere needs that diff to see them
+      // rows ever written: nothing is compacted, so each is live or masked
+      var written = init.size
+      def counts(step: String): Unit = {
+        assert(ManifestTable.rowCount(spark, root) == model.size, s"seed $seed $step rowCount")
+        assert(ManifestTable.deletedRowCount(spark, root) == written - model.size,
+          s"seed $seed $step deletedRowCount")
+      }
+      counts("commit")
+      // `upParts`: the partitions the upsert leg appends to. A batch
+      // confined to p0 whose deletes land elsewhere changes those
+      // partitions through the DV alone, which changes() must still see
       def merge(hinted: Boolean, upParts: Set[String] = Set("p0", "p1", "p2")): Unit = {
         val ups = ((0L to 2L).map(k1 => (k1, rnd.nextInt(5).toLong)) ++
           (1 to 8).map(_ => randKey())).filter(k => upParts(partOf(k))).distinct.map { k =>
@@ -383,12 +391,15 @@ class PropertySpec extends SparkSuite {
           if (hinted) Some(dels.map(k => ManifestTable.partDirName("p", partOf(k))).distinct)
           else None)
         states += v -> model
+        written += ups.size
+        counts(s"merge $v")
       }
       merge(hinted = true)
       merge(hinted = true)
       // a deleteWhere commit moves the DV without appending anything
       model = model.filter { case (_, v) => v % 2 != 0 }
       states += ManifestTable.deleteWhere(spark, root, schema, col("v") % 2 === 0) -> model
+      counts("deleteWhere")
       merge(hinted = true)
       merge(hinted = false)
       merge(hinted = true, upParts = Set("p0"))

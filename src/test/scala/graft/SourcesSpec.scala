@@ -2103,13 +2103,16 @@ class SourcesSpec extends SparkSuite {
     assert(jobsIn { df = ManifestTable.read(spark, root, schema) } == 0)
     val dirs = df.inputFiles.map(f => new org.apache.hadoop.fs.Path(new java.net.URI(f)).getParent)
     assert(dirs.distinct.length >= 36, dirs.distinct.length)
-    // exactly one table scan beside the deletion-vector scan, whatever the
-    // number of data versions
+    // exactly one scan, whatever the number of data versions: the deletion
+    // vector masks it as a filter, not as a second (joined) scan
     val scans = fileScans(df)
-    assert(scans.size == 2 && scans.count(_.output.exists(_.name == "id")) == 1,
+    assert(scans.size == 1 && scans.count(_.output.exists(_.name == "id")) == 1,
       scans.map(_.output.map(_.name).mkString(",")).mkString(" | "))
-    assert(df.as[(Long, Int, Long)].collect().toSet == model)
-    assert(ManifestTable.readWithMeta(spark, root, schema).count() == model.size)
+    var got: Set[(Long, Int, Long)] = null
+    assert(jobsIn { got = df.as[(Long, Int, Long)].collect().toSet } == 1)
+    assert(got == model)
+    assert(jobsIn { df = ManifestTable.readWithMeta(spark, root, schema) } == 0)
+    assert(df.count() == model.size)
     assert(ManifestTable.readPruned(spark, root, schema, Nil)
       .as[(Long, Int, Long)].collect().toSet == model)
     // schema inference: one footer-merge job over all four data versions
@@ -2143,7 +2146,131 @@ class SourcesSpec extends SparkSuite {
         assert(listed.toSeq == Seq(ManifestTable.partDirName("p", v)), listed.mkString(","))
       }
       assert(df.filter(col("p").isNull).count() == 2, dt)
+      // a deletion vector masks exactly one row per value under every dir
+      // name, and its driver-side readers key the same files
+      val v2 = ManifestTable.deleteWhere(spark, root, schema, col("id") >= 10L)
+      val live = rows.filter(_.getLong(0) < 10L).toSet
+      assert(ManifestTable.read(spark, root, schema).collect().toSet == live, dt)
+      assert(ManifestTable.readWithMeta(spark, root, schema).drop("__f", "__pos")
+        .collect().toSet == live, dt)
+      assert(ManifestTable.readPruned(spark, root, schema, Nil).collect().toSet == live, dt)
+      for (v <- values.filter(_ != null))
+        assert(ManifestTable.readPruned(spark, root, schema, Nil, points = Seq("p" -> v))
+          .filter(col("p") === lit(v)).collect().toSet == live.filter(_.get(1) == v), v)
+      assert(ManifestTable.rowCount(spark, root) == live.size, dt)
+      assert(ManifestTable.deletedRowCount(spark, root) == values.size, dt)
+      assert(ManifestTable.changes(spark, root, schema, "id", v2 - 1, v2)
+        .select("_change_type", "id").collect().map(r => (r.getString(0), r.getLong(1))).toSet
+        == rows.filter(_.getLong(0) >= 10L).map(r => ("delete", r.getLong(0))).toSet, dt)
     }
+  }
+
+  test("DV readers run no Spark job: rowCount, deletedRowCount, a deleteWhere window's feed") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val root = Files.createTempDirectory("mandvjobs").toString + "/t"
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("p", IntegerType), StructField("v", LongType)))
+    val v1 = ManifestTable.commit((0L until 40L).map(i => (i, (i % 4).toInt, i))
+      .toDF("id", "p", "v"), root, Some("p"))
+    // the delete lands in one of four partitions: the feed's window misses
+    // three, so only the DV comparison can find the one it touched
+    val v2 = ManifestTable.deleteWhere(spark, root, schema, col("id") === 5L)
+    var n = 0L
+    assert(jobsIn { n = ManifestTable.rowCount(spark, root) } == 0)
+    assert(n == 39L)
+    assert(jobsIn { n = ManifestTable.deletedRowCount(spark, root) } == 0)
+    assert(n == 1L)
+    var feed: org.apache.spark.sql.DataFrame = null
+    assert(jobsIn { feed = ManifestTable.changes(spark, root, schema, "id", v1, v2) } == 0)
+    assert(feed.select("_change_type", "id").as[(String, Long)].collect().toSeq
+      == Seq(("delete", 5L)))
+  }
+
+  test("a deletion vector refuses a row index at or past 2^31 instead of truncating it") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val root = Files.createTempDirectory("mandvbig").toString + "/t"
+    val v1 = ManifestTable.commit(Seq((1L, 1, 1L)).toDF("id", "p", "v"), root, Some("p"))
+    val f = ManifestTable.readWithMeta(spark, root, StructType(Seq(StructField("id", LongType),
+      StructField("p", IntegerType), StructField("v", LongType)))).select("__f").as[String].head()
+    val e = intercept[Exception](ManifestTable.commitDelta(spark, root, v1, None,
+      Some(Seq((f, 1L << 31)).toDF("__f", "__pos")), Some("p")))
+    assert(e.getMessage.contains("2^31"), e.getMessage)
+    assert(ManifestTable.currentVersion(spark, root).contains(v1))
+  }
+
+  test("a deletion vector written as parquet by an older build still masks the same rows") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val root = Files.createTempDirectory("mandvlegacy").toString + "/t"
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("p", IntegerType), StructField("v", LongType)))
+    val v1 = ManifestTable.commit((0L until 60L).map(i => (i, (i % 3).toInt, i))
+      .toDF("id", "p", "v"), root, Some("p"))
+    val v2 = ManifestTable.deleteWhere(spark, root, schema, col("id") % 7 === 0L)
+    val expect = ManifestTable.read(spark, root, schema).as[(Long, Int, Long)].collect().toSet
+    assert(expect.size == 51)
+    // the same (__f, __pos) rows, in the parquet form older builds wrote
+    val ddir = f"$root/d$v2%08d"
+    ManifestTable.readWithMeta(spark, root, schema, Some(v1)).filter(col("id") % 7 === 0L)
+      .select("__f", "__pos").write.mode("overwrite").parquet(ddir)
+    assert(!new java.io.File(ddir).list().exists(_.endsWith(".roaring")))
+    assert(ManifestTable.read(spark, root, schema).as[(Long, Int, Long)].collect().toSet == expect)
+    assert(ManifestTable.rowCount(spark, root) == 51L)
+    assert(ManifestTable.deletedRowCount(spark, root) == 9L)
+    assert(ManifestTable.changes(spark, root, schema, "id", v1, v2).count() == 9L)
+    // the next DV commit carries the legacy positions into its bitmaps
+    ManifestTable.mergeDv(Seq((1L, 1, -1L)).toDF("id", "p", "v"), root, schema, "id", Some("p"))
+    assert(ManifestTable.read(spark, root, schema).as[(Long, Int, Long)].collect().toSet
+      == expect - ((1L, 1, 1L)) + ((1L, 1, -1L)))
+  }
+
+  test("job budget: a mergeDv on a table carrying a DV, and one replicate step of it") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val base = Files.createTempDirectory("mandvbudget").toString
+    val (src, dst) = (base + "/src", base + "/dst")
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("p", IntegerType), StructField("v", LongType)))
+    ManifestTable.commit((0L until 40L).map(i => (i, (i % 4).toInt, i)).toDF("id", "p", "v"),
+      src, Some("p"))
+    ManifestTable.mergeDv(Seq((1L, 1, -1L), (2L, 2, -2L)).toDF("id", "p", "v"),
+      src, schema, "id", Some("p")) // the DV the measured merge builds on
+    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 1)
+    val merge = jobsIn {
+      ManifestTable.mergeDv(Seq((5L, 1, -5L), (41L, 1, 41L)).toDF("id", "p", "v"),
+        src, schema, Seq("id"), Some("p"), Nil, Nil,
+        Some(Seq((6L, 2)).toDF("id", "p")), Some(Seq("p=2")))
+    }
+    var applied = 0
+    val step = jobsIn { applied = ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) }
+    assert(applied == 1)
+    assert(ManifestTable.read(spark, dst, schema).as[(Long, Int, Long)].collect().toSet
+      == ManifestTable.read(spark, src, schema).as[(Long, Int, Long)].collect().toSet)
+    // merge: stage write, key-set broadcast, positions collect. Step: the
+    // same merge on the replica plus the change feed's two-sided diff
+    // (the parquet-DV build ran 4 and 12: DV write job, broadcast joins
+    // and the feed's 4-job DV diff)
+    assert((merge, step) == ((3, 6)))
+  }
+
+  test("a point read on 12 partition dirs lists only the dir that survives pruning") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val local = Files.createTempDirectory("manlist").toString + "/t"
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("p", IntegerType), StructField("v", LongType)))
+    ManifestTable.commit((0L until 120L).map(i => (i, (i % 12).toInt, i)).toDF("id", "p", "v"),
+      local, Some("p"), statsCols = Seq("v"))
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", classOf[ListCountingFs].getName)
+    val root = "cntfs://" + local
+    ListCountingFs.listed.clear()
+    val df = ManifestTable.readPruned(spark, root, schema, Nil, points = Seq("p" -> 7))
+    val vdirLists = ListCountingFs.listed.toArray.map(_.toString).filter(_.contains("/v0"))
+    assert(vdirLists.toSeq == Seq(s"cntfs:$local/v00000001/p=7"), vdirLists.mkString(", "))
+    assert(df.as[(Long, Int, Long)].collect().toSet
+      == (0L until 120L).filter(_ % 12 == 7).map(i => (i, 7, i)).toSet)
   }
 
   test("snapshot read: an unpartitioned-era layout beside an identity layout reads every row once") {
@@ -2167,6 +2294,22 @@ class SourcesSpec extends SparkSuite {
     assert(ManifestTable.inferSchema(spark, root) == StructType(Seq(
       StructField("id", LongType), StructField("p", IntegerType), StructField("v", LongType))))
   }
+}
+
+/** Local file system under the `cntfs` scheme that records every path it
+  * lists — the listing spy for partition-pruning tests.
+  */
+class ListCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "cntfs"
+  override def getUri: java.net.URI = java.net.URI.create("cntfs:///")
+  override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    ListCountingFs.listed.add(p)
+    super.listStatus(p)
+  }
+}
+
+object ListCountingFs {
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]()
 }
 
 /** Deterministic fake fetch client for the S1 keyed-fetch tests — file-scope
