@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import graft.functions.Fuzzy
 import graft.llm.{Dedup, Multimodal, Retrieval, SimSearch, TextStats}
 import graft.ops.{Flatten, FuzzyJoin, Integrity, Upsert}
+import graft.sources.PartSpec
 
 /** The oracle-checked query registry — one entry per implemented operator
   * from SURVEY.md §2 plus the LLM-pipeline operators. Each Spark query is
@@ -3781,7 +3782,7 @@ object Queries {
       val root = java.nio.file.Files.createTempDirectory("q153-dv")
         .toString + "/t"
       import graft.sources.ManifestTable
-      ManifestTable.commit(o, root, Some("o_orderpriority"))
+      ManifestTable.commit(o, root, Some(PartSpec.Identity("o_orderpriority")))
       ManifestTable.deleteWhere(s, root, schema, col("o_totalprice") > 300000.0)
       ManifestTable.deleteWhere(s, root, schema,
         col("o_orderstatus") === "F" && col("o_totalprice") < 50000.0)
@@ -3790,7 +3791,7 @@ object Queries {
           .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("s"))
           .withColumn("stage", lit(stage))
       val masked = agg(ManifestTable.read(s, root, schema), "dv")
-      ManifestTable.compact(s, root, schema, Some("o_orderpriority"))
+      ManifestTable.compact(s, root, schema, Some(PartSpec.Identity("o_orderpriority")))
       val compacted = agg(ManifestTable.read(s, root, schema), "compacted")
       masked.unionByName(compacted)
         .select(col("stage"), col("o_orderpriority"), col("n"), col("s"))
@@ -3820,7 +3821,7 @@ object Queries {
       val root = java.nio.file.Files.createTempDirectory("q154-cdf")
         .toString + "/t"
       import graft.sources.ManifestTable
-      ManifestTable.commit(o, root, Some("o_orderpriority"))
+      ManifestTable.commit(o, root, Some(PartSpec.Identity("o_orderpriority")))
       val urgent = o.filter(col("o_orderpriority") === "1-URGENT")
       val rewritten = urgent.filter(pmod(col("o_orderkey"), lit(7)) =!= 0)
         .withColumn("o_totalprice",
@@ -3828,10 +3829,11 @@ object Queries {
             .otherwise(col("o_totalprice")))
       val inserts = urgent.filter(pmod(col("o_orderkey"), lit(11)) === 0)
         .withColumn("o_orderkey", col("o_orderkey") + lit(100000000L))
-      ManifestTable.commit(rewritten.unionByName(inserts), root, Some("o_orderpriority"))
+      ManifestTable.commit(rewritten.unionByName(inserts), root,
+        Some(PartSpec.Identity("o_orderpriority")))
       ManifestTable.deleteWhere(s, root, schema,
         col("o_orderpriority") === "2-HIGH" && col("o_orderstatus") === "F")
-      ManifestTable.changes(s, root, schema, "o_orderkey", 1L, 3L)
+      ManifestTable.changes(s, root, schema, Seq("o_orderkey"), 1L, 3L)
     }, Some("""WITH u AS (SELECT o_orderkey, o_orderpriority, o_orderstatus, o_totalprice
         FROM orders WHERE o_orderpriority = '1-URGENT'),
       del1 AS (SELECT * FROM u WHERE o_orderkey % 7 = 0),
@@ -4036,7 +4038,7 @@ object Queries {
       import graft.sources.ManifestTable
       // pre-split so every partition dir holds several files to skip over
       ManifestTable.commit(l.repartitionByRange(8, col("l_orderkey")),
-        root, Some("l_returnflag"),
+        root, Some(PartSpec.Identity("l_returnflag")),
         statsCols = Seq("l_orderkey", "l_quantity"), bloomCols = Seq("l_orderkey"))
       val ranged = ManifestTable.readPruned(s, root, schema,
           Seq(ManifestTable.ColRange("l_orderkey", 100L, 5000L)))
@@ -4353,17 +4355,19 @@ object Queries {
         StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
         StructField("o_orderstatus", StringType), StructField("o_totalprice", DoubleType)))
       val root = java.nio.file.Files.createTempDirectory("q171-dvm").toString + "/t"
-      ManifestTable.commit(o, root, Some("o_orderstatus"))
+      ManifestTable.commit(o, root, Some(PartSpec.Identity("o_orderstatus")))
       val b1 = o.filter(pmod(col("o_orderkey"), lit(37)) === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
         .unionByName(o.filter(pmod(col("o_orderkey"), lit(97)) === 0)
           .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
           .withColumn("o_totalprice", col("o_totalprice") + 1))
-      ManifestTable.mergeDv(b1, root, schema, "o_orderkey", Some("o_orderstatus"))
+      ManifestTable.mergeDv(b1, root, schema, Seq("o_orderkey"),
+        Some(PartSpec.Identity("o_orderstatus")))
       val b2 = ManifestTable.read(s, root, schema)
         .filter(pmod(col("o_orderkey"), lit(111)) === 0)
         .withColumn("o_totalprice", col("o_totalprice") + 10)
-      ManifestTable.mergeDv(b2, root, schema, "o_orderkey", Some("o_orderstatus"))
+      ManifestTable.mergeDv(b2, root, schema, Seq("o_orderkey"),
+        Some(PartSpec.Identity("o_orderstatus")))
       ManifestTable.read(s, root, schema)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("s"),
@@ -4431,12 +4435,13 @@ object Queries {
         StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
         StructField("o_orderstatus", StringType), StructField("o_totalprice", DoubleType)))
       val root = java.nio.file.Files.createTempDirectory("q173-dvf").toString + "/t"
-      ManifestTable.commit(o, root, Some("o_orderstatus"))
+      ManifestTable.commit(o, root, Some(PartSpec.Identity("o_orderstatus")))
       val b = o.filter(pmod(col("o_orderkey"), lit(41)) === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 3)
       val dels = o.filter(pmod(col("o_orderkey"), lit(53)) === 0)
         .select("o_orderkey")
-      ManifestTable.mergeDv(b, root, schema, "o_orderkey", Some("o_orderstatus"),
+      ManifestTable.mergeDv(b, root, schema, Seq("o_orderkey"),
+        Some(PartSpec.Identity("o_orderstatus")),
         deleteKeys = Some(dels))
       ManifestTable.read(s, root, schema)
         .groupBy("o_orderstatus")
@@ -4501,19 +4506,19 @@ object Queries {
         StructField("o_orderstatus", StringType), StructField("o_totalprice", DoubleType)))
       val base = java.nio.file.Files.createTempDirectory("q175-rep").toString
       val src = s"$base/src"; val dst = s"$base/dst"
-      ManifestTable.commit(o, src, Some("o_orderstatus")) // v1
+      ManifestTable.commit(o, src, Some(PartSpec.Identity("o_orderstatus"))) // v1
       // first call SEEDS the replica from v1's snapshot ...
-      ManifestTable.replicate(s, src, dst, schema, "o_orderkey", Some("o_orderstatus"))
+      ManifestTable.replicate(s, src, dst, schema, Seq("o_orderkey"), Some("o_orderstatus"))
       val upd = o.filter(pmod(col("o_orderkey"), lit(43)) === 0)
         .withColumn("o_totalprice", col("o_totalprice") + 100)
       ManifestTable.commit(
         graft.ops.Upsert.mergePartitionPruned(
           ManifestTable.read(s, src, schema), upd, "o_orderkey", "o_orderstatus"),
-        src, Some("o_orderstatus")) // v2: rewrite merge
+        src, Some(PartSpec.Identity("o_orderstatus"))) // v2: rewrite merge
       ManifestTable.deleteWhere(s, src, schema,
         pmod(col("o_orderkey"), lit(59)) === 0) // v3: DV delete
       // ... second call replays v2 and v3 as O(changed rows) merge commits
-      ManifestTable.replicate(s, src, dst, schema, "o_orderkey", Some("o_orderstatus"))
+      ManifestTable.replicate(s, src, dst, schema, Seq("o_orderkey"), Some("o_orderstatus"))
       ManifestTable.read(s, dst, schema)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("s"),
@@ -4569,7 +4574,7 @@ object Queries {
         StructField("o_orderstatus", StringType), StructField("o_totalprice", DoubleType)))
       val base = java.nio.file.Files.createTempDirectory("q177-str").toString
       val src = s"$base/src"; val dst = s"$base/dst"
-      ManifestTable.commit(o, src, Some("o_orderstatus")) // v1: seed
+      ManifestTable.commit(o, src, Some(PartSpec.Identity("o_orderstatus"))) // v1: seed
       // v2: upserts + deletes share ONE merge-on-read commit (the q178
       // delete-then-upsert contract: an upserted key survives its own
       // delete leg) — r17 folded the former separate deleteWhere round in,
@@ -4578,7 +4583,7 @@ object Queries {
       ManifestTable.mergeDv(
         o.filter(pmod(col("o_orderkey"), lit(47)) === 0)
           .withColumn("o_totalprice", col("o_totalprice") + 200),
-        src, schema, "o_orderkey", Some("o_orderstatus"),
+        src, schema, Seq("o_orderkey"), Some(PartSpec.Identity("o_orderstatus")),
         deleteKeys = Some(o.filter(pmod(col("o_orderkey"), lit(61)) === 0)
           .select("o_orderkey", "o_orderstatus")))
       val q = s.readStream.format("graft").schema(schema)
@@ -4592,10 +4597,10 @@ object Queries {
               val dels = b.filter(col("_change_type") === "delete")
                 .select("o_orderkey", "o_orderstatus")
               if (!ManifestTable.exists(s, dst))
-                ManifestTable.commit(ups, dst, Some("o_orderstatus"))
+                ManifestTable.commit(ups, dst, Some(PartSpec.Identity("o_orderstatus")))
               else if (ups.count() + dels.count() > 0)
-                ManifestTable.mergeDv(ups, dst, schema, "o_orderkey",
-                  Some("o_orderstatus"), deleteKeys = Some(dels))
+                ManifestTable.mergeDv(ups, dst, schema, Seq("o_orderkey"),
+                  Some(PartSpec.Identity("o_orderstatus")), deleteKeys = Some(dels))
             } finally org.apache.spark.sql.graft.Checkpoints.release(b)
             ()
         }.option("checkpointLocation", s"$base/ckpt").start()
@@ -4638,21 +4643,21 @@ object Queries {
         StructField("price", DoubleType)))
       val keys = Seq("l_orderkey", "l_linenumber")
       val root = java.nio.file.Files.createTempDirectory("q178-ck").toString + "/t"
-      ManifestTable.commit(base, root, Some("rf"))
+      ManifestTable.commit(base, root, Some(PartSpec.Identity("rf")))
       val b1 = base.filter(pmod(col("l_orderkey") * 7 + col("l_linenumber"), lit(37)) === 0)
         .withColumn("qty", col("qty") * 2)
         .unionByName(base
           .filter(pmod(col("l_orderkey") * 5 + col("l_linenumber"), lit(97)) === 0)
           .withColumn("l_orderkey", col("l_orderkey") + lit(10000000L))
           .withColumn("price", col("price") + 1))
-      ManifestTable.mergeDv(b1, root, schema, keys, Some("rf"), Nil, Nil, None, None)
+      ManifestTable.mergeDv(b1, root, schema, keys, Some(PartSpec.Identity("rf")))
       val cur = ManifestTable.read(s, root, schema)
       val b2 = cur.filter(pmod(col("l_orderkey") + col("l_linenumber"), lit(53)) === 0)
         .withColumn("price", col("price") + 10)
       val dels = cur
         .filter(pmod(col("l_orderkey") * 3 + col("l_linenumber"), lit(71)) === 0)
         .select((keys :+ "rf").map(col): _*)
-      ManifestTable.mergeDv(b2, root, schema, keys, Some("rf"), Nil, Nil,
+      ManifestTable.mergeDv(b2, root, schema, keys, Some(PartSpec.Identity("rf")), Nil, Nil,
         Some(dels), None)
       ManifestTable.read(s, root, schema)
         .groupBy("rf")
@@ -4790,14 +4795,14 @@ object Queries {
         StructField("o_orderstatus", StringType), StructField("o_totalprice", DoubleType)))
       val base = java.nio.file.Files.createTempDirectory("q181-pipe").toString
       val src = s"$base/src"; val dst = s"$base/dst"
-      ManifestTable.commit(o, src, Some("o_orderstatus")) // v1: seed
+      ManifestTable.commit(o, src, Some(PartSpec.Identity("o_orderstatus"))) // v1: seed
       // v2: one folded upsert+delete merge commit (r17, the q177/q178
       // contract — upsert wins on an overlapping key), so the declarative
       // sink drains one diff batch instead of two
       ManifestTable.mergeDv(
         o.filter(pmod(col("o_orderkey"), lit(67)) === 0)
           .withColumn("o_totalprice", col("o_totalprice") + 300),
-        src, schema, "o_orderkey", Some("o_orderstatus"),
+        src, schema, Seq("o_orderkey"), Some(PartSpec.Identity("o_orderstatus")),
         deleteKeys = Some(o.filter(pmod(col("o_orderkey"), lit(73)) === 0)
           .select("o_orderkey", "o_orderstatus")))
       val q = s.readStream.format("graft").schema(schema)
@@ -4919,11 +4924,11 @@ object Queries {
         StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
         StructField("o_orderstatus", StringType), StructField("o_totalprice", DoubleType)))
       val root = java.nio.file.Files.createTempDirectory("q184-res").toString + "/t"
-      ManifestTable.commit(o, root, Some("o_orderstatus")) // v1
+      ManifestTable.commit(o, root, Some(PartSpec.Identity("o_orderstatus"))) // v1
       ManifestTable.mergeDv( // v2: the "bad" update (no inserts)
         o.filter(pmod(col("o_orderkey"), lit(43)) === 0)
           .withColumn("o_totalprice", col("o_totalprice") + 100),
-        root, schema, "o_orderkey", Some("o_orderstatus"))
+        root, schema, Seq("o_orderkey"), Some(PartSpec.Identity("o_orderstatus")))
       ManifestTable.deleteWhere(s, root, schema, // v3: the "bad" delete
         pmod(col("o_orderkey"), lit(59)) === 0)
       val nAfterDelete = ManifestTable.rowCount(s, root)
@@ -4957,11 +4962,11 @@ object Queries {
         StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
         StructField("o_orderstatus", StringType), StructField("o_totalprice", DoubleType)))
       val root = java.nio.file.Files.createTempDirectory("q185-cdf").toString + "/t"
-      ManifestTable.commit(o, root, Some("o_orderstatus")) // v1
+      ManifestTable.commit(o, root, Some(PartSpec.Identity("o_orderstatus"))) // v1
       ManifestTable.mergeDv( // v2: update every %31 key
         o.filter(pmod(col("o_orderkey"), lit(31)) === 0)
           .withColumn("o_totalprice", col("o_totalprice") * 2),
-        root, schema, "o_orderkey", Some("o_orderstatus"))
+        root, schema, Seq("o_orderkey"), Some(PartSpec.Identity("o_orderstatus")))
       ManifestTable.deleteWhere(s, root, schema, // v3: delete every %77 key
         pmod(col("o_orderkey"), lit(77)) === 0)
       s.read.format("graft").option("readChangeFeed", "true")

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.PartSpec
+
 /** Scaling-curve probe: replicate the sf0.1 inputs in-memory by factors
   * 1/4/16 and measure the heavy operators' runtime growth. Replicated
   * documents are salted per replica (a replica tag spliced between words) so
@@ -300,7 +302,7 @@ object StressBench {
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           "o_orderkey BIGINT, o_orderpriority STRING, o_totalprice DOUBLE")
         val o = ordersTimes(f).select("o_orderkey", "o_orderpriority", "o_totalprice")
-        graft.sources.ManifestTable.commit(o, root, Some("o_orderpriority"))
+        graft.sources.ManifestTable.commit(o, root, Some(PartSpec.Identity("o_orderpriority")))
         graft.sources.ManifestTable.deleteWhere(spark, root, schema,
           pmod(col("o_orderkey"), lit(100)) === 0)
         graft.sources.ManifestTable.read(spark, root, schema)
@@ -311,12 +313,12 @@ object StressBench {
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           "o_orderkey BIGINT, o_orderpriority STRING, o_totalprice DOUBLE")
         val o = ordersTimes(f).select("o_orderkey", "o_orderpriority", "o_totalprice")
-        graft.sources.ManifestTable.commit(o, root, Some("o_orderpriority"))
+        graft.sources.ManifestTable.commit(o, root, Some(PartSpec.Identity("o_orderpriority")))
         graft.sources.ManifestTable.commit(
           o.filter(col("o_orderpriority") === "1-URGENT")
             .withColumn("o_totalprice", col("o_totalprice") + 1.0),
-          root, Some("o_orderpriority"))
-        graft.sources.ManifestTable.changes(spark, root, schema, "o_orderkey", 1L, 2L)
+          root, Some(PartSpec.Identity("o_orderpriority")))
+        graft.sources.ManifestTable.changes(spark, root, schema, Seq("o_orderkey"), 1L, 2L)
       })
       time("inc_distinct", f)({
         val root = java.nio.file.Files.createTempDirectory(s"stress-ikmv$f")
@@ -467,14 +469,15 @@ object StressBench {
         for (mode <- Seq("cow", "mor")) {
           val root = java.nio.file.Files.createTempDirectory(s"dvamp-$mode")
             .toString + "/t"
-          graft.sources.ManifestTable.commit(rows, root, Some("p"))
+          graft.sources.ManifestTable.commit(rows, root, Some(PartSpec.Identity("p")))
           val t0 = System.nanoTime()
           if (mode == "cow")
             graft.sources.ManifestTable.commit(graft.ops.Upsert.mergePartitionPruned(
               graft.sources.ManifestTable.read(spark, root, schema), batch, "id", "p"),
-              root, Some("p"))
+              root, Some(PartSpec.Identity("p")))
           else
-            graft.sources.ManifestTable.mergeDv(batch, root, schema, "id", Some("p"))
+            graft.sources.ManifestTable.mergeDv(batch, root, schema, Seq("id"),
+              Some(PartSpec.Identity("p")))
           val sec = (System.nanoTime() - t0) / 1e9
           val written = dirBytes(new java.io.File(s"$root/v00000002")) +
             dirBytes(new java.io.File(s"$root/d00000002"))
@@ -507,7 +510,7 @@ object StressBench {
             col("v"))
         val base = java.nio.file.Files.createTempDirectory("cdfstr").toString
         val src = s"$base/src"; val dst = s"$base/dst"
-        graft.sources.ManifestTable.commit(rows, src, Some("p"))
+        graft.sources.ManifestTable.commit(rows, src, Some(PartSpec.Identity("p")))
         val q = spark.readStream.format("graft").schema(schema)
           .option("key", "id").load(src)
           .writeStream.format("graft")
@@ -527,7 +530,7 @@ object StressBench {
           val hotDirs = (0 until 8).map(i =>
             graft.sources.ManifestTable.partDirName("p", s"p$i"))
           graft.sources.ManifestTable.mergeDv(batch, src, schema, Seq("id"),
-            Some("p"), Nil, Nil, Some(dels), Some(hotDirs))
+            Some(PartSpec.Identity("p")), Nil, Nil, Some(dels), Some(hotDirs))
           val t1 = System.nanoTime(); q.processAllAvailable()
           val incSec = (System.nanoTime() - t1) / 1e9
           println(f"""[stress] {"op":"cdf_stream","factor":$f,"seed_sec":$seedSec%.2f,"inc_sec":$incSec%.2f}""")
@@ -722,7 +725,7 @@ object StressBench {
         val seed = spark.range(1000).select(col("id"),
           concat(lit("p"), pmod(col("id"), lit(8))).as("p"),
           (col("id") * 0.5).as("v"))
-        graft.sources.ManifestTable.commit(seed, root, Some("p"))
+        graft.sources.ManifestTable.commit(seed, root, Some(PartSpec.Identity("p")))
         // warm the FS/code path with 3 unmeasured commits
         for (_ <- 1 to 3) graft.sources.ManifestTable.metadataCommitProbe(
           spark, root, staged = probe.endsWith("staged"))
@@ -743,15 +746,16 @@ object StressBench {
             col("v"))
         val root = java.nio.file.Files.createTempDirectory(s"cfull$f").toString + "/t"
         val t0 = System.nanoTime()
-        graft.sources.ManifestTable.commit(rows, root, Some("p"))
+        graft.sources.ManifestTable.commit(rows, root, Some(PartSpec.Identity("p")))
         for (i <- 1 to 3) {
           val batch = rows.filter(col("id") % lit(4801L * f + i) === 0)
             .withColumn("v", col("v") * 2).dropDuplicates("id")
-          graft.sources.ManifestTable.mergeDv(batch, root, schema, "id", Some("p"))
+          graft.sources.ManifestTable.mergeDv(batch, root, schema, Seq("id"),
+            Some(PartSpec.Identity("p")))
         }
         graft.sources.ManifestTable.deleteWhere(spark, root, schema,
           col("id") % 977 === 0)
-        graft.sources.ManifestTable.compact(spark, root, schema, Some("p"))
+        graft.sources.ManifestTable.compact(spark, root, schema, Some(PartSpec.Identity("p")))
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"""[stress] {"op":"commit_full","factor":$f,"commits":6,"sec":$sec%.2f,"sec_per_commit":${sec / 6}%.3f}""")
       }
@@ -904,7 +908,7 @@ object StressBench {
         val seed = spark.range(100).select(col("id"),
           concat(lit("p"), pmod(col("id"), lit(4))).as("p"),
           (col("id") * 0.5).as("v"))
-        ManifestTable.commit(seed, root, Some("p"))
+        ManifestTable.commit(seed, root, Some(PartSpec.Identity("p")))
         ManifestTable.createBranch(spark, root, "wip") // markers in play
         val tc0 = System.nanoTime()
         for (_ <- 1 to n)
@@ -955,7 +959,7 @@ object StressBench {
         for (mode <- Seq("table", "partition")) {
           val root = java.nio.file.Files.createTempDirectory(s"hotc-$mode")
             .toString + "/t"
-          graft.sources.ManifestTable.commit(rows, root, Some("p"))
+          graft.sources.ManifestTable.commit(rows, root, Some(PartSpec.Identity("p")))
           // fragment p0 with five fixed-size appends (the streaming-sink
           // accretion pattern)
           for (i <- 1 to 5)
@@ -963,13 +967,13 @@ object StressBench {
               spark.range(1000).select(
                 (col("id") + lit(100000000L + i * 1000L)).as("id"),
                 lit("p0").as("p"), (col("id") * 0.5).as("v")),
-              root, Some("p"))
+              root, Some(PartSpec.Identity("p")))
           val t0 = System.nanoTime()
           if (mode == "table")
-            graft.sources.ManifestTable.compact(spark, root, schema, Some("p"))
+            graft.sources.ManifestTable.compact(spark, root, schema, Some(PartSpec.Identity("p")))
           else
             graft.sources.ManifestTable.compactPartition(
-              spark, root, schema, "p", "p0")
+              spark, root, schema, PartSpec.Identity("p"), "p0")
           val sec = (System.nanoTime() - t0) / 1e9
           val v = graft.sources.ManifestTable.currentVersion(spark, root).get
           val written = dirBytes(new java.io.File(f"$root/v$v%08d"))

@@ -259,7 +259,7 @@ object Dispatch {
                      mergeKey: String, tieCol: String, partCol: String,
                      trigger: Trigger = Trigger.AvailableNow(),
                      statsCols: Seq[String] = Nil): StreamingQuery = {
-    import graft.sources.ManifestTable
+    import graft.sources.{ManifestTable, PartSpec}
     fileCdcSource(spark, envelopeDir).writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -267,12 +267,12 @@ object Dispatch {
         val schema = promoteSchema(spark, docSchema, promote)
         val deduped = promote(upsertLeg(batch, docSchema, rawKey, tieCol))
         if (!ManifestTable.exists(spark, targetPath)) {
-          ManifestTable.commit(deduped, targetPath, Some(partCol),
+          ManifestTable.commit(deduped, targetPath, Some(PartSpec.Identity(partCol)),
             statsCols = statsCols)
         } else {
           val target = ManifestTable.read(spark, targetPath, schema)
           val merged = Upsert.mergePartitionPruned(target, deduped, mergeKey, partCol)
-          ManifestTable.commit(merged, targetPath, Some(partCol),
+          ManifestTable.commit(merged, targetPath, Some(PartSpec.Identity(partCol)),
             statsCols = statsCols)
           ManifestTable.vacuum(spark, targetPath, retainVersions = 1)
         }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.ManifestTable
+import graft.sources.{ManifestTable, PartSpec}
 
 /** Incremental aggregate-view maintenance: keep a per-key (n, sum, min,
   * max) table current under a stream of delta batches WITHOUT ever
@@ -73,7 +73,7 @@ object IncrementalAgg {
     val da = aggregateDelta(delta, key, valueCol, nBuckets)
       .localCheckpoint() // feeds the touched-set probe AND the merge once
     if (!ManifestTable.exists(spark, root))
-      ManifestTable.commit(da, root, Some("bucket"))
+      ManifestTable.commit(da, root, Some(PartSpec.Identity("bucket")))
     else {
       // bounded driver collect (≤ nBuckets strings): a LITERAL partition
       // filter prunes the scan statically — no reliance on runtime DPP
@@ -81,7 +81,7 @@ object IncrementalAgg {
       val touched = touchedBuckets(da)
       val state = ManifestTable.read(spark, root, stateSchema)
         .filter(col("bucket").isin(touched: _*))
-      ManifestTable.commit(mergeStates(state, da), root, Some("bucket"))
+      ManifestTable.commit(mergeStates(state, da), root, Some(PartSpec.Identity("bucket")))
     }
   }
 
@@ -134,12 +134,13 @@ object IncrementalAgg {
     val da = aggregateDistinctDelta(delta, key, hash, k, nBuckets)
       .localCheckpoint()
     if (!ManifestTable.exists(spark, root))
-      ManifestTable.commit(da, root, Some("bucket"))
+      ManifestTable.commit(da, root, Some(PartSpec.Identity("bucket")))
     else {
       val touched = touchedBuckets(da)
       val state = ManifestTable.read(spark, root, distinctStateSchema)
         .filter(col("bucket").isin(touched: _*))
-      ManifestTable.commit(mergeDistinctStates(state, da, k), root, Some("bucket"))
+      ManifestTable.commit(mergeDistinctStates(state, da, k), root,
+        Some(PartSpec.Identity("bucket")))
     }
   }
 

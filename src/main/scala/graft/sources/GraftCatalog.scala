@@ -1680,7 +1680,7 @@ class GraftV2Table(val root: String, displayName: String, asOf: Option[Long])
     if (ManifestTable.currentVersion(spark, root).isDefined) {
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], idSchema)
-      ManifestTable.commitSpec(empty, root, partSpec, carryForward = false)
+      ManifestTable.commit(empty, root, partSpec, carryForward = false)
     }
     true
   }
@@ -1765,7 +1765,7 @@ private[sources] class StagedGraftTable(ident: Identifier, stagingRoot: String,
           // commit
           val empty = spark.createDataFrame(
             spark.sparkContext.emptyRDD[Row], ddl.schema.get)
-          ManifestTable.commitSpec(empty, finalRoot,
+          ManifestTable.commit(empty, finalRoot,
             ddl.partCol.map(r => PartSpec.parse(r, ddl.schema.get)),
             carryForward = false)
         }
@@ -2321,10 +2321,10 @@ private[sources] class GraftWriteBuilder(root: String, tableSchema: StructType,
         val aligned = Checks.enforce(
           data.toDF(tableSchema.fieldNames.toIndexedSeq: _*), tableProps)
         if (overwrite || ow)
-          ManifestTable.commitSpec(aligned, root, spec, carryForward = false,
+          ManifestTable.commit(aligned, root, spec, carryForward = false,
             statsCols = statsCols, bloomCols = bloomCols)
         else
-          ManifestTable.appendSpec(aligned, root, spec, statsCols, bloomCols)
+          ManifestTable.append(aligned, root, spec, statsCols, bloomCols)
       }
     }
   }
@@ -2454,10 +2454,11 @@ private[sources] class GraftDeltaWrite(root: String, tableSchema: StructType,
   }
 }
 
-/** Driver half of the delta write: executors hand back the staged parquet
-  * file lists; commit folds them into one [[ManifestTable.commitDelta]].
-  * Only files named in COMMITTED task messages are read — a speculative or
-  * failed attempt's stragglers in the staging dir are never picked up.
+/** Driver half of the delta write: executors hand back their staged data
+  * files and their deletes as per-file row bitmaps; commit ORs the bitmaps
+  * and folds both into one [[ManifestTable.commitDelta]]. Only COMMITTED
+  * task messages count — a speculative or failed attempt's stragglers in
+  * the staging dir are never picked up.
   */
 private[sources] class GraftDeltaBatchWrite(root: String, tableSchema: StructType,
                                             spec: Option[PartSpec], statsCols: Seq[String],
@@ -2482,8 +2483,9 @@ private[sources] class GraftDeltaBatchWrite(root: String, tableSchema: StructTyp
     try {
       val msgs = messages.toSeq.collect { case m: GraftDeltaCommitMessage => m }
       val dataFiles = msgs.flatMap(_.dataFile)
-      val delFiles = msgs.flatMap(_.delFile)
-      if (dataFiles.nonEmpty || delFiles.nonEmpty) {
+      val deletes = msgs.map(_.deletes).filter(_.nonEmpty)
+        .reduceOption(ManifestTable.orDv)
+      if (dataFiles.nonEmpty || deletes.nonEmpty) {
         // align to the table schema by NAME — the delta projection's order
         // is Spark's, the committed layout is the table's
         val batch =
@@ -2495,19 +2497,15 @@ private[sources] class GraftDeltaBatchWrite(root: String, tableSchema: StructTyp
           case Some(v) =>
             // insert-only DML stages no DV at all (commitDelta carries the
             // base pointer forward) — a pure append commit
-            val positions =
-              if (delFiles.isEmpty) None
-              else Some(spark.read.schema(GraftDeltaWrite.DelSchema)
-                .parquet(delFiles: _*))
-            ManifestTable.commitDeltaSpec(spark, root, v, batch, positions, spec,
+            ManifestTable.commitDelta(spark, root, v, batch, deletes, spec,
               statsCols, bloomCols)
           case None =>
             // DML against a created-but-empty table: nothing existed to
             // delete, the inserts are a plain first append
-            require(delFiles.isEmpty,
+            require(deletes.isEmpty,
               "row-level DML produced deletes against a table with no committed version")
             batch.foreach(b =>
-              ManifestTable.appendSpec(b, root, spec, statsCols, bloomCols))
+              ManifestTable.append(b, root, spec, statsCols, bloomCols))
         }
       }
     } finally cleanup(spark)
@@ -2518,7 +2516,7 @@ private[sources] class GraftDeltaBatchWrite(root: String, tableSchema: StructTyp
 }
 
 private[sources] final case class GraftDeltaCommitMessage(
-    dataFile: Option[String], delFile: Option[String]) extends WriterCommitMessage
+    dataFile: Option[String], deletes: ManifestTable.Dv) extends WriterCommitMessage
 
 private[sources] final case class GraftDeltaWriterFactory(
     staging: String, dataSchema: StructType, rowIdSchema: StructType,
@@ -2529,13 +2527,13 @@ private[sources] final case class GraftDeltaWriterFactory(
       conf.value)
 }
 
-/** Executor half: inserts stream to a staged data parquet, deletes to a
-  * staged `(__f, __pos)` parquet — both through Spark's own
-  * `ParquetWriteSupport` (full type fidelity, micros timestamps), opened
-  * lazily so a task that saw no rows of a kind leaves no file. An UPDATE
+/** Executor half: inserts stream to a staged data parquet through Spark's
+  * own `ParquetWriteSupport` (full type fidelity, micros timestamps),
+  * opened lazily so a task that saw no insert leaves no file; deletes
+  * collect as per-file row bitmaps (a rowId Spark emits once per matched
+  * source row collapses) that ride back in the commit message. An UPDATE
   * arrives as delete + reinsert ([[GraftRowLevelOperation
-  * .representUpdateAsDeleteAndInsert]]); `update` is implemented anyway
-  * for completeness.
+  * .representUpdateAsDeleteAndInsert]]), so `update` is never called.
   */
 private[sources] class GraftDeltaTaskWriter(staging: String, dataSchema: StructType,
                                             rowIdSchema: StructType, partitionId: Int,
@@ -2546,48 +2544,33 @@ private[sources] class GraftDeltaTaskWriter(staging: String, dataSchema: StructT
   private val posIdx = rowIdSchema.fieldIndex("__pos")
 
   private var dataW: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
-  private var delW: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
   private val dataPath = s"$staging/data/p$partitionId-t$taskId.parquet"
-  private val delPath = s"$staging/del/p$partitionId-t$taskId.parquet"
+  private val deletes = new ManifestTable.DvBuilder
 
-  private def dataWriter = {
+  override def insert(row: InternalRow): Unit = {
     if (dataW == null) dataW = RowParquet.open(dataPath, dataSchema, hadoopConf)
-    dataW
+    dataW.write(row)
   }
-  private def delWriter = {
-    if (delW == null)
-      delW = RowParquet.open(delPath, GraftDeltaWrite.DelSchema, hadoopConf)
-    delW
-  }
-
-  override def insert(row: InternalRow): Unit = dataWriter.write(row)
 
   override def delete(meta: InternalRow, id: InternalRow): Unit =
-    delWriter.write(new GenericInternalRow(
-      Array[Any](id.getUTF8String(fIdx), id.getLong(posIdx))))
+    deletes.add(id.getUTF8String(fIdx).toString, id.getLong(posIdx))
 
-  override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
-    delete(meta, id); insert(row)
-  }
+  override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit =
+    throw new UnsupportedOperationException("graft DML writes an UPDATE as delete + insert")
 
   override def commit(): WriterCommitMessage = {
-    val hadData = dataW != null; val hadDel = delW != null
+    val hadData = dataW != null
     close()
-    GraftDeltaCommitMessage(if (hadData) Some(dataPath) else None,
-      if (hadDel) Some(delPath) else None)
+    GraftDeltaCommitMessage(if (hadData) Some(dataPath) else None, deletes.result())
   }
 
   override def abort(): Unit = {
     close()
-    Seq(dataPath, delPath).foreach { s =>
-      val p = new Path(s); p.getFileSystem(hadoopConf).delete(p, false)
-    }
+    val p = new Path(dataPath); p.getFileSystem(hadoopConf).delete(p, false)
   }
 
-  override def close(): Unit = {
+  override def close(): Unit =
     if (dataW != null) { dataW.close(); dataW = null }
-    if (delW != null) { delW.close(); delW = null }
-  }
 }
 
 /** A parquet writer for `InternalRow`s on the EXECUTOR, built from
@@ -2743,7 +2726,7 @@ private[sources] object GraftProcedures {
           case (Some(value), _) =>
             val sp = t.partSpec.getOrElse(throw new IllegalArgumentException(
               s"compact(partition => ...) needs a partitioned table"))
-            ManifestTable.compactPartitionSpec(SparkSession.active, t.root, t.schema,
+            ManifestTable.compactPartition(SparkSession.active, t.root, t.schema,
               sp, value, args.getInt(1), t.statsColsProp)
           case (None, mb) if mb > 0 =>
             val full = ManifestTable.compactTargetBytes(SparkSession.active, t.root,
@@ -2751,7 +2734,7 @@ private[sources] object GraftProcedures {
             cat.clearPartSpecHistory(t.root) // full rewrite, as below
             full
           case (None, _) =>
-            val full = ManifestTable.compactSpec(SparkSession.active, t.root,
+            val full = ManifestTable.compact(SparkSession.active, t.root,
               t.schema, t.partSpec, args.getInt(1), t.statsColsProp)
             // a full rewrite re-derives every row under the CURRENT spec —
             // the mixed layout (and with it, any pruning/carry-forward
@@ -2772,7 +2755,7 @@ private[sources] object GraftProcedures {
       override def run(args: InternalRow): Seq[InternalRow] = {
         val t = cat.tableNamed(args.getUTF8String(0).toString)
         val cols = args.getUTF8String(1).toString.split(",").map(_.trim).filter(_.nonEmpty)
-        val v = ManifestTable.compactZOrderSpec(SparkSession.active, t.root, t.schema,
+        val v = ManifestTable.compactZOrder(SparkSession.active, t.root, t.schema,
           t.partSpec, cols.toIndexedSeq, args.getInt(2), t.statsColsProp)
         cat.clearPartSpecHistory(t.root) // full rewrite: mixed layout ends
         Seq(row(v))
@@ -2928,7 +2911,7 @@ private[sources] object GraftProcedures {
                 (cluster :+ key).map(col).toIndexedSeq: _*)
             val corpusNow = ManifestTable.currentVersion(s, corp.root).getOrElse(0L)
             val v = ManifestTable.withBasedOn(corpusNow) {
-              ManifestTable.commitSpec(clustered, idx.root, idx.partSpec,
+              ManifestTable.commit(clustered, idx.root, idx.partSpec,
                 carryForward = false, statsCols = idx.statsColsProp,
                 bloomCols = idx.bloomColsProp)
             }

@@ -257,20 +257,20 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
     val exists = ManifestTable.exists(sqlContext.sparkSession, r)
     mode match {
       case SaveMode.Overwrite =>
-        ManifestTable.commitSpec(data, r, spec, carryForward = false,
+        ManifestTable.commit(data, r, spec, carryForward = false,
           statsCols = statsCols, bloomCols = bloomCols)
       case SaveMode.Append =>
-        if (exists) ManifestTable.appendSpec(data, r, spec,
+        if (exists) ManifestTable.append(data, r, spec,
           statsCols = statsCols, bloomCols = bloomCols)
-        else ManifestTable.commitSpec(data, r, spec,
+        else ManifestTable.commit(data, r, spec,
           statsCols = statsCols, bloomCols = bloomCols)
       case SaveMode.ErrorIfExists if exists =>
         throw new IllegalStateException(s"graft table $r already exists (ErrorIfExists)")
       case SaveMode.ErrorIfExists =>
-        ManifestTable.commitSpec(data, r, spec,
+        ManifestTable.commit(data, r, spec,
           statsCols = statsCols, bloomCols = bloomCols)
       case SaveMode.Ignore =>
-        if (!exists) ManifestTable.commitSpec(data, r, spec,
+        if (!exists) ManifestTable.commit(data, r, spec,
           statsCols = statsCols, bloomCols = bloomCols)
     }
     GraftRelation(sqlContext, r, data.schema, None)
@@ -315,9 +315,9 @@ final case class GraftRelation(sqlContext: SQLContext, root: String,
       case None => ManifestTable.partitionColumn(spark, root).map(PartSpec.Identity)
     }
     if (overwrite)
-      ManifestTable.commitSpec(aligned, root, spec, carryForward = false)
+      ManifestTable.commit(aligned, root, spec, carryForward = false)
     else
-      ManifestTable.appendSpec(aligned, root, spec)
+      ManifestTable.append(aligned, root, spec)
   }
 
   // buildScan hands back InternalRow-backed RDDs from the delegated plan

@@ -459,25 +459,54 @@ object ManifestTable {
   private def entrySetsOf(entries: Seq[(String, Long)]): Map[String, Set[Long]] =
     entries.groupBy(_._1).map { case (p, es) => p -> es.map(_._2).toSet }
 
+  /** What a commit does to the manifest entries, and which concurrent
+    * winners it may rebase past ([[publishStaged]]): Iceberg's snapshot
+    * `operation`, one per commit shape.
+    */
+  private[graft] sealed trait CommitShape
+  private[graft] object CommitShape {
+    /** [[commit]] with no spec or no carry-forward, and [[adoptSnapshot]]:
+      * replaces the entries; fails on any collision (a whole-table
+      * replace never commutes).
+      */
+    case object Snapshot extends CommitShape
+    /** [[commit]] with a spec and carry-forward: supersedes its touched
+      * partitions' entries; rebases unless the winner touched one of them
+      * or moved the DV inside them.
+      */
+    case object Rewrite extends CommitShape
+    /** [[append]]: adds entries; references no base state, so it rebases
+      * past ANY winner (Delta's blind-append rule).
+      */
+    case object Append extends CommitShape
+    /** [[mergeDv]] and [[commitDelta]], with or without a DV stage: adds
+      * entries; rebases only past winners that changed no existing file
+      * and left the DV untouched.
+      */
+    case object Merge extends CommitShape
+    /** [[deleteWhere]] and [[metadataCommitProbe]]: carries the entries;
+      * fails on any collision.
+      */
+    case object Delete extends CommitShape
+  }
+
   /** Optimistic-concurrency publish of a STAGED commit (the Delta commit-
     * retry protocol, adapted to numbered data dirs): the data is already
     * written under a unique `.stage-*` name, so writers never contend on
     * data I/O — only the short claim+publish tail is raced. Per attempt:
     * claim `v<myNext>` (rename stage → vdir), drop the sidecars, publish
-    * the manifest create-exclusively. On a collision, re-resolve the
-    * winner's manifest and check for CONFLICT — a winner whose commit
-    * changed any of THIS commit's touched partitions means both writers
-    * merged the same partition from the same base snapshot, so one update
-    * set would be silently lost; that aborts loudly (`commit conflict`).
-    * Otherwise the commits COMMUTE: slide the claimed data dir + sidecars
-    * to the next free number, recompute the carry-forward entries (and DV
+    * the manifest create-exclusively. On a collision, `shape` decides: a
+    * [[CommitShape.Snapshot]] or [[CommitShape.Delete]] fails loudly; the
+    * others re-resolve the winner's manifest and check it for CONFLICT
+    * (`commit conflict`) — e.g. a winner whose commit changed any of a
+    * rewrite's touched partitions means both writers merged the same
+    * partition from the same base snapshot, so one update set would be
+    * silently lost. Otherwise the commits COMMUTE: slide the claimed data
+    * dir + sidecars to the next free number, recompute the entries (and DV
     * pointer) against the winner's manifest, and re-publish. Disjoint-
-    * partition writers therefore ALL land, in either order; with
-    * `retryable = false` (snapshot commits — whole-table replaces never
-    * commute) any collision fails loudly.
-    *
-    * `appendEntries = true` ([[mergeDv]]) ADDS the touched entries to the
-    * carried set instead of superseding them.
+    * partition writers therefore ALL land, in either order. On a branched
+    * table, a winner from a FOREIGN lineage only slides the claim number,
+    * whatever the shape.
     *
     * An OCCUPIED unpublished `v<myNext>` is either a crashed writer's
     * orphan (reclaimed, so crash-replay converges without a vacuum pass)
@@ -499,23 +528,26 @@ object ManifestTable {
     * fresh stage and the claim retries against the now-occupied number.
     *
     * `dvStage = Some(dir)`: this commit carries its OWN deletion vector
-    * (base DV ∪ this batch's masked positions — the [[mergeDv]]
-    * shape); the staged DV is claimed into `d<myNext>` alongside the data
-    * claim and the manifest's `#dv` points at it. Its positions and DV
-    * union were computed against the base snapshot, so on a collision it
-    * rebases ONLY when the winner changed no existing file and left the
-    * DV pointer untouched (base entries ⊆ winner's entries — blind
-    * appends); any other winner (rewrite, delete, another merge)
-    * invalidates the staged positions and conflicts loudly.
+    * (base DV ∪ this batch's masked positions — the [[mergeDv]] and
+    * [[deleteWhere]] shapes); the staged DV is claimed into `d<myNext>`
+    * alongside the data claim and the manifest's `#dv` points at it.
     */
   private[graft] def publishStaged(
       spark: SparkSession, root: String, stage: Path, baseV: Option[Long],
       baseEntries: Seq[(String, Long)], touchedNames: Seq[String],
       dvCarry0: Option[Long], stats: Seq[(String, String, ColZone)],
-      blooms: Seq[(String, String, Array[Long])], retryable: Boolean,
-      appendEntries: Boolean = false, blindAppend: Boolean = false,
-      dvStage: Option[Path] = None, mergeRules: Boolean = false,
+      blooms: Seq[(String, String, Array[Long])], shape: CommitShape,
+      dvStage: Option[Path] = None,
       ndv: Seq[(String, String, Array[Long])] = Nil): Long = {
+    import CommitShape._
+    // the entry rule (supersede the touched names, or add them) and
+    // whether a collision may rebase at all
+    val (supersede, retryable) = shape match {
+      case Snapshot => (true, false)
+      case Rewrite => (true, true)
+      case Append | Merge => (false, true)
+      case Delete => (false, false)
+    }
     val (fs, rootP) = fsOf(spark, root)
     val baseSets = entrySetsOf(baseEntries)
     // BRANCHED tables (refs present): lineages share the manifest log, so
@@ -566,18 +598,17 @@ object ManifestTable {
       val newEntries = entriesOf(fs, rootP, newCur)
       val newSets = entrySetsOf(newEntries)
       val newDv = dvOf(fs, rootP, newCur)
-      if (blindAppend) {
+      if (shape == Append) {
         // a BLIND APPEND references no base state, so it commutes with ANY
         // winner (Delta's blind-append rule) — no conflict check
-      } else if (dvStage.isDefined || mergeRules) {
+      } else if (shape == Merge) {
         // a merge commit's staged positions and DV union stay valid iff the
         // winner changed no existing file (base entries all still present —
         // blind appends only) and left the DV pointer untouched; a rewrite
         // would orphan masked positions (resurrecting superseded rows), a
         // concurrent delete/merge changed the DV this commit unioned from.
-        // `mergeRules` keeps these exact semantics for an insert-only DML
-        // commit that stages NO DV (its not-matched set was still computed
-        // against the base snapshot)
+        // An insert-only DML commit that stages NO DV keeps these rules
+        // (its not-matched set was still computed against the base snapshot)
         if (newDv != dvCarry0 || !baseEntries.toSet.subsetOf(newEntries.toSet))
           throw new IllegalStateException(
             "commit conflict: a concurrent writer rewrote data or changed the deletion " +
@@ -694,8 +725,8 @@ object ManifestTable {
         try {
           val touched = touchedNames.map(_ -> myNext)
           val entries =
-            if (appendEntries) prev ++ touched
-            else prev.filterNot(e => touchedNames.contains(e._1)) ++ touched
+            if (supersede) prev.filterNot(e => touchedNames.contains(e._1)) ++ touched
+            else prev ++ touched
           def pub(): Unit = publishManifest(fs, rootP, myNext, entries,
             if (dvStage.isDefined) Some(myNext) else dvCarry,
             priorV = Some(myNext - 1).filter(_ > 0))
@@ -748,11 +779,8 @@ object ManifestTable {
     val entries = entriesOf(fs, rootP, cur)
     val dv = dvOf(fs, rootP, cur)
     if (staged) {
-      val stage = new Path(rootP,
-        ".stage-" + java.util.UUID.randomUUID().toString.take(12))
-      fs.mkdirs(stage)
-      publishStaged(spark, root, stage, Some(cur), entries, Nil, dv, Nil, Nil,
-        retryable = false, appendEntries = true)
+      publishStaged(spark, root, stageData(spark, root, None, None, Nil, Nil).dir,
+        Some(cur), entries, Nil, dv, Nil, Nil, CommitShape.Delete)
     } else {
       publishManifest(fs, rootP, cur + 1, entries, dv, priorV = Some(cur))
       cur + 1
@@ -844,7 +872,7 @@ object ManifestTable {
   // anti-join it replaced collected it there too under the broadcast
   // threshold — and [[compact]] folds it away.
 
-  private type Dv = Map[String, org.roaringbitmap.RoaringBitmap]
+  private[graft] type Dv = Map[String, org.roaringbitmap.RoaringBitmap]
   private val DvFile = "positions.roaring"
   private val DvMagic = 0x47445631 // "GDV1"
 
@@ -903,34 +931,45 @@ object ManifestTable {
     bitmapsOf(spark.read.schema(DvSchema).parquet(dir.toString).collect().iterator
       .map(r => (r.getString(0), r.getLong(1))))
 
-  /** `(__f, __pos)` pairs → fresh per-file bitmaps (duplicates collapse). */
-  private def bitmapsOf(it: Iterator[(String, Long)]): Dv = {
-    val m = scala.collection.mutable.HashMap.empty[String, org.roaringbitmap.RoaringBitmap]
-    it.foreach { case (f, pos) =>
+  /** Fresh per-file bitmaps built one `(__f, __pos)` at a time (duplicates
+    * collapse) — on the driver or in an executor task.
+    */
+  private[graft] final class DvBuilder {
+    private val m = scala.collection.mutable.HashMap.empty[String, org.roaringbitmap.RoaringBitmap]
+    def add(f: String, pos: Long): Unit = {
       if (pos < 0 || pos > Int.MaxValue) throw new IllegalStateException(
         s"deletion vector: row index $pos of $f is outside [0, 2^31) — refusing to mask it")
       m.getOrElseUpdate(f, new org.roaringbitmap.RoaringBitmap).add(pos.toInt)
     }
-    m.foreach(_._2.runOptimize())
-    m.toMap
+    def result(): Dv = { m.foreach(_._2.runOptimize()); m.toMap }
   }
 
+  private def bitmapsOf(it: Iterator[(String, Long)]): Dv = {
+    val b = new DvBuilder
+    it.foreach { case (f, pos) => b.add(f, pos) }
+    b.result()
+  }
+
+  /** A scan's `(__f, __pos)` positions as per-file bitmaps: built per
+    * partition on the executors and OR-ed on the driver, in ONE job.
+    */
+  private[graft] def collectDv(positions: DataFrame): Dv =
+    positions.select("__f", "__pos").queryExecution.toRdd.mapPartitions(it =>
+      Iterator(bitmapsOf(it.map(r => (r.getUTF8String(0).toString, r.getLong(1))))))
+      .collect().foldLeft(Map.empty: Dv)(orDv)
+
   /** The union of two DVs; both inputs stay untouched (cached bitmaps are shared). */
-  private def orDv(a: Dv, b: Dv): Dv =
+  private[graft] def orDv(a: Dv, b: Dv): Dv =
     b.foldLeft(a) { case (acc, (f, bm)) =>
       acc.updated(f, acc.get(f).fold(bm)(org.roaringbitmap.RoaringBitmap.or(_, bm)))
     }
 
-  /** Stage `base ∪ positions` — positions collected as per-partition bitmaps
-    * in ONE job — as one bitmap file in a fresh `.stage-*-dv` dir, ready
-    * for [[publishStaged]]'s claim into `d<v>`.
+  /** Stage `base ∪ added` as one bitmap file in a fresh `.stage-*-dv` dir,
+    * ready for [[publishStaged]]'s claim into `d<v>`.
     */
   private def stageDv(spark: SparkSession, root: String, base: Option[Long],
-                      positions: DataFrame): Path = {
+                      added: Dv): Path = {
     val (fs, rootP) = fsOf(spark, root)
-    val added = positions.select("__f", "__pos").queryExecution.toRdd.mapPartitions(it =>
-      Iterator(bitmapsOf(it.map(r => (r.getUTF8String(0).toString, r.getLong(1))))))
-      .collect().foldLeft(Map.empty: Dv)(orDv)
     val dv = orDv(base.fold(Map.empty: Dv)(dvBitmaps(spark, root, _)), added)
     val dir = new Path(rootP, ".stage-" + java.util.UUID.randomUUID().toString.take(12) + "-dv")
     val out = new java.io.DataOutputStream(
@@ -1392,34 +1431,6 @@ object ManifestTable {
     }
   }
 
-  /** Column → estimated distinct count over exactly the files the given
-    * hints leave readable — ALL-OR-NOTHING per column (a file without a
-    * sketch drops the column: a partial union UNDER-estimates). Exact when
-    * the merged minima stay under k; DV-masked rows are uncounted
-    * (superset, like bytes/rows). An empty file set yields no columns.
-    */
-  def estimatePrunedNdv(spark: SparkSession, root: String, v: Long,
-                        ranges: Seq[ColRange],
-                        points: Seq[(String, Any)] = Nil,
-                        pointsAny: Seq[(String, Seq[Any])] = Nil): Map[String, Long] =
-    ndvOfPerFile(keptSketches(spark, root, v, ranges, points, pointsAny))
-
-  private def keptSketches(spark: SparkSession, root: String, v: Long,
-                           ranges: Seq[ColRange], points: Seq[(String, Any)],
-                           pointsAny: Seq[(String, Seq[Any])])
-      : Seq[Map[String, Array[Long]]] = {
-    val (fs, rootP) = fsOf(spark, root)
-    planPrune(spark, root, v, ranges, points, pointsAny).kept.toSeq.flatMap { case (dv, kept) =>
-      if (kept.isEmpty) Nil
-      else {
-        // a kept file with NO sketch line for a column means that version
-        // never harvested it
-        val sketches = loadNdv(fs, rootP, dv).getOrElse(Map.empty)
-        kept.map(f => sketches.getOrElse(f._1, Map.empty))
-      }
-    }
-  }
-
   private def ndvOfPerFile(perFile: Seq[Map[String, Array[Long]]]): Map[String, Long] =
     if (perFile.isEmpty) Map.empty
     else {
@@ -1634,7 +1645,9 @@ object ManifestTable {
     * direction). Bytes keep the superset contract regardless — a size
     * overcount merely declines a broadcast. `ndv` maps each bloom column
     * whose KMV sketch EVERY kept file carries to its merged
-    * distinct-count estimate (exact under `NdvK` distinct values).
+    * distinct-count estimate (exact under `NdvK` distinct values) —
+    * all-or-nothing per column, since a partial union UNDER-estimates;
+    * DV-masked rows stay counted, and an empty file set yields no columns.
     */
   def estimatePruned(spark: SparkSession, root: String, v: Long,
                      ranges: Seq[ColRange],
@@ -2052,11 +2065,6 @@ object ManifestTable {
     * payload width diffs through one co-partitioned full-outer join. A
     * content-identical rewrite (e.g. [[compact]]) yields an empty feed.
     */
-  def changes(spark: SparkSession, root: String, schema: StructType, key: String,
-              fromV: Long, toV: Long): DataFrame =
-    changes(spark, root, schema, Seq(key), fromV, toV)
-
-  /** Composite-key [[changes]]. */
   def changes(spark: SparkSession, root: String, schema: StructType,
               keys: Seq[String], fromV: Long, toV: Long): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -2163,20 +2171,21 @@ object ManifestTable {
     // it (the d-dir is unverifiable without the claim protocol). The data
     // stage is an empty claim vehicle — the committed v-dir holds no files
     // and no entry references it.
-    val dvStage = stageDv(spark, root, dvOf(fs, rootP, cur),
-      readSnapshot(spark, root, schema, cur, withMeta = true).filter(predicate))
-    val stage = new Path(rootP, dvStage.getName.stripSuffix("-dv"))
-    fs.mkdirs(stage)
-    publishStaged(spark, root, stage, Some(cur), entriesOf(fs, rootP, cur),
-      Nil, dvOf(fs, rootP, cur), Nil, Nil, retryable = false,
-      appendEntries = true, dvStage = Some(dvStage))
+    val dvStage = stageDv(spark, root, dvOf(fs, rootP, cur), collectDv(
+      readSnapshot(spark, root, schema, cur, withMeta = true).filter(predicate)))
+    publishStaged(spark, root, stageData(spark, root, None, None, Nil, Nil).dir,
+      Some(cur), entriesOf(fs, rootP, cur), Nil, dvOf(fs, rootP, cur), Nil, Nil,
+      CommitShape.Delete, Some(dvStage))
   }
 
-  /** Commit `df` as the next version. `partCol = Some(c)`: `df` must hold
+  /** Commit `df` as the next version. `spec = Some(s)`: `df` must hold
     * the FULL content of every partition it touches (the
     * [[graft.ops.Upsert.mergePartitionPruned]] output contract) — untouched
     * partitions carry forward from the previous manifest untouched on disk.
     * `None`: `df` is a whole-table snapshot. Returns the committed version.
+    * A hidden-transform spec derives the physical partition column on the
+    * fly ([[PartSpec.derive]]), so data files carry exactly the declared
+    * schema while directories carry the transformed value.
     *
     * The data is written under a unique `.stage-*` dir and claimed into its
     * version number only at publish time ([[publishStaged]]), so writers
@@ -2189,13 +2198,18 @@ object ManifestTable {
     * optimistically on collision — writers touching DISJOINT partitions all
     * land in either order; overlapping writers raise `commit conflict`
     * (re-run the merge on the current snapshot). Snapshot commits
-    * (`partCol = None` or `carryForward = false`) never commute and fail
+    * (`spec = None` or `carryForward = false`) never commute and fail
     * loudly on any collision.
     *
     * `carryForward = false` publishes a manifest referencing ONLY this
     * version's partitions (a full-snapshot rewrite — the [[compact]]
     * contract) instead of merging untouched entries from the previous
-    * manifest.
+    * manifest. A carry-forward commit on a MIXED layout (partition
+    * evolution left dirs under an older spec's column name) is refused: its
+    * supersede-by-name contract cannot retire the other spec's entries for
+    * the same rows — compact (full snapshot rewrite under the current spec)
+    * first, or write through [[append]]/[[mergeDv]], which stay correct
+    * under any mix.
     *
     * `statsCols`: columns to zone-map for [[readPruned]] file skipping —
     * harvested from the freshly-written parquet footers (O(files) footer
@@ -2206,68 +2220,34 @@ object ManifestTable {
     * skipping — one scan of the JUST-written version (O(commit) I/O),
     * published as a `_bloom` sidecar under the same ordering guarantee.
     */
-  def commit(df0: DataFrame, root: String, partCol: Option[String],
+  def commit(df: DataFrame, root: String, spec: Option[PartSpec],
              carryForward: Boolean = true,
              statsCols: Seq[String] = Nil,
-             bloomCols: Seq[String] = Nil): Long =
-    commitSpec(df0, root, partCol.map(PartSpec.Identity), carryForward,
-      statsCols, bloomCols)
-
-  /** [[commit]] with a (possibly hidden-transform) partition spec — the
-    * staged write derives the physical partition column on the fly
-    * ([[PartSpec.derive]]), so data files carry exactly the declared
-    * schema while directories carry the transformed value. A carry-forward
-    * commit on a MIXED layout (partition evolution left dirs under an
-    * older spec's column name) is refused: its supersede-by-name contract
-    * cannot retire the other spec's entries for the same rows — compact
-    * (full snapshot rewrite under the current spec) first, or write
-    * through [[append]]/[[mergeDvSpec]], which stay correct under any mix.
-    */
-  def commitSpec(df0: DataFrame, root: String, spec: Option[PartSpec],
-                 carryForward: Boolean = true,
-                 statsCols: Seq[String] = Nil,
-                 bloomCols: Seq[String] = Nil): Long = {
-    val spark = df0.sparkSession
-    // id-carrying tables write EVERY data file id-annotated, whatever path
-    // produced the frame — one id-less file would fail later by-id reads
-    val df = FieldIds.attachDf(df0, fieldIdsForWrite(spark, root))
+             bloomCols: Seq[String] = Nil): Long = {
+    val spark = df.sparkSession
     val (fs, rootP) = fsOf(spark, root)
-    val stage = new Path(rootP,
-      ".stage-" + java.util.UUID.randomUUID().toString.take(12))
-    stageWrite(df, spec, stage, root)
-    val touchedNames: Seq[String] = spec match {
-      case Some(s) => listStagedPartDirs(fs, stage, s.physNames.length)
-      case None => Seq("")
-    }
-    // sidecars harvest from the STAGE (rel paths are version-agnostic) and
-    // are dropped next to whatever number the claim lands on
-    val stats =
-      if (statsCols.nonEmpty) harvestStats(fs, stage, statsCols) else Nil
-    val (blooms, ndv) =
-      if (bloomCols.nonEmpty) harvestBloomsAndNdv(spark, fs, stage, bloomCols, Some(df.schema))
-      else (Nil, Nil)
+    val st = stageData(spark, root, Some(df), spec, statsCols, bloomCols)
     // carry-forward merge commits keep the previous entries AND the previous
     // deletion vector (untouched partitions must keep their deleted rows
-    // masked); snapshot/compact commits (carryForward=false or partCol=None)
+    // masked); snapshot/compact commits (carryForward=false or spec=None)
     // replace the table wholesale, so the DV pointer drops with the entries.
-    // A touched partition's rewrite supersedes all its previous entries
-    // (publishStaged's appendEntries=false; mergeDv appends instead).
+    // A touched partition's rewrite supersedes all its previous entries.
     val base = currentVersion(spark, root)
-    val retryable = spec.isDefined && carryForward
+    val rewrite = spec.isDefined && carryForward
     val (prev, dvCarry) =
-      if (retryable)
+      if (rewrite)
         base.map(v => (entriesOf(fs, rootP, v), dvOf(fs, rootP, v)))
           .getOrElse((Seq.empty[(String, Long)], None))
       else (Seq.empty[(String, Long)], None)
-    if (retryable && mixedLayout(prev, spec.get))
+    if (rewrite && mixedLayout(prev, spec.get))
       throw new IllegalStateException(
         s"carry-forward commit on $root: the table holds partitions under an " +
           s"older partition spec than ${spec.get.render} (partition evolution) — " +
           "a partition rewrite cannot supersede the other layout's entries for " +
           "the same rows; compact the table (full rewrite under the current " +
           "spec) or write through append/mergeDv")
-    publishStaged(spark, root, stage, base, prev, touchedNames, dvCarry,
-      stats, blooms, retryable = retryable, ndv = ndv)
+    publishStaged(spark, root, st.dir, base, prev, st.touched, dvCarry, st.stats, st.blooms,
+      if (rewrite) CommitShape.Rewrite else CommitShape.Snapshot, ndv = st.ndv)
   }
 
   /** Whether the committer-v2 stage write is safe under `conf`. v2's task
@@ -2373,6 +2353,44 @@ object ManifestTable {
     go(stage, depth)
   }
 
+  /** A staged data write: its `.stage-*` dir, the partition entry names it
+    * touched, and its sidecar payloads.
+    */
+  private final case class Staged(dir: Path, touched: Seq[String],
+                                  stats: Seq[(String, String, ColZone)],
+                                  blooms: Seq[(String, String, Array[Long])],
+                                  ndv: Seq[(String, String, Array[Long])])
+
+  /** The one staging step of every data commit: attach the table's field
+    * ids (id-carrying tables write EVERY data file id-annotated, whatever
+    * path produced the frame — one id-less file would fail later by-id
+    * reads), write `df` under a fresh `.stage-*` dir ([[stageWrite]]), list
+    * the partition dirs it touched and harvest its sidecars. Sidecars
+    * harvest from the STAGE (rel paths are version-agnostic) and are dropped
+    * next to whatever number the claim lands on. `df = None` stages an
+    * empty claim vehicle: no entry, no sidecar.
+    */
+  private def stageData(spark: SparkSession, root: String, df: Option[DataFrame],
+                        spec: Option[PartSpec], statsCols: Seq[String],
+                        bloomCols: Seq[String]): Staged = {
+    val (fs, rootP) = fsOf(spark, root)
+    val dir = new Path(rootP, ".stage-" + java.util.UUID.randomUUID().toString.take(12))
+    df match {
+      case None =>
+        fs.mkdirs(dir)
+        Staged(dir, Nil, Nil, Nil, Nil)
+      case Some(d0) =>
+        val d = FieldIds.attachDf(d0, fieldIdsForWrite(spark, root))
+        stageWrite(d, spec, dir, root)
+        val touched = spec.fold(Seq(""))(s => listStagedPartDirs(fs, dir, s.physNames.length))
+        val stats = if (statsCols.nonEmpty) harvestStats(fs, dir, statsCols) else Nil
+        val (blooms, ndv) =
+          if (bloomCols.nonEmpty) harvestBloomsAndNdv(spark, fs, dir, bloomCols, Some(d.schema))
+          else (Nil, Nil)
+        Staged(dir, touched, stats, blooms, ndv)
+    }
+  }
+
   /** Does the entry set hold partition dirs written under a DIFFERENT
     * layout than `spec`'s — i.e. has partition evolution left a mixed
     * layout that name-keyed partition reasoning cannot cover? The EMPTY
@@ -2391,42 +2409,22 @@ object ManifestTable {
     * state, so it commutes with ANY concurrent commit (the Delta
     * blind-append rule): collisions always rebase-and-retry, never
     * conflict. The caller owns key uniqueness (appending an existing key
-    * duplicates it — use [[mergeDv]] for upserts).
+    * duplicates it — use [[mergeDv]] for upserts). Blind appends stay
+    * correct under a MIXED layout (partition evolution): every appended
+    * entry is new, nothing is superseded by name.
     */
-  def append(df0: DataFrame, root: String, partCol: Option[String],
+  def append(df: DataFrame, root: String, spec: Option[PartSpec],
              statsCols: Seq[String] = Nil,
-             bloomCols: Seq[String] = Nil): Long =
-    appendSpec(df0, root, partCol.map(PartSpec.Identity), statsCols, bloomCols)
-
-  /** [[append]] under a (possibly hidden-transform) partition spec. Blind
-    * appends stay correct under a MIXED layout (partition evolution):
-    * every appended entry is new, nothing is superseded by name.
-    */
-  def appendSpec(df0: DataFrame, root: String, spec: Option[PartSpec],
-                 statsCols: Seq[String] = Nil,
-                 bloomCols: Seq[String] = Nil): Long = {
-    val spark = df0.sparkSession
-    val df = FieldIds.attachDf(df0, fieldIdsForWrite(spark, root)) // as in [[commit]]
+             bloomCols: Seq[String] = Nil): Long = {
+    val spark = df.sparkSession
     val (fs, rootP) = fsOf(spark, root)
-    val stage = new Path(rootP,
-      ".stage-" + java.util.UUID.randomUUID().toString.take(12))
-    stageWrite(df, spec, stage, root)
-    val touchedNames: Seq[String] = spec match {
-      case Some(s) => listStagedPartDirs(fs, stage, s.physNames.length)
-      case None => Seq("")
-    }
-    val stats =
-      if (statsCols.nonEmpty) harvestStats(fs, stage, statsCols) else Nil
-    val (blooms, ndv) =
-      if (bloomCols.nonEmpty) harvestBloomsAndNdv(spark, fs, stage, bloomCols, Some(df.schema))
-      else (Nil, Nil)
+    val st = stageData(spark, root, Some(df), spec, statsCols, bloomCols)
     val base = currentVersion(spark, root)
     val (prev, dvCarry) = base
       .map(v => (entriesOf(fs, rootP, v), dvOf(fs, rootP, v)))
       .getOrElse((Seq.empty[(String, Long)], None))
-    publishStaged(spark, root, stage, base, prev, touchedNames, dvCarry,
-      stats, blooms, retryable = true, appendEntries = true, blindAppend = true,
-      ndv = ndv)
+    publishStaged(spark, root, st.dir, base, prev, st.touched, dvCarry,
+      st.stats, st.blooms, CommitShape.Append, ndv = st.ndv)
   }
 
   /** Fold the CURRENT snapshot of a single-writer STAGING table into
@@ -2466,7 +2464,7 @@ object ManifestTable {
       s"adoptSnapshot: moving staged data into $dstRoot failed")
     val base = currentVersion(spark, dstRoot)
     publishStaged(spark, dstRoot, stage, base, Nil, entries.map(_._1).distinct,
-      None, stats, blooms, retryable = false, ndv = ndv)
+      None, stats, blooms, CommitShape.Snapshot, ndv = ndv)
   }
 
   /** Schema of the current (or `asOfVersion`) snapshot, inferred from the
@@ -2499,12 +2497,19 @@ object ManifestTable {
     * touched partition per batch, the engine's largest write amplification
     * at 100 TB with hot partitions (VERDICT r12 #1).
     *
-    * Contracts: `batch` is unique per key (compose with
-    * [[graft.ops.Upsert.lastWins]]; COMPOSITE keys via the `keys` overload
-    * join as the full column set — the lineitem `(l_orderkey,
-    * l_linenumber)` shape); with `partCol`, partition values are immutable
-    * per key (the [[graft.cdc.Dispatch.runPartitioned]] contract) so the
-    * position scan reads only the partitions the batch touches.
+    * Contracts: `batch` is unique per `keys` (compose with
+    * [[graft.ops.Upsert.lastWins]]; COMPOSITE keys join as the full column
+    * set — the lineitem `(l_orderkey, l_linenumber)` shape); with `spec`,
+    * partition values are immutable per key (the
+    * [[graft.cdc.Dispatch.runPartitioned]] contract) so the position scan
+    * reads only the partitions the batch touches. MIXED layouts (partition
+    * evolution left dirs under an older spec) stay CORRECT: the
+    * touched-partition restriction only holds when every live dir shares
+    * the current spec's physical column — otherwise a matched key's old
+    * row may live in an old-layout dir the batch's dir names cannot
+    * address, so the scan falls back to the full snapshot (the
+    * `deletePartitions` hint is dropped for the same reason). Compact to
+    * restore the O(touched) fast path.
     * CONCURRENCY: the batch and DV stage under `.stage-*` and claim their
     * numbers only at publish ([[publishStaged]]), so the multi-job write
     * never occupies a version number a concurrent committer would classify
@@ -2527,55 +2532,19 @@ object ManifestTable {
     * back into one clean version, exactly Delta's merge-on-read + OPTIMIZE
     * pairing. Returns the committed manifest version.
     */
-  def mergeDv(batch: DataFrame, root: String, schema: StructType, key: String,
-              partCol: Option[String], statsCols: Seq[String] = Nil,
-              bloomCols: Seq[String] = Nil,
+  def mergeDv(batch: DataFrame, root: String, schema: StructType,
+              keys: Seq[String], spec: Option[PartSpec],
+              statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
               deleteKeys: Option[DataFrame] = None,
-              deletePartitions: Option[Seq[String]] = None): Long =
-    mergeDv(batch, root, schema, Seq(key), partCol, statsCols, bloomCols,
-      deleteKeys, deletePartitions)
-
-  /** Composite-key [[mergeDv]] — see the single-key overload for the
-    * contracts and scale posture.
-    */
-  def mergeDv(batch0: DataFrame, root: String, schema: StructType,
-              keys: Seq[String], partCol: Option[String],
-              statsCols: Seq[String], bloomCols: Seq[String],
-              deleteKeys: Option[DataFrame],
-              deletePartitions: Option[Seq[String]]): Long =
-    mergeDvSpec(batch0, root, schema, keys, partCol.map(PartSpec.Identity),
-      statsCols, bloomCols, deleteKeys, deletePartitions)
-
-  /** [[mergeDv]] under a (possibly hidden-transform) partition spec.
-    * MIXED layouts (partition evolution left dirs under an older spec)
-    * stay CORRECT here: the touched-partition restriction on the position
-    * scan only holds when every live dir shares the current spec's
-    * physical column — otherwise a matched key's old row may live in an
-    * old-layout dir the batch's dir names cannot address, so the scan
-    * falls back to the full snapshot (the caller's `deletePartitions` hint
-    * is dropped for the same reason). Compact to restore the O(touched)
-    * fast path.
-    */
-  def mergeDvSpec(batch0: DataFrame, root: String, schema: StructType,
-                  keys: Seq[String], spec: Option[PartSpec],
-                  statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-                  deleteKeys: Option[DataFrame] = None,
-                  deletePartitions: Option[Seq[String]] = None): Long = {
+              deletePartitions: Option[Seq[String]] = None): Long = {
     import org.apache.spark.sql.functions.{broadcast, col}
     require(keys.nonEmpty, "mergeDv: at least one key column is required")
-    val spark = batch0.sparkSession
-    val batch = FieldIds.attachDf(batch0, fieldIdsForWrite(spark, root)) // as in [[commit]]
+    val spark = batch.sparkSession
     val (fs, rootP) = fsOf(spark, root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(
         s"mergeDv: $root has no committed version — create the table with commit() first"))
-    val stage = new Path(rootP,
-      ".stage-" + java.util.UUID.randomUUID().toString.take(12))
-    stageWrite(batch, spec, stage, root)
-    val touchedNames: Seq[String] = spec match {
-      case Some(s) => listStagedPartDirs(fs, stage, s.physNames.length)
-      case None => Seq("")
-    }
+    val st = stageData(spark, root, Some(batch), spec, statsCols, bloomCols)
     // one manifest read serves the mixed-layout check and the publish args
     // (was three reads of the same file per merge commit)
     val curEntries = entriesOf(fs, rootP, cur)
@@ -2592,21 +2561,15 @@ object ManifestTable {
       .reduce(_ unionByName _)
     val deleteRestrict = deleteKeys.fold(Option(Seq.empty[String]))(_ => deletePartitions)
     val restrict =
-      if (mixed) None else for (_ <- spec; d <- deleteRestrict) yield touchedNames.toSet ++ d
-    val dvStage = stageDv(spark, root, curDv,
+      if (mixed) None else for (_ <- spec; d <- deleteRestrict) yield st.touched.toSet ++ d
+    val dvStage = stageDv(spark, root, curDv, collectDv(
       readSnapshot(spark, root, schema, cur, withMeta = true, restrict)
-        .join(broadcast(keySet), keys, "left_semi"))
-    val stats =
-      if (statsCols.nonEmpty) harvestStats(fs, stage, statsCols) else Nil
-    val (blooms, ndv) =
-      if (bloomCols.nonEmpty) harvestBloomsAndNdv(spark, fs, stage, bloomCols, Some(batch.schema))
-      else (Nil, Nil)
+        .join(broadcast(keySet), keys, "left_semi")))
     // dvCarry0 = the base DV this commit's union consumed — the rebase
     // conflict check compares the winner's DV pointer against it (the
     // manifest's own #dv comes from dvStage, not the carry)
-    publishStaged(spark, root, stage, Some(cur), curEntries,
-      touchedNames, curDv, stats, blooms, retryable = true,
-      appendEntries = true, dvStage = Some(dvStage), ndv = ndv)
+    publishStaged(spark, root, st.dir, Some(cur), curEntries, st.touched, curDv,
+      st.stats, st.blooms, CommitShape.Merge, Some(dvStage), st.ndv)
   }
 
   /** [[mergeDv]] with the deleted POSITIONS handed in directly instead of
@@ -2614,15 +2577,15 @@ object ManifestTable {
     * ([[GraftCatalog]]): Spark's MERGE/UPDATE/DELETE rewrite has already
     * joined the target scan and produced exactly the `(__f, __pos)` rowIds
     * to mask and the rows to land, so re-deriving positions from keys would
-    * be a second scan. `batch = None` is a pure positional delete (the
-    * [[deleteWhere]] shape); `positions = None` is an INSERT-ONLY commit
-    * (e.g. a MERGE whose every source row was not-matched) — it stages no
-    * DV at all and carries the base version's DV pointer forward unchanged,
-    * so insert-only DML stays a pure append commit: zero
-    * O(accumulated-deletes) rewrite bytes, and a DV-free table stays
-    * DV-free (keeping [[colBounds]] aggregate pushdown alive). Positions
-    * must come from a [[readWithMeta]] scan of `baseVersion`'s snapshot
-    * (same path normalization as the DV).
+    * be a second scan; its writer tasks hand them back as per-file bitmaps.
+    * `batch = None` is a pure positional delete (the [[deleteWhere]]
+    * shape); `deletes = None` is an INSERT-ONLY commit (e.g. a MERGE whose
+    * every source row was not-matched) — it stages no DV at all and carries
+    * the base version's DV pointer forward unchanged, so insert-only DML
+    * stays a pure append commit: zero O(accumulated-deletes) rewrite bytes,
+    * and a DV-free table stays DV-free (keeping [[colBounds]] aggregate
+    * pushdown alive). Positions must come from a [[readWithMeta]] scan of
+    * `baseVersion`'s snapshot (same path normalization as the DV).
     *
     * Bytes written = O(batch rows + positions); concurrency follows
     * [[mergeDv]] in EVERY shape (insert-only included — its not-matched
@@ -2630,53 +2593,22 @@ object ManifestTable {
     * rebases past blind appends only, any winner that rewrote data or
     * changed the DV conflicts loudly. The SQL write path skips the publish
     * entirely when the DML matched nothing (no staged files), so a no-op
-    * MERGE never burns a version number.
+    * MERGE never burns a version number. Row-level DML stays correct under
+    * MIXED layouts with no fallback needed: the positions were produced by
+    * Spark's own rewrite over the FULL pinned snapshot (never
+    * partition-restricted), and the insert leg is a blind append under the
+    * current spec.
     */
-  def commitDelta(spark: SparkSession, root: String, baseVersion: Long,
-                  batch0: Option[DataFrame], positions: Option[DataFrame],
-                  partCol: Option[String], statsCols: Seq[String] = Nil,
-                  bloomCols: Seq[String] = Nil): Long =
-    commitDeltaSpec(spark, root, baseVersion, batch0, positions,
-      partCol.map(PartSpec.Identity), statsCols, bloomCols)
-
-  /** [[commitDelta]] under a (possibly hidden-transform) partition spec.
-    * Row-level DML stays correct under MIXED layouts with no fallback
-    * needed: the positions were produced by Spark's own rewrite over the
-    * FULL pinned snapshot (never partition-restricted), and the insert leg
-    * is a blind append under the current spec.
-    */
-  def commitDeltaSpec(spark: SparkSession, root: String, baseVersion: Long,
-                      batch0: Option[DataFrame], positions: Option[DataFrame],
-                      spec: Option[PartSpec], statsCols: Seq[String] = Nil,
-                      bloomCols: Seq[String] = Nil): Long = {
-    val batch = batch0.map(b => FieldIds.attachDf(b, fieldIdsForWrite(spark, root)))
+  private[graft] def commitDelta(spark: SparkSession, root: String, baseVersion: Long,
+                                 batch: Option[DataFrame], deletes: Option[Dv],
+                                 spec: Option[PartSpec], statsCols: Seq[String] = Nil,
+                                 bloomCols: Seq[String] = Nil): Long = {
     val (fs, rootP) = fsOf(spark, root)
-    val stage = new Path(rootP,
-      ".stage-" + java.util.UUID.randomUUID().toString.take(12))
-    batch match {
-      case Some(b) => stageWrite(b, spec, stage, root)
-      case None => fs.mkdirs(stage)
-    }
-    val touchedNames: Seq[String] = batch match {
-      case Some(_) => spec match {
-        case Some(s) => listStagedPartDirs(fs, stage, s.physNames.length)
-        case None => Seq("")
-      }
-      case None => Nil
-    }
-    // Spark's row-level rewrite can emit a rowId once per matched source
-    // row; the bitmaps collapse the duplicates
-    val dvStage = positions.map(stageDv(spark, root, dvOf(fs, rootP, baseVersion), _))
-    val stats =
-      if (statsCols.nonEmpty && batch.isDefined) harvestStats(fs, stage, statsCols) else Nil
-    val (blooms, ndv) =
-      if (bloomCols.nonEmpty && batch.isDefined)
-        harvestBloomsAndNdv(spark, fs, stage, bloomCols, batch.map(_.schema))
-      else (Nil, Nil)
-    publishStaged(spark, root, stage, Some(baseVersion),
-      entriesOf(fs, rootP, baseVersion), touchedNames,
-      dvOf(fs, rootP, baseVersion), stats, blooms, retryable = true,
-      appendEntries = true, dvStage = dvStage, mergeRules = true, ndv = ndv)
+    val st = stageData(spark, root, batch, spec, statsCols, bloomCols)
+    val dvStage = deletes.map(stageDv(spark, root, dvOf(fs, rootP, baseVersion), _))
+    publishStaged(spark, root, st.dir, Some(baseVersion),
+      entriesOf(fs, rootP, baseVersion), st.touched, dvOf(fs, rootP, baseVersion),
+      st.stats, st.blooms, CommitShape.Merge, dvStage, st.ndv)
   }
 
   /** Incrementally replicate `srcRoot`'s committed changes into a replica
@@ -2702,12 +2634,6 @@ object ManifestTable {
     * window, the standard CDC-consumer contract ([[changes]] needs both
     * manifests on disk). Returns the number of source versions applied.
     */
-  def replicate(spark: SparkSession, srcRoot: String, dstRoot: String,
-                schema: StructType, key: String,
-                partCol: Option[String]): Int =
-    replicate(spark, srcRoot, dstRoot, schema, Seq(key), partCol)
-
-  /** Composite-key [[replicate]]. */
   def replicate(spark: SparkSession, srcRoot: String, dstRoot: String,
                 schema: StructType, keys: Seq[String],
                 partCol: Option[String]): Int = {
@@ -2749,21 +2675,15 @@ object ManifestTable {
     * partitions spread over that many writers), one write. Run out-of-band
     * at a cadence set by the small-file rate, like any OPTIMIZE; the
     * single-writer contract covers it like every other commit.
+    *
+    * This is also the verb that ENDS a mixed layout after partition
+    * evolution: the full snapshot rewrite re-derives every row's partition
+    * under the CURRENT `spec`, after which the carry-forward fast paths
+    * reopen.
     */
   def compact(spark: SparkSession, root: String, schema: StructType,
-              partCol: Option[String], filesPerPartition: Int = 1,
-              statsCols: Seq[String] = Nil): Long =
-    compactSpec(spark, root, schema, partCol.map(PartSpec.Identity),
-      filesPerPartition, statsCols)
-
-  /** [[compact]] under a (possibly hidden-transform) partition spec. This
-    * is also the verb that ENDS a mixed layout after partition evolution:
-    * the full snapshot rewrite re-derives every row's partition under the
-    * CURRENT spec, after which the carry-forward fast paths reopen.
-    */
-  def compactSpec(spark: SparkSession, root: String, schema: StructType,
-                  spec: Option[PartSpec], filesPerPartition: Int = 1,
-                  statsCols: Seq[String] = Nil): Long = {
+              spec: Option[PartSpec], filesPerPartition: Int = 1,
+              statsCols: Seq[String] = Nil): Long = {
     require(filesPerPartition >= 1, s"filesPerPartition=$filesPerPartition")
     import org.apache.spark.sql.functions._
     val df0 = read(spark, root, schema)
@@ -2781,9 +2701,9 @@ object ManifestTable {
       case None => df.repartition(filesPerPartition)
     }
     // drop the pre-derived hidden column before the commit (which re-derives
-    // for the staged write): commitSpec's id-attach treats any non-schema
+    // for the staged write): the staging id-attach treats any non-schema
     // column as drift, and a select keeps the repartitioning
-    withPreShuffled(commitSpec(out.select(schema.fieldNames.map(col).toSeq: _*),
+    withPreShuffled(commit(out.select(schema.fieldNames.map(col).toSeq: _*),
       root, spec, carryForward = false, statsCols = statsCols))
   }
 
@@ -2820,7 +2740,7 @@ object ManifestTable {
         df.repartitionByRange(targetFiles, (s.physNames.map(col) :+ salt): _*)
       case None => df.repartitionByRange(targetFiles, salt)
     }
-    withPreShuffled(commitSpec(ranged.select(schema.fieldNames.map(col).toSeq: _*),
+    withPreShuffled(commit(ranged.select(schema.fieldNames.map(col).toSeq: _*),
       root, spec, carryForward = false, statsCols = statsCols))
   }
 
@@ -2840,24 +2760,16 @@ object ManifestTable {
     * previous entry of the touched partition. Bytes written =
     * O(partition), not O(table). A value matching no partition is a
     * metadata-only no-op version bump.
+    *
+    * Under a hidden-transform spec `partValue` names a DERIVED value (a day
+    * number, a bucket id). Inherits [[commit]]'s carry-forward mixed-layout
+    * refusal — a single-partition rewrite cannot retire an evolved-away
+    * layout's entries; run the full [[compact]] first.
     */
   def compactPartition(spark: SparkSession, root: String, schema: StructType,
-                       partCol: String, partValue: String,
+                       spec: PartSpec, partValue: String,
                        filesPerPartition: Int = 1,
-                       statsCols: Seq[String] = Nil): Long =
-    compactPartitionSpec(spark, root, schema, PartSpec.Identity(partCol),
-      partValue, filesPerPartition, statsCols)
-
-  /** [[compactPartition]] under a (possibly hidden-transform) partition
-    * spec: `partValue` names a DERIVED value (a day number, a bucket id).
-    * Inherits [[commitSpec]]'s carry-forward mixed-layout refusal — a
-    * single-partition rewrite cannot retire an evolved-away layout's
-    * entries; run the full [[compactSpec]] first.
-    */
-  def compactPartitionSpec(spark: SparkSession, root: String, schema: StructType,
-                           spec: PartSpec, partValue: String,
-                           filesPerPartition: Int = 1,
-                           statsCols: Seq[String] = Nil): Long = {
+                       statsCols: Seq[String] = Nil): Long = {
     require(filesPerPartition >= 1, s"filesPerPartition=$filesPerPartition")
     import org.apache.spark.sql.functions._
     val pc = spec.physName
@@ -2892,8 +2804,8 @@ object ManifestTable {
       else df.repartition((spec.physNames.map(col) :+
         pmod(xxhash64(schema.fieldNames.filterNot(spec.physNames.contains)
           .map(col).toSeq: _*), lit(filesPerPartition.toLong))): _*)
-    // as in [[compactSpec]]: re-select the declared schema before the commit
-    withPreShuffled(commitSpec(out.select(schema.fieldNames.map(col).toSeq: _*),
+    // as in [[compact]]: re-select the declared schema before the commit
+    withPreShuffled(commit(out.select(schema.fieldNames.map(col).toSeq: _*),
       root, Some(spec), carryForward = true, statsCols = statsCols))
   }
 
@@ -2916,21 +2828,13 @@ object ManifestTable {
     * [[compact]], so compact-then-vacuum reclaims the fragmented layout.
     *
     * Numeric/timestamp columns only (quantization needs an order-preserving
-    * cast to double).
+    * cast to double). Under a hidden-transform spec the range partitioner
+    * clusters on (derived partition value, z), so the Z-curve stays
+    * partition-local exactly as with an identity layout.
     */
   def compactZOrder(spark: SparkSession, root: String, schema: StructType,
-                    partCol: Option[String], zorderBy: Seq[String],
-                    targetFiles: Int, statsCols: Seq[String] = Nil): Long =
-    compactZOrderSpec(spark, root, schema, partCol.map(PartSpec.Identity),
-      zorderBy, targetFiles, statsCols)
-
-  /** [[compactZOrder]] under a (possibly hidden-transform) partition spec:
-    * the range partitioner clusters on (derived partition value, z) so the
-    * Z-curve stays partition-local, exactly as with an identity layout.
-    */
-  def compactZOrderSpec(spark: SparkSession, root: String, schema: StructType,
-                        spec: Option[PartSpec], zorderBy: Seq[String],
-                        targetFiles: Int, statsCols: Seq[String] = Nil): Long = {
+                    spec: Option[PartSpec], zorderBy: Seq[String],
+                    targetFiles: Int, statsCols: Seq[String] = Nil): Long = {
     require(zorderBy.nonEmpty && zorderBy.size <= 3,
       s"zorderBy must hold 1-3 columns (3×16 bits keeps z positive), got ${zorderBy.size}")
     require(targetFiles >= 1, s"targetFiles=$targetFiles")
@@ -2962,7 +2866,7 @@ object ManifestTable {
     }
     val out = ranged.sortWithinPartitions(col("__z"))
       .select(schema.fieldNames.map(col).toSeq: _*)
-    withPreShuffled(commitSpec(out, root, spec, carryForward = false,
+    withPreShuffled(commit(out, root, spec, carryForward = false,
       statsCols = (zorderBy ++ statsCols).distinct))
   }
 

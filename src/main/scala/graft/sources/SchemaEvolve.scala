@@ -41,7 +41,7 @@ import org.apache.spark.sql.types._
   * evolve without SQL are the DataFrame front door
   * (`df.write.format("graft").option("mergeSchema", "true")`) and
   * programmatic callers ([[evolve]] + [[alignTo]] before
-  * `ManifestTable.mergeDv`/`appendSpec`).
+  * `ManifestTable.mergeDv`/`append`).
   */
 object SchemaEvolve {
 

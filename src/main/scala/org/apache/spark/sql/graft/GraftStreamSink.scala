@@ -182,20 +182,20 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
         .select((mergeKeys ++ spec.filter(_.isIdentity).map(_.source)).distinct.map(col): _*))
       // the delete-leg partition hint only holds for identity specs: a
       // hidden transform's dir value is derivable but an EVOLVED table may
-      // hold old-layout dirs — mergeDvSpec full-scans there
+      // hold old-layout dirs — mergeDv full-scans there
       val delParts = spec.filter(_.isIdentity).map { sp =>
         delValsDistinct.map(v => ManifestTable.partDirName(sp.source, v))
       }
       ManifestTable.withBatchId(batchId) {
         if (!ManifestTable.exists(spark, root)) {
-          ManifestTable.commitSpec(checked, root, spec)
+          ManifestTable.commit(checked, root, spec)
           // a mixed first cdf batch (dst dropped while the source checkpoint
           // survived) must not silently drop its delete rows
-          dels.foreach(d => ManifestTable.mergeDvSpec(checked.limit(0), root, ups.schema,
+          dels.foreach(d => ManifestTable.mergeDv(checked.limit(0), root, ups.schema,
             mergeKeys, spec, Nil, Nil, Some(d), delParts))
         } else if (nUps + nDels > 0) {
-          if (mergeKeys.isEmpty) ManifestTable.appendSpec(checked, root, spec)
-          else ManifestTable.mergeDvSpec(checked, root, ups.schema, mergeKeys, spec,
+          if (mergeKeys.isEmpty) ManifestTable.append(checked, root, spec)
+          else ManifestTable.mergeDv(checked, root, ups.schema, mergeKeys, spec,
             Nil, Nil, dels, delParts)
         }
       }
@@ -210,7 +210,7 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
       if (compactEvery > 0) {
         val compacting = batchId > 0 && batchId % compactEvery == 0
         if (compacting)
-          ManifestTable.compactSpec(spark, root, ManifestTable.inferSchema(spark, root), spec)
+          ManifestTable.compact(spark, root, ManifestTable.inferSchema(spark, root), spec)
         ManifestTable.vacuum(spark, root, retainVersions = if (compacting) 2 else 1)
       }
     } finally Checkpoints.release(batch)

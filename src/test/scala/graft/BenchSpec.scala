@@ -138,6 +138,28 @@ class BenchSpec extends SparkSuite {
     assert(builders == Seq("src/main/scala/graft/GraftSession.scala"), builders)
   }
 
+  test("ManifestTable.stageData is the only main code that stages a data write") {
+    // a writer that copies the stage preamble instead of calling the helper
+    // can forget the field ids; every call site is named by its enclosing def
+    import scala.jdk.CollectionConverters._
+    val Def = """.*\bdef (\w+)\b.*""".r
+    val calls = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
+        lines.indices.flatMap { i =>
+          val code = lines(i).trim
+          val comment = code.startsWith("*") || code.startsWith("//") || code.startsWith("/*")
+          Seq("stageWrite(", "attachDf(").filter(c => !comment && code.contains(c) &&
+            !code.contains("def " + c)).map { c =>
+            val owner = lines.take(i + 1).reverseIterator.collectFirst { case Def(d) => d }
+            (p.getFileName.toString, owner.getOrElse(""), c)
+          }
+        }
+      }
+    assert(calls.sorted == Seq(("ManifestTable.scala", "stageData", "attachDf("),
+      ("ManifestTable.scala", "stageData", "stageWrite(")), calls)
+  }
+
   test("compact tail stays inside the 2000-char capture at 250 queries (r19)") {
     // worst realistic shape: every id present, a mix of sub-10s (2-digit)
     // and 10-100s (1-digit) timings, a few failures

@@ -172,14 +172,14 @@ class BranchSpec extends SparkSuite {
     }
     spark.sql("INSERT INTO gbr.db.t7 VALUES (3, 'c')") // v3, parent 1, ref main
     // a consumer at main's head sequence: (1, 3) chains via #parent — valid
-    val mainFeed = ManifestTable.changes(spark, root, schema, "k", 1L, 3L)
+    val mainFeed = ManifestTable.changes(spark, root, schema, Seq("k"), 1L, 3L)
       .select("_change_type", "k").as[(String, Long)].collect().toSet
     assert(mainFeed == Set(("insert", 3L)), mainFeed)
     // raw numeric window across the two lineages: refused loudly (the old
     // behavior silently diffed two unrelated snapshots — branch row
     // reported deleted, main row inserted)
     val ex = intercept[IllegalStateException](
-      ManifestTable.changes(spark, root, schema, "k", 2L, 3L).collect())
+      ManifestTable.changes(spark, root, schema, Seq("k"), 2L, 3L).collect())
     assert(ex.getMessage.contains("not an ancestor"), ex.getMessage)
     // fast-forward re-enters the branch lineage: refused while main has
     // its own commit, valid after branching from the merged state
@@ -192,7 +192,7 @@ class BranchSpec extends SparkSuite {
     val after = ManifestTable.refs(spark, root)("main")
     // the consumer's (previous head, new head) window stays valid across
     // the fast-forward — no re-seed
-    val ffFeed = ManifestTable.changes(spark, root, schema, "k", before, after)
+    val ffFeed = ManifestTable.changes(spark, root, schema, Seq("k"), before, after)
       .select("_change_type", "k").as[(String, Long)].collect().toSet
     assert(ffFeed == Set(("insert", 4L)), ffFeed)
   }

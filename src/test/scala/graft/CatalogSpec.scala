@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{GraftCatalog, ManifestTable}
+import graft.sources.{GraftCatalog, ManifestTable, PartSpec}
 
 /** The DSv2 catalog front door (`GraftCatalog`): SQL DDL + the full DML
   * surface (INSERT / DELETE / UPDATE / MERGE INTO) over manifest tables,
@@ -225,9 +225,10 @@ class CatalogSpec extends SparkSuite {
     // … a blind append lands in between …
     ManifestTable.append(
       spark.createDataFrame(Seq((7L, "g", "x"))).toDF("k", "v", "p"),
-      root, Some("p"))
+      root, Some(PartSpec.Identity("p")))
     // … and the delta commit (deliberately stale base) must rebase, not lose it
-    ManifestTable.commitDelta(spark, root, base, Some(reinsert), Some(positions), Some("p"))
+    ManifestTable.commitDelta(spark, root, base, Some(reinsert),
+      Some(ManifestTable.collectDv(positions)), Some(PartSpec.Identity("p")))
     assert(rowsOf(t) == Set((1L, "A", "x"), (2L, "b", "y"), (7L, "g", "x")))
   }
 
@@ -787,7 +788,7 @@ class CatalogSpec extends SparkSuite {
     val legacyRoot = s"$wh/db/fid_legacy"
     ManifestTable.commit(
       spark.createDataFrame(Seq((1L, "a", "x"))).toDF("k", "v", "p"),
-      legacyRoot, Some("p"))
+      legacyRoot, Some(PartSpec.Identity("p")))
     val e3 = intercept[Exception] {
       spark.sql(s"ALTER TABLE gcat.db.fid_legacy RENAME COLUMN v TO label")
     }
@@ -1078,7 +1079,7 @@ class CatalogSpec extends SparkSuite {
     val root = s"$wh/db/nest_legacy"
     val df = spark.sql(
       "SELECT 1L AS id, named_struct('a', 1, 'b', 'x') AS s, 'p0' AS p")
-    ManifestTable.commit(df, root, Some("p"))
+    ManifestTable.commit(df, root, Some(PartSpec.Identity("p")))
     val e = intercept[Exception] {
       spark.sql(s"ALTER TABLE gcat.db.nest_legacy RENAME COLUMN s.a TO z")
     }

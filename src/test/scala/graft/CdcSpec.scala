@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.cdc.Dispatch
+import graft.sources.PartSpec
 
 /** Golden CDC-sequence coverage (SURVEY.md §5.5): a scripted
   * insert/update/delete/unknown envelope stream must produce a known final
@@ -336,7 +337,7 @@ class CdcSpec extends SparkSuite {
     // an offline retain-0 vacuum (no concurrent readers) reclaims them once
     // a compaction has folded v1's files, which the merge-on-read commit 2
     // carried forward, into a fresh version
-    graft.sources.ManifestTable.compact(spark, tgt, partSchema, Some("p"))
+    graft.sources.ManifestTable.compact(spark, tgt, partSchema, Some(PartSpec.Identity("p")))
     graft.sources.ManifestTable.vacuum(spark, tgt)
     assert(!new java.io.File(s"$tgt/v00000001").exists())
     assert(!new java.io.File(s"$tgt/_manifest.00000001").exists())
@@ -623,7 +624,8 @@ class CdcSpec extends SparkSuite {
       partSchema, identity, "id", "id", "v", partCol = "p")
       .awaitTermination(60000)
     // out-of-band OPTIMIZE between micro-batches: atomic v2, self-contained
-    val v = graft.sources.ManifestTable.compact(spark, tgt, partSchema, Some("p"))
+    val v = graft.sources.ManifestTable.compact(spark, tgt, partSchema,
+      Some(PartSpec.Identity("p")))
     assert(v == 2L)
     graft.sources.ManifestTable.vacuum(spark, tgt)
     assert(!new java.io.File(s"$tgt/v00000001").exists())

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.TimeUnit
 
-import graft.sources.ManifestTable
+import graft.sources.{ManifestTable, PartSpec}
 
 /** Cross-PROCESS commit arbitration: every other concurrency test races
   * threads of one JVM, which share the process page cache and memory
@@ -31,7 +31,7 @@ class MultiProcessCommitSpec extends SparkSuite {
     val root = dir.resolve("t").toString
     import spark.implicits._
     ManifestTable.commit(
-      Seq((0L, "seed", "s1")).toDF("k", "v", "p"), root, Some("p"))
+      Seq((0L, "seed", "s1")).toDF("k", "v", "p"), root, Some(PartSpec.Identity("p")))
 
     val rounds = 4
     val javaBin = System.getProperty("java.home") + "/bin/java"
@@ -99,8 +99,10 @@ class MultiProcessCommitSpec extends SparkSuite {
     try {
       import spark.implicits._
       val root = Files.createTempDirectory("graft-arb").resolve("t").toString
-      ManifestTable.commit(Seq((1L, "a", "x")).toDF("k", "v", "p"), root, Some("p"))
-      ManifestTable.append(Seq((2L, "b", "x")).toDF("k", "v", "p"), root, Some("p"))
+      ManifestTable.commit(Seq((1L, "a", "x")).toDF("k", "v", "p"), root,
+        Some(PartSpec.Identity("p")))
+      ManifestTable.append(Seq((2L, "b", "x")).toDF("k", "v", "p"), root,
+        Some(PartSpec.Identity("p")))
       assert(calls.get() == 2,
         s"every commit shape must publish through the arbiter, saw ${calls.get()}")
     } finally ManifestTable.commitArbiter = prev

@@ -274,7 +274,7 @@ class PartSpecSpec extends SparkSuite {
     // carry-forward commits refuse the mixed layout with a compact hint
     val sch = spark.table("gps.db.e1").schema
     val ex = intercept[IllegalStateException] {
-      ManifestTable.commitSpec(spark.table("gps.db.e1").limit(1),
+      ManifestTable.commit(spark.table("gps.db.e1").limit(1),
         root, Some(PartSpec.Days("ts")))
     }
     assert(ex.getMessage.contains("compact"))
@@ -290,7 +290,7 @@ class PartSpecSpec extends SparkSuite {
     assert(PartSpecs.of(spark, root).size == 1, // history cleared
       PartSpecs.of(spark, root).map(_.render).mkString(","))
     // and carry-forward reopens
-    ManifestTable.commitSpec(
+    ManifestTable.commit(
       src(0, 1).select(col("k"), lit("X").as("region"), col("ts")),
       root, Some(PartSpec.Days("ts")))
     assert(ManifestTable.currentVersion(spark, root).get > cur)
@@ -471,7 +471,7 @@ class PartSpecSpec extends SparkSuite {
     // live in the unpartitioned ("") layout — the position scan must fall
     // back to the full snapshot or the stale copies stay visible
     val batch = Seq((0L, "ASIA", 100L), (1L, "EUROPE", 101L)).toDF("k", "region", "v")
-    ManifestTable.mergeDvSpec(batch, root, sch, Seq("k"),
+    ManifestTable.mergeDv(batch, root, sch, Seq("k"),
       Some(PartSpec.Identity("region")))
     val rows = spark.table("gps.db.e5").as[(Long, String, Long)].collect()
     assert(rows.length == 6, s"stale '' layout rows visible: ${rows.sorted.mkString(",")}")
@@ -479,12 +479,12 @@ class PartSpecSpec extends SparkSuite {
     assert(m(0L) == 100L && m(1L) == 101L && m(2L) == 2L)
     // carry-forward snapshot commits refuse the mixed '' layout too
     val ex = intercept[IllegalStateException] {
-      ManifestTable.commitSpec(batch, root, Some(PartSpec.Identity("region")))
+      ManifestTable.commit(batch, root, Some(PartSpec.Identity("region")))
     }
     assert(ex.getMessage.contains("compact"))
     // compact under the current spec ends the mix; the fast path reopens
     spark.sql("CALL gps.system.compact('db.e5')")
-    ManifestTable.mergeDvSpec(Seq((2L, "ASIA", 200L)).toDF("k", "region", "v"),
+    ManifestTable.mergeDv(Seq((2L, "ASIA", 200L)).toDF("k", "region", "v"),
       root, sch, Seq("k"), Some(PartSpec.Identity("region")))
     val m2 = spark.table("gps.db.e5").as[(Long, String, Long)].collect()
     assert(m2.length == 6 && m2.map(r => r._1 -> r._3).toMap.apply(2L) == 200L)
@@ -615,7 +615,7 @@ class PartSpecSpec extends SparkSuite {
       .as[Long].head() == 3L)
     // carry-forward refusal while mixed
     val ex = intercept[IllegalStateException] {
-      ManifestTable.commitSpec(spark.table("gps.db.c2").limit(1), root,
+      ManifestTable.commit(spark.table("gps.db.c2").limit(1), root,
         Some(PartSpec.parse("days(ts),bucket(4,k)", spark.table("gps.db.c2").schema)))
     }
     assert(ex.getMessage.contains("compact"))
@@ -656,7 +656,7 @@ class PartSpecSpec extends SparkSuite {
     wh
     val root = rootOf("pf9")
     ManifestTable.commit(Seq((1L, "ASIA"), (2L, "EUROPE")).toDF("k", "region"),
-      root, Some("region"))
+      root, Some(PartSpec.Identity("region")))
     // the first ALTER creates the sidecar: it must RECOVER the physical
     // layout from the manifest, not freeze partCol=None
     spark.sql("ALTER TABLE gps.db.pf9 SET TBLPROPERTIES ('note'='x')")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.llm.Dedup
+import graft.sources.PartSpec
 
 /** Randomized differential properties over many seeds: each distributed
   * algorithm vs an independent driver-side reference implementation. The
@@ -358,7 +359,7 @@ class PropertySpec extends SparkSuite {
         model += k -> v
         (k._1, k._2, partOf(k), v)
       }
-      ManifestTable.commit(init.toDF("k1", "k2", "p", "v"), root, Some("p"))
+      ManifestTable.commit(init.toDF("k1", "k2", "p", "v"), root, Some(PartSpec.Identity("p")))
       val v0 = ManifestTable.currentVersion(spark, root).get
       // the model state at every committed version
       var states = Map(v0 -> model)
@@ -386,7 +387,7 @@ class PropertySpec extends SparkSuite {
         // is restricted; unhinted: the full-snapshot scan
         val v = ManifestTable.mergeDv(
           ups.map { case (k, v) => (k._1, k._2, partOf(k), v) }.toDF("k1", "k2", "p", "v"),
-          root, schema, Seq("k1", "k2"), Some("p"), Nil, Nil,
+          root, schema, Seq("k1", "k2"), Some(PartSpec.Identity("p")), Nil, Nil,
           Some(dels.map(k => (k._1, k._2)).toDF("k1", "k2")),
           if (hinted) Some(dels.map(k => ManifestTable.partDirName("p", partOf(k))).distinct)
           else None)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.sources.ManifestTable
+import graft.sources.{ManifestTable, PartSpec}
 
 /** Forked-JVM writer for the MULTI-PROCESS commit-race test
   * (SourcesSpec "two separate JVMs racing disjoint merges"): every prior
@@ -46,7 +46,7 @@ object RaceWriterMain {
       for (r <- 1 to rounds) {
         val df = parts.flatMap(p => Seq((r.toLong, s"$wid-$r", p)))
           .toDF("k", "v", "p")
-        ManifestTable.commit(df, root, Some("p"))
+        ManifestTable.commit(df, root, Some(PartSpec.Identity("p")))
       }
       println(s"[race-$wid] done: $rounds commits")
     } finally spark.stop()

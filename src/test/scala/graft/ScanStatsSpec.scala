@@ -160,12 +160,12 @@ class ScanStatsSpec extends SparkSuite {
     spark.sql("INSERT INTO gstat.db.nv SELECT * FROM nv_src")
     val root = s"$wh/db/nv"
     val cur = ManifestTable.currentVersion(spark, root).get
-    assert(ManifestTable.estimatePrunedNdv(spark, root, cur, Nil)
+    assert(ManifestTable.estimatePruned(spark, root, cur, Nil)._3
       == Map("u" -> 100L))
     // partition pruning narrows the sketch union to the kept files: within
     // p1 (i % 4 == 1, and 100 % 4 == 0) u takes exactly 25 residues
-    assert(ManifestTable.estimatePrunedNdv(spark, root, cur, Nil,
-      points = Seq("p" -> "p1")) == Map("u" -> 25L))
+    assert(ManifestTable.estimatePruned(spark, root, cur, Nil,
+      points = Seq("p" -> "p1"))._3 == Map("u" -> 25L))
     // the scan's V2 statistics surface it as a per-column distinctCount
     val rel = spark.table("gstat.db.nv").queryExecution.optimizedPlan
       .collectFirst { case r: DataSourceV2ScanRelation => r }.get
@@ -183,7 +183,7 @@ class ScanStatsSpec extends SparkSuite {
       .createOrReplaceTempView("nv_null")
     spark.sql("INSERT INTO gstat.db.nv SELECT * FROM nv_null")
     val cur2 = ManifestTable.currentVersion(spark, root).get
-    assert(ManifestTable.estimatePrunedNdv(spark, root, cur2, Nil)
+    assert(ManifestTable.estimatePruned(spark, root, cur2, Nil)._3
       == Map("u" -> 100L))
   }
 

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.{Sinks, Sources}
+import graft.sources.{PartSpec, Sinks, Sources}
 
 /** File sources and sinks (S2/S3/S9/S13/S14) against real temp files —
   * the reference's place_names.json / place_coordinates.json shapes.
@@ -453,13 +453,13 @@ class SourcesSpec extends SparkSuite {
     assert(!ManifestTable.exists(spark, root))
     intercept[IllegalStateException](ManifestTable.read(spark, root, schema))
     assert(ManifestTable.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
-      root, partCol = None) == 1L)
+      root, spec = None) == 1L)
     assert(ManifestTable.read(spark, root, schema)
       .as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
     // next snapshot replaces wholesale (non-partitioned contract); the old
     // version stays readable until vacuum reclaims it
     assert(ManifestTable.commit(Seq((1L, "a2")).toDF("id", "v"),
-      root, partCol = None) == 2L)
+      root, spec = None) == 2L)
     assert(ManifestTable.read(spark, root, schema)
       .as[(Long, String)].collect().toSet == Set((1L, "a2")))
     assert(new java.io.File(s"$root/v00000001").exists())
@@ -482,7 +482,7 @@ class SourcesSpec extends SparkSuite {
       .as[(Long, String, Long)].collect().toSet
     ManifestTable.commit(
       Seq((1L, "x", 10L), (2L, "x", 20L), (3L, "y", 30L), (4L, "y", 40L))
-        .toDF("id", "p", "v"), root, Some("p"))
+        .toDF("id", "p", "v"), root, Some(PartSpec.Identity("p")))
     // logical delete: no data file rewritten — the claimed version dir is
     // an EMPTY claim vehicle (the staged-commit protocol's arbitration),
     // referenced by no manifest entry
@@ -502,7 +502,7 @@ class SourcesSpec extends SparkSuite {
     // a merge commit rewriting ONLY p=x carries the DV forward: p=y's
     // deleted row (id=4) stays masked, p=x's rewrite is authoritative
     ManifestTable.commit(Seq((1L, "x", 11L), (2L, "x", 21L)).toDF("id", "p", "v"),
-      root, Some("p"))
+      root, Some(PartSpec.Identity("p")))
     assert(snap() == Set((1L, "x", 11L), (2L, "x", 21L), (3L, "y", 30L)))
     // readPruned applies the DV too (no ranges = plain assembly path)
     assert(ManifestTable.readPruned(spark, root, schema, Nil)
@@ -510,7 +510,7 @@ class SourcesSpec extends SparkSuite {
     // compact materializes the deletes: content identical, no #dv pointer,
     // and vacuum reclaims every DV dataset
     val before = snap()
-    ManifestTable.compact(spark, root, schema, Some("p"))
+    ManifestTable.compact(spark, root, schema, Some(PartSpec.Identity("p")))
     assert(snap() == before)
     ManifestTable.vacuum(spark, root)
     assert(!new java.io.File(s"$root/d00000002").exists())
@@ -528,30 +528,30 @@ class SourcesSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
     ManifestTable.commit(
       Seq((1L, "x", 10L), (2L, "x", 20L), (3L, "y", 30L), (4L, "z", 40L))
-        .toDF("id", "p", "v"), root, Some("p"))
+        .toDF("id", "p", "v"), root, Some(PartSpec.Identity("p")))
     // v2 rewrites p=x: id=1 updated, id=2 deleted, id=5 inserted
     ManifestTable.commit(Seq((1L, "x", 11L), (5L, "x", 50L)).toDF("id", "p", "v"),
-      root, Some("p"))
+      root, Some(PartSpec.Identity("p")))
     // v3 masks p=y's id=3 via a deletion vector
     ManifestTable.deleteWhere(spark, root, schema, col("id") === 3L)
-    val feed = ManifestTable.changes(spark, root, schema, "id", 1L, 3L)
+    val feed = ManifestTable.changes(spark, root, schema, Seq("id"), 1L, 3L)
       .as[(String, Long, String, Long)].collect().toSet
     assert(feed == Set(
       ("update_preimage", 1L, "x", 10L), ("update_postimage", 1L, "x", 11L),
       ("delete", 2L, "x", 20L), ("insert", 5L, "x", 50L),
       ("delete", 3L, "y", 30L)))
     // an adjacent window sees only its own commit's changes
-    assert(ManifestTable.changes(spark, root, schema, "id", 2L, 3L)
+    assert(ManifestTable.changes(spark, root, schema, Seq("id"), 2L, 3L)
       .as[(String, Long, String, Long)].collect().toSet
       == Set(("delete", 3L, "y", 30L)))
-    assert(ManifestTable.changes(spark, root, schema, "id", 3L, 3L).count() == 0L)
+    assert(ManifestTable.changes(spark, root, schema, Seq("id"), 3L, 3L).count() == 0L)
     // pruning proof: destroy the untouched p=z partition's data — the feed
     // must still compute, because neither side ever opens that partition
     val zdir = new java.io.File(s"$root/v00000001/p=z")
     assert(zdir.exists())
     zdir.listFiles().foreach(f => assert(f.delete()))
     assert(zdir.delete())
-    assert(ManifestTable.changes(spark, root, schema, "id", 1L, 3L)
+    assert(ManifestTable.changes(spark, root, schema, Seq("id"), 1L, 3L)
       .count() == 5L)
   }
 
@@ -564,12 +564,12 @@ class SourcesSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("q", org.apache.spark.sql.types.LongType)))
     val rows = Seq((1L, "x", 10L), (2L, "y", 10L), (3L, "x", 20L))
-    ManifestTable.commit(rows.toDF("id", "p", "q"), root, Some("p"))
+    ManifestTable.commit(rows.toDF("id", "p", "q"), root, Some(PartSpec.Identity("p")))
     // repartition the TABLE (not just files) to a different column: a full
     // snapshot rewrite under the new scheme, carryForward=false — the
     // Iceberg-style partition-evolution move, atomic like any commit
     ManifestTable.commit(ManifestTable.read(spark, root, schema), root,
-      Some("q"), carryForward = false)
+      Some(PartSpec.Identity("q")), carryForward = false)
     assert(new java.io.File(s"$root/v00000002/q=10").exists())
     assert(ManifestTable.read(spark, root, schema)
       .as[(Long, String, Long)].collect().toSet == rows.toSet)
@@ -579,7 +579,7 @@ class SourcesSpec extends SparkSuite {
     // subsequent merge commits carry forward under the NEW scheme
     ManifestTable.commit(Seq((4L, "z", 20L)).toDF("id", "p", "q")
       .unionByName(ManifestTable.read(spark, root, schema).filter(col("q") === 20L)),
-      root, Some("q"))
+      root, Some(PartSpec.Identity("q")))
     assert(ManifestTable.read(spark, root, schema)
       .as[(Long, String, Long)].collect().toSet == rows.toSet + ((4L, "z", 20L)))
   }
@@ -591,8 +591,10 @@ class SourcesSpec extends SparkSuite {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType)))
-    ManifestTable.commit(Seq((1L, "x"), (2L, "y")).toDF("id", "p"), root, Some("p"))
-    ManifestTable.commit(Seq((3L, "x")).toDF("id", "p"), root, Some("p")) // p=y carries from v1
+    ManifestTable.commit(Seq((1L, "x"), (2L, "y")).toDF("id", "p"), root,
+      Some(PartSpec.Identity("p")))
+    ManifestTable.commit(Seq((3L, "x")).toDF("id", "p"), root,
+      Some(PartSpec.Identity("p"))) // p=y carries from v1
     val d = ManifestTable.detail(spark, root)
     assert(d.map(_._1) == Seq(1L, 2L)) // both data versions live
     assert(d.map(_._2).sum == 2)       // two partition entries total
@@ -612,15 +614,15 @@ class SourcesSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("tier", org.apache.spark.sql.types.StringType)))
     // three commits = three observation times of each key's tier attribute
     ManifestTable.commit(Seq((1L, "x", "gold"), (2L, "x", "silver"))
-      .toDF("id", "p", "tier"), root, Some("p"))
+      .toDF("id", "p", "tier"), root, Some(PartSpec.Identity("p")))
     ManifestTable.commit(Seq((1L, "x", "gold"), (2L, "x", "gold"), (3L, "x", "bronze"))
-      .toDF("id", "p", "tier"), root, Some("p"))
+      .toDF("id", "p", "tier"), root, Some(PartSpec.Identity("p")))
     ManifestTable.commit(Seq((1L, "x", "silver"), (2L, "x", "gold"), (3L, "x", "bronze"))
-      .toDF("id", "p", "tier"), root, Some("p"))
+      .toDF("id", "p", "tier"), root, Some(PartSpec.Identity("p")))
     // change feed per adjacent version pair -> change-log rows at ts = toV;
     // insert/update_postimage carry each key's newly observed state
     val log = Seq((1L, 2L), (2L, 3L)).map { case (a, b) =>
-      ManifestTable.changes(spark, root, schema, "id", a, b)
+      ManifestTable.changes(spark, root, schema, Seq("id"), a, b)
         .filter(col("_change_type").isin("insert", "update_postimage"))
         .select(col("id"), lit(b).as("ts"), lit(b).as("tie"), col("tier"))
     }.reduce(_ unionByName _)
@@ -646,7 +648,7 @@ class SourcesSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
     // 40k rows across 4 partitions; the batch touches 20 keys in ONE partition
     val base = (0L until 40000L).map(i => (i, s"p${i % 4}", i * 10L)).toDF("id", "p", "v")
-    ManifestTable.commit(base, root, Some("p"))
+    ManifestTable.commit(base, root, Some(PartSpec.Identity("p")))
     def dirBytes(d: String): Long = {
       val f = new java.io.File(d)
       if (!f.exists) 0L
@@ -655,7 +657,7 @@ class SourcesSpec extends SparkSuite {
     val v1Bytes = dirBytes(s"$root/v00000001")
     val batch = (0L until 20L).map(i => (i * 4, "p0", -1L)).toDF("id", "p", "v")
       .unionByName(Seq((90001L, "p0", 7L)).toDF("id", "p", "v")) // one insert
-    ManifestTable.mergeDv(batch, root, schema, "id", Some("p"))
+    ManifestTable.mergeDv(batch, root, schema, Seq("id"), Some(PartSpec.Identity("p")))
     // write amplification: the commit wrote the batch + matched positions,
     // NOT a rewrite of partition p0 (10k rows) — orders of magnitude smaller
     val written = dirBytes(s"$root/v00000002") + dirBytes(s"$root/d00000002")
@@ -671,7 +673,7 @@ class SourcesSpec extends SparkSuite {
     assert(new java.io.File(s"$root/v00000002/p=p0").exists())
     // a second round updates an APPENDED row (DV must mask the v2 copy too)
     val batch2 = Seq((0L, "p0", -2L), (90001L, "p0", 8L)).toDF("id", "p", "v")
-    ManifestTable.mergeDv(batch2, root, schema, "id", Some("p"))
+    ManifestTable.mergeDv(batch2, root, schema, Seq("id"), Some(PartSpec.Identity("p")))
     val expect2 = graft.ops.Upsert.mergeUnique(
       graft.ops.Upsert.mergeUnique(base, batch, "id"), batch2, "id")
       .as[(Long, String, Long)].collect().toSet
@@ -685,14 +687,14 @@ class SourcesSpec extends SparkSuite {
       .filter(col("id") === 0L).as[(Long, String, Long)].collect().toSeq ==
       Seq((0L, "p0", -1L)))
     // change feed across the DV-merge commit classifies correctly
-    val ch = ManifestTable.changes(spark, root, schema, "id", 2L, 3L)
+    val ch = ManifestTable.changes(spark, root, schema, Seq("id"), 2L, 3L)
       .as[(String, Long, String, Long)].collect().toSet
     assert(ch == Set(("update_preimage", 0L, "p0", -1L),
       ("update_postimage", 0L, "p0", -2L),
       ("update_preimage", 90001L, "p0", 7L),
       ("update_postimage", 90001L, "p0", 8L)))
     // compact folds the append log into one clean version, same rows
-    ManifestTable.compact(spark, root, schema, Some("p"))
+    ManifestTable.compact(spark, root, schema, Some(PartSpec.Identity("p")))
     assert(ManifestTable.read(spark, root, schema)
       .as[(Long, String, Long)].collect().toSet == expect2)
     assert(ManifestTable.deletedRowCount(spark, root) == 0L)
@@ -752,11 +754,11 @@ class SourcesSpec extends SparkSuite {
     val v2Schema = org.apache.spark.sql.types.StructType(v1Schema.fields :+
       org.apache.spark.sql.types.StructField("tag", org.apache.spark.sql.types.StringType))
     ManifestTable.commit(Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
-      .toDF("id", "p", "v"), root, Some("p"))
+      .toDF("id", "p", "v"), root, Some(PartSpec.Identity("p")))
     // the merge batch carries the NEW column; the widened schema drives the
     // position scan, reading the old files' missing column as NULL
     ManifestTable.mergeDv(Seq((2L, "a", 99L, "x"), (4L, "b", 40L, "y"))
-      .toDF("id", "p", "v", "tag"), root, v2Schema, "id", Some("p"))
+      .toDF("id", "p", "v", "tag"), root, v2Schema, Seq("id"), Some(PartSpec.Identity("p")))
     val got = ManifestTable.read(spark, root, v2Schema)
       .as[(Long, String, Long, Option[String])].collect().toSet
     assert(got == Set((1L, "a", 10L, None), (2L, "a", 99L, Some("x")),
@@ -815,7 +817,7 @@ class SourcesSpec extends SparkSuite {
     // so the IN-list's zone range is blind — only the any-of Bloom can skip
     val df = (0 until 20000).map(i => (s"k$i", i.toLong)).toDF("id", "v")
       .repartition(16)
-    ManifestTable.commit(df, root, partCol = None,
+    ManifestTable.commit(df, root, spec = None,
       statsCols = Seq("id"), bloomCols = Seq("id"))
     val keys = Seq("k111", "k12345", "k19999")
     val (kept, total) = ManifestTable.pruneCounts(spark, root, Nil,
@@ -861,20 +863,20 @@ class SourcesSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
     ManifestTable.commit(
       (0L until 2000L).map(i => (i, s"p${i % 3}", i)).toDF("id", "p", "v"),
-      src, Some("p"))
+      src, Some(PartSpec.Identity("p")))
     // seed
-    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 1)
+    assert(ManifestTable.replicate(spark, src, dst, schema, Seq("id"), Some("p")) == 1)
     def checksum(root: String) = graft.ops.Integrity.tableChecksum(
       ManifestTable.read(spark, root, schema), Seq("p"), schema.fieldNames.toSeq)
       .collect().map(_.toString).sorted.toSeq
     assert(checksum(dst) == checksum(src))
     // nothing new: zero versions applied, replica untouched
-    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 0)
+    assert(ManifestTable.replicate(spark, src, dst, schema, Seq("id"), Some("p")) == 0)
     // src moves twice: merge-on-read upsert + DV delete
     ManifestTable.mergeDv(Seq((7L, "p1", -7L), (90001L, "p0", 1L)).toDF("id", "p", "v"),
-      src, schema, "id", Some("p"))
+      src, schema, Seq("id"), Some(PartSpec.Identity("p")))
     ManifestTable.deleteWhere(spark, src, schema, col("id").between(100L, 199L))
-    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 2)
+    assert(ManifestTable.replicate(spark, src, dst, schema, Seq("id"), Some("p")) == 2)
     assert(checksum(dst) == checksum(src))
     assert(ManifestTable.read(spark, dst, schema).count() == 2000L + 1 - 100)
     // replica write amplification: the replayed versions are O(changed rows)
@@ -895,22 +897,22 @@ class SourcesSpec extends SparkSuite {
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("p", StringType), StructField("v", LongType)))
     ManifestTable.commit((0L until 30L).map(i => (i, s"p${i % 3}", i)).toDF("id", "p", "v"),
-      src, Some("p")) // v1
-    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 1)
+      src, Some(PartSpec.Identity("p"))) // v1
+    assert(ManifestTable.replicate(spark, src, dst, schema, Seq("id"), Some("p")) == 1)
     ManifestTable.mergeDv(Seq((1L, "p1", -1L), (100L, "p1", 100L)).toDF("id", "p", "v"),
-      src, schema, "id", Some("p")) // v2
-    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 1)
+      src, schema, Seq("id"), Some(PartSpec.Identity("p"))) // v2
+    assert(ManifestTable.replicate(spark, src, dst, schema, Seq("id"), Some("p")) == 1)
     // maintenance on the replica: the compacted manifest is the only one
     // left, and it carries no #batch record of its own
-    ManifestTable.compact(spark, dst, schema, Some("p"))
+    ManifestTable.compact(spark, dst, schema, Some(PartSpec.Identity("p")))
     ManifestTable.vacuum(spark, dst)
     assert(ManifestTable.versions(spark, dst) == Seq(3L))
     ManifestTable.mergeDv(Seq((2L, "p2", -2L)).toDF("id", "p", "v"),
-      src, schema, "id", Some("p")) // v3
+      src, schema, Seq("id"), Some(PartSpec.Identity("p"))) // v3
     ManifestTable.deleteWhere(spark, src, schema, col("id") === 4L) // v4
     // progress survived: exactly v3 and v4 apply, nothing replays twice
-    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 2)
-    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 0)
+    assert(ManifestTable.replicate(spark, src, dst, schema, Seq("id"), Some("p")) == 2)
+    assert(ManifestTable.replicate(spark, src, dst, schema, Seq("id"), Some("p")) == 0)
     def snap(r: String) = ManifestTable.read(spark, r, schema)
       .as[(Long, String, Long)].collect().toSet
     assert(snap(dst) == snap(src))
@@ -924,10 +926,10 @@ class SourcesSpec extends SparkSuite {
     val src = s"$base/src"; val dst = s"$base/dst"
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("p", StringType), StructField("v", LongType)))
-    ManifestTable.commit(Seq((1L, "a", 1L)).toDF("id", "p", "v"), src, Some("p"))
-    ManifestTable.commit(Seq((9L, "a", 9L)).toDF("id", "p", "v"), dst, Some("p"))
+    ManifestTable.commit(Seq((1L, "a", 1L)).toDF("id", "p", "v"), src, Some(PartSpec.Identity("p")))
+    ManifestTable.commit(Seq((9L, "a", 9L)).toDF("id", "p", "v"), dst, Some(PartSpec.Identity("p")))
     val e = intercept[IllegalArgumentException](
-      ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")))
+      ManifestTable.replicate(spark, src, dst, schema, Seq("id"), Some("p")))
     assert(e.getMessage.contains("not a replica"), e.getMessage)
   }
 
@@ -940,7 +942,7 @@ class SourcesSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
     ManifestTable.commit(Seq((1L, "a", 1L), (2L, "b", 2L)).toDF("id", "p", "v"),
-      root, Some("p")) // v1
+      root, Some(PartSpec.Identity("p"))) // v1
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the LOSER stages its p=b rewrite against base v1 ...
@@ -948,11 +950,13 @@ class SourcesSpec extends SparkSuite {
     Seq((2L, "b", 99L)).toDF("id", "p", "v")
       .write.partitionBy("p").parquet(stage.toString)
     // ... meanwhile the winner commits a p=a rewrite and takes v2
-    ManifestTable.commit(Seq((1L, "a", 50L)).toDF("id", "p", "v"), root, Some("p"))
+    ManifestTable.commit(Seq((1L, "a", 50L)).toDF("id", "p", "v"), root,
+      Some(PartSpec.Identity("p")))
     assert(ManifestTable.currentVersion(spark, root).contains(2L))
     // the loser's publish from the stale base must REBASE and land at v3
     val landed = ManifestTable.publishStaged(spark, root, stage, Some(1L),
-      Seq("p=a" -> 1L, "p=b" -> 1L), Seq("p=b"), None, Nil, Nil, retryable = true)
+      Seq("p=a" -> 1L, "p=b" -> 1L), Seq("p=b"), None, Nil, Nil,
+      ManifestTable.CommitShape.Rewrite)
     assert(landed == 3L)
     assert(ManifestTable.read(spark, root, schema)
       .as[(Long, String, Long)].collect().toSet ==
@@ -963,7 +967,8 @@ class SourcesSpec extends SparkSuite {
       .write.partitionBy("p").parquet(stage2.toString)
     val e = intercept[IllegalStateException](
       ManifestTable.publishStaged(spark, root, stage2, Some(1L),
-        Seq("p=a" -> 1L, "p=b" -> 1L), Seq("p=a"), None, Nil, Nil, retryable = true))
+        Seq("p=a" -> 1L, "p=b" -> 1L), Seq("p=a"), None, Nil, Nil,
+        ManifestTable.CommitShape.Rewrite))
     assert(e.getMessage.contains("commit conflict"))
     // the conflicting writer changed nothing
     assert(ManifestTable.currentVersion(spark, root).contains(3L))
@@ -979,11 +984,12 @@ class SourcesSpec extends SparkSuite {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType)))
-    ManifestTable.commit(Seq((1L, "a")).toDF("id", "p"), root, Some("p")) // v1
+    ManifestTable.commit(Seq((1L, "a")).toDF("id", "p"), root, Some(PartSpec.Identity("p"))) // v1
     // a crashed writer claimed v2 (dir present, manifest never published)
     Seq((9L, "a")).toDF("id", "p").write.partitionBy("p").parquet(s"$root/v00000002")
     // replay: the next commit grace-waits, reclaims the orphan, lands at v2
-    val landed = ManifestTable.commit(Seq((2L, "a")).toDF("id", "p"), root, Some("p"))
+    val landed = ManifestTable.commit(Seq((2L, "a")).toDF("id", "p"), root,
+      Some(PartSpec.Identity("p")))
     assert(landed == 2L)
     assert(ManifestTable.read(spark, root, schema)
       .as[(Long, String)].collect().toSet == Set((2L, "a")))
@@ -999,7 +1005,7 @@ class SourcesSpec extends SparkSuite {
     val root = java.nio.file.Files.createTempDirectory("mantab-race").toString + "/t"
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType)))
-    ManifestTable.commit(Seq(1L).toDF("id"), root, partCol = None)
+    ManifestTable.commit(Seq(1L).toDF("id"), root, spec = None)
     // simulate a racing writer that resolved the same base version and
     // already published manifest 2 (its data under v00000099); the loser's
     // publish step — driven directly, since commit() would re-resolve and
@@ -1028,7 +1034,7 @@ class SourcesSpec extends SparkSuite {
     // 8 files, each a tight contiguous id range -> zone maps are selective
     val df = spark.range(800).select(col("id"), concat(lit("v"), col("id")).as("s"))
       .repartitionByRange(8, col("id"))
-    ManifestTable.commit(df, root, partCol = None,
+    ManifestTable.commit(df, root, spec = None,
       statsCols = Seq("id"), bloomCols = Seq("s"))
     // conjunctive range + equality; the unrecognized OR leg adds no hint
     val pred = col("id") >= 100L && col("id") < 300L &&
@@ -1066,11 +1072,13 @@ class SourcesSpec extends SparkSuite {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType)))
-    ManifestTable.commit(Seq((1L, "x"), (2L, "y")).toDF("id", "p"), root, Some("p"))
-    ManifestTable.commit(Seq((3L, "x")).toDF("id", "p"), root, Some("p")) // v2: touches only p=x
+    ManifestTable.commit(Seq((1L, "x"), (2L, "y")).toDF("id", "p"), root,
+      Some(PartSpec.Identity("p")))
+    ManifestTable.commit(Seq((3L, "x")).toDF("id", "p"), root,
+      Some(PartSpec.Identity("p"))) // v2: touches only p=x
     // compact rewrites everything into v3 with carryForward=false, so v1/v2
     // data is referenced ONLY by the retained manifests 1 and 2
-    ManifestTable.compact(spark, root, schema, Some("p"))
+    ManifestTable.compact(spark, root, schema, Some(PartSpec.Identity("p")))
     ManifestTable.vacuum(spark, root, retainVersions = 1)
     // manifest 2 is inside the retention window: its whole snapshot (v1's
     // p=y carry-forward + v2's p=x) must remain time-travel-readable
@@ -1094,9 +1102,10 @@ class SourcesSpec extends SparkSuite {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType)))
-    ManifestTable.commit(Seq((1L, "x"), (2L, "y")).toDF("id", "p"), root, Some("p"))
+    ManifestTable.commit(Seq((1L, "x"), (2L, "y")).toDF("id", "p"), root,
+      Some(PartSpec.Identity("p")))
     // second commit touches ONLY p=x: p=y must carry forward from v1
-    ManifestTable.commit(Seq((3L, "x")).toDF("id", "p"), root, Some("p"))
+    ManifestTable.commit(Seq((3L, "x")).toDF("id", "p"), root, Some(PartSpec.Identity("p")))
     val got = ManifestTable.read(spark, root, schema)
       .as[(Long, String)].collect().toSet
     assert(got == Set((3L, "x"), (2L, "y")))
@@ -1117,9 +1126,9 @@ class SourcesSpec extends SparkSuite {
     // two fragmented merge commits: each writes its rows pre-split over 4
     // tasks, so every partition dir accretes several small files
     ManifestTable.commit((0L until 40L).map(i => (i, s"p${i % 2}"))
-      .toDF("id", "p").repartition(4), root, Some("p"))
+      .toDF("id", "p").repartition(4), root, Some(PartSpec.Identity("p")))
     ManifestTable.commit((40L until 60L).map(i => (i, "p0"))
-      .toDF("id", "p").repartition(4), root, Some("p"))
+      .toDF("id", "p").repartition(4), root, Some(PartSpec.Identity("p")))
     val before = ManifestTable.read(spark, root, schema)
       .as[(Long, String)].collect().toSet
     def filesIn(dir: String) = {
@@ -1127,7 +1136,7 @@ class SourcesSpec extends SparkSuite {
       if (!d.exists()) 0 else d.listFiles().count(_.getName.endsWith(".parquet"))
     }
     assert(filesIn(s"$root/v00000002/p=p0") > 1, "fixture must be fragmented")
-    val v = ManifestTable.compact(spark, root, schema, Some("p"))
+    val v = ManifestTable.compact(spark, root, schema, Some(PartSpec.Identity("p")))
     assert(v == 3L)
     // content identical, every partition dir down to ONE file
     assert(ManifestTable.read(spark, root, schema)
@@ -1141,7 +1150,7 @@ class SourcesSpec extends SparkSuite {
     assert(ManifestTable.read(spark, root, schema)
       .as[(Long, String)].collect().toSet == before)
     // filesPerPartition > 1 bounds rather than pins the per-dir file count
-    ManifestTable.compact(spark, root, schema, Some("p"), filesPerPartition = 2)
+    ManifestTable.compact(spark, root, schema, Some(PartSpec.Identity("p")), filesPerPartition = 2)
     assert(filesIn(s"$root/v00000004/p=p0") <= 2
       && filesIn(s"$root/v00000004/p=p0") >= 1)
     assert(ManifestTable.read(spark, root, schema)
@@ -1160,7 +1169,7 @@ class SourcesSpec extends SparkSuite {
     // clustered layout zone maps exist for
     val df = (0L until 10000L).map(i => (i, f"k$i%05d")).toDF("id", "s")
       .repartitionByRange(8, col("id"))
-    ManifestTable.commit(df, root, partCol = None, statsCols = Seq("id", "s"))
+    ManifestTable.commit(df, root, spec = None, statsCols = Seq("id", "s"))
     val (kept, total) = ManifestTable.pruneCounts(spark, root,
       Seq(ColRange("id", 100L, 200L)))
     assert(total >= 8 && kept >= 1 && kept < total, s"kept=$kept total=$total")
@@ -1187,9 +1196,9 @@ class SourcesSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType)))
     // v1 (p=a) commits WITHOUT stats; v2 (p=b) with stats. Pruning must
     // fall back to reading v1 whole while still skipping inside v2.
-    ManifestTable.commit(Seq((5L, "a")).toDF("id", "p"), root, Some("p"))
+    ManifestTable.commit(Seq((5L, "a")).toDF("id", "p"), root, Some(PartSpec.Identity("p")))
     ManifestTable.commit((0L until 1000L).map(i => (i, "b")).toDF("id", "p")
-      .repartitionByRange(4, col("id")), root, Some("p"), statsCols = Seq("id"))
+      .repartitionByRange(4, col("id")), root, Some(PartSpec.Identity("p")), statsCols = Seq("id"))
     val r = ManifestTable.readPruned(spark, root, schema,
         Seq(ColRange("id", 0L, 10L)))
       .filter(col("id") <= 10).as[(Long, String)].collect().toSet
@@ -1201,7 +1210,7 @@ class SourcesSpec extends SparkSuite {
     // file is skipped
     val root2 = java.nio.file.Files.createTempDirectory("manzm3").toString + "/t"
     ManifestTable.commit(Seq((1L, null: String), (2L, null: String))
-      .toDF("id", "s"), root2, partCol = None, statsCols = Seq("s"))
+      .toDF("id", "s"), root2, spec = None, statsCols = Seq("s"))
     val schema2 = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("s", org.apache.spark.sql.types.StringType)))
@@ -1218,8 +1227,8 @@ class SourcesSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType)))
     ManifestTable.commit((0L until 100L).map(i => (i, s"p${i % 2}"))
-      .toDF("id", "p"), root, Some("p"), statsCols = Seq("id"))
-    ManifestTable.compact(spark, root, schema, Some("p"), statsCols = Seq("id"))
+      .toDF("id", "p"), root, Some(PartSpec.Identity("p")), statsCols = Seq("id"))
+    ManifestTable.compact(spark, root, schema, Some(PartSpec.Identity("p")), statsCols = Seq("id"))
     ManifestTable.vacuum(spark, root)
     assert(!new java.io.File(s"$root/_stats.00000001").exists())
     assert(new java.io.File(s"$root/_stats.00000002").exists())
@@ -1244,7 +1253,7 @@ class SourcesSpec extends SparkSuite {
     // cluster at most one of them
     val df = (0 until 20000).map(i => (i.toLong, (i / 141).toLong, (i % 141).toLong))
       .toDF("id", "a", "b")
-    ManifestTable.commit(df.repartition(4), root, partCol = None)
+    ManifestTable.commit(df.repartition(4), root, spec = None)
     ManifestTable.compactZOrder(spark, root, schema, None, Seq("a", "b"),
       targetFiles = 16)
     // row-identical snapshot
@@ -1281,7 +1290,7 @@ class SourcesSpec extends SparkSuite {
     // whole domain, so zone maps are blind here — the bloom's home turf
     val df = (0 until 20000).map(i => (s"k$i", i.toLong)).toDF("id", "v")
       .repartition(16)
-    ManifestTable.commit(df, root, partCol = None,
+    ManifestTable.commit(df, root, spec = None,
       statsCols = Seq("id"), bloomCols = Seq("id"))
     val (kz, tz) = ManifestTable.pruneCounts(spark, root,
       Seq(ColRange("id", "k12345", "k12345")))
@@ -1322,7 +1331,7 @@ class SourcesSpec extends SparkSuite {
     val df = (0L until 4000L).map(i =>
       (i, if (i < 1000) null else s"k$i")).toDF("id", "s")
       .repartitionByRange(4, col("id"))
-    ManifestTable.commit(df, root, partCol = None, bloomCols = Seq("s"))
+    ManifestTable.commit(df, root, spec = None, bloomCols = Seq("s"))
     // no hints: the pruned read must be the FULL table
     assert(ManifestTable.readPruned(spark, root, schema, Nil).count() == 4000L)
     // a range on an un-stats'd column cannot prune anything either
@@ -1360,9 +1369,9 @@ class SourcesSpec extends SparkSuite {
     val root = java.nio.file.Files.createTempDirectory("manse").toString + "/t"
     // v1 (p=x) written BEFORE the score column existed; v2 (p=y) carries it.
     // The widened read schema must serve both partitions, old rows at NULL.
-    ManifestTable.commit(Seq((1L, "x")).toDF("id", "p"), root, Some("p"))
+    ManifestTable.commit(Seq((1L, "x")).toDF("id", "p"), root, Some(PartSpec.Identity("p")))
     ManifestTable.commit(Seq((2L, "y", 0.5)).toDF("id", "p", "score"),
-      root, Some("p"))
+      root, Some(PartSpec.Identity("p")))
     val widened = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType),
@@ -1382,7 +1391,7 @@ class SourcesSpec extends SparkSuite {
       StructField("id", LongType), StructField("p", StringType),
       StructField("v", LongType)))
     ManifestTable.commit(Seq((1L, "a", 1L), (2L, "b", 2L)).toDF("id", "p", "v"),
-      root, Some("p")) // v1
+      root, Some(PartSpec.Identity("p"))) // v1
     // the MERGE stages its batch + DV delta against base v1 — exactly what
     // mergeDv does before its claim (positions of id=2 in the v1 snapshot)
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -1396,12 +1405,13 @@ class SourcesSpec extends SparkSuite {
       .filter(f => f.getName.endsWith(".parquet")).head.getAbsolutePath
     Seq((pbFile, 0L)).toDF("__f", "__pos").write.parquet(dvStage.toString)
     // ... meanwhile a blind append lands v2 (p=c)
-    ManifestTable.append(Seq((3L, "c", 3L)).toDF("id", "p", "v"), root, Some("p"))
+    ManifestTable.append(Seq((3L, "c", 3L)).toDF("id", "p", "v"), root,
+      Some(PartSpec.Identity("p")))
     assert(ManifestTable.currentVersion(spark, root).contains(2L))
     // the merge's publish from the stale base must REBASE and land at v3
     val landed = ManifestTable.publishStaged(spark, root, stage, Some(1L),
       Seq("p=a" -> 1L, "p=b" -> 1L), Seq("p=b"), None, Nil, Nil,
-      retryable = true, appendEntries = true, dvStage = Some(dvStage))
+      ManifestTable.CommitShape.Merge, dvStage = Some(dvStage))
     assert(landed == 3L)
     assert(ManifestTable.read(spark, root, schema)
       .as[(Long, String, Long)].collect().toSet ==
@@ -1417,8 +1427,84 @@ class SourcesSpec extends SparkSuite {
       ManifestTable.publishStaged(spark, root, stage2, Some(3L),
         Seq("p=a" -> 1L, "p=b" -> 1L, "p=b" -> 3L, "p=c" -> 2L), Seq("p=b"),
         Some(3L), Nil, Nil,
-        retryable = true, appendEntries = true, dvStage = Some(dvStage2)))
+        ManifestTable.CommitShape.Merge, dvStage = Some(dvStage2)))
     assert(e.getMessage.contains("commit conflict"))
+  }
+
+  test("commit-rule matrix: every commit shape against every kind of concurrent winner") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    import ManifestTable.CommitShape._
+    type Rows = Set[(Long, String, Long)]
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("p", StringType), StructField("v", LongType)))
+    def rows(root: String): Rows =
+      ManifestTable.read(spark, root, schema).as[(Long, String, Long)].collect().toSet
+    val v1Rows: Rows = Set((1L, "a", 1L), (2L, "a", 2L), (3L, "b", 3L))
+    val v1Entries = Seq("p=a" -> 1L, "p=b" -> 1L)
+    // winners land v2 over base v1: (name, commit, effect on the rows)
+    val winners: Seq[(String, String => Unit, Rows => Rows)] = Seq(
+      ("blind append to p=c", root => ManifestTable.append(
+        Seq((4L, "c", 4L)).toDF("id", "p", "v"), root, Some(PartSpec.Identity("p"))),
+        _ + ((4L, "c", 4L))),
+      ("rewrite of p=a", root => ManifestTable.commit(
+        Seq((1L, "a", 10L), (2L, "a", 20L)).toDF("id", "p", "v"), root,
+        Some(PartSpec.Identity("p"))),
+        rs => rs.filterNot(_._2 == "a") ++ Set((1L, "a", 10L), (2L, "a", 20L))),
+      ("DV-only delete in p=a", root => ManifestTable.deleteWhere(spark, root, schema,
+        col("id") === 2L), _.filterNot(_._1 == 2L)))
+    // losers stage against base v1: (name, shape, staged rows, masks id=1 by
+    // DV, base entries, touched names, effect on the rows)
+    val losers: Seq[(String, ManifestTable.CommitShape, Seq[(Long, String, Long)], Boolean,
+        Seq[(String, Long)], Seq[String], Rows => Rows)] = Seq(
+      ("snapshot", Snapshot, Seq((1L, "a", 100L), (3L, "b", 300L)), false, Nil,
+        Seq("p=a", "p=b"), _ => Set((1L, "a", 100L), (3L, "b", 300L))),
+      ("rewrite p=a", Rewrite, Seq((1L, "a", 11L), (2L, "a", 21L)), false, v1Entries,
+        Seq("p=a"), rs => rs.filterNot(_._2 == "a") ++ Set((1L, "a", 11L), (2L, "a", 21L))),
+      ("append to p=a", Append, Seq((5L, "a", 5L)), false, v1Entries, Seq("p=a"),
+        _ + ((5L, "a", 5L))),
+      ("merge id=1 with a DV", Merge, Seq((1L, "a", 12L)), true, v1Entries, Seq("p=a"),
+        rs => rs.filterNot(_._1 == 1L) + ((1L, "a", 12L))),
+      ("insert-only merge", Merge, Seq((5L, "a", 5L)), false, v1Entries, Seq("p=a"),
+        _ + ((5L, "a", 5L))),
+      ("delete id=1", Delete, Nil, true, v1Entries, Nil, _.filterNot(_._1 == 1L)))
+    // "lands" or the refusal the loser's publish must raise, per winner
+    val expected = Map(
+      "snapshot" -> Seq("commit collision", "commit collision", "commit collision"),
+      "rewrite p=a" -> Seq("lands", "commit conflict", "commit conflict"),
+      "append to p=a" -> Seq("lands", "lands", "lands"),
+      "merge id=1 with a DV" -> Seq("lands", "commit conflict", "commit conflict"),
+      "insert-only merge" -> Seq("lands", "commit conflict", "commit conflict"),
+      "delete id=1" -> Seq("commit collision", "commit collision", "commit collision"))
+    for ((lName, shape, staged, masks, base, touched, lEffect) <- losers;
+         ((wName, win, wEffect), want) <- winners.zip(expected(lName))) {
+      val root = Files.createTempDirectory("manmatrix").toString + "/t"
+      ManifestTable.commit(v1Rows.toSeq.toDF("id", "p", "v"), root,
+        Some(PartSpec.Identity("p"))) // v1
+      val stage = new org.apache.hadoop.fs.Path(root, ".stage-loser")
+      if (staged.isEmpty) new java.io.File(stage.toString).mkdirs()
+      else staged.toDF("id", "p", "v").write.partitionBy("p").parquet(stage.toString)
+      val dvStage = Option.when(masks) {
+        val dir = new org.apache.hadoop.fs.Path(root, ".stage-loser-dv")
+        ManifestTable.readWithMeta(spark, root, schema).filter(col("id") === 1L)
+          .select("__f", "__pos").write.parquet(dir.toString)
+        dir
+      }
+      win(root) // v2
+      def publish(): Long = ManifestTable.publishStaged(spark, root, stage, Some(1L),
+        base, touched, None, Nil, Nil, shape, dvStage)
+      withClue(s"$lName vs $wName: ") {
+        if (want == "lands") {
+          assert(publish() == 3L)
+          assert(rows(root) == lEffect(wEffect(v1Rows)))
+        } else {
+          val e = intercept[IllegalStateException](publish())
+          assert(e.getMessage.contains(want), e.getMessage)
+          assert(ManifestTable.currentVersion(spark, root).contains(2L))
+          assert(rows(root) == wEffect(v1Rows))
+        }
+      }
+    }
   }
 
   test("carry-forward rewrite racing a DV-only delete in its partition conflicts (no resurrect)") {
@@ -1430,7 +1516,7 @@ class SourcesSpec extends SparkSuite {
       StructField("v", LongType)))
     ManifestTable.commit(
       Seq((1L, "a", 1L), (2L, "a", 2L), (3L, "b", 3L)).toDF("id", "p", "v"),
-      root, Some("p")) // v1
+      root, Some(PartSpec.Identity("p"))) // v1
     // the loser stages a p=a rewrite computed from the PRE-delete snapshot
     val stage = new org.apache.hadoop.fs.Path(root, ".stage-rw")
     Seq((1L, "a", 10L), (2L, "a", 20L)).toDF("id", "p", "v")
@@ -1442,7 +1528,7 @@ class SourcesSpec extends SparkSuite {
     val e = intercept[IllegalStateException](
       ManifestTable.publishStaged(spark, root, stage, Some(1L),
         Seq("p=a" -> 1L, "p=b" -> 1L), Seq("p=a"), None, Nil, Nil,
-        retryable = true))
+        ManifestTable.CommitShape.Rewrite))
     assert(e.getMessage.contains("commit conflict"))
     assert(e.getMessage.contains("deletion vector"))
     // ... while the same race on a DIFFERENT partition commutes
@@ -1451,7 +1537,7 @@ class SourcesSpec extends SparkSuite {
       .write.partitionBy("p").parquet(stage2.toString)
     val landed = ManifestTable.publishStaged(spark, root, stage2, Some(1L),
       Seq("p=a" -> 1L, "p=b" -> 1L), Seq("p=b"), None, Nil, Nil,
-      retryable = true)
+      ManifestTable.CommitShape.Rewrite)
     assert(landed == 3L)
     assert(ManifestTable.read(spark, root, schema)
       .as[(Long, String, Long)].collect().toSet ==
@@ -1469,10 +1555,10 @@ class SourcesSpec extends SparkSuite {
     val base = Seq((1L, 1L, "a", 10L), (1L, 2L, "a", 11L),
       (2L, 1L, "b", 20L), (2L, 2L, "b", 21L), (3L, 1L, "b", 30L))
       .toDF("k1", "k2", "p", "v")
-    ManifestTable.commit(base, root, Some("p")) // v1
+    ManifestTable.commit(base, root, Some(PartSpec.Identity("p"))) // v1
     // composite-key upsert touches ONLY (1,2); (1,1) must survive
     ManifestTable.mergeDv(Seq((1L, 2L, "a", 110L)).toDF("k1", "k2", "p", "v"),
-      root, schema, Seq("k1", "k2"), Some("p"), Nil, Nil, None, None)
+      root, schema, Seq("k1", "k2"), Some(PartSpec.Identity("p")), Nil, Nil, None, None)
     assert(ManifestTable.read(spark, root, schema)
       .as[(Long, Long, String, Long)].collect().toSet ==
       Set((1L, 1L, "a", 10L), (1L, 2L, "a", 110L), (2L, 1L, "b", 20L),
@@ -1481,7 +1567,7 @@ class SourcesSpec extends SparkSuite {
     ManifestTable.mergeDv(spark.emptyDataFrame
       .withColumn("k1", lit(0L)).withColumn("k2", lit(0L))
       .withColumn("p", lit("z")).withColumn("v", lit(0L)).limit(0),
-      root, schema, Seq("k1", "k2"), Some("p"), Nil, Nil,
+      root, schema, Seq("k1", "k2"), Some(PartSpec.Identity("p")), Nil, Nil,
       Some(Seq((2L, 2L)).toDF("k1", "k2")),
       Some(Seq(ManifestTable.partDirName("p", "b"))))
     assert(ManifestTable.read(spark, root, schema)
@@ -1492,7 +1578,7 @@ class SourcesSpec extends SparkSuite {
     ManifestTable.mergeDv(spark.emptyDataFrame
       .withColumn("k1", lit(0L)).withColumn("k2", lit(0L))
       .withColumn("p", lit("z")).withColumn("v", lit(0L)).limit(0),
-      root, schema, Seq("k1", "k2"), Some("p"), Nil, Nil,
+      root, schema, Seq("k1", "k2"), Some(PartSpec.Identity("p")), Nil, Nil,
       Some(Seq((3L, 1L)).toDF("k1", "k2")),
       Some(Seq(ManifestTable.partDirName("p", "a"))))
     assert(ManifestTable.read(spark, root, schema)
@@ -1509,19 +1595,22 @@ class SourcesSpec extends SparkSuite {
       StructField("k", LongType), StructField("p", StringType), StructField("v", LongType)))
     def rows(xs: (Long, String, Long)*) = xs.toDF("k", "p", "v")
     def part(p: String) = ManifestTable.partDirName("p", p)
-    def feed(a: Long, b: Long) = ManifestTable.changes(spark, root, schema, "k", a, b)
+    def feed(a: Long, b: Long) = ManifestTable.changes(spark, root, schema, Seq("k"), a, b)
       .as[(String, Long, String, Long)].collect().toSet
-    ManifestTable.commit(rows((1L, "a", 10L), (2L, "b", 20L), (3L, "b", 30L)), root, Some("p"))
+    ManifestTable.commit(rows((1L, "a", 10L), (2L, "b", 20L), (3L, "b", 30L)), root,
+      Some(PartSpec.Identity("p")))
     // appends to p=a only: deleting k=3 changes p=b's masking, not its
     // entries, so changes() must diff the DVs to find it
-    val v1 = ManifestTable.mergeDv(rows((1L, "a", 11L)), root, schema, Seq("k"), Some("p"),
+    val v1 = ManifestTable.mergeDv(rows((1L, "a", 11L)), root, schema, Seq("k"),
+      Some(PartSpec.Identity("p")),
       Nil, Nil, Some(Seq(3L).toDF("k")), Some(Seq(part("b"))))
     assert(feed(v1 - 1, v1) == Set(("update_preimage", 1L, "a", 10L),
       ("update_postimage", 1L, "a", 11L), ("delete", 3L, "b", 30L)))
     // appends to both partitions: every DV change lies inside them
     val v2 = ManifestTable.mergeDv(rows((4L, "a", 40L), (5L, "b", 50L)), root, schema,
-      Seq("k"), Some("p"), Nil, Nil, Some(Seq(2L).toDF("k")), Some(Seq(part("b"))))
-    assert(jobsIn(ManifestTable.changes(spark, root, schema, "k", v2 - 1, v2)) == 0)
+      Seq("k"), Some(PartSpec.Identity("p")), Nil, Nil, Some(Seq(2L).toDF("k")),
+        Some(Seq(part("b"))))
+    assert(jobsIn(ManifestTable.changes(spark, root, schema, Seq("k"), v2 - 1, v2)) == 0)
     assert(feed(v2 - 1, v2) ==
       Set(("insert", 4L, "a", 40L), ("insert", 5L, "b", 50L), ("delete", 2L, "b", 20L)))
   }
@@ -1538,15 +1627,16 @@ class SourcesSpec extends SparkSuite {
       java.nio.file.Files.createTempDirectory(s"mandvjobs-$n").toString + "/t")
     roots.foreach { root =>
       ManifestTable.commit((1L to 40L).map(k => (k, s"q${k % 4}", k)).toDF("k", "p", "v"),
-        root, Some("p"))
-      ManifestTable.mergeDv(rows((1L, "q1", 100L)), root, schema, Seq("k"), Some("p"),
+        root, Some(PartSpec.Identity("p")))
+      ManifestTable.mergeDv(rows((1L, "q1", 100L)), root, schema, Seq("k"),
+        Some(PartSpec.Identity("p")),
         Nil, Nil, None, None)
     }
     val batch = rows((5L, "q1", 500L), (41L, "q1", 41L), (2L, "q2", 200L))
     val upsertOnly = jobsIn(ManifestTable.mergeDv(batch, roots(0), schema, Seq("k"),
-      Some("p"), Nil, Nil, None, None))
+      Some(PartSpec.Identity("p")), Nil, Nil, None, None))
     val twoLeg = jobsIn(ManifestTable.mergeDv(batch, roots(1), schema, Seq("k"),
-      Some("p"), Nil, Nil, Some(Seq(3L, 7L).toDF("k")), Some(Seq(part("q3")))))
+      Some(PartSpec.Identity("p")), Nil, Nil, Some(Seq(3L, 7L).toDF("k")), Some(Seq(part("q3")))))
     assert(twoLeg <= upsertOnly, s"two-leg $twoLeg jobs, upsert-only $upsertOnly")
     assert(ManifestTable.read(spark, roots(1), schema).select("k").as[Long].collect().toSet ==
       (1L to 41L).toSet -- Set(3L, 7L))
@@ -1563,12 +1653,12 @@ class SourcesSpec extends SparkSuite {
     val keys = Seq("k1", "k2")
     ManifestTable.commit(
       Seq((1L, 1L, "a", 1L), (1L, 2L, "a", 2L), (2L, 1L, "b", 3L))
-        .toDF("k1", "k2", "p", "v"), src, Some("p")) // v1
+        .toDF("k1", "k2", "p", "v"), src, Some(PartSpec.Identity("p"))) // v1
     assert(ManifestTable.replicate(spark, src, dst, schema, keys, Some("p")) == 1)
     // v2: update one copy of the dup k1, insert a new composite key
     ManifestTable.mergeDv(
       Seq((1L, 2L, "a", 22L), (2L, 2L, "b", 4L)).toDF("k1", "k2", "p", "v"),
-      src, schema, keys, Some("p"), Nil, Nil, None, None)
+      src, schema, keys, Some(PartSpec.Identity("p")), Nil, Nil, None, None)
     // v3: delete the OTHER copy of the dup k1
     ManifestTable.deleteWhere(spark, src, schema,
       col("k1") === 1L && col("k2") === 1L)
@@ -1593,7 +1683,8 @@ class SourcesSpec extends SparkSuite {
       val root = java.nio.file.Files.createTempDirectory(s"mandelrace$round")
         .toString + "/t"
       ManifestTable.commit(
-        (0L until 40L).map(i => (i, "p" + (i % 2))).toDF("id", "p"), root, Some("p"))
+        (0L until 40L).map(i => (i, "p" + (i % 2))).toDF("id", "p"), root,
+          Some(PartSpec.Identity("p")))
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       def submit(f: => Long) = pool.submit(
         new java.util.concurrent.Callable[Either[Throwable, Long]] {
@@ -1602,7 +1693,7 @@ class SourcesSpec extends SparkSuite {
       val del = submit(ManifestTable.deleteWhere(spark, root, schema,
         col("id") < 10L))
       val app = submit(ManifestTable.append(
-        (100L until 110L).map(i => (i, "p0")).toDF("id", "p"), root, Some("p")))
+        (100L until 110L).map(i => (i, "p0")).toDF("id", "p"), root, Some(PartSpec.Identity("p"))))
       val (dr, ar) = (del.get(120, java.util.concurrent.TimeUnit.SECONDS),
         app.get(120, java.util.concurrent.TimeUnit.SECONDS))
       pool.shutdown()
@@ -1632,7 +1723,7 @@ class SourcesSpec extends SparkSuite {
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("p", StringType)))
     ManifestTable.commit(
-      (0 until 4).map(i => (i.toLong, s"p$i")).toDF("id", "p"), root, Some("p"))
+      (0 until 4).map(i => (i.toLong, s"p$i")).toDF("id", "p"), root, Some(PartSpec.Identity("p")))
     // racing writers: each rewrites its OWN partition (disjoint — commutes);
     // the claim-marker protocol must prevent any silent nesting/clobber
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
@@ -1640,7 +1731,7 @@ class SourcesSpec extends SparkSuite {
       pool.submit(new java.util.concurrent.Callable[Either[Throwable, Long]] {
         def call(): Either[Throwable, Long] =
           try Right(ManifestTable.commit(
-            Seq((i + 100L, s"p$i")).toDF("id", "p"), root, Some("p")))
+            Seq((i + 100L, s"p$i")).toDF("id", "p"), root, Some(PartSpec.Identity("p"))))
           catch { case e: IllegalStateException => Left(e) }
       })
     }.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
@@ -1726,7 +1817,7 @@ class SourcesSpec extends SparkSuite {
     import graft.sources.ManifestTable
     val root = java.nio.file.Files.createTempDirectory("manevo").toString + "/t"
     ManifestTable.commit(Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "p", "v"),
-      root, Some("p")) // v1: no `score` column yet
+      root, Some(PartSpec.Identity("p"))) // v1: no `score` column yet
     val widened = StructType(Seq(
       StructField("id", LongType), StructField("p", StringType),
       StructField("v", LongType), StructField("score", DoubleType)))
@@ -1734,7 +1825,7 @@ class SourcesSpec extends SparkSuite {
     // old files under the widened schema (score = NULL there)
     ManifestTable.mergeDv(
       Seq((2L, "b", 22L, 0.5), (3L, "a", 30L, 0.9)).toDF("id", "p", "v", "score"),
-      root, widened, Seq("id"), Some("p"), Nil, Nil, None, None)
+      root, widened, Seq("id"), Some(PartSpec.Identity("p")), Nil, Nil, None, None)
     val got = ManifestTable.read(spark, root, widened)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toSet
@@ -1786,7 +1877,8 @@ class SourcesSpec extends SparkSuite {
     val root = java.nio.file.Files.createTempDirectory("manddl").toString + "/t"
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("p", StringType)))
-    ManifestTable.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "p"), root, Some("p"))
+    ManifestTable.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "p"), root,
+      Some(PartSpec.Identity("p")))
     spark.sql("DROP TABLE IF EXISTS graft_ddl_t")
     spark.sql(s"CREATE TABLE graft_ddl_t USING graft OPTIONS (path '$root')")
     try {
@@ -1810,7 +1902,7 @@ class SourcesSpec extends SparkSuite {
       StructField("id", LongType), StructField("p", StringType),
       StructField("v", LongType)))
     ManifestTable.commit(Seq((1L, "a", 1L), (2L, "b", 2L)).toDF("id", "p", "v"),
-      src, Some("p"))
+      src, Some(PartSpec.Identity("p")))
     // the whole reference pipeline as TWO conf-driven endpoints
     spark.conf.set("spark.graft.conn.lakecdc.format", "graft")
     spark.conf.set("spark.graft.conn.lakecdc.option.key", "id")
@@ -1827,7 +1919,7 @@ class SourcesSpec extends SparkSuite {
         sys.error("path set in conf"), s"$baseDir/ckpt")
       q.processAllAvailable()
       ManifestTable.mergeDv(Seq((2L, "b", 22L)).toDF("id", "p", "v"),
-        src, schema, Seq("id"), Some("p"), Nil, Nil, None, None)
+        src, schema, Seq("id"), Some(PartSpec.Identity("p")), Nil, Nil, None, None)
       q.processAllAvailable()
       q.stop()
       assert(ManifestTable.read(spark, dst, schema)
@@ -1849,7 +1941,7 @@ class SourcesSpec extends SparkSuite {
     ManifestTable.commit(
       (0L until 80L).map(i => (i, "p" + (i % 8), i * 2)).toDF("id", "p", "v")
         .repartition(col("p")), // one file per partition dir
-      root, Some("p"), statsCols = Seq("id"))
+      root, Some(PartSpec.Identity("p")), statsCols = Seq("id"))
     // equality on the partition column: ONE dir's files listed, 1/8 kept
     val (k1, t1) = ManifestTable.pruneCounts(spark, root, Nil,
       points = Seq("p" -> "p3"))
@@ -1879,11 +1971,11 @@ class SourcesSpec extends SparkSuite {
       StructField("id", LongType), StructField("p", StringType),
       StructField("v", LongType)))
     ManifestTable.commit((0L until 100L).map(i => (i, "p" + (i % 3), i))
-      .toDF("id", "p", "v"), root, Some("p")) // v1
+      .toDF("id", "p", "v"), root, Some(PartSpec.Identity("p"))) // v1
     assert(ManifestTable.rowCount(spark, root) == 100L)
     // merge appends + masks (count unchanged), delete masks 10 rows
     ManifestTable.mergeDv(Seq((7L, "p1", 700L)).toDF("id", "p", "v"),
-      root, schema, Seq("id"), Some("p"), Nil, Nil, None, None) // v2
+      root, schema, Seq("id"), Some(PartSpec.Identity("p")), Nil, Nil, None, None) // v2
     assert(ManifestTable.rowCount(spark, root) == 100L)
     ManifestTable.deleteWhere(spark, root, schema, col("id") < 10L) // v3
     assert(ManifestTable.rowCount(spark, root) == 90L)
@@ -1892,7 +1984,7 @@ class SourcesSpec extends SparkSuite {
     // a key in BOTH merge legs masks its old position ONCE — an undeduped
     // DV would double-subtract here
     ManifestTable.mergeDv(Seq((20L, "p2", 2000L)).toDF("id", "p", "v"),
-      root, schema, Seq("id"), Some("p"), Nil, Nil,
+      root, schema, Seq("id"), Some(PartSpec.Identity("p")), Nil, Nil,
       Some(Seq((20L, "p2")).toDF("id", "p")), None) // v4
     assert(ManifestTable.rowCount(spark, root) == 90L)
     assert(ManifestTable.rowCount(spark, root)
@@ -1902,7 +1994,7 @@ class SourcesSpec extends SparkSuite {
     assert(ManifestTable.deletedRowCount(spark, root) == 12L)
     // a compact rewrites the survivors; the OLD DV's positions go inert —
     // rowCount must not subtract them against the new files
-    ManifestTable.compact(spark, root, schema, Some("p")) // v5, no #dv
+    ManifestTable.compact(spark, root, schema, Some(PartSpec.Identity("p"))) // v5, no #dv
     assert(ManifestTable.rowCount(spark, root) == 90L)
     // restore to the pre-delete snapshot: pure metadata, rows return
     val bytesBefore = new java.io.File(root).listFiles()
@@ -1926,7 +2018,8 @@ class SourcesSpec extends SparkSuite {
     import graft.sources.ManifestTable
     val root = java.nio.file.Files.createTempDirectory("mancrc").toString + "/t"
     (1 to 3).foreach(i =>
-      ManifestTable.commit(Seq((i.toLong, "a")).toDF("id", "p"), root, Some("p")))
+      ManifestTable.commit(Seq((i.toLong, "a")).toDF("id", "p"), root,
+        Some(PartSpec.Identity("p"))))
     val stray = new java.io.File(root).listFiles()
       .map(_.getName).filter(n => n.endsWith(".crc") && n.contains(".manifest-"))
     assert(stray.isEmpty, s"orphaned crc sidecars: ${stray.mkString(", ")}")
@@ -1960,7 +2053,7 @@ class SourcesSpec extends SparkSuite {
       (3L, 2.0, 1), (4L, Double.NaN, 1),
       (5L, Double.NaN, 2), (6L, Double.NaN, 2))
       .toDF("id", "x", "f").repartition(3, col("f")).drop("f")
-    ManifestTable.commit(df, root, partCol = None, statsCols = Seq("x"))
+    ManifestTable.commit(df, root, spec = None, statsCols = Seq("x"))
     // aggregate pushdown must decline: the footer answer (max=3.0) would
     // differ from the scan answer (NaN)
     assert(ManifestTable.colBounds(spark, root, "x").isEmpty)
@@ -1974,7 +2067,7 @@ class SourcesSpec extends SparkSuite {
     val root2 = java.nio.file.Files.createTempDirectory("mannan2").toString + "/t"
     ManifestTable.commit(
       Seq((1L, null: java.lang.Double), (2L, null: java.lang.Double))
-        .toDF("id", "x"), root2, partCol = None, statsCols = Seq("x"))
+        .toDF("id", "x"), root2, spec = None, statsCols = Seq("x"))
     assert(ManifestTable.colBounds(spark, root2, "x") == Some(None))
     // mixed physical tags across data versions (long x then double x):
     // colBounds declines rather than throwing on .toLong of a double string
@@ -2027,7 +2120,7 @@ class SourcesSpec extends SparkSuite {
     val small = (0L until 50L).map(i => (i + 100000L, "B", "tiny" + i))
     val df = (big ++ small).toDF("k", "p", "payload")
     // land it fragmented first: many small files
-    ManifestTable.commit(df.repartition(40), root, Some("p"))
+    ManifestTable.commit(df.repartition(40), root, Some(PartSpec.Identity("p")))
     val schema = df.schema
     val target = 256L * 1024L
     ManifestTable.compactTargetBytes(spark, root, schema,
@@ -2079,12 +2172,13 @@ class SourcesSpec extends SparkSuite {
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("p", IntegerType), StructField("v", LongType)))
     val base = (0L until 120L).map(i => (i, (i % 12).toInt, 0L))
-    ManifestTable.commit(base.toDF("id", "p", "v"), root, Some("p"))
+    ManifestTable.commit(base.toDF("id", "p", "v"), root, Some(PartSpec.Identity("p")))
     var model = base.map(r => r._1 -> r).toMap
     for (b <- 1 to batches) {
       val batch = (0 until 12).flatMap(p => Seq((p.toLong, p, b.toLong),
         (1000L * b + p, p, b.toLong)))
-      ManifestTable.mergeDv(batch.toDF("id", "p", "v"), root, schema, "id", Some("p"))
+      ManifestTable.mergeDv(batch.toDF("id", "p", "v"), root, schema, Seq("id"),
+        Some(PartSpec.Identity("p")))
       model ++= batch.map(r => r._1 -> r)
     }
     (root, schema, model.values.toSet)
@@ -2135,7 +2229,7 @@ class SourcesSpec extends SparkSuite {
       val rows = values.zipWithIndex.flatMap { case (v, i) =>
         Seq(org.apache.spark.sql.Row(i.toLong, v), org.apache.spark.sql.Row(i + 10L, v)) }
       ManifestTable.commit(spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 2), schema), root, Some("p"))
+        spark.sparkContext.parallelize(rows, 2), schema), root, Some(PartSpec.Identity("p")))
       val df = ManifestTable.read(spark, root, schema)
       assert(df.collect().toSet == rows.toSet, dt)
       for (v <- values.filter(_ != null)) {
@@ -2159,7 +2253,7 @@ class SourcesSpec extends SparkSuite {
           .filter(col("p") === lit(v)).collect().toSet == live.filter(_.get(1) == v), v)
       assert(ManifestTable.rowCount(spark, root) == live.size, dt)
       assert(ManifestTable.deletedRowCount(spark, root) == values.size, dt)
-      assert(ManifestTable.changes(spark, root, schema, "id", v2 - 1, v2)
+      assert(ManifestTable.changes(spark, root, schema, Seq("id"), v2 - 1, v2)
         .select("_change_type", "id").collect().map(r => (r.getString(0), r.getLong(1))).toSet
         == rows.filter(_.getLong(0) >= 10L).map(r => ("delete", r.getLong(0))).toSet, dt)
     }
@@ -2172,7 +2266,7 @@ class SourcesSpec extends SparkSuite {
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("p", IntegerType), StructField("v", LongType)))
     val v1 = ManifestTable.commit((0L until 40L).map(i => (i, (i % 4).toInt, i))
-      .toDF("id", "p", "v"), root, Some("p"))
+      .toDF("id", "p", "v"), root, Some(PartSpec.Identity("p")))
     // the delete lands in one of four partitions: the feed's window misses
     // three, so only the DV comparison can find the one it touched
     val v2 = ManifestTable.deleteWhere(spark, root, schema, col("id") === 5L)
@@ -2182,7 +2276,7 @@ class SourcesSpec extends SparkSuite {
     assert(jobsIn { n = ManifestTable.deletedRowCount(spark, root) } == 0)
     assert(n == 1L)
     var feed: org.apache.spark.sql.DataFrame = null
-    assert(jobsIn { feed = ManifestTable.changes(spark, root, schema, "id", v1, v2) } == 0)
+    assert(jobsIn { feed = ManifestTable.changes(spark, root, schema, Seq("id"), v1, v2) } == 0)
     assert(feed.select("_change_type", "id").as[(String, Long)].collect().toSeq
       == Seq(("delete", 5L)))
   }
@@ -2191,11 +2285,13 @@ class SourcesSpec extends SparkSuite {
     import spark.implicits._
     import graft.sources.ManifestTable
     val root = Files.createTempDirectory("mandvbig").toString + "/t"
-    val v1 = ManifestTable.commit(Seq((1L, 1, 1L)).toDF("id", "p", "v"), root, Some("p"))
+    val v1 = ManifestTable.commit(Seq((1L, 1, 1L)).toDF("id", "p", "v"), root,
+      Some(PartSpec.Identity("p")))
     val f = ManifestTable.readWithMeta(spark, root, StructType(Seq(StructField("id", LongType),
       StructField("p", IntegerType), StructField("v", LongType)))).select("__f").as[String].head()
     val e = intercept[Exception](ManifestTable.commitDelta(spark, root, v1, None,
-      Some(Seq((f, 1L << 31)).toDF("__f", "__pos")), Some("p")))
+      Some(ManifestTable.collectDv(Seq((f, 1L << 31)).toDF("__f", "__pos"))),
+      Some(PartSpec.Identity("p"))))
     assert(e.getMessage.contains("2^31"), e.getMessage)
     assert(ManifestTable.currentVersion(spark, root).contains(v1))
   }
@@ -2207,7 +2303,7 @@ class SourcesSpec extends SparkSuite {
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("p", IntegerType), StructField("v", LongType)))
     val v1 = ManifestTable.commit((0L until 60L).map(i => (i, (i % 3).toInt, i))
-      .toDF("id", "p", "v"), root, Some("p"))
+      .toDF("id", "p", "v"), root, Some(PartSpec.Identity("p")))
     val v2 = ManifestTable.deleteWhere(spark, root, schema, col("id") % 7 === 0L)
     val expect = ManifestTable.read(spark, root, schema).as[(Long, Int, Long)].collect().toSet
     assert(expect.size == 51)
@@ -2219,9 +2315,10 @@ class SourcesSpec extends SparkSuite {
     assert(ManifestTable.read(spark, root, schema).as[(Long, Int, Long)].collect().toSet == expect)
     assert(ManifestTable.rowCount(spark, root) == 51L)
     assert(ManifestTable.deletedRowCount(spark, root) == 9L)
-    assert(ManifestTable.changes(spark, root, schema, "id", v1, v2).count() == 9L)
+    assert(ManifestTable.changes(spark, root, schema, Seq("id"), v1, v2).count() == 9L)
     // the next DV commit carries the legacy positions into its bitmaps
-    ManifestTable.mergeDv(Seq((1L, 1, -1L)).toDF("id", "p", "v"), root, schema, "id", Some("p"))
+    ManifestTable.mergeDv(Seq((1L, 1, -1L)).toDF("id", "p", "v"), root, schema, Seq("id"),
+      Some(PartSpec.Identity("p")))
     assert(ManifestTable.read(spark, root, schema).as[(Long, Int, Long)].collect().toSet
       == expect - ((1L, 1, 1L)) + ((1L, 1, -1L)))
   }
@@ -2234,17 +2331,18 @@ class SourcesSpec extends SparkSuite {
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("p", IntegerType), StructField("v", LongType)))
     ManifestTable.commit((0L until 40L).map(i => (i, (i % 4).toInt, i)).toDF("id", "p", "v"),
-      src, Some("p"))
+      src, Some(PartSpec.Identity("p")))
     ManifestTable.mergeDv(Seq((1L, 1, -1L), (2L, 2, -2L)).toDF("id", "p", "v"),
-      src, schema, "id", Some("p")) // the DV the measured merge builds on
-    assert(ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) == 1)
+      src, schema, Seq("id"), Some(PartSpec.Identity("p"))) // the DV the measured merge builds on
+    assert(ManifestTable.replicate(spark, src, dst, schema, Seq("id"), Some("p")) == 1)
     val merge = jobsIn {
       ManifestTable.mergeDv(Seq((5L, 1, -5L), (41L, 1, 41L)).toDF("id", "p", "v"),
-        src, schema, Seq("id"), Some("p"), Nil, Nil,
+        src, schema, Seq("id"), Some(PartSpec.Identity("p")), Nil, Nil,
         Some(Seq((6L, 2)).toDF("id", "p")), Some(Seq("p=2")))
     }
     var applied = 0
-    val step = jobsIn { applied = ManifestTable.replicate(spark, src, dst, schema, "id", Some("p")) }
+    val step = jobsIn { applied = ManifestTable.replicate(spark, src, dst, schema, Seq("id"),
+      Some("p")) }
     assert(applied == 1)
     assert(ManifestTable.read(spark, dst, schema).as[(Long, Int, Long)].collect().toSet
       == ManifestTable.read(spark, src, schema).as[(Long, Int, Long)].collect().toSet)
@@ -2262,7 +2360,7 @@ class SourcesSpec extends SparkSuite {
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("p", IntegerType), StructField("v", LongType)))
     ManifestTable.commit((0L until 120L).map(i => (i, (i % 12).toInt, i)).toDF("id", "p", "v"),
-      local, Some("p"), statsCols = Seq("v"))
+      local, Some(PartSpec.Identity("p")), statsCols = Seq("v"))
     spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", classOf[ListCountingFs].getName)
     val root = "cntfs://" + local
     ListCountingFs.listed.clear()
@@ -2284,7 +2382,8 @@ class SourcesSpec extends SparkSuite {
     var model = base.map(r => r._1 -> r).toMap
     for (b <- 1 to 2) {
       val batch = Seq((b.toLong, b % 4, b.toLong), (100L + b, 1, b.toLong))
-      ManifestTable.mergeDv(batch.toDF("id", "p", "v"), root, schema, "id", Some("p"))
+      ManifestTable.mergeDv(batch.toDF("id", "p", "v"), root, schema, Seq("id"),
+        Some(PartSpec.Identity("p")))
       model ++= batch.map(r => r._1 -> r)
     }
     val df = ManifestTable.read(spark, root, schema)

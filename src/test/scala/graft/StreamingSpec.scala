@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.sources.PartSpec
 import graft.streaming.Streams
 import graft.streaming.Streams.EventRow
 
@@ -403,7 +404,7 @@ class StreamingSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
     ManifestTable.commit(
       Seq((1L, "a", 1L), (2L, "b", 2L), (3L, "b", 3L)).toDF("id", "p", "v"),
-      src, Some("p")) // v1: the stream's seed snapshot
+      src, Some(PartSpec.Identity("p"))) // v1: the stream's seed snapshot
     val stream = spark.readStream.format("graft")
       .schema(schema).option("key", "id").load(src)
     assert(stream.isStreaming)
@@ -418,9 +419,10 @@ class StreamingSpec extends SparkSuite {
             .drop("_change_type")
           val dels = b.filter(col("_change_type") === "delete").select("id", "p")
           if (!ManifestTable.exists(spark, dst))
-            ManifestTable.commit(ups, dst, Some("p"))
+            ManifestTable.commit(ups, dst, Some(PartSpec.Identity("p")))
           else if (ups.count() + dels.count() > 0)
-            ManifestTable.mergeDv(ups, dst, schema, Seq("id"), Some("p"), Nil, Nil,
+            ManifestTable.mergeDv(ups, dst, schema, Seq("id"), Some(PartSpec.Identity("p")), Nil,
+              Nil,
               Some(dels), None)
         } finally org.apache.spark.sql.graft.Checkpoints.release(b)
         ()
@@ -428,7 +430,7 @@ class StreamingSpec extends SparkSuite {
     q.processAllAvailable() // batch 0: seed (3 inserts)
     // v2: merge-on-read upsert; v3: DV delete — committed AFTER stream start
     ManifestTable.mergeDv(Seq((2L, "b", 22L), (4L, "a", 4L)).toDF("id", "p", "v"),
-      src, schema, Seq("id"), Some("p"), Nil, Nil, None, None)
+      src, schema, Seq("id"), Some(PartSpec.Identity("p")), Nil, Nil, None, None)
     ManifestTable.deleteWhere(spark, src, schema, col("id") === 1L)
     q.processAllAvailable()
     q.stop()
@@ -443,7 +445,7 @@ class StreamingSpec extends SparkSuite {
     // batch; nothing before the checkpointed offset replays
     batchSizes.clear()
     ManifestTable.mergeDv(Seq((3L, "b", 33L)).toDF("id", "p", "v"),
-      src, schema, Seq("id"), Some("p"), Nil, Nil, None, None)
+      src, schema, Seq("id"), Some(PartSpec.Identity("p")), Nil, Nil, None, None)
     val q2 = spark.readStream.format("graft")
       .schema(schema).option("key", "id").load(src)
       .writeStream.foreachBatch {
@@ -455,7 +457,8 @@ class StreamingSpec extends SparkSuite {
               .drop("_change_type")
             val dels = b.filter(col("_change_type") === "delete").select("id", "p")
             if (ups.count() + dels.count() > 0)
-              ManifestTable.mergeDv(ups, dst, schema, Seq("id"), Some("p"), Nil, Nil,
+              ManifestTable.mergeDv(ups, dst, schema, Seq("id"), Some(PartSpec.Identity("p")),
+                Nil, Nil,
                 Some(dels), None)
           } finally org.apache.spark.sql.graft.Checkpoints.release(b)
           ()
@@ -476,12 +479,13 @@ class StreamingSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
-    ManifestTable.commit(Seq((1L, "a", 1L)).toDF("id", "p", "v"), src, Some("p")) // v1
+    ManifestTable.commit(Seq((1L, "a", 1L)).toDF("id", "p", "v"), src,
+      Some(PartSpec.Identity("p"))) // v1
     // v2..v5: four updates of the SAME key — net diff inside one chunk
     // collapses intermediates
     for (i <- 2L to 5L)
       ManifestTable.mergeDv(Seq((1L, "a", i * 10)).toDF("id", "p", "v"),
-        src, schema, Seq("id"), Some("p"), Nil, Nil, None, None)
+        src, schema, Seq("id"), Some(PartSpec.Identity("p")), Nil, Nil, None, None)
     val batches = scala.collection.mutable.ArrayBuffer.empty[Set[(String, Long)]]
     val q = spark.readStream.format("graft").schema(schema)
       .option("key", "id").option("maxVersionsPerBatch", "2").load(src)
@@ -604,7 +608,7 @@ class StreamingSpec extends SparkSuite {
     // (it usually reads the merge version before the vacuum runs), and a
     // restarted one re-reads its last committed window, one version
     // further back than a reader one batch behind
-    def replicate(): Unit = ManifestTable.replicate(spark, root, rep, schema, "id", Some("p"))
+    def replicate(): Unit = ManifestTable.replicate(spark, root, rep, schema, Seq("id"), Some("p"))
     try {
       src.addData((1L, "a", 0L), (2L, "b", 0L))
       q.processAllAvailable()
@@ -634,7 +638,7 @@ class StreamingSpec extends SparkSuite {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
     ManifestTable.commit(
       Seq((1L, "a", 1L), (2L, "b", 2L), (3L, "b", 3L)).toDF("id", "p", "v"),
-      src, Some("p"))
+      src, Some(PartSpec.Identity("p")))
     val q = spark.readStream.format("graft").schema(schema)
       .option("key", "id").load(src)
       .writeStream.format("graft")
@@ -642,7 +646,7 @@ class StreamingSpec extends SparkSuite {
       .option("checkpointLocation", s"$baseDir/ckpt").start(dst)
     q.processAllAvailable() // seed replicated
     ManifestTable.mergeDv(Seq((2L, "b", 22L), (4L, "a", 4L)).toDF("id", "p", "v"),
-      src, schema, Seq("id"), Some("p"), Nil, Nil, None, None)
+      src, schema, Seq("id"), Some(PartSpec.Identity("p")), Nil, Nil, None, None)
     ManifestTable.deleteWhere(spark, src, schema, col("id") === 3L)
     q.processAllAvailable()
     q.stop()
