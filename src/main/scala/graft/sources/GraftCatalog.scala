@@ -1922,7 +1922,8 @@ private[sources] object GraftPartFunctions {
   * read by Spark's own V2 parquet reader factory
   * ([[org.apache.spark.sql.graft.SpjBridge]]) over exactly the file set
   * the ordinary scan would read (same dir pruning, same zone/Bloom file
-  * skipping), so results are identical to the V1 path — only the physical
+  * skipping — the one [[ManifestTable.planPrune]] plan both scans share),
+  * so results are identical to the V1 path — only the physical
   * partitioning differs. Eligibility is checked per scan; anything
   * irregular (DV present, evolved layout, other transforms, metadata
   * columns, time travel) falls back to [[GraftV1ScanImpl]].
@@ -1930,6 +1931,7 @@ private[sources] object GraftPartFunctions {
 private[sources] class GraftSpjScan(session: SparkSession, root: String,
                                     tableSchema: StructType,
                                     required: StructType, filters: Array[Filter],
+                                    plan: ManifestTable.PrunePlan,
                                     leaves: Seq[PartSpec],
                                     groups: Seq[(Seq[Any], Seq[(String, Long)])])
     extends Scan with org.apache.spark.sql.connector.read.Batch
@@ -1970,12 +1972,10 @@ private[sources] class GraftSpjScan(session: SparkSession, root: String,
     org.apache.spark.sql.graft.SpjBridge.parquetReaderFactory(
       session, tableSchema, required, filters)
 
-  // byte/row/NDV statistics are layout-independent — delegate to the V1
-  // scan's estimator (same pruning hints, same sidecar sums)
-  private lazy val statsDelegate =
-    new GraftV1ScanImpl(root, tableSchema, required, filters, None)
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-    statsDelegate.estimateStatistics()
+  // byte/row/NDV statistics are layout-independent: the V1 scan's, of the same plan
+  private lazy val stats =
+    GraftV1ScanImpl.statistics(session, root, tableSchema, required, Some(plan))
+  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = stats
 
   override def description(): String =
     s"GraftSpjScan(root=$root, spec=${leaves.map(_.render).mkString(",")}, " +
@@ -1985,17 +1985,18 @@ private[sources] class GraftSpjScan(session: SparkSession, root: String,
 private[sources] object GraftSpjScan {
   /** The scan when eligible — gated on Spark's own SPJ switch
     * (`spark.sql.sources.v2.bucketing.enabled`) so default sessions keep
-    * the V1 plan shape byte-for-byte.
+    * the V1 plan shape byte-for-byte. `planAt` is the fallback V1 scan's
+    * memoized plan, so either scan lists the snapshot once.
     */
   def forTable(spark: SparkSession, root: String, tableSchema: StructType,
-               required: StructType, filters: Array[Filter]): Option[Scan] = {
+               required: StructType, filters: Array[Filter],
+               planAt: Long => ManifestTable.PrunePlan): Option[Scan] = {
     if (!spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean)
       return None
     if (required.isEmpty ||
         required.fieldNames.exists(n => n == "__f" || n == "__pos")) return None
-    val v = ManifestTable.currentVersion(spark, root).getOrElse(return None)
-    val (ranges, points, pointsAny) = GraftRelation.hints(filters)
-    ManifestTable.spjLayout(spark, root, v, ranges, points, pointsAny).map {
+    val plan = planAt(ManifestTable.currentVersion(spark, root).getOrElse(return None))
+    ManifestTable.spjLayout(spark, root, plan).map {
       case (leaves, groups) =>
         // the reported clustering transforms resolve against the scan
         // OUTPUT: a pruned-away source column (joining on k without
@@ -2006,7 +2007,7 @@ private[sources] object GraftSpjScan {
           leaves.map(_.source).distinct
             .filterNot(required.fieldNames.contains)
             .flatMap(c => tableSchema.fields.find(_.name == c)))
-        new GraftSpjScan(spark, root, tableSchema, withSources, filters,
+        new GraftSpjScan(spark, root, tableSchema, withSources, filters, plan,
           leaves, groups)
     }
   }
@@ -2072,20 +2073,6 @@ private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
     r
   }
 
-  /** Internal value of a zone bound under the table column's type —
-    * 'L' zones carry Long strings, 'D' zones Double strings; the
-    * column's declared type picks the Catalyst representation.
-    */
-  private def boundValue(dt: DataType, s: String): Option[Any] = dt match {
-    case LongType | TimestampType | TimestampNTZType => Some(s.toLong)
-    case IntegerType | DateType => Some(s.toLong.toInt)
-    case ShortType => Some(s.toLong.toShort)
-    case ByteType => Some(s.toLong.toByte)
-    case DoubleType => Some(s.toDouble)
-    case FloatType => Some(s.toDouble.toFloat)
-    case _ => None // strings (truncatable stats), decimals (unscaled zones)
-  }
-
   private def doPlan(agg: Aggregation): Option[(StructType, Array[Any])] = {
     if (asOf.isDefined || filters.nonEmpty || agg.groupByExpressions().nonEmpty)
       return None
@@ -2102,17 +2089,18 @@ private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
       case _ => None
     }
     def minMax(column: VExpr, wantMax: Boolean): Boolean = fieldOf(column) match {
-      case Some(f) if boundValue(f.dataType, "0").isDefined =>
+      case Some(f) if "LD".exists(GraftV1ScanImpl.boundValue(f.dataType, _, "0").isDefined) =>
         boundsOf.getOrElseUpdate(f.name,
           ManifestTable.colBounds(spark, root, f.name)) match {
           case Some(b) =>
-            val v = b.flatMap { case (_, mn, mx) =>
-              try boundValue(f.dataType, if (wantMax) mx else mn)
-              catch { case _: NumberFormatException => return false }
-            }
+            val v = b.map { case (tag, mn, mx) =>
+              GraftV1ScanImpl.boundValue(f.dataType, tag, if (wantMax) mx else mn) }
+            // a zone tag that does not fit the column's type declines —
+            // only an all-NULL column (b = None) answers NULL
+            if (v.exists(_.isEmpty)) return false
             fields += StructField(
               (if (wantMax) "max_" else "min_") + f.name, f.dataType)
-            values += v.orNull
+            values += v.flatten.orNull
             true
           case None => false
         }
@@ -2138,12 +2126,12 @@ private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
         s"GraftMetadataAggregate(root=$root, ${aggSchema.fieldNames.mkString(",")})"
     }
     case None =>
-      // time travel keeps the V1 path (spjLayout pins the CURRENT version;
-      // historical snapshots read unpruned there by design)
+      // SPJ groups the CURRENT version only: a pinned read stays on the V1 scan
+      val v1 = new GraftV1ScanImpl(root, tableSchema, required, filters, asOf)
       val spj = if (asOf.isEmpty)
-        GraftSpjScan.forTable(SparkSession.active, root, tableSchema, required, filters)
+        GraftSpjScan.forTable(SparkSession.active, root, tableSchema, required, filters, v1.planAt)
       else None
-      spj.getOrElse(new GraftV1ScanImpl(root, tableSchema, required, filters, asOf))
+      spj.getOrElse(v1)
   }
 }
 
@@ -2154,13 +2142,49 @@ private[sources] class GraftV1ScanImpl(root: String, tableSchema: StructType,
 
   override def readSchema(): StructType = required
 
-  /** Zone-bound string → the CATALYST value `transformV2Stats` stores into
-    * `ColumnStat.min/max` (internal representation: Long for timestamps,
-    * Int for dates). Types outside the numeric/time family report no
-    * bounds — string zone bounds may be truncated (pruning-safe, but not
-    * an exact extreme).
+  override def description(): String =
+    s"GraftScan(root=$root, asOf=$asOf, columns=${required.fieldNames.mkString(",")})"
+
+  private var planned: Option[ManifestTable.PrunePlan] = None
+
+  /** ONE pruned plan per scan and version, pruned by the pushed filters
+    * whatever version the scan pins: the statistics estimate and the read
+    * share its listing and sidecar loads.
     */
-  private def boundStatValue(dt: DataType, tag: Char, s: String): Option[Any] =
+  private[sources] def planAt(v: Long): ManifestTable.PrunePlan = synchronized {
+    planned.filter(_.v == v).getOrElse {
+      val (ranges, points, pointsAny) = GraftRelation.hints(filters)
+      val p = ManifestTable.planPrune(SparkSession.active, root, v, ranges, points, pointsAny)
+      planned = Some(p)
+      p
+    }
+  }
+
+  private lazy val stats = {
+    val spark = SparkSession.active
+    GraftV1ScanImpl.statistics(spark, root, tableSchema, required,
+      asOf.orElse(ManifestTable.currentVersion(spark, root)).map(planAt))
+  }
+
+  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
+    stats
+
+  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
+    new GraftV1TableScan(context, root, tableSchema, required, asOf, planAt)
+      .asInstanceOf[T]
+}
+
+private[sources] object GraftV1ScanImpl {
+
+  /** Zone-bound string → the CATALYST value of a `tag`-typed zone ('L'
+    * Long strings, 'D' Double strings) under column type `dt` — the
+    * internal representation `transformV2Stats` and aggregate pushdown
+    * store (Long for timestamps, Int for dates). None when the tag does
+    * not fit the type, and for types outside the numeric/time family:
+    * string zone bounds may be truncated (pruning-safe, but not an exact
+    * extreme), decimal zones are unscaled.
+    */
+  def boundValue(dt: DataType, tag: Char, s: String): Option[Any] =
     (tag, dt) match {
       case ('L', LongType | TimestampType | TimestampNTZType) => Some(s.toLong)
       case ('L', IntegerType | DateType) => Some(s.toLong.toInt)
@@ -2171,47 +2195,27 @@ private[sources] class GraftV1ScanImpl(root: String, tableSchema: StructType,
       case _ => None
     }
 
-  override def description(): String =
-    s"GraftScan(root=$root, asOf=$asOf, columns=${required.fieldNames.mkString(",")})"
-
-  private var planned: Option[ManifestTable.PrunePlan] = None
-
-  /** ONE pruned plan per scan and version: the statistics estimate and the
-    * read of the same version share its listing and sidecar loads.
+  /** POST-PRUNING size AND row count of `plan` (None: a never-committed
+    * table, empty) from manifest metadata (file lengths + the `_stats`
+    * sidecars' per-file footer row counts — no data I/O), so Catalyst's
+    * join planning sees what the scan will actually read: a point-pruned
+    * slice of a huge table auto-broadcasts, where the DSv2 default
+    * (defaultSizeInBytes = Long.Max for unknown) forces sort-merge on
+    * everything. `fileCompressionFactor` scales like Spark's own file
+    * relations. numRows reports ONLY when every surviving file carries a
+    * harvested count (a partial or guessed row estimate would mislead CBO
+    * where missing bytes merely disable a broadcast —
+    * [[ManifestTable.estimatePruned]]'s all-or-nothing contract) and NEVER
+    * when a deletion vector is present (the masked rows would inflate an
+    * exact-looking count into CBO's cardinality estimation; bytes alone
+    * keep their superset contract). Both catalog scans report through here.
     */
-  private def planAt(v: Long): ManifestTable.PrunePlan = synchronized {
-    planned.filter(_.v == v).getOrElse {
-      val (ranges, points, pointsAny) =
-        if (asOf.isDefined) (Nil, Nil, Nil) // historical reads skip nothing
-        else GraftRelation.hints(filters)
-      val p = ManifestTable.planPrune(SparkSession.active, root, v, ranges, points, pointsAny)
-      planned = Some(p)
-      p
-    }
-  }
-
-  /** POST-PRUNING size AND row count from manifest metadata (file lengths
-    * + the `_stats` sidecars' per-file footer row counts — no data I/O),
-    * so Catalyst's join planning sees what the scan will actually read: a
-    * point-pruned slice of a huge table auto-broadcasts, where the DSv2
-    * default (defaultSizeInBytes = Long.Max for unknown) forces sort-merge
-    * on everything. Memoized per scan instance; `fileCompressionFactor`
-    * scales like Spark's own file relations. numRows reports ONLY when
-    * every surviving file carries a harvested count (a partial or guessed
-    * row estimate would mislead CBO where missing bytes merely disable a
-    * broadcast — [[ManifestTable.estimatePruned]]'s all-or-nothing
-    * contract) and NEVER when a deletion vector is present (the masked
-    * rows would inflate an exact-looking count into CBO's cardinality
-    * estimation; bytes alone keep their superset contract).
-    */
-  private lazy val stats: org.apache.spark.sql.connector.read.Statistics = {
-    val spark = SparkSession.active
+  def statistics(spark: SparkSession, root: String, tableSchema: StructType,
+                 required: StructType, plan: Option[ManifestTable.PrunePlan])
+      : org.apache.spark.sql.connector.read.Statistics = {
     val factor = spark.conf.get("spark.sql.sources.fileCompressionFactor", "1.0").toDouble
-    val (bytes: Long, rows: Option[Long], ndv: Map[String, Long]) =
-      ManifestTable.currentVersion(spark, root) match {
-        case None => (0L, Some(0L), Map.empty[String, Long])
-        case Some(cur) => ManifestTable.estimatePruned(spark, root, planAt(asOf.getOrElse(cur)))
-      }
+    val (bytes: Long, rows: Option[Long], ndv: Map[String, Long]) = plan.fold(
+      (0L, Some(0L): Option[Long], Map.empty[String, Long]))(ManifestTable.estimatePruned(spark, root, _))
     val sized = math.max(1L, (bytes * factor).toLong)
     // per-column NDV from the bloom columns' merged KMV sketches (exactly
     // the kept files — the pruned-slice distinct count CBO's join and
@@ -2235,8 +2239,8 @@ private[sources] class GraftV1ScanImpl(root: String, tableSchema: StructType,
             f <- tableSchema.fields.find(_.name == c)
             bs <- ManifestTable.colBounds(spark, root, c)
             (tag, mn, mx) <- bs
-            lo <- boundStatValue(f.dataType, tag, mn)
-            hi <- boundStatValue(f.dataType, tag, mx)
+            lo <- boundValue(f.dataType, tag, mn)
+            hi <- boundValue(f.dataType, tag, mx)
           } yield (lo, hi)
           m.put(org.apache.spark.sql.connector.expressions.Expressions.column(c),
             new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
@@ -2267,13 +2271,6 @@ private[sources] class GraftV1ScanImpl(root: String, tableSchema: StructType,
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = colStats
     }
   }
-
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-    stats
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new GraftV1TableScan(context, root, tableSchema, required, asOf, planAt)
-      .asInstanceOf[T]
 }
 
 private[sources] class GraftV1TableScan(ctx: SQLContext, root: String,
@@ -2286,16 +2283,17 @@ private[sources] class GraftV1TableScan(ctx: SQLContext, root: String,
   override def schema: StructType = required
   override def needConversion: Boolean = false
 
+  /** The plan the statistics used, scanned — with the `__f`/`__pos`
+    * rowId columns when the row-level DML scan asks for them.
+    */
   override def buildScan(): RDD[Row] = {
     val ss = ctx.sparkSession
     val wantsMeta = required.fieldNames.exists(n => n == "__f" || n == "__pos")
-    val cur = ManifestTable.currentVersion(ss, root)
-    val frame =
+    val frame = asOf.orElse(ManifestTable.currentVersion(ss, root)) match {
       // created-but-never-committed table: an empty relation, not an error
-      if (asOf.isEmpty && cur.isEmpty) ss.createDataFrame(ss.sparkContext.emptyRDD[Row], required)
-      else if (wantsMeta) ManifestTable.readWithMeta(ss, root, tableSchema, asOf)
-      // data-only scan: the plan the statistics used
-      else ManifestTable.readPruned(ss, root, tableSchema, planAt(asOf.getOrElse(cur.get)))
+      case None => ss.createDataFrame(ss.sparkContext.emptyRDD[Row], required)
+      case Some(v) => ManifestTable.scanFiles(ss, root, tableSchema, planAt(v), wantsMeta)
+    }
     frame.select(required.fieldNames.map(col).toIndexedSeq: _*)
       .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }

@@ -323,22 +323,15 @@ final case class GraftRelation(sqlContext: SQLContext, root: String,
   // buildScan hands back InternalRow-backed RDDs from the delegated plan
   override def needConversion: Boolean = false
 
-  private def hints(filters: Array[Filter])
-      : (Seq[ManifestTable.ColRange], Seq[(String, Any)], Seq[(String, Seq[Any])]) =
-    GraftRelation.hints(filters)
-
+  /** The pinned (or current) snapshot's plan, pruned by the filters' hints. */
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
     import org.apache.spark.sql.functions.col
-    val base = asOf match {
-      // historical reads skip no files (their sidecars may be vacuumed);
-      // the current snapshot prunes via the extracted hints
-      case Some(v) => ManifestTable.read(spark, root, schema, Some(v))
-      case None =>
-        val (ranges, points, pointsAny) = hints(filters)
-        ManifestTable.readPruned(spark, root, schema, ranges, points, pointsAny)
-    }
-    val pruned = base.select(requiredColumns.map(col).toIndexedSeq: _*)
-    pruned.queryExecution.toRdd.asInstanceOf[RDD[Row]]
+    val (ranges, points, pointsAny) = GraftRelation.hints(filters)
+    val plan = ManifestTable.planPrune(spark, root, ManifestTable.versionOf(spark, root, asOf),
+      ranges, points, pointsAny)
+    ManifestTable.scanFiles(spark, root, schema, plan, withMeta = false)
+      .select(requiredColumns.map(col).toIndexedSeq: _*)
+      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
 }
 
@@ -346,7 +339,7 @@ object GraftRelation {
   /** V1 `Filter` → (zone ranges, bloom points, IN-list any-of probes).
     * Unrecognized shapes yield no hint — an unpruned (correct, superset)
     * scan. Shared by the relation's own pruned scan and the catalog
-    * scan's statistics estimate ([[GraftV1ScanImpl]]).
+    * scans' plans ([[GraftV1ScanImpl]], [[GraftSpjScan]]).
     */
   def hints(filters: Array[Filter])
       : (Seq[ManifestTable.ColRange], Seq[(String, Any)], Seq[(String, Seq[Any])]) = {

@@ -815,36 +815,30 @@ object ManifestTable {
     * bounds how far back this reaches). `schema` pins column types across
     * versions (include the partition column — Spark resolves it from the
     * hive-style dir names); columns absent from older physical files read
-    * as NULL, which is exactly additive schema evolution. The live dirs of
-    * every data version share ONE scan relation per partition layout.
+    * as NULL, which is exactly additive schema evolution. The unhinted
+    * [[planPrune]] of the version, scanned: one file-source relation per
+    * partition layout. A version no manifest on disk holds (vacuumed or
+    * never committed) fails with an `IllegalStateException`.
     */
   def read(spark: SparkSession, root: String, schema: StructType,
-           asOfVersion: Option[Long] = None): DataFrame = {
-    val v = asOfVersion match {
-      case Some(req) =>
-        val (fs, p) = fsOf(spark, root)
-        if (!fs.exists(new Path(p, ManifestPrefix + fmt(req))))
-          throw new IllegalStateException(
-            s"manifest table $root has no version $req on disk (vacuumed or never committed)")
-        req
-      case None => currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"manifest table $root has no committed version"))
-    }
-    readSnapshot(spark, root, schema, v, withMeta = false)
-  }
+           asOfVersion: Option[Long] = None): DataFrame =
+    scanFiles(spark, root, schema, planPrune(spark, root, versionOf(spark, root, asOfVersion)),
+      withMeta = false)
 
   /** [[read]] with the `__f`/`__pos` file-identity columns kept (scheme-
     * free path + parquet row index — the coordinates the deletion-vector
-    * machinery keys on). The row-level SQL DML scan ([[GraftCatalog]])
-    * reads through this so each target row carries the rowId a positional
-    * delete needs; everything else should use [[read]].
+    * machinery keys on); everything else should use [[read]].
     */
   def readWithMeta(spark: SparkSession, root: String, schema: StructType,
-                   asOfVersion: Option[Long] = None): DataFrame = {
-    val v = asOfVersion.orElse(currentVersion(spark, root)).getOrElse(
+                   asOfVersion: Option[Long] = None): DataFrame =
+    scanFiles(spark, root, schema, planPrune(spark, root, versionOf(spark, root, asOfVersion)),
+      withMeta = true)
+
+  /** `asOf`, else the head version of the session's ref. */
+  private[graft] def versionOf(spark: SparkSession, root: String,
+                               asOf: Option[Long] = None): Long =
+    asOf.orElse(currentVersion(spark, root)).getOrElse(
       throw new IllegalStateException(s"manifest table $root has no committed version"))
-    readSnapshot(spark, root, schema, v, withMeta = true)
-  }
 
   /** Scheme-free path: `file:///a/b` and `file:/a/b` both normalize to
     * `/a/b`, so a deletion vector's stored paths compare stably against
@@ -1024,49 +1018,23 @@ object ManifestTable {
       .escapePathName(String.valueOf(x))
   }
 
-  /** The snapshot of manifest `v`, with the rows the version's deletion
-    * vector (if any) masks filtered out. `withMeta = true` keeps the
-    * `__f`/`__pos` file identity columns (scheme-free path + parquet row
-    * index) the DV machinery keys on; otherwise the result carries exactly
-    * `schema`.
-    * `restrictTo` limits assembly to the named partition dirs (the
-    * [[changes]] pruning path).
+  /** The scan of `plan`'s files under `schema0` with the rows its version's
+    * deletion vector (if any) masks filtered out: one file-source relation
+    * per partition layout ([[ManifestScan.relations]]), however many data
+    * versions hold the files. `withMeta = true` keeps the `__f`/`__pos`
+    * file identity columns (scheme-free path + parquet row index) the DV
+    * machinery keys on; otherwise the result carries exactly `schema0`.
+    * Every snapshot read is this scan — the one place the DV filter and
+    * the field ids apply.
     */
-  private def readSnapshot(spark: SparkSession, root: String, schema0: StructType,
-                           v: Long, withMeta: Boolean,
-                           restrictTo: Option[Set[String]] = None): DataFrame = {
-    val (fs, rootP) = fsOf(spark, root)
-    val entries = entriesOf(fs, rootP, v)
-      .filter { case (p, _) => restrictTo.forall(_.contains(p)) }
-    scanFiles(spark, root, schema0, dvOf(fs, rootP, v), liveFiles(fs, rootP, entries), withMeta)
-  }
-
-  /** `(qualified data version dir, file)` for every data file under the
-    * given manifest entries — each live dir listed once.
-    */
-  private def liveFiles(fs: FileSystem, rootP: Path,
-                        entries: Seq[(String, Long)]): Seq[(Path, FileStatus)] =
-    entries.distinct.flatMap { case (name, dataV) =>
-      val vdir = fs.makeQualified(new Path(rootP, "v" + fmt(dataV)))
-      listDataStatus(fs, if (name.isEmpty) vdir else new Path(vdir, name)).map(vdir -> _)
-    }
-
-  /** The scan of `files` under `schema0` with the rows deletion vector
-    * `dv` (if any) masks filtered out: one file-source relation per
-    * partition layout ([[ManifestScan.relations]]), however many data
-    * versions hold the files. `withMeta = true` keeps the `__f`/`__pos` file identity columns
-    * (scheme-free path + parquet row index) the DV machinery keys on;
-    * otherwise the result carries exactly `schema0`.
-    */
-  private def scanFiles(spark: SparkSession, root: String, schema0: StructType,
-                        dv: Option[Long], files: Seq[(Path, FileStatus)],
-                        withMeta: Boolean): DataFrame = {
+  private[graft] def scanFiles(spark: SparkSession, root: String, schema0: StructType,
+                               plan: PrunePlan, withMeta: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     // resolve columns by FIELD ID when the table declares ids ([[FieldIds]])
     // — files written under since-renamed names surface under the current
     // name with values intact; id-less tables read by name as ever
     val schema = FieldIds.attach(schema0, FieldIds.of(spark, root))
-    val needMeta = withMeta || dv.isDefined
+    val needMeta = withMeta || plan.dv.isDefined
     val cols = schema.fieldNames.toSeq.map(col)
     val meta = Seq(normPath(col("_metadata.file_path")).as("__f"),
       col("_metadata.row_index").as("__pos"))
@@ -1075,7 +1043,7 @@ object ManifestTable {
       :+ org.apache.spark.sql.types.StructField("__pos", org.apache.spark.sql.types.LongType))
     // re-select each relation to its contract BEFORE the union: file
     // sources put partition columns LAST whatever the schema order
-    val rels = ManifestScan.relations(spark, schema, files)
+    val rels = ManifestScan.relations(spark, schema, plan.files)
       .map(_.select(cols ++ (if (needMeta) meta else Nil): _*))
     // no files (e.g. an all-invalid first batch) is an empty table
     val assembled =
@@ -1083,7 +1051,7 @@ object ManifestTable {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], if (needMeta) metaSchema else schema)
       else rels.reduce(_ unionByName _)
     // the DV rides a broadcast variable (no job) into a position filter
-    val masked = dv.map(dvBitmaps(spark, root, _)).filter(_.nonEmpty).fold(assembled) { m =>
+    val masked = plan.dv.map(dvBitmaps(spark, root, _)).filter(_.nonEmpty).fold(assembled) { m =>
       val bc = spark.sparkContext.broadcast(m)
       val live = org.apache.spark.sql.functions.udf((f: String, pos: Long) =>
         !bc.value.get(f).exists(b => pos <= Int.MaxValue && b.contains(pos.toInt)))
@@ -1110,18 +1078,20 @@ object ManifestTable {
   private def unhex(h: String): String =
     new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray, "UTF-8")
 
-  /** Relative paths of every data file under a version dir (sidecar/_temp
-    * names skipped) — the authoritative file universe for [[planPrune]].
-    * Sidecar key sets are NOT a universe: a file whose bloom-indexed column
-    * is entirely NULL writes no `_bloom` entry (harvestBlooms filters
-    * isNotNull), so a version committed with bloomCols but no statsCols
-    * would silently lose that file from every pruned scan (ADVICE r12).
+  /** Relative paths of every data file under a just-written version dir
+    * (sidecar/_temp names skipped) — the file universe of the commit-side
+    * footer harvests.
     */
   private def listDataFiles(fs: FileSystem, vdir: Path): Seq[String] =
     listDataStatus(fs, vdir).map(relTo(fs, vdir))
 
   /** Every data file under `dir`, recursively — the listing behind
-    * [[listDataFiles]] and the snapshot scan.
+    * [[listDataFiles]] and [[planPrune]], the one enumeration of a
+    * snapshot's files. Sidecar key sets are NOT a universe: a file whose
+    * bloom-indexed column is entirely NULL writes no `_bloom` entry
+    * (harvestBlooms filters isNotNull), so a version committed with
+    * bloomCols but no statsCols would silently lose that file from every
+    * pruned scan (ADVICE r12).
     */
   private def listDataStatus(fs: FileSystem, dir: Path): Seq[FileStatus] =
     fs.listStatus(dir).toSeq.flatMap { st =>
@@ -1497,11 +1467,8 @@ object ManifestTable {
     */
   def pruneCounts(spark: SparkSession, root: String, ranges: Seq[ColRange],
                   points: Seq[(String, Any)] = Nil,
-                  pointsAny: Seq[(String, Seq[Any])] = Nil): (Int, Int) = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no committed version"))
-    planPrune(spark, root, v, ranges, points, pointsAny).counts
-  }
+                  pointsAny: Seq[(String, Seq[Any])] = Nil): (Int, Int) =
+    planPrune(spark, root, versionOf(spark, root), ranges, points, pointsAny).counts
 
   /** Does the (possibly NESTED — composite specs write
     * `ts_day=…/user_id_bucket=…`) hive-style dir path survive the
@@ -1657,16 +1624,16 @@ object ManifestTable {
     estimatePruned(spark, root, planPrune(spark, root, v, ranges, points, pointsAny))
 
   /** [[estimatePruned]] of an already planned prune — one plan serves a
-    * catalog scan's statistics and its read ([[readPruned]]).
+    * catalog scan's statistics and its read ([[scanFiles]]).
     */
   private[graft] def estimatePruned(spark: SparkSession, root: String, plan: PrunePlan)
       : (Long, Option[Long], Map[String, Long]) = {
     val (fs, rootP) = fsOf(spark, root)
     var bytes = 0L
     var rows = 0L
-    var haveRows = dvOf(fs, rootP, plan.v).isEmpty
+    var haveRows = plan.dv.isEmpty
     val perFile = Seq.newBuilder[Map[String, Array[Long]]]
-    plan.kept.foreach { case (dv, kept) =>
+    plan.kept.foreach { case (dv, _, kept) =>
       bytes += kept.map(_._2.getLen).sum
       if (kept.nonEmpty) {
         if (haveRows) loadStats(fs, rootP, dv) match {
@@ -1687,11 +1654,11 @@ object ManifestTable {
   }
 
   /** Storage-partitioned-join layout probe (r20): `Some((leaves, groups))`
-    * when snapshot `v` of a declared bucket-bearing table can be served as
-    * one key-grouped file set per partition tuple — each `groups` entry is
-    * (typed leaf values, live data files (qualified path, length)) after
-    * the same hint pruning the ordinary scan applies (dir pruning +
-    * zone/Bloom file skipping via [[planPrune]]). Eligible specs: a single
+    * when `plan`'s snapshot of a declared bucket-bearing table can be
+    * served as one key-grouped file set per partition tuple — each `groups`
+    * entry is (typed leaf values, the plan's kept files (qualified path,
+    * length)), so the grouping reads exactly the files the ordinary scan
+    * of the same plan would. Eligible specs: a single
     * `bucket(n, col)` leaf, or a composite whose leaves are all
     * bucket/days/hours/months/years WITH at least one bucket (the
     * join-key dimension; `days(ts), bucket(n, k)` — the canonical
@@ -1708,12 +1675,10 @@ object ManifestTable {
     * is present (the raw per-bucket file read has no position-mask seam —
     * resurrecting deleted rows is never an option).
     */
-  def spjLayout(spark: SparkSession, root: String, v: Long,
-                ranges: Seq[ColRange], points: Seq[(String, Any)],
-                pointsAny: Seq[(String, Seq[Any])])
+  private[graft] def spjLayout(spark: SparkSession, root: String, plan: PrunePlan)
       : Option[(Seq[PartSpec], Seq[(Seq[Any], Seq[(String, Long)])])] = {
     val (fs, rootP) = fsOf(spark, root)
-    if (dvOf(fs, rootP, v).isDefined) return None
+    if (plan.dv.isDefined) return None
     val leaves: Seq[PartSpec] = GraftDdl.load(spark, root).flatMap(d =>
       for { sch <- d.schema; rd <- d.partCol } yield PartSpec.parse(rd, sch))
       .map(_.leaves).getOrElse(return None)
@@ -1746,7 +1711,7 @@ object ManifestTable {
     }
     // every live entry must conform to the CURRENT layout — a "" entry or
     // a foreign dir is pre-evolution data outside the clustering
-    if (!entriesOf(fs, rootP, v).forall(e => dirValues(e._1).isDefined))
+    if (!entriesOf(fs, rootP, plan.v).forall(e => dirValues(e._1).isDefined))
       return None
     val groups = scala.collection.mutable.LinkedHashMap[
       Seq[Any], scala.collection.mutable.Builder[(String, Long), Seq[(String, Long)]]]()
@@ -1755,7 +1720,7 @@ object ManifestTable {
         (0 until b.n).foreach(i => groups(Seq(i)) = Seq.newBuilder)
       case _ => ()
     }
-    planPrune(spark, root, v, ranges, points, pointsAny).kept.foreach { case (_, kept) =>
+    plan.kept.foreach { case (_, _, kept) =>
       kept.foreach { case (rel, st) =>
         val key = dirValues(rel.substring(0, math.max(rel.lastIndexOf('/'), 0)))
           .getOrElse(throw new IllegalStateException(
@@ -1773,34 +1738,51 @@ object ManifestTable {
   def prunePartitionCounts(spark: SparkSession, root: String, ranges: Seq[ColRange],
                            points: Seq[(String, Any)] = Nil,
                            pointsAny: Seq[(String, Seq[Any])] = Nil): (Int, Int) = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no committed version"))
     val (fs, rootP) = fsOf(spark, root)
-    val dirs = entriesOf(fs, rootP, v).map(_._1).distinct.filter(_.nonEmpty)
+    val dirs = entriesOf(fs, rootP, versionOf(spark, root)).map(_._1).distinct.filter(_.nonEmpty)
     val specsByPhys = PartSpecs.of(spark, root).flatMap(_.leaves).map(s => s.physName -> s).toMap
     (dirs.count(d => dirSurvives(d, specsByPhys, ranges, points, pointsAny)), dirs.size)
   }
 
-  /** A pruned snapshot: manifest version `v` and, per data version, the
-    * data files (path relative to the version dir, status) the hints keep;
-    * `counts` = (kept, total) files over the versions that carry sidecars.
+  /** A snapshot's file plan: manifest version `v`, its deletion-vector
+    * pointer `dv`, and per data version (ascending) the qualified version
+    * dir and the data files (path relative to it, status) the hints keep;
+    * `counts` = (kept, total) files over the versions whose sidecars the
+    * hints consulted — (0, 0) for an unhinted plan, which consults none.
     */
-  private[graft] final case class PrunePlan(v: Long, kept: Map[Long, Seq[(String, FileStatus)]],
-                                            counts: (Int, Int))
+  private[graft] final case class PrunePlan(v: Long, dv: Option[Long],
+                                            kept: Seq[(Long, Path, Seq[(String, FileStatus)])],
+                                            counts: (Int, Int)) {
+    /** Every kept file paired with its qualified data version dir. */
+    def files: Seq[(Path, FileStatus)] =
+      kept.flatMap { case (_, vdir, fs) => fs.map(f => vdir -> f._2) }
+  }
 
-  /** Lists only the partition dirs that survive the hints (the version dir
-    * itself only for an unpartitioned `""` entry). A listed file survives
-    * when its zone maps can intersect every range AND its Bloom filters
-    * might contain every conjunctive point AND, per `pointsAny` entry,
-    * might contain AT LEAST ONE of the listed values — the IN-list probe
-    * (the "fetch N rows by key" pattern: a file provably lacking every key
-    * in the list skips). Versions without sidecars keep every listed file.
+  /** THE enumeration of snapshot `v`'s live files — every read, metadata
+    * answer and catalog scan plans through here (the Iceberg
+    * `TableScan.planFiles()` shape), whatever version it pins. Lists only
+    * the partition dirs that survive the hints and `restrictTo` (the
+    * version dir itself only for an unpartitioned `""` entry). A listed
+    * file survives when its zone maps can intersect every range AND its
+    * Bloom filters might contain every conjunctive point AND, per
+    * `pointsAny` entry, might contain AT LEAST ONE of the listed values —
+    * the IN-list probe (the "fetch N rows by key" pattern: a file provably
+    * lacking every key in the list skips). Versions without sidecars keep
+    * every listed file; so does a historical version, whose sidecars live
+    * exactly as long as its data dirs ([[vacuum]] reclaims both together).
+    * An unhinted plan opens no sidecar and no partition spec: it costs one
+    * manifest read and one listing per live dir.
     */
   private[graft] def planPrune(spark: SparkSession, root: String, v: Long,
-                               ranges: Seq[ColRange], points: Seq[(String, Any)],
-                               pointsAny: Seq[(String, Seq[Any])] = Nil): PrunePlan = {
+                               ranges: Seq[ColRange] = Nil, points: Seq[(String, Any)] = Nil,
+                               pointsAny: Seq[(String, Seq[Any])] = Nil,
+                               restrictTo: Option[Set[String]] = None): PrunePlan = {
     val (fs, rootP) = fsOf(spark, root)
-    val entries = entriesOf(fs, rootP, v)
+    val entries = try entriesOf(fs, rootP, v) catch {
+      case _: java.io.FileNotFoundException => throw new IllegalStateException(
+        s"manifest table $root has no version $v on disk (vacuumed or never committed)")
+    }
+    val hinted = ranges.nonEmpty || points.nonEmpty || pointsAny.nonEmpty
     // PARTITION-DIR pruning before any file listing: hints on the
     // partition SOURCE column map through the table's partition specs
     // ([[PartSpecs.of]] — identity or hidden transforms, current AND
@@ -1808,12 +1790,14 @@ object ManifestTable {
     // partitions a point query lists ONE dir's files instead of the
     // table's. Unmatched hints leave the dir in — always a correct
     // superset.
-    val specsByPhys = PartSpecs.of(spark, root).flatMap(_.leaves).map(s => s.physName -> s).toMap
-    def partSurvives(dirName: String): Boolean =
-      dirSurvives(dirName, specsByPhys, ranges, points, pointsAny)
+    val specsByPhys = if (!hinted) Map.empty[String, PartSpec]
+      else PartSpecs.of(spark, root).flatMap(_.leaves).map(s => s.physName -> s).toMap
     var keptN = 0; var totalN = 0
-    val plan = entries.groupBy(_._2).map { case (dv, parts) =>
-      val partDirs = parts.map(_._1).distinct.filter(partSurvives)
+    val byVersion = entries.filter(e => restrictTo.forall(_.contains(e._1)))
+      .groupBy(_._2).toSeq.sortBy(_._1)
+    val plan = byVersion.map { case (dv, parts) =>
+      val partDirs = parts.map(_._1).distinct
+        .filter(dirSurvives(_, specsByPhys, ranges, points, pointsAny))
       val vdir = fs.makeQualified(new Path(rootP, "v" + fmt(dv)))
       val relOf = relTo(fs, vdir)
       // universe = the surviving dirs' actual files, never the sidecar key
@@ -1821,9 +1805,9 @@ object ManifestTable {
       // partial stats) defaults to KEPT, the only correct superset
       val live = (if (partDirs.contains("")) Seq(vdir) else partDirs.map(new Path(vdir, _)))
         .flatMap(listDataStatus(fs, _)).map(st => relOf(st) -> st)
-      val stats = if (live.isEmpty) None else loadStats(fs, rootP, dv)
-      val blooms = if (live.isEmpty) None else loadBlooms(fs, rootP, dv)
-      if (stats.isEmpty && blooms.isEmpty) dv -> live
+      val stats = if (!hinted || live.isEmpty) None else loadStats(fs, rootP, dv)
+      val blooms = if (!hinted || live.isEmpty) None else loadBlooms(fs, rootP, dv)
+      if (stats.isEmpty && blooms.isEmpty) (dv, vdir, live)
       else {
         val kept = live.filter { case (rel, _) =>
           val zoneOk = stats.flatMap(_.get(rel))
@@ -1839,43 +1823,24 @@ object ManifestTable {
           zoneOk && bloomOk && anyOk
         }
         keptN += kept.size; totalN += live.size
-        dv -> kept.sortBy(_._1)
+        (dv, vdir, kept.sortBy(_._1))
       }
     }
-    PrunePlan(v, plan, (keptN, totalN))
+    PrunePlan(v, dvOf(fs, rootP, v), plan, (keptN, totalN))
   }
 
-  /** [[read]] with zone-map file skipping: files whose per-column [min,
-    * max] cannot intersect ALL the ranges are never handed to the scan.
-    * The result is a SUPERSET of the matching rows (zone maps prune files,
-    * not rows) — apply the exact predicate on top, as with any data-
-    * skipping layer; with `ranges = Nil` this is exactly [[read]].
-    * Versions committed without stats read whole.
+  /** The current snapshot with zone-map/Bloom file skipping: the
+    * [[planPrune]] of the hints, scanned. The result is a SUPERSET of the
+    * matching rows (zone maps prune files, not rows) — apply the exact
+    * predicate on top, as with any data-skipping layer; with no hints this
+    * is exactly [[read]]. Versions committed without stats read whole.
     */
   def readPruned(spark: SparkSession, root: String, schema0: StructType,
                  ranges: Seq[ColRange],
                  points: Seq[(String, Any)] = Nil,
-                 pointsAny: Seq[(String, Seq[Any])] = Nil): DataFrame = {
-    // resolve the manifest version ONCE — a second currentVersion() lookup
-    // for the DV could race a concurrent commit and pair version N's files
-    // with version N+1's (possibly absent) deletion vector
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no committed version"))
-    readPruned(spark, root, schema0, planPrune(spark, root, v, ranges, points, pointsAny))
-  }
-
-  /** [[readPruned]] of an already planned prune: its files and its
-    * version's deletion vector, with no further listing.
-    */
-  private[graft] def readPruned(spark: SparkSession, root: String, schema0: StructType,
-                                plan: PrunePlan): DataFrame = {
-    val (fs, rootP) = fsOf(spark, root)
-    val files = plan.kept.toSeq.flatMap { case (dataV, kept) =>
-      val vdir = fs.makeQualified(new Path(rootP, "v" + fmt(dataV)))
-      kept.map(f => vdir -> f._2)
-    }
-    scanFiles(spark, root, schema0, dvOf(fs, rootP, plan.v), files, withMeta = false)
-  }
+                 pointsAny: Seq[(String, Seq[Any])] = Nil): DataFrame =
+    scanFiles(spark, root, schema0,
+      planPrune(spark, root, versionOf(spark, root), ranges, points, pointsAny), withMeta = false)
 
   /** [[readPruned]] with the skipping hints derived from the PREDICATE
     * ITSELF: the conjunctive equality/range constraints on top-level
@@ -2031,8 +1996,7 @@ object ManifestTable {
   def deletedKeysSince(spark: SparkSession, root: String, schema: StructType,
                        keys: Seq[String], fromV: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no committed version"))
+    val cur = versionOf(spark, root)
     if (cur <= fromV)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(keys.map(k => schema(k))))
@@ -2120,7 +2084,8 @@ object ManifestTable {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cdfSchema)
     val fields = schema.fieldNames.toSeq
     def side(v: Long, tag: String): DataFrame = {
-      val df = readSnapshot(spark, root, schema, v, withMeta = false, Some(affected))
+      val df = scanFiles(spark, root, schema,
+        planPrune(spark, root, v, restrictTo = Some(affected)), withMeta = false)
       df.select(struct(keys.map(col): _*).as("__k"),
         struct(fields.map(col): _*).as(s"__$tag"),
         graft.ops.Diff.rowFingerprint(fields.map(col)).as(s"__${tag}fp"))
@@ -2145,7 +2110,12 @@ object ManifestTable {
     * filter the masked positions out during [[read]]/[[readPruned]]
     * assembly, so the delete is visible atomically at the manifest rename while costing
     * O(matching rows) write I/O — at 100 TB, deleting one user's rows
-    * rewrites kilobytes, not the terabyte-scale files holding them.
+    * rewrites kilobytes, not the terabyte-scale files holding them. The
+    * position scan reads the [[planPrune]] of the predicate's own hints
+    * ([[extractHintsFor]], as [[readAuto]] does) with the exact predicate on
+    * top, so a key-range delete lists and reads only the dirs and files
+    * that can hold the range (SQL `DELETE FROM` reaches this through the
+    * catalog's metadata-only delete).
     *
     * Deletes are LOGICAL until the next [[compact]]/[[compactZOrder]]
     * (which reads the DV-masked snapshot and commits a clean rewrite with
@@ -2163,18 +2133,18 @@ object ManifestTable {
   def deleteWhere(spark: SparkSession, root: String, schema: StructType,
                   predicate: org.apache.spark.sql.Column): Long = {
     val (fs, rootP) = fsOf(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no committed version"))
+    val (ranges, points, pointsAny) = extractHintsFor(spark, schema, predicate)
+    val plan = planPrune(spark, root, versionOf(spark, root), ranges, points, pointsAny)
     // STAGE the DV and claim at publish like every other commit: writing
     // d<next> directly would occupy the number while the positions are
     // collected, and a concurrent claimed committer would reclaim-or-corrupt
     // it (the d-dir is unverifiable without the claim protocol). The data
     // stage is an empty claim vehicle — the committed v-dir holds no files
     // and no entry references it.
-    val dvStage = stageDv(spark, root, dvOf(fs, rootP, cur), collectDv(
-      readSnapshot(spark, root, schema, cur, withMeta = true).filter(predicate)))
+    val dvStage = stageDv(spark, root, plan.dv, collectDv(
+      scanFiles(spark, root, schema, plan, withMeta = true).filter(predicate)))
     publishStaged(spark, root, stageData(spark, root, None, None, Nil, Nil).dir,
-      Some(cur), entriesOf(fs, rootP, cur), Nil, dvOf(fs, rootP, cur), Nil, Nil,
+      Some(plan.v), entriesOf(fs, rootP, plan.v), Nil, plan.dv, Nil, Nil,
       CommitShape.Delete, Some(dvStage))
   }
 
@@ -2475,12 +2445,9 @@ object ManifestTable {
     */
   def inferSchema(spark: SparkSession, root: String,
                   asOfVersion: Option[Long] = None): StructType = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = asOfVersion.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no committed version"))
-    val entries = entriesOf(fs, rootP, v)
-    require(entries.nonEmpty, s"manifest table $root version $v holds no partitions")
-    ManifestScan.inferSchema(spark, liveFiles(fs, rootP, entries))
+    val plan = planPrune(spark, root, versionOf(spark, root, asOfVersion))
+    require(plan.kept.nonEmpty, s"manifest table $root version ${plan.v} holds no partitions")
+    ManifestScan.inferSchema(spark, plan.files)
   }
 
   /** MERGE with O(changed rows) write amplification — the merge-on-read
@@ -2563,7 +2530,8 @@ object ManifestTable {
     val restrict =
       if (mixed) None else for (_ <- spec; d <- deleteRestrict) yield st.touched.toSet ++ d
     val dvStage = stageDv(spark, root, curDv, collectDv(
-      readSnapshot(spark, root, schema, cur, withMeta = true, restrict)
+      scanFiles(spark, root, schema, planPrune(spark, root, cur, restrictTo = restrict),
+        withMeta = true)
         .join(broadcast(keySet), keys, "left_semi")))
     // dvCarry0 = the base DV this commit's union consumed — the rebase
     // conflict check compares the winner's DV pointer against it (the
@@ -2727,8 +2695,7 @@ object ManifestTable {
                          statsCols: Seq[String] = Nil): Long = {
     require(targetBytes >= 1L, s"targetBytes=$targetBytes")
     import org.apache.spark.sql.functions._
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no committed version"))
+    val cur = versionOf(spark, root)
     val (totalBytes, _, _) = estimatePruned(spark, root, cur, Nil)
     val targetFiles = math.max(1L,
       (totalBytes + targetBytes - 1) / targetBytes).min(1 << 20).toInt
@@ -2785,8 +2752,6 @@ object ManifestTable {
         // via String.valueOf, the same form partDirName escapes). For a
         // composite spec, `partValue` names the FULL nested dir path
         // (`ts_day=19723/user_id_bucket=3`) — one hive segment per field.
-        val cur = currentVersion(spark, root).getOrElse(
-          throw new IllegalStateException(s"manifest table $root has no committed version"))
         val dirName = spec match {
           case m: PartSpec.Multi =>
             require(m.matchesLayout(partValue),
@@ -2796,8 +2761,9 @@ object ManifestTable {
           case _ => pc + "=" + org.apache.spark.sql.catalyst.catalog
             .ExternalCatalogUtils.escapePathName(partValue)
         }
-        spec.derive(
-          readSnapshot(spark, root, schema, cur, withMeta = false, Some(Set(dirName))))
+        spec.derive(scanFiles(spark, root, schema,
+          planPrune(spark, root, versionOf(spark, root), restrictTo = Some(Set(dirName))),
+          withMeta = false))
       }
     val out =
       if (filesPerPartition == 1) df.repartition(spec.physNames.map(col): _*)
@@ -2874,28 +2840,15 @@ object ManifestTable {
     * references, file count, and bytes, plus the current deletion-vector
     * row count. The DESCRIBE DETAIL-style telemetry an operator reads
     * before deciding to [[compact]] (many small files), [[vacuum]] (dead
-    * versions), or purge ([[deleteWhere]] backlog). Pure driver-side
-    * listing — O(files) metadata, no data scan.
+    * versions), or purge ([[deleteWhere]] backlog). The unhinted
+    * [[planPrune]] of the current version — O(files) metadata, no data scan.
     */
   def detail(spark: SparkSession, root: String): Seq[(Long, Int, Int, Long)] = {
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no committed version"))
     val (fs, rootP) = fsOf(spark, root)
-    val entries = entriesOf(fs, rootP, cur)
-    def filesUnder(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) filesUnder(st.getPath)
-        else Seq(st)
-      }
-    entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (dataV, parts) =>
-      val sts = parts.map(_._1).distinct.flatMap { part =>
-        val base = new Path(rootP, "v" + fmt(dataV))
-        filesUnder(if (part.isEmpty) base else new Path(base, part))
-      }
-      (dataV, parts.size, sts.size, sts.map(_.getLen).sum)
+    val plan = planPrune(spark, root, versionOf(spark, root))
+    val refs = entriesOf(fs, rootP, plan.v).groupBy(_._2)
+    plan.kept.map { case (dataV, _, files) =>
+      (dataV, refs(dataV).size, files.size, files.map(_._2.getLen).sum)
     }
   }
 
@@ -2917,58 +2870,30 @@ object ManifestTable {
   }
 
   /** Live data files of the current snapshot — (schemeFreePath,
-    * partitionDir, dataVersion, bytes), the `t.files` metadata table's
-    * source ([[GraftMetaTable]]). O(files) driver-side listing, no data
-    * scan; paths normalize exactly like the deletion vector's so they join
-    * against `__f` provenance directly.
-    */
-  def liveFileList(spark: SparkSession, root: String): Seq[(String, String, Long, Long)] = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no committed version"))
-    val (fs, rootP) = fsOf(spark, root)
-    entriesOf(fs, rootP, v).groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (dv, parts) =>
-      val vdir = new Path(rootP, "v" + fmt(dv))
-      val dirs = parts.map(_._1).distinct
-      listDataFiles(fs, vdir).filter(rel =>
-        dirs.contains("") || dirs.exists(p => rel.startsWith(p + "/")))
-        .map { rel =>
-          val q = fs.makeQualified(new Path(vdir, rel))
-          val part = if (rel.contains("/")) rel.substring(0, rel.lastIndexOf('/')) else ""
-          (q.toString.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"), part, dv,
-            fs.getFileStatus(q).getLen)
-        }
-    }
-  }
-
-  /** [[liveFileList]] plus each file's SKIPPING SIDECAR view — the "why was
-    * this file (not) pruned" answer `t.files` surfaces: per-column zone
-    * ranges `(col, tag, min, max, allNull)` exactly as [[readPruned]]
-    * evaluates them, and the columns carrying a Bloom filter. O(files)
-    * listing + O(data versions) sidecar reads, no data scan.
+    * partitionDir, dataVersion, bytes) — with each file's SKIPPING SIDECAR
+    * view, the "why was this file (not) pruned" answer `t.files` surfaces:
+    * per-column zone ranges `(col, tag, min, max, allNull)` exactly as
+    * [[planPrune]] evaluates them, and the columns carrying a Bloom filter.
+    * Files and lengths come from the unhinted plan; paths normalize
+    * exactly like the deletion vector's keys ([[fileKey]]), so they join
+    * against `__f` provenance directly under any partition value. O(live
+    * dirs) listings + O(data versions) sidecar reads, no data scan.
     */
   def liveFileSkipping(spark: SparkSession, root: String)
       : Seq[(String, String, Long, Long, Seq[(String, Char, String, String, Boolean)], Seq[String])] = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no committed version"))
     val (fs, rootP) = fsOf(spark, root)
-    entriesOf(fs, rootP, v).groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (dv, parts) =>
-      val vdir = new Path(rootP, "v" + fmt(dv))
-      val dirs = parts.map(_._1).distinct
+    planPrune(spark, root, versionOf(spark, root)).kept.flatMap { case (dv, _, files) =>
       val stats = loadStats(fs, rootP, dv).getOrElse(Map.empty)
       val blooms = loadBlooms(fs, rootP, dv).getOrElse(Map.empty)
-      listDataFiles(fs, vdir).filter(rel =>
-        dirs.contains("") || dirs.exists(p => rel.startsWith(p + "/")))
-        .map { rel =>
-          val q = fs.makeQualified(new Path(vdir, rel))
-          val part = if (rel.contains("/")) rel.substring(0, rel.lastIndexOf('/')) else ""
-          val zones = stats.getOrElse(rel, Map.empty).toSeq
-            .filterNot(_._1 == RowsCol) // row-count pseudo-entry, not a zone
-            .sortBy(_._1)
-            .map { case (c, z) => (c, z.tag, z.minS, z.maxS, z.allNull) }
-          val bloomCols = blooms.getOrElse(rel, Map.empty).keys.toSeq.sorted
-          (q.toString.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"), part, dv,
-            fs.getFileStatus(q).getLen, zones, bloomCols)
-        }
+      files.map { case (rel, st) =>
+        val part = if (rel.contains("/")) rel.substring(0, rel.lastIndexOf('/')) else ""
+        val zones = stats.getOrElse(rel, Map.empty).toSeq
+          .filterNot(_._1 == RowsCol) // row-count pseudo-entry, not a zone
+          .sortBy(_._1)
+          .map { case (c, z) => (c, z.tag, z.minS, z.maxS, z.allNull) }
+        val bloomCols = blooms.getOrElse(rel, Map.empty).keys.toSeq.sorted
+        (fileKey(st.getPath), part, dv, st.getLen, zones, bloomCols)
+      }
     }
   }
 
@@ -3013,16 +2938,15 @@ object ManifestTable {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no committed version"))
-    val (fs, rootP) = fsOf(spark, root)
-    val files = liveFiles(fs, rootP, entriesOf(fs, rootP, v)).map(_._2.getPath)
+    val (fs, _) = fsOf(spark, root)
+    val plan = planPrune(spark, root, versionOf(spark, root))
+    val files = plan.files.map(_._2.getPath)
     val total = files.map { p =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, fs.getConf))
       try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
       finally reader.close()
     }.sum
-    val dv = dvOf(fs, rootP, v).fold(Map.empty: Dv)(dvBitmaps(spark, root, _))
+    val dv = plan.dv.fold(Map.empty: Dv)(dvBitmaps(spark, root, _))
     total - files.flatMap(p => dv.get(fileKey(p))).map(_.getLongCardinality).sum
   }
 
@@ -3057,20 +2981,17 @@ object ManifestTable {
                 column: String): Option[Option[(Char, String, String)]] = {
     val v = currentVersion(spark, root).getOrElse(return Some(None))
     val (fs, rootP) = fsOf(spark, root)
+    // the DV check lists nothing: a DV table declines before planning
     if (dvOf(fs, rootP, v).isDefined) return None
     val zones = scala.collection.mutable.ArrayBuffer[ColZone]()
-    entriesOf(fs, rootP, v).groupBy(_._2).foreach { case (dv, parts) =>
+    planPrune(spark, root, v).kept.foreach { case (dv, _, files) =>
       val stats = loadStats(fs, rootP, dv).getOrElse(return None)
-      val vdir = new Path(rootP, "v" + fmt(dv))
-      val dirs = parts.map(_._1).distinct
-      listDataFiles(fs, vdir).filter(rel =>
-        dirs.contains("") || dirs.exists(p => rel.startsWith(p + "/")))
-        .foreach { rel =>
-          stats.get(rel).flatMap(_.get(column)) match {
-            case Some(z) if z.tag == 'L' || z.tag == 'D' => zones += z
-            case _ => return None
-          }
+      files.foreach { case (rel, _) =>
+        stats.get(rel).flatMap(_.get(column)) match {
+          case Some(z) if z.tag == 'L' || z.tag == 'D' => zones += z
+          case _ => return None
         }
+      }
     }
     val nn = zones.filterNot(_.allNull).toSeq
     if (nn.isEmpty) Some(None)

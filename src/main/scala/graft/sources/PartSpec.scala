@@ -22,8 +22,9 @@ import org.apache.spark.sql.types._
   *
   * Contracts:
   *  - The derived column NEVER appears in the declared schema; writes add
-  *    it on the fly ([[PartSpec.derive]]) and reads drop it (readSnapshot
-  *    re-selects the declared schema per relation).
+  *    it on the fly ([[PartSpec.derive]]) and reads drop it (the snapshot
+  *    scan, `ManifestTable.scanFiles`, re-selects the declared schema per
+  *    relation).
   *  - [[PartSpec.applyValue]] replays the transform on the DRIVER against
   *    a pruning hint value (Catalyst-internal convention: Long micros for
   *    timestamps, Int epoch days for dates, String for strings) and must

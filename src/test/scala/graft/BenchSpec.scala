@@ -160,6 +160,30 @@ class BenchSpec extends SparkSuite {
       ("ManifestTable.scala", "stageData", "stageWrite(")), calls)
   }
 
+  test("ManifestTable.planPrune is the only main code that lists a snapshot's files") {
+    // a reader that lists data dirs itself re-grows a second enumeration of
+    // the snapshot; only the commit-side footer harvests list a fresh write
+    import scala.jdk.CollectionConverters._
+    val Def = """.*\bdef (\w+)\b.*""".r
+    val helpers = Seq("listDataStatus", "listDataFiles")
+    val calls = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
+        lines.indices.flatMap { i =>
+          val code = lines(i).trim
+          val comment = code.startsWith("*") || code.startsWith("//") || code.startsWith("/*")
+          helpers.map(_ + "(").filter(c => !comment && code.contains(c) &&
+            !code.contains("def " + c)).map { c =>
+            val owner = lines.take(i + 1).reverseIterator.collectFirst { case Def(d) => d }
+            (p.getFileName.toString, owner.getOrElse(""), c)
+          }
+        }
+      }.filterNot(c => helpers.contains(c._2)) // the helpers' own recursion/delegation
+    assert(calls.sorted == Seq(("ManifestTable.scala", "harvestBloomsAndNdv", "listDataFiles("),
+      ("ManifestTable.scala", "harvestStats", "listDataFiles("),
+      ("ManifestTable.scala", "planPrune", "listDataStatus(")), calls)
+  }
+
   test("compact tail stays inside the 2000-char capture at 250 queries (r19)") {
     // worst realistic shape: every id present, a mix of sub-10s (2-digit)
     // and 10-100s (1-digit) timings, a few failures

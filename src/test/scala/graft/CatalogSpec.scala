@@ -153,6 +153,50 @@ class CatalogSpec extends SparkSuite {
     model = model - ((5L, "e", "x/y")) - ((6L, "f", "x/y")) + ((6L, "F", "x/y")) + ((7L, "g", "a b"))
     check("merge")
     assert(ManifestTable.deletedRowCount(spark, root) == 4L)
+    // t.files' paths are the __f keys under every partition value: each
+    // live row's file resolves through the metadata table
+    val provenance = spark.sql(s"SELECT DISTINCT __f FROM $t").as[String].collect().toSet
+    val joined = spark.sql(s"SELECT DISTINCT r.__f FROM (SELECT DISTINCT __f FROM $t) r " +
+      s"JOIN $t.files f ON r.__f = f.path").as[String].collect().toSet
+    assert(provenance.size >= 3 && joined == provenance, (provenance -- joined).mkString(", "))
+  }
+
+  test("SQL MERGE lists each live dir once; UPDATE and DELETE by key range list only its dirs") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", classOf[ListCountingFs].getName)
+    val dir = Files.createTempDirectory("graft-cat-cnt").toString
+    spark.conf.set("spark.sql.catalog.gcnt", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gcnt.warehouse", "cntfs://" + dir)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gcnt.db")
+    val t = "gcnt.db.o"
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING) PARTITIONED BY (truncate(2000, k))")
+    spark.sql(s"INSERT INTO $t SELECT id, 'a' FROM range(15000)")
+    var model = (0L until 15000L).map(_ -> "a").toMap
+    // (partition dir, times listed) over the data version dirs a statement lists
+    def run(sql: String): Map[String, Int] = {
+      ListCountingFs.clear()
+      spark.sql(sql)
+      val listed = ListCountingFs.listedDataDirs
+      assert(listed.distinct.size == listed.size, s"$sql listed a dir twice: $listed")
+      listed.groupBy(_.split('/').drop(1).mkString("/")).map { case (p, ds) => p -> ds.size }
+    }
+    def check(step: String): Unit =
+      assert(spark.table(t).as[(Long, String)].collect().toMap == model, step)
+    val merged = run(s"MERGE INTO $t t USING (SELECT * FROM VALUES (100L, 'm'), " +
+      "(16100L, 'n') AS s(k, v)) s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    model ++= Map(100L -> "m", 16100L -> "n")
+    assert(merged == (0 until 8).map(i => s"k_trunc=${i * 2000}" -> 1).toMap, merged)
+    check("merge")
+    // k_trunc=0 now lives in two data versions (the MERGE appended k=100)
+    val updated = run(s"UPDATE $t SET v = 'u' WHERE k BETWEEN 100 AND 124")
+    model ++= (100L to 124L).map(_ -> "u")
+    assert(updated == Map("k_trunc=0" -> 2), updated)
+    check("update")
+    val deleted = run(s"DELETE FROM $t WHERE k BETWEEN 300 AND 309")
+    model --= (300L to 309L)
+    assert(deleted.keySet == Set("k_trunc=0"), deleted)
+    check("delete")
   }
 
   test("VERSION AS OF time travel reads the pinned snapshot") {

@@ -1361,6 +1361,14 @@ class SourcesSpec extends SparkSuite {
     assert(ManifestTable.versions(spark, root) == Seq(2L))
     intercept[IllegalStateException](
       ManifestTable.read(spark, root, schema, asOfVersion = Some(1L)))
+    // every pinned reader refuses with the table's own error, not a raw
+    // FileNotFoundException of the vacuumed manifest
+    Seq[() => Any](() => ManifestTable.readWithMeta(spark, root, schema, Some(1L)),
+      () => ManifestTable.inferSchema(spark, root, Some(1L))).foreach { f =>
+      val e = intercept[IllegalStateException](f())
+      assert(e.getMessage.contains("has no version 1 on disk (vacuumed or never committed)"),
+        e.getMessage)
+    }
   }
 
   test("ManifestTable schema evolution: columns absent from old files read as NULL") {
@@ -2371,6 +2379,62 @@ class SourcesSpec extends SparkSuite {
       == (0L until 120L).filter(_ % 12 == 7).map(i => (i, 7, i)).toSet)
   }
 
+  test("unhinted read, changes and rowCount list each live dir once and open no sidecar") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val local = Files.createTempDirectory("manunh").toString + "/t"
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("p", IntegerType), StructField("v", LongType)))
+    val spec = Some(PartSpec.Identity("p"))
+    val base = (0L until 120L).map(i => (i, (i % 12).toInt, i))
+    ManifestTable.commit(base.toDF("id", "p", "v"), local, spec,
+      statsCols = Seq("v"), bloomCols = Seq("id"))
+    ManifestTable.append(Seq((500L, 3, 500L)).toDF("id", "p", "v"), local, spec,
+      statsCols = Seq("v"), bloomCols = Seq("id")) // v2 joins p=3's entries
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", classOf[ListCountingFs].getName)
+    val root = "cntfs://" + local
+    val live = (0 until 12).map(p => s"v00000001/p=$p") :+ "v00000002/p=3"
+    def sidecarOpens: Seq[String] = ListCountingFs.opened.toArray.toSeq.map(_.toString)
+      .filter(s => s.contains("/_stats.") || s.contains("/_bloom.") || s.endsWith("/_ddl.json"))
+    def check(what: String)(f: => Unit): Unit = {
+      ListCountingFs.clear()
+      f
+      assert(sidecarOpens.isEmpty, s"$what: ${sidecarOpens.mkString(", ")}")
+    }
+    val all = base.toSet + ((500L, 3, 500L))
+    check("read") {
+      val df = ManifestTable.read(spark, root, schema)
+      assert(ListCountingFs.listedDataDirs.sorted == live.sorted, "read")
+      assert(df.as[(Long, Int, Long)].collect().toSet == all)
+    }
+    check("rowCount") {
+      assert(ManifestTable.rowCount(spark, root) == all.size)
+      assert(ListCountingFs.listedDataDirs.sorted == live.sorted, "rowCount")
+    }
+    check("changes") {
+      val feed = ManifestTable.changes(spark, root, schema, Seq("id"), 1L, 2L)
+      // each side lists its own snapshot's dirs of the one changed partition
+      assert(ListCountingFs.listedDataDirs.sorted ==
+        Seq("v00000001/p=3", "v00000001/p=3", "v00000002/p=3"), "changes")
+      assert(feed.select("_change_type", "id").as[(String, Long)].collect().toSeq ==
+        Seq(("insert", 500L)))
+    }
+    // a pinned read prunes by its hints like a current one
+    ListCountingFs.clear()
+    val pinned = spark.read.format("graft").schema(schema).option("versionAsOf", "1")
+      .load(root).filter($"p" === 7).select("id").as[Long].collect().toSet
+    assert(pinned == (0L until 120L).filter(_ % 12 == 7).toSet)
+    assert(ListCountingFs.listedDataDirs == Seq("v00000001/p=7"),
+      ListCountingFs.listedDataDirs.mkString(", "))
+    // t.files' source: lengths from the plan's listing, no per-file stat
+    ListCountingFs.clear()
+    val files = ManifestTable.liveFileSkipping(spark, root)
+    assert(files.size == ManifestTable.detail(spark, local).map(_._3).sum)
+    val fileStats = ListCountingFs.statted.toArray.toSeq.map(_.toString)
+      .filter(_.contains("/part-"))
+    assert(fileStats.isEmpty, fileStats.mkString(", "))
+  }
+
   test("snapshot read: an unpartitioned-era layout beside an identity layout reads every row once") {
     import spark.implicits._
     import graft.sources.ManifestTable
@@ -2396,19 +2460,38 @@ class SourcesSpec extends SparkSuite {
 }
 
 /** Local file system under the `cntfs` scheme that records every path it
-  * lists — the listing spy for partition-pruning tests.
+  * lists, opens and stats — the I/O spy for partition-pruning tests. Stats
+  * the local listing makes of each child itself are not recorded: only a
+  * caller's own `getFileStatus` is.
   */
 class ListCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "cntfs"
   override def getUri: java.net.URI = java.net.URI.create("cntfs:///")
   override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
     ListCountingFs.listed.add(p)
-    super.listStatus(p)
+    ListCountingFs.listing.set(true)
+    try super.listStatus(p) finally ListCountingFs.listing.set(false)
+  }
+  override def open(p: org.apache.hadoop.fs.Path,
+                    bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    ListCountingFs.opened.add(p)
+    super.open(p, bufferSize)
+  }
+  override def getFileStatus(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus = {
+    if (!ListCountingFs.listing.get) ListCountingFs.statted.add(p)
+    super.getFileStatus(p)
   }
 }
 
 object ListCountingFs {
   val listed = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]()
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]()
+  val statted = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]()
+  private val listing = ThreadLocal.withInitial[Boolean](() => false)
+  def clear(): Unit = { listed.clear(); opened.clear(); statted.clear() }
+  /** The data version dirs listed, as `v########/<partition dir>` strings. */
+  def listedDataDirs: Seq[String] = listed.toArray.toSeq.map(_.toString)
+    .flatMap(s => "/(v\\d{8}/.*)$".r.findFirstMatchIn(s).map(_.group(1)))
 }
 
 /** Deterministic fake fetch client for the S1 keyed-fetch tests — file-scope

@@ -74,8 +74,10 @@ class TagsSpec extends SparkSuite {
     spark.sql("INSERT OVERWRITE gtag.db.t3 VALUES (3, 'c')") // v3
     spark.sql("CALL gtag.system.vacuum('db.t3', 0)")
     // v2's manifest AND data are gone (snapshot overwrite, unreferenced)...
-    intercept[Exception](
+    val gone2 = intercept[IllegalStateException](
       spark.sql("SELECT * FROM gtag.db.t3 VERSION AS OF 2").collect())
+    assert(gone2.getMessage.contains("has no version 2 on disk (vacuumed or never committed)"),
+      gone2.getMessage)
     // ...but the tagged v1 still answers, data intact
     assert(spark.sql("SELECT v FROM gtag.db.t3 VERSION AS OF 'gen1'")
       .as[String].collect().toSeq == Seq("a"))
@@ -87,8 +89,10 @@ class TagsSpec extends SparkSuite {
     // dropping the tag releases it: the next vacuum reclaims v1
     spark.sql("CALL gtag.system.drop_tag('db.t3', 'gen1')")
     spark.sql("CALL gtag.system.vacuum('db.t3', 0)")
-    intercept[Exception](
+    val gone1 = intercept[IllegalStateException](
       spark.sql("SELECT * FROM gtag.db.t3 VERSION AS OF 1").collect())
+    assert(gone1.getMessage.contains("has no version 1 on disk (vacuumed or never committed)"),
+      gone1.getMessage)
   }
 
   test("path-first tables tag through the ManifestTable API") {
