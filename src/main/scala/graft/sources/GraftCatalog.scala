@@ -760,16 +760,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     curRender
   }
 
-  /** Retire the spec history after a FULL rewrite (compact/zorder): every
-    * row was just re-derived under the current spec, so no directory of a
-    * prior layout is live any more.
+  /** Retire the spec history after a FULL rewrite (compact/zorder) that
+    * committed version `rewrittenAt`: every row was just re-derived under
+    * the current spec, so no directory of a prior layout is live any more.
+    * Older versions still reach those dirs, so they stop pruning by spec
+    * ([[PartSpecs.LayoutFromProp]]).
     */
-  private[sources] def clearPartSpecHistory(root: String): Unit =
+  private[sources] def clearPartSpecHistory(root: String, rewrittenAt: Long): Unit =
     for {
       d <- GraftDdl.load(spark, root)
       sch <- d.schema
       if d.props.contains(PartSpecs.HistoryProp)
-    } GraftDdl.save(spark, root, sch, d.partCol, d.props - PartSpecs.HistoryProp)
+    } GraftDdl.save(spark, root, sch, d.partCol, d.props - PartSpecs.HistoryProp +
+      (PartSpecs.LayoutFromProp -> rewrittenAt.toString))
 
   override def dropTable(ident: Identifier): Boolean = {
     val root = rootOf(ident)
@@ -1754,8 +1757,11 @@ private[sources] class StagedGraftTable(ident: Identifier, stagingRoot: String,
       // and promote after. A crash anywhere leaves either (old data, old
       // schema) or (new data, new schema + unpromoted staged sidecar that
       // the next load self-heals) — never new data under the old schema.
-      val stagedDdl = GraftDdl.stage(spark, finalRoot,
-        ddl.schema.get, ddl.partCol, ddl.props)
+      // The new specs describe only the replacing snapshot's dirs: the
+      // pre-REPLACE versions stop pruning by spec.
+      val layoutFrom = ManifestTable.currentVersion(spark, finalRoot).fold(0L)(_ + 1)
+      val stagedDdl = GraftDdl.stage(spark, finalRoot, ddl.schema.get, ddl.partCol,
+        ddl.props + (PartSpecs.LayoutFromProp -> layoutFrom.toString))
       try ManifestTable.withDirective(s"#ddl\t$stagedDdl") {
         if (ManifestTable.exists(spark, stagingRoot))
           ManifestTable.adoptSnapshot(spark, stagingRoot, finalRoot)
@@ -2729,7 +2735,7 @@ private[sources] object GraftProcedures {
           case (None, mb) if mb > 0 =>
             val full = ManifestTable.compactTargetBytes(SparkSession.active, t.root,
               t.schema, t.partSpec, mb.toLong * 1024L * 1024L, t.statsColsProp)
-            cat.clearPartSpecHistory(t.root) // full rewrite, as below
+            cat.clearPartSpecHistory(t.root, full) // full rewrite, as below
             full
           case (None, _) =>
             val full = ManifestTable.compact(SparkSession.active, t.root,
@@ -2737,7 +2743,7 @@ private[sources] object GraftProcedures {
             // a full rewrite re-derives every row under the CURRENT spec —
             // the mixed layout (and with it, any pruning/carry-forward
             // debt of partition evolution) ends here, so retire history
-            cat.clearPartSpecHistory(t.root)
+            cat.clearPartSpecHistory(t.root, full)
             full
         }
         Seq(row(v))
@@ -2755,7 +2761,7 @@ private[sources] object GraftProcedures {
         val cols = args.getUTF8String(1).toString.split(",").map(_.trim).filter(_.nonEmpty)
         val v = ManifestTable.compactZOrder(SparkSession.active, t.root, t.schema,
           t.partSpec, cols.toIndexedSeq, args.getInt(2), t.statsColsProp)
-        cat.clearPartSpecHistory(t.root) // full rewrite: mixed layout ends
+        cat.clearPartSpecHistory(t.root, v) // full rewrite: mixed layout ends
         Seq(row(v))
       }
     })

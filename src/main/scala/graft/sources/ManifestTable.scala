@@ -1463,7 +1463,8 @@ object ManifestTable {
   /** `(keptFiles, totalFiles)` the given ranges would leave readable — the
     * observable pruning effect, for tests and ops telemetry. Counts cover
     * only versions that HAVE stats; versions without stats read whole and
-    * count as kept.
+    * count as kept. With no hints no sidecar is opened and the answer is
+    * every live file, all kept.
     */
   def pruneCounts(spark: SparkSession, root: String, ranges: Seq[ColRange],
                   points: Seq[(String, Any)] = Nil,
@@ -1739,16 +1740,30 @@ object ManifestTable {
                            points: Seq[(String, Any)] = Nil,
                            pointsAny: Seq[(String, Seq[Any])] = Nil): (Int, Int) = {
     val (fs, rootP) = fsOf(spark, root)
-    val dirs = entriesOf(fs, rootP, versionOf(spark, root)).map(_._1).distinct.filter(_.nonEmpty)
-    val specsByPhys = PartSpecs.of(spark, root).flatMap(_.leaves).map(s => s.physName -> s).toMap
-    (dirs.count(d => dirSurvives(d, specsByPhys, ranges, points, pointsAny)), dirs.size)
+    val dirs = entriesOf(fs, rootP, versionOf(spark, root)).filter(_._1.nonEmpty).groupBy(_._1)
+    val keep = dirFilter(spark, root, ranges, points, pointsAny)
+    (dirs.count { case (d, es) => es.exists(e => keep(e._2, d)) }, dirs.size)
+  }
+
+  /** Does dir `dir` of data version `dv` survive the hints, mapped through
+    * the partition specs (current AND historical, by the dir's own column
+    * name)? Dirs of data versions the specs do not describe
+    * ([[PartSpecs.layout]]) always survive: pruning is a correct superset.
+    */
+  private def dirFilter(spark: SparkSession, root: String, ranges: Seq[ColRange],
+                        points: Seq[(String, Any)],
+                        pointsAny: Seq[(String, Seq[Any])]): (Long, String) => Boolean = {
+    val (specs, layoutFrom) = PartSpecs.layout(spark, root)
+    val specsByPhys = specs.flatMap(_.leaves).map(s => s.physName -> s).toMap
+    (dv, dir) => dv < layoutFrom || dirSurvives(dir, specsByPhys, ranges, points, pointsAny)
   }
 
   /** A snapshot's file plan: manifest version `v`, its deletion-vector
     * pointer `dv`, and per data version (ascending) the qualified version
     * dir and the data files (path relative to it, status) the hints keep;
     * `counts` = (kept, total) files over the versions whose sidecars the
-    * hints consulted — (0, 0) for an unhinted plan, which consults none.
+    * hints consulted — for an unhinted plan, which consults none, every
+    * listed file, all kept.
     */
   private[graft] final case class PrunePlan(v: Long, dv: Option[Long],
                                             kept: Seq[(Long, Path, Seq[(String, FileStatus)])],
@@ -1768,8 +1783,10 @@ object ManifestTable {
     * `pointsAny` entry, might contain AT LEAST ONE of the listed values —
     * the IN-list probe (the "fetch N rows by key" pattern: a file provably
     * lacking every key in the list skips). Versions without sidecars keep
-    * every listed file; so does a historical version, whose sidecars live
-    * exactly as long as its data dirs ([[vacuum]] reclaims both together).
+    * every listed file; a historical version's sidecars live exactly as
+    * long as its data dirs ([[vacuum]] reclaims both together), so pinned
+    * reads skip by them too. Dirs prune by partition spec only for the
+    * data versions the specs describe ([[dirFilter]]).
     * An unhinted plan opens no sidecar and no partition spec: it costs one
     * manifest read and one listing per live dir.
     */
@@ -1783,21 +1800,16 @@ object ManifestTable {
         s"manifest table $root has no version $v on disk (vacuumed or never committed)")
     }
     val hinted = ranges.nonEmpty || points.nonEmpty || pointsAny.nonEmpty
-    // PARTITION-DIR pruning before any file listing: hints on the
-    // partition SOURCE column map through the table's partition specs
-    // ([[PartSpecs.of]] — identity or hidden transforms, current AND
-    // historical, matched per-dir by the dir's own column name) — at 10k
-    // partitions a point query lists ONE dir's files instead of the
-    // table's. Unmatched hints leave the dir in — always a correct
-    // superset.
-    val specsByPhys = if (!hinted) Map.empty[String, PartSpec]
-      else PartSpecs.of(spark, root).flatMap(_.leaves).map(s => s.physName -> s).toMap
+    // PARTITION-DIR pruning before any file listing ([[dirFilter]]): at
+    // 10k partitions a point query lists ONE dir's files instead of the
+    // table's. Unmatched hints leave the dir in.
+    val keepDir: (Long, String) => Boolean =
+      if (!hinted) (_, _) => true else dirFilter(spark, root, ranges, points, pointsAny)
     var keptN = 0; var totalN = 0
     val byVersion = entries.filter(e => restrictTo.forall(_.contains(e._1)))
       .groupBy(_._2).toSeq.sortBy(_._1)
     val plan = byVersion.map { case (dv, parts) =>
-      val partDirs = parts.map(_._1).distinct
-        .filter(dirSurvives(_, specsByPhys, ranges, points, pointsAny))
+      val partDirs = parts.map(_._1).distinct.filter(keepDir(dv, _))
       val vdir = fs.makeQualified(new Path(rootP, "v" + fmt(dv)))
       val relOf = relTo(fs, vdir)
       // universe = the surviving dirs' actual files, never the sidecar key
@@ -1826,7 +1838,9 @@ object ManifestTable {
         (dv, vdir, kept.sortBy(_._1))
       }
     }
-    PrunePlan(v, dvOf(fs, rootP, v), plan, (keptN, totalN))
+    // unhinted, nothing was consulted and every listed file is kept
+    val counts = if (hinted) (keptN, totalN) else { val n = plan.map(_._3.size).sum; (n, n) }
+    PrunePlan(v, dvOf(fs, rootP, v), plan, counts)
   }
 
   /** The current snapshot with zone-map/Bloom file skipping: the

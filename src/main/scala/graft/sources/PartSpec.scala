@@ -412,35 +412,47 @@ object PartSpec {
 object PartSpecs {
   val HistoryProp = "graft.partSpecHistory"
 
+  /** The first data version whose dirs the specs describe, set by a full
+    * rewrite that retires the history (compact/zorder) or a REPLACE TABLE:
+    * older dirs, still reached by time travel, `restore` and branches, may
+    * carry a retired layout whose dir column names a later spec reuses.
+    */
+  val LayoutFromProp = "graft.partSpecFrom"
+
   private val memo = java.util.Collections.synchronizedMap(
-    new java.util.HashMap[String, ((Long, Long), Seq[PartSpec])]())
+    new java.util.HashMap[String, ((Long, Long), (Seq[PartSpec], Long))]())
 
   /** Current-first: head (if any) is the active spec, tail the history
     * (newest first). Pruning matches directories against ALL of them by
     * physical column name.
     */
-  def of(spark: SparkSession, root: String): Seq[PartSpec] = {
+  def of(spark: SparkSession, root: String): Seq[PartSpec] = layout(spark, root)._1
+
+  /** [[of]] and the [[LayoutFromProp]] data version (0 when unset). */
+  def layout(spark: SparkSession, root: String): (Seq[PartSpec], Long) = {
     val p = new org.apache.hadoop.fs.Path(root, GraftDdl.FileName)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stamp =
       try { val st = fs.getFileStatus(p); (st.getModificationTime, st.getLen) }
       catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
     memo.get(root) match {
-      case (`stamp`, specs) => specs
+      case (`stamp`, known) => known
       case _ =>
         // full load only on miss (first touch per process / sidecar change);
         // a staged-#ddl RTAS authority is honored like FieldIds.of does
-        val specs =
-          if (stamp == ((-1L, -1L)) && !GraftDdl.hasStaged(spark, root)) Seq.empty[PartSpec]
-          else GraftDdl.load(spark, root).toSeq.flatMap { d =>
-            d.schema.toSeq.flatMap { sch =>
-              val cur = d.partCol.map(r => PartSpec.parse(r, sch))
-              val hist = parseHistory(d.props).map(r => PartSpec.parse(r, sch))
-              cur.toSeq ++ hist
-            }
+        val ddl =
+          if (stamp == ((-1L, -1L)) && !GraftDdl.hasStaged(spark, root)) None
+          else GraftDdl.load(spark, root)
+        val specs = ddl.toSeq.flatMap { d =>
+          d.schema.toSeq.flatMap { sch =>
+            val cur = d.partCol.map(r => PartSpec.parse(r, sch))
+            val hist = parseHistory(d.props).map(r => PartSpec.parse(r, sch))
+            cur.toSeq ++ hist
           }
-        memo.put(root, (stamp, specs))
-        specs
+        }
+        val known = (specs, ddl.flatMap(_.props.get(LayoutFromProp)).fold(0L)(_.toLong))
+        memo.put(root, (stamp, known))
+        known
     }
   }
 

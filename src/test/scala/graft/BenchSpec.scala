@@ -138,48 +138,42 @@ class BenchSpec extends SparkSuite {
     assert(builders == Seq("src/main/scala/graft/GraftSession.scala"), builders)
   }
 
-  test("ManifestTable.stageData is the only main code that stages a data write") {
-    // a writer that copies the stage preamble instead of calling the helper
-    // can forget the field ids; every call site is named by its enclosing def
+  /** (file, enclosing def, call) of every non-comment call of `names` in
+    * `src/main`, skipping their own definitions.
+    */
+  private def callSites(names: Seq[String]): Seq[(String, String, String)] = {
     import scala.jdk.CollectionConverters._
     val Def = """.*\bdef (\w+)\b.*""".r
-    val calls = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
       .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
         val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
         lines.indices.flatMap { i =>
           val code = lines(i).trim
           val comment = code.startsWith("*") || code.startsWith("//") || code.startsWith("/*")
-          Seq("stageWrite(", "attachDf(").filter(c => !comment && code.contains(c) &&
+          names.map(_ + "(").filter(c => !comment && code.contains(c) &&
             !code.contains("def " + c)).map { c =>
             val owner = lines.take(i + 1).reverseIterator.collectFirst { case Def(d) => d }
             (p.getFileName.toString, owner.getOrElse(""), c)
           }
         }
-      }
-    assert(calls.sorted == Seq(("ManifestTable.scala", "stageData", "attachDf("),
+      }.sorted
+  }
+
+  test("ManifestTable.stageData is the only main code that stages a data write") {
+    // a writer that copies the stage preamble instead of calling the helper
+    // can forget the field ids; every call site is named by its enclosing def
+    val calls = callSites(Seq("stageWrite", "attachDf"))
+    assert(calls == Seq(("ManifestTable.scala", "stageData", "attachDf("),
       ("ManifestTable.scala", "stageData", "stageWrite(")), calls)
   }
 
   test("ManifestTable.planPrune is the only main code that lists a snapshot's files") {
     // a reader that lists data dirs itself re-grows a second enumeration of
     // the snapshot; only the commit-side footer harvests list a fresh write
-    import scala.jdk.CollectionConverters._
-    val Def = """.*\bdef (\w+)\b.*""".r
     val helpers = Seq("listDataStatus", "listDataFiles")
-    val calls = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
-        val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
-        lines.indices.flatMap { i =>
-          val code = lines(i).trim
-          val comment = code.startsWith("*") || code.startsWith("//") || code.startsWith("/*")
-          helpers.map(_ + "(").filter(c => !comment && code.contains(c) &&
-            !code.contains("def " + c)).map { c =>
-            val owner = lines.take(i + 1).reverseIterator.collectFirst { case Def(d) => d }
-            (p.getFileName.toString, owner.getOrElse(""), c)
-          }
-        }
-      }.filterNot(c => helpers.contains(c._2)) // the helpers' own recursion/delegation
-    assert(calls.sorted == Seq(("ManifestTable.scala", "harvestBloomsAndNdv", "listDataFiles("),
+    val calls = callSites(helpers)
+      .filterNot(c => helpers.contains(c._2)) // the helpers' own recursion/delegation
+    assert(calls == Seq(("ManifestTable.scala", "harvestBloomsAndNdv", "listDataFiles("),
       ("ManifestTable.scala", "harvestStats", "listDataFiles("),
       ("ManifestTable.scala", "planPrune", "listDataStatus(")), calls)
   }

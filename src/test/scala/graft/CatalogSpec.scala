@@ -199,6 +199,47 @@ class CatalogSpec extends SparkSuite {
     check("delete")
   }
 
+  test("a retired partition layout's dirs stay readable by pinned, restored and pre-REPLACE reads") {
+    // truncate(2000, k) -> unset -> compact retires the spec history, so
+    // truncate(1000, k) may reuse the dir column k_trunc with another width:
+    // k = 3500 lives in the old layout's k_trunc=2000 but maps to
+    // k_trunc=3000 under the new spec
+    import spark.implicits._
+    wh
+    def ks(sql: String): Set[Long] = spark.sql(sql).as[Long].collect().toSet
+    spark.sql("DROP TABLE IF EXISTS gcat.db.t_relayout")
+    spark.sql("CREATE TABLE gcat.db.t_relayout (k BIGINT, v STRING) " +
+      "PARTITIONED BY (truncate(2000, k))")
+    spark.sql("INSERT INTO gcat.db.t_relayout SELECT id * 500, 'a' FROM range(10)")
+    val root = s"$wh/db/t_relayout"
+    val v1 = ManifestTable.currentVersion(spark, root).get
+    spark.sql("CALL gcat.system.set_partitioning('db.t_relayout', '')")
+    spark.sql("CALL gcat.system.compact('db.t_relayout')")
+    spark.sql("CALL gcat.system.set_partitioning('db.t_relayout', 'truncate(1000, k)')")
+    spark.sql("INSERT INTO gcat.db.t_relayout VALUES (3501, 'b')")
+    assert(ks(s"SELECT k FROM gcat.db.t_relayout VERSION AS OF $v1 WHERE k = 3500") == Set(3500L))
+    assert(spark.read.format("graft").option("versionAsOf", v1).load(root)
+      .filter("k = 3500").select("k").as[Long].collect().toSet == Set(3500L))
+    assert(ks("SELECT k FROM gcat.db.t_relayout WHERE k IN (3500, 3501)") == Set(3500L, 3501L))
+    // the new layout's own dirs still prune
+    assert(ManifestTable.prunePartitionCounts(spark, root, Nil, Seq("k" -> 3501L)) == ((1, 1)))
+    assert(ManifestTable.prunePartitionCounts(spark, root, Nil, Seq("k" -> 4700L)) == ((0, 1)))
+    spark.sql(s"CALL gcat.system.restore('db.t_relayout', $v1)")
+    assert(ks("SELECT k FROM gcat.db.t_relayout WHERE k = 3500") == Set(3500L))
+    assert(ManifestTable.prunePartitionCounts(spark, root, Nil, Seq("k" -> 3500L)) == ((3, 3)))
+    // REPLACE TABLE with the new width: the pre-REPLACE snapshot's dirs
+    spark.sql("DROP TABLE IF EXISTS gcat.db.t_relayout")
+    spark.sql("CREATE TABLE gcat.db.t_relayout (k BIGINT, v STRING) " +
+      "PARTITIONED BY (truncate(2000, k))")
+    spark.sql("INSERT INTO gcat.db.t_relayout SELECT id * 500, 'a' FROM range(10)")
+    val r1 = ManifestTable.currentVersion(spark, root).get
+    spark.sql("REPLACE TABLE gcat.db.t_relayout PARTITIONED BY (truncate(1000, k)) " +
+      "AS SELECT k, v FROM gcat.db.t_relayout WHERE k > 4000")
+    assert(ks(s"SELECT k FROM gcat.db.t_relayout VERSION AS OF $r1 WHERE k = 3500") == Set(3500L))
+    assert(ks("SELECT k FROM gcat.db.t_relayout WHERE k = 4500") == Set(4500L))
+    spark.sql("DROP TABLE gcat.db.t_relayout")
+  }
+
   test("VERSION AS OF time travel reads the pinned snapshot") {
     val t = freshTable("t7")
     spark.sql(s"INSERT INTO $t VALUES (1, 'a', 'x')")
