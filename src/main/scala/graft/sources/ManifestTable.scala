@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graft.ManifestScan
+import org.apache.spark.sql.graft.{KeyProbe, ManifestScan}
 import org.apache.spark.sql.types.StructType
 
 /** Minimal manifest-committed table — the transactional-MERGE seam the CDC
@@ -2223,7 +2223,7 @@ object ManifestTable {
         base.map(v => (entriesOf(fs, rootP, v), dvOf(fs, rootP, v)))
           .getOrElse((Seq.empty[(String, Long)], None))
       else (Seq.empty[(String, Long)], None)
-    if (rewrite && mixedLayout(prev, spec.get))
+    if (rewrite && mixedLayout(spark, root, prev, spec.get))
       throw new IllegalStateException(
         s"carry-forward commit on $root: the table holds partitions under an " +
           s"older partition spec than ${spec.get.render} (partition evolution) — " +
@@ -2255,49 +2255,33 @@ object ManifestTable {
           "speculative duplicate task can leave orphan files in a committer-v2 " +
           "stage that later publishes; run manifest-table writes with " +
           "spark.speculation=false")
-    spec match {
+    val (out, parts) = spec match {
       case Some(s) =>
         val derived = s.derive(df)
-        // OPTIMIZED WRITE (the Delta optimizedWrite idea, default ON like
-        // DBR's): cluster the staged rows by the partition tuple so each
-        // dir gets ONE file per commit instead of one per (task × dir) —
-        // without it a composite spec's dir PRODUCT (days × buckets) times
-        // the input parallelism explodes into thousands of tiny files per
-        // commit, and every later scan/DML pays the per-file open tax.
-        // `graft.optimizeWrite=false` opts a table out — set it when
-        // single commits carry partition-sized data (the one-task-per-dir
-        // serialization would bottleneck there; compact(target_mb) is the
-        // right splitter afterwards).
-        // REPARTITION_BY_NUM (count pinned, r22): `repartition(cols)` alone
-        // lets AQE coalesce the post-shuffle write stage to ONE task on a
-        // small commit, which then pays the per-file fixed cost (open,
-        // footer, close, task-commit rename) for every partition dir
-        // SERIALLY — measured 1.3 s/commit at 30 dirs. Pinning the bucket
-        // count keeps the one-file-per-dir clustering (all rows of a dir
-        // tuple still hash to one bucket) while spreading the dirs across
-        // the executors' cores; count derives from the cluster
-        // (defaultParallelism), not a local constant.
-        val out =
-          if (optimizeWrite(df.sparkSession, root, s))
-            derived.repartition(
-              math.max(1, df.sparkSession.sparkContext.defaultParallelism),
-              s.physNames.map(org.apache.spark.sql.functions.col): _*)
-          else derived
-        // committer algorithm v2 (task commit renames straight into the
-        // destination, optimization r21): a STAGE dir is single-writer and
-        // invisible until publishStaged's atomic manifest rename — the v1
-        // committer's job-level two-phase rename only re-moved every file a
-        // second time to protect atomicity the manifest protocol already
-        // owns. A failed stage is discarded wholesale either way; a
-        // task-commit failure mid-rename aborts the JOB loudly (rename onto
-        // an existing file fails). Speculation is refused above.
-        out.write.partitionBy(s.physNames: _*)
-          .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-          .mode("overwrite").parquet(stage.toString)
-      case None => df.write
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .mode("overwrite").parquet(stage.toString)
+        // OPTIMIZED WRITE (Delta's optimizedWrite, default ON): cluster the
+        // staged rows by the partition tuple so each dir gets ONE file per
+        // commit, not one per (task × dir) — a composite spec's dir product
+        // times the input parallelism would write thousands of tiny files.
+        // `graft.optimizeWrite=false` opts a table out (for partition-sized
+        // commits). The bucket count is pinned to defaultParallelism (r22):
+        // `repartition(cols)` alone lets AQE coalesce a small commit's write
+        // to ONE task that pays every dir's per-file cost serially.
+        (if (optimizeWrite(df.sparkSession, root, s))
+          derived.repartition(math.max(1, df.sparkSession.sparkContext.defaultParallelism),
+            s.physNames.map(org.apache.spark.sql.functions.col): _*)
+        else derived, s.physNames)
+      case None => (df, Nil)
     }
+    // committer algorithm v2 (task commit renames straight into the
+    // destination, r21): a STAGE dir is single-writer and invisible until
+    // publishStaged's atomic manifest rename, so v1's second job-level
+    // rename bought nothing; a failed stage is discarded wholesale, and
+    // speculation is refused above. No `_SUCCESS` file: the manifest is
+    // the commit record.
+    out.write.partitionBy(parts: _*)
+      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .mode("overwrite").parquet(stage.toString)
   }
 
   // DECLARED (sidecar) tables only — they own the property that opts out;
@@ -2338,12 +2322,13 @@ object ManifestTable {
   }
 
   /** A staged data write: its `.stage-*` dir, the partition entry names it
-    * touched, and its sidecar payloads.
+    * touched, its sidecar payloads and the tap its write read through.
     */
   private final case class Staged(dir: Path, touched: Seq[String],
                                   stats: Seq[(String, String, ColZone)],
                                   blooms: Seq[(String, String, Array[Long])],
-                                  ndv: Seq[(String, String, Array[Long])])
+                                  ndv: Seq[(String, String, Array[Long])],
+                                  tap: Option[KeyProbe.Tap] = None)
 
   /** The one staging step of every data commit: attach the table's field
     * ids (id-carrying tables write EVERY data file id-annotated, whatever
@@ -2352,11 +2337,13 @@ object ManifestTable {
     * the partition dirs it touched and harvest its sidecars. Sidecars
     * harvest from the STAGE (rel paths are version-agnostic) and are dropped
     * next to whatever number the claim lands on. `df = None` stages an
-    * empty claim vehicle: no entry, no sidecar.
+    * empty claim vehicle: no entry, no sidecar. `tapKeys = Some(ks)` writes
+    * through a [[KeyProbe.tap]] that counts the rows and gathers their `ks`
+    * tuples in the same job.
     */
   private def stageData(spark: SparkSession, root: String, df: Option[DataFrame],
                         spec: Option[PartSpec], statsCols: Seq[String],
-                        bloomCols: Seq[String]): Staged = {
+                        bloomCols: Seq[String], tapKeys: Option[Seq[String]] = None): Staged = {
     val (fs, rootP) = fsOf(spark, root)
     val dir = new Path(rootP, ".stage-" + java.util.UUID.randomUUID().toString.take(12))
     df match {
@@ -2364,14 +2351,15 @@ object ManifestTable {
         fs.mkdirs(dir)
         Staged(dir, Nil, Nil, Nil, Nil)
       case Some(d0) =>
-        val d = FieldIds.attachDf(d0, fieldIdsForWrite(spark, root))
+        val tap = tapKeys.map(KeyProbe.tap(d0, _))
+        val d = FieldIds.attachDf(tap.fold(d0)(_.frame), fieldIdsForWrite(spark, root))
         stageWrite(d, spec, dir, root)
         val touched = spec.fold(Seq(""))(s => listStagedPartDirs(fs, dir, s.physNames.length))
         val stats = if (statsCols.nonEmpty) harvestStats(fs, dir, statsCols) else Nil
         val (blooms, ndv) =
           if (bloomCols.nonEmpty) harvestBloomsAndNdv(spark, fs, dir, bloomCols, Some(d.schema))
           else (Nil, Nil)
-        Staged(dir, touched, stats, blooms, ndv)
+        Staged(dir, touched, stats, blooms, ndv, tap)
     }
   }
 
@@ -2382,10 +2370,14 @@ object ManifestTable {
     * matched key's old row can live there, invisible to any dir-name
     * restriction (ADVICE r18 — the old `p.nonEmpty` guard let mergeDv keep
     * its touched-partition fast path and leave stale rows unmasked after
-    * set_partitioning evolved an unpartitioned table).
+    * set_partitioning evolved an unpartitioned table), and so is a data
+    * version older than the specs describe ([[PartSpecs.layout]]).
     */
-  private def mixedLayout(entries: Seq[(String, Long)], spec: PartSpec): Boolean =
-    entries.exists { case (p, _) => !spec.matchesLayout(p) }
+  private def mixedLayout(spark: SparkSession, root: String, entries: Seq[(String, Long)],
+                          spec: PartSpec): Boolean = {
+    val from = PartSpecs.layout(spark, root)._2
+    entries.exists { case (p, dv) => dv < from || !spec.matchesLayout(p) }
+  }
 
   /** INSERT-only commit: `df`'s rows land as a fresh data version ADDED
     * alongside every touched partition's existing entries — no read, no
@@ -2395,15 +2387,17 @@ object ManifestTable {
     * conflict. The caller owns key uniqueness (appending an existing key
     * duplicates it — use [[mergeDv]] for upserts). Blind appends stay
     * correct under a MIXED layout (partition evolution): every appended
-    * entry is new, nothing is superseded by name.
+    * entry is new, nothing is superseded by name. An append of no row to
+    * an existing table publishes nothing and returns the current version.
     */
   def append(df: DataFrame, root: String, spec: Option[PartSpec],
              statsCols: Seq[String] = Nil,
              bloomCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
     val (fs, rootP) = fsOf(spark, root)
-    val st = stageData(spark, root, Some(df), spec, statsCols, bloomCols)
     val base = currentVersion(spark, root)
+    val st = stageData(spark, root, Some(df), spec, statsCols, bloomCols, base.map(_ => Nil))
+    if (st.tap.exists(_.count() == 0)) { fs.delete(st.dir, true); return base.get }
     val (prev, dvCarry) = base
       .map(v => (entriesOf(fs, rootP, v), dvOf(fs, rootP, v)))
       .getOrElse((Seq.empty[(String, Long)], None))
@@ -2455,98 +2449,93 @@ object ManifestTable {
     * live data versions' parquet footers (merged across versions, so an
     * additively-evolved table reports the union) plus the hive-style
     * partition column — the schema-less front-door load path
-    * ([[GraftSource]]).
+    * ([[GraftSource]]). ONE footer per data version, read on the driver:
+    * a version's files come from one staged write of one frame
+    * ([[stageData]]; [[adoptSnapshot]] moves such a version), so they share a schema.
     */
   def inferSchema(spark: SparkSession, root: String,
                   asOfVersion: Option[Long] = None): StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
     val plan = planPrune(spark, root, versionOf(spark, root, asOfVersion))
     require(plan.kept.nonEmpty, s"manifest table $root version ${plan.v} holds no partitions")
-    ManifestScan.inferSchema(spark, plan.files)
+    val conf = fsOf(spark, root)._1.getConf
+    ManifestScan.inferSchema(spark, plan.files,
+      parMapOrdered(plan.kept.flatMap(_._3.headOption)) { case (_, st) =>
+        new org.apache.parquet.hadoop.Footer(st.getPath, org.apache.spark.sql.execution
+          .datasources.parquet.ParquetFooterReader.readFooter(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf), SKIP_ROW_GROUPS))
+      })
   }
 
   /** MERGE with O(changed rows) write amplification — the merge-on-read
     * composition of [[deleteWhere]] + append (Delta/Iceberg DV-backed
-    * UPDATE): the batch keys' CURRENT row positions join the deletion
-    * vector, and the batch itself lands as a fresh data version the
-    * manifest adds ALONGSIDE each touched partition's existing entries —
-    * one atomic commit, bytes written = O(batch rows + accumulated
-    * deletes) — the DV's per-file bitmap file is rewritten whole (base ∪
-    * this batch's positions, OR-ed on the driver from ONE positions job)
-    * every commit until [[compact]] drops it — never O(touched partitions).
-    * The copy-on-write alternative
+    * UPDATE): the batch lands as a fresh data version ALONGSIDE each touched
+    * partition's entries, and the rows its keys match join the deletion
+    * vector, in one atomic commit. Bytes written = O(batch rows +
+    * accumulated deletes): the DV's bitmap file is rewritten whole until
+    * [[compact]] drops it, where the copy-on-write alternative
     * ([[graft.ops.Upsert.mergePartitionPruned]] + [[commit]]) rewrites every
-    * touched partition per batch, the engine's largest write amplification
-    * at 100 TB with hot partitions (VERDICT r12 #1).
+    * touched partition. TWO jobs: the stage write, which gathers the
+    * batch's keys as it lands them, and ONE positions scan filtered by that
+    * key set ([[KeyProbe.semiJoin]]: a `left_semi` join's matches, with no
+    * build job), its bitmaps OR-ed into the base DV on the driver. A merge
+    * that lands no row and has no delete leg publishes nothing and returns
+    * the current version.
     *
     * Contracts: `batch` is unique per `keys` (compose with
-    * [[graft.ops.Upsert.lastWins]]; COMPOSITE keys join as the full column
-    * set — the lineitem `(l_orderkey, l_linenumber)` shape); with `spec`,
-    * partition values are immutable per key (the
-    * [[graft.cdc.Dispatch.runPartitioned]] contract) so the position scan
-    * reads only the partitions the batch touches. MIXED layouts (partition
-    * evolution left dirs under an older spec) stay CORRECT: the
-    * touched-partition restriction only holds when every live dir shares
-    * the current spec's physical column — otherwise a matched key's old
-    * row may live in an old-layout dir the batch's dir names cannot
-    * address, so the scan falls back to the full snapshot (the
-    * `deletePartitions` hint is dropped for the same reason). Compact to
-    * restore the O(touched) fast path.
+    * [[graft.ops.Upsert.lastWins]]; COMPOSITE keys match as one tuple); with
+    * `spec`, partition values are immutable per key, so the positions scan
+    * reads only the touched partitions — except under a MIXED layout
+    * ([[mixedLayout]]), where a matched key's old row may live in a dir the
+    * batch's dir names cannot address: the scan reads the full snapshot and
+    * drops the `deletePartitions` hint. Compact to restore the fast path.
     * CONCURRENCY: the batch and DV stage under `.stage-*` and claim their
-    * numbers only at publish ([[publishStaged]]), so the multi-job write
-    * never occupies a version number a concurrent committer would classify
-    * as a crashed orphan. A colliding mergeDv rebase-retries ONLY past
-    * winners that changed no existing file and left the DV untouched
-    * (blind [[append]]s — the staged positions stay valid); any other
-    * winner (rewrite, delete, another merge — its DV pointer names a
-    * DV this commit's base DV ∪ positions union did not see) fails
-    * loudly: re-run the merge against the current snapshot, or route
-    * concurrent merge writers through one committing driver.
+    * numbers only at publish ([[publishStaged]]). A colliding mergeDv
+    * rebase-retries ONLY past winners that changed no existing file and
+    * left the DV untouched (blind [[append]]s); any other winner fails it
+    * loudly: re-run the merge, or route merge writers through one driver.
     *
-    * `deletePartitions = Some(dirs)` restricts the DELETE leg's position
-    * scan to the named partition dirs (hive-style `col=value` names) —
-    * pass it when the caller knows where the deleted keys live (the
-    * [[replicate]] path: CDF delete rows carry their partition value) to
-    * keep the delete leg O(touched) instead of a full-table position scan.
+    * `deleteKeys` (WHEN MATCHED DELETE) masks its keys' rows with no append;
+    * `deletePartitions = Some(dirs)` restricts that leg's scan to the named
+    * hive-style dirs (the [[replicate]] path: CDF delete rows carry their
+    * partition value). Both are read after the batch is staged, so a caller
+    * may hand over a leg its own write gathered; `deleteKeys` is collected
+    * on the driver, which runs no job for a local frame.
     *
-    * Read cost grows with accumulated appends (more files per partition,
-    * a growing DV to load and filter by) — schedule [[compact]] to fold the append log
-    * back into one clean version, exactly Delta's merge-on-read + OPTIMIZE
-    * pairing. Returns the committed manifest version.
+    * Read cost grows with accumulated appends: schedule [[compact]] (Delta's
+    * merge-on-read + OPTIMIZE pairing). Returns the committed version.
     */
   def mergeDv(batch: DataFrame, root: String, schema: StructType,
               keys: Seq[String], spec: Option[PartSpec],
               statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-              deleteKeys: Option[DataFrame] = None,
-              deletePartitions: Option[Seq[String]] = None): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+              deleteKeys: => Option[DataFrame] = None,
+              deletePartitions: => Option[Seq[String]] = None): Long = {
+    import org.apache.spark.sql.functions.col
     require(keys.nonEmpty, "mergeDv: at least one key column is required")
     val spark = batch.sparkSession
     val (fs, rootP) = fsOf(spark, root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(
         s"mergeDv: $root has no committed version — create the table with commit() first"))
-    val st = stageData(spark, root, Some(batch), spec, statsCols, bloomCols)
+    val st = stageData(spark, root, Some(batch), spec, statsCols, bloomCols, Some(keys))
+    val (dels, delParts) = (deleteKeys, deletePartitions)
+    if (st.tap.get.count() == 0 && dels.isEmpty) { fs.delete(st.dir, true); return cur }
     // one manifest read serves the mixed-layout check and the publish args
     // (was three reads of the same file per merge commit)
     val curEntries = entriesOf(fs, rootP, cur)
     val curDv = dvOf(fs, rootP, cur)
-    val mixed = spec.exists(s => mixedLayout(curEntries, s))
-    // DV delta = positions of the upsert keys ∪ the DELETE leg's keys (WHEN
-    // MATCHED DELETE: masked WITHOUT an append) from ONE DV-masked scan,
-    // collected as bitmaps and OR-ed into the base DV on the driver. The
-    // scan reads the touched partitions (partCol immutable per key) ∪
-    // `deletePartitions`; deleted keys may live anywhere, so a delete leg
-    // without that hint, an unpartitioned table or a mixed layout scans the
-    // full snapshot.
-    val keySet = (batch +: deleteKeys.toSeq).map(_.select(keys.map(col): _*))
-      .reduce(_ unionByName _)
-    val deleteRestrict = deleteKeys.fold(Option(Seq.empty[String]))(_ => deletePartitions)
+    val mixed = spec.exists(s => mixedLayout(spark, root, curEntries, s))
+    // DV delta = positions of the upsert keys ∪ the delete leg's keys, from
+    // the touched partitions ∪ `deletePartitions`; deleted keys may live
+    // anywhere, so a delete leg without that hint scans the full snapshot
+    val keySet = dels.fold(st.tap.get.picked())(d =>
+      st.tap.get.picked().unionByName(d.select(keys.map(col): _*)))
+    val deleteRestrict = dels.fold(Option(Seq.empty[String]))(_ => delParts)
     val restrict =
       if (mixed) None else for (_ <- spec; d <- deleteRestrict) yield st.touched.toSet ++ d
-    val dvStage = stageDv(spark, root, curDv, collectDv(
+    val dvStage = stageDv(spark, root, curDv, KeyProbe.semiJoin(
       scanFiles(spark, root, schema, planPrune(spark, root, cur, restrictTo = restrict),
-        withMeta = true)
-        .join(broadcast(keySet), keys, "left_semi")))
+        withMeta = true), keySet, keys).fold(Map.empty: Dv)(collectDv))
     // dvCarry0 = the base DV this commit's union consumed — the rebase
     // conflict check compares the winner's DV pointer against it (the
     // manifest's own #dv comes from dvStage, not the carry)

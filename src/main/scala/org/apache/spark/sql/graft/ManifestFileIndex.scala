@@ -1,12 +1,13 @@
 package org.apache.spark.sql.graft
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{DEFAULT_PARTITION_NAME, unescapePathName}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionPath, PartitionSpec, PartitioningAwareFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetAccess, ParquetFileFormat}
 import org.apache.spark.sql.types.StructType
 
 /** File index over data files a manifest snapshot has ALREADY listed
@@ -84,13 +85,14 @@ object ManifestScan {
     }
   }
 
-  /** The schema of `files`: one footer merge over all of them (a single
-    * Spark job) plus the hive-style dir columns, typed by inference as a
-    * directory read types them (the first data version's type wins).
+  /** The schema of `files`: `footers` (one per data version, ascending)
+    * merged on the driver as a `mergeSchema` read folds its files, plus the
+    * hive-style dir columns, typed by inference as a directory read types
+    * them (the first data version's type wins).
     */
-  def inferSchema(spark: SparkSession, files: Seq[(Path, FileStatus)]): StructType = {
-    val data = new ParquetFileFormat().inferSchema(spark, Map("mergeSchema" -> "true"),
-      files.map(_._2)).getOrElse(new StructType())
+  def inferSchema(spark: SparkSession, files: Seq[(Path, FileStatus)],
+                  footers: Seq[Footer]): StructType = {
+    val data = GraftParquetAccess.readSchema(footers, spark).getOrElse(new StructType())
     // inference takes one base dir and one layout per call
     val dirCols = files.groupBy { case (base, f) =>
         (base, dirColumns(base, f.getPath.getParent).map(_._1)) }

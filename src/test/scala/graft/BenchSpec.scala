@@ -178,6 +178,20 @@ class BenchSpec extends SparkSuite {
       ("ManifestTable.scala", "planPrune", "listDataStatus(")), calls)
   }
 
+  test("a change batch applies in one pass: no sink checkpoint, no mergeDv broadcast join, no schema-merge job") {
+    // the sink's stage write gathers its delete leg, mergeDv's positions
+    // scan filters by a broadcast variable, and schema inference reads
+    // footers on the driver
+    assert(callSites(Seq("localCheckpoint")).filter(_._1 == "GraftStreamSink.scala").isEmpty)
+    assert(callSites(Seq("broadcast")).filter(_._2 == "mergeDv").isEmpty)
+    import scala.jdk.CollectionConverters._
+    val merging = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        java.nio.file.Files.readString(p).contains("\"mergeSchema\" -> \"true\""))
+      .map(_.getFileName.toString).toSeq
+    assert(merging.isEmpty, merging)
+  }
+
   test("compact tail stays inside the 2000-char capture at 250 queries (r19)") {
     // worst realistic shape: every id present, a mix of sub-10s (2-digit)
     // and 10-100s (1-digit) timings, a few failures

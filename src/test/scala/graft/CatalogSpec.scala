@@ -240,6 +240,31 @@ class CatalogSpec extends SparkSuite {
     spark.sql("DROP TABLE gcat.db.t_relayout")
   }
 
+  test("mergeDv after a restore to a retired partition layout masks the old layout's row") {
+    // the restored snapshot's dirs were written under truncate(2000, k); the
+    // current spec truncate(1000, k) reuses the dir column, so k = 3500 maps
+    // to k_trunc=3000 while its row lives in the old k_trunc=2000
+    import spark.implicits._
+    wh
+    spark.sql("DROP TABLE IF EXISTS gcat.db.t_relayout_merge")
+    spark.sql("CREATE TABLE gcat.db.t_relayout_merge (k BIGINT, v STRING) " +
+      "PARTITIONED BY (truncate(2000, k))")
+    spark.sql("INSERT INTO gcat.db.t_relayout_merge SELECT id * 500, 'a' FROM range(10)")
+    val root = s"$wh/db/t_relayout_merge"
+    val v1 = ManifestTable.currentVersion(spark, root).get
+    spark.sql("CALL gcat.system.set_partitioning('db.t_relayout_merge', '')")
+    spark.sql("CALL gcat.system.compact('db.t_relayout_merge')")
+    spark.sql("CALL gcat.system.set_partitioning('db.t_relayout_merge', 'truncate(1000, k)')")
+    spark.sql(s"CALL gcat.system.restore('db.t_relayout_merge', $v1)")
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, v STRING")
+    ManifestTable.mergeDv(Seq((3500L, "z")).toDF("k", "v"), root, schema, Seq("k"),
+      graft.sources.PartSpecs.currentOf(spark, root))
+    assert(ManifestTable.read(spark, root, schema).filter("k = 3500").select("v")
+      .as[String].collect().toSeq == Seq("z"))
+    assert(ManifestTable.read(spark, root, schema).count() == 10)
+    spark.sql("DROP TABLE gcat.db.t_relayout_merge")
+  }
+
   test("VERSION AS OF time travel reads the pinned snapshot") {
     val t = freshTable("t7")
     spark.sql(s"INSERT INTO $t VALUES (1, 'a', 'x')")

@@ -474,4 +474,50 @@ class PropertySpec extends SparkSuite {
       }
     }
   }
+
+  test("mergeDv masks exactly the rows a left_semi join on its keys matches") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    import graft.sources.ManifestTable
+    val dec = DecimalType(12, 2)
+    def decs(xs: String*) = xs.map(x => if (x == null) null else new java.math.BigDecimal(x))
+    // (name, table key types, batch key types, one value pool per key)
+    val cases: Seq[(String, Seq[DataType], Seq[DataType], Seq[Seq[Any]])] = Seq(
+      ("composite", Seq(LongType, StringType), Seq(LongType, StringType),
+        Seq(Seq(1, 2, 3, null), Seq("a", "b", null))),
+      ("int batch key, long table key", Seq(LongType), Seq(IntegerType), Seq((0 until 12) :+ null)),
+      ("double", Seq(DoubleType), Seq(DoubleType),
+        Seq(Seq(Double.NaN, -0.0, 0.0, 1.5, -1.5, null))),
+      ("decimal and string", Seq(dec, StringType), Seq(dec, StringType),
+        Seq(decs("1.10", "2.25", "-3.00", "0.00", null), Seq("x", "", "y", null))))
+    def conv(x: Any, t: DataType): Any = (x, t) match {
+      case (i: Int, LongType) => i.toLong
+      case _ => x
+    }
+    for ((name, tTypes, bTypes, pools) <- cases; seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val keys = pools.indices.map(i => s"k$i")
+      def pick(): Seq[Any] = pools.map(p => p(rnd.nextInt(p.size)))
+      def schemaOf(types: Seq[DataType]) = StructType(keys.zip(types).map { case (k, t) =>
+        StructField(k, t) } :+ StructField("v", StringType))
+      def frame(schema: StructType, ks: Seq[Seq[Any]], tag: String) = spark.createDataFrame(
+        ks.zipWithIndex.map { case (k, i) => Row.fromSeq(k.zip(schema.fields).map { case (x, f) =>
+          conv(x, f.dataType) } :+ s"$tag$i") }.asJava, schema)
+      val tSchema = schemaOf(tTypes)
+      val root = java.nio.file.Files.createTempDirectory("keyprobe").toString + "/t"
+      ManifestTable.commit(frame(tSchema, Seq.fill(40)(pick()), "old"), root, None)
+      val batch = frame(schemaOf(bTypes), Seq.fill(6)(pick()).distinct, "new")
+      val dels = frame(schemaOf(bTypes), Seq.fill(4)(pick()), "del").drop("v")
+      // the reference: Spark's own join over the same keys
+      val expected = ManifestTable.read(spark, root, tSchema)
+        .join(batch.select(keys.map(col): _*).unionByName(dels), keys, "left_anti")
+        .collect().map(_.toString).sorted.toSeq
+      ManifestTable.mergeDv(batch, root, tSchema, keys, None, deleteKeys = Some(dels))
+      val (old, landed) = ManifestTable.read(spark, root, tSchema).collect().toSeq
+        .partition(_.getString(keys.size).startsWith("old"))
+      assert(old.map(_.toString).sorted == expected, s"$name seed $seed")
+      assert(landed.size == batch.count(), s"$name seed $seed")
+    }
+  }
 }

@@ -548,6 +548,52 @@ class StreamingSpec extends SparkSuite {
       "marker-less replay after a marker-write-window crash must not double-append")
   }
 
+  test("graft sink: one pass per batch, and a batch with nothing to apply publishes no version") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    import org.apache.spark.sql.graft.GraftStreamSink
+    val baseDir = java.nio.file.Files.createTempDirectory("gonepass").toString
+    val src = s"$baseDir/src"; val dst = s"$baseDir/dst"
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, p STRING, v BIGINT")
+    val spec = Some(PartSpec.Identity("p"))
+    def rows(r: String) = ManifestTable.read(spark, r, schema)
+      .as[(Long, String, Long)].collect().toSet
+    // a keyed batch over a local frame: the stage write and the positions scan
+    val keyed = new GraftStreamSink(spark.sqlContext, s"$baseDir/keyed", Some("p"), Seq("id"),
+      cdf = false)
+    keyed.addBatch(0L, Seq((1L, "a", 1L), (2L, "b", 2L)).toDF("id", "p", "v"))
+    assert(jobsIn { keyed.addBatch(1L, Seq((1L, "a", 10L), (5L, "b", 5L)).toDF("id", "p", "v")) }
+      <= 2)
+    assert(rows(s"$baseDir/keyed") == Set((1L, "a", 10L), (2L, "b", 2L), (5L, "b", 5L)))
+    // a cdf batch: the change feed's two map stages, then the same two jobs
+    ManifestTable.commit(Seq((1L, "a", 1L), (2L, "b", 2L), (3L, "b", 3L)).toDF("id", "p", "v"),
+      src, spec)
+    assert(ManifestTable.replicate(spark, src, dst, schema, Seq("id"), Some("p")) == 1)
+    ManifestTable.mergeDv(Seq((2L, "b", 22L), (4L, "a", 4L)).toDF("id", "p", "v"),
+      src, schema, Seq("id"), spec, deleteKeys = Some(Seq((3L, "b")).toDF("id", "p")),
+      deletePartitions = Some(Seq("p=b")))
+    var applied = 0
+    assert(jobsIn { applied = ManifestTable.replicate(spark, src, dst, schema, Seq("id"),
+      Some("p")) } <= 4)
+    assert(applied == 1 && rows(dst) == rows(src))
+    // a content-identical compaction: its change batch holds no row
+    ManifestTable.compact(spark, src, schema, spec)
+    val dstV = ManifestTable.currentVersion(spark, dst)
+    assert(ManifestTable.replicate(spark, src, dst, schema, Seq("id"), Some("p")) == 1)
+    assert(ManifestTable.currentVersion(spark, dst) == dstV && rows(dst) == rows(src))
+    assert(ManifestTable.replicate(spark, src, dst, schema, Seq("id"), Some("p")) == 0)
+    // empty append batches, partitioned and not: the batch is recorded, no version
+    for (part <- Seq(Some("p"), None)) {
+      val root = s"$baseDir/app-${part.isDefined}"
+      val app = new GraftStreamSink(spark.sqlContext, root, part, Nil, cdf = false)
+      app.addBatch(0L, Seq((1L, "a", 1L)).toDF("id", "p", "v"))
+      val v = ManifestTable.currentVersion(spark, root)
+      app.addBatch(1L, Seq.empty[(Long, String, Long)].toDF("id", "p", "v"))
+      assert(ManifestTable.currentVersion(spark, root) == v, part)
+      assert(app.lastCommitted() == 1L && rows(root) == Set((1L, "a", 1L)), part)
+    }
+  }
+
   test("graft sink compactEvery bounds file and version counts across many merge batches") {
     import spark.implicits._
     import graft.sources.ManifestTable
