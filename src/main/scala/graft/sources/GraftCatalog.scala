@@ -119,10 +119,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
   private def rootOf(ident: Identifier): String =
     dirOf(ident.namespace()) + "/" + ident.name()
 
-  private def isTable(root: String): Boolean = {
-    val (fs, p) = fsAt(root)
-    fs.exists(new Path(p, GraftDdl.FileName)) || ManifestTable.exists(spark, root)
-  }
+  private def isTable(root: String): Boolean = ManifestTable.listRoot(spark, root).isTable
 
   private def display(ident: Identifier): String =
     (catName +: ident.namespace().toSeq :+ ident.name()).mkString(".")
@@ -150,7 +147,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
 
   override def loadTable(ident: Identifier): Table = {
     val root = rootOf(ident)
-    if (isTable(root)) new GraftV2Table(root, display(ident), None)
+    val listed = ManifestTable.listRoot(spark, root)
+    if (listed.isTable) new GraftV2Table(root, display(ident), None, Some(listed))
     else {
       // Iceberg-style metadata tables: gcat.db.t.history / gcat.db.t.files
       // (a real table named `history` under namespace db.t wins above)
@@ -169,17 +167,17 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     */
   override def loadTable(ident: Identifier, version: String): Table = {
     val root = rootOf(ident)
-    if (!isTable(root)) throw new NoSuchTableException(ident)
+    val listed = ManifestTable.listRoot(spark, root)
+    if (!listed.isTable) throw new NoSuchTableException(ident)
     val v = version.toLongOption.orElse(
       ManifestTable.tags(spark, root).get(version.trim)).orElse(
-      ManifestTable.refs(spark, root).get(version.trim)) // branch head
+      listed.refHeads.get(version.trim)) // branch head
       .getOrElse(throw new IllegalArgumentException(
         s"graft VERSION AS OF takes a manifest version number, a tag name, " +
           s"or a branch name, got '$version' — known tags: " +
           ManifestTable.tags(spark, root).keys.toSeq.sorted.mkString(", ") +
-          "; branches: " +
-          ManifestTable.refs(spark, root).keys.toSeq.sorted.mkString(", ")))
-    new GraftV2Table(root, display(ident), Some(v))
+          "; branches: " + listed.refHeads.keys.toSeq.sorted.mkString(", ")))
+    new GraftV2Table(root, display(ident), Some(v), Some(listed))
   }
 
   /** `TIMESTAMP AS OF <t>` — Spark hands the instant in epoch MICROSECONDS;
@@ -190,12 +188,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val root = rootOf(ident)
-    if (!isTable(root)) throw new NoSuchTableException(ident)
-    val v = ManifestTable.versionAtTimestamp(spark, root, timestamp).getOrElse(
+    val listed = ManifestTable.listRoot(spark, root)
+    if (!listed.isTable) throw new NoSuchTableException(ident)
+    val v = ManifestTable.versionAtTimestamp(listed, timestamp).getOrElse(
       throw new IllegalArgumentException(
         s"TIMESTAMP AS OF: ${display(ident)} has no commit at or before " +
           s"epoch-µs $timestamp (earlier than the first retained commit)"))
-    new GraftV2Table(root, display(ident), Some(v))
+    new GraftV2Table(root, display(ident), Some(v), Some(listed))
   }
 
   /** Shared CREATE-shape validation: provider/location checks, the
@@ -781,7 +780,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     // memoized manifest bodies (the (mtime,len) validator alone has a
     // 1 ms blind spot)
     ManifestTable.invalidateBodyCache(p.toString)
-    PartSpecs.invalidate(root)
+    GraftDdl.invalidate(root)
     if (!isTable(root)) false else fs.delete(p, true)
   }
 
@@ -1109,16 +1108,6 @@ private[sources] object FieldIds {
       }.toIndexedSeq: _*)
     }
 
-  // (mtime, len) of the _ddl.json the memoized ids were parsed from — one
-  // getFileStatus validates a hit, so the per-read/per-commit seam in
-  // [[ManifestTable]] never re-lists or re-parses on the hot path. Same-
-  // process sidecar rewrites also invalidate explicitly ([[GraftDdl.save]]);
-  // the stamp covers cross-path writers and other processes.
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Map[String, Int])]()
-
-  def invalidate(root: String): Unit = memo.remove(root)
-
   /** The declared field ids of the table at `root` — `Map.empty` for
     * id-less (pre-field-id or path-first) tables. This is THE seam every
     * [[ManifestTable]] data read and write consults, so whichever path
@@ -1126,80 +1115,15 @@ private[sources] object FieldIds {
     * programmatic commit, compaction) the table's files stay uniformly
     * id-annotated and its reads id-resolved: ONE id-less data file in an
     * id-carrying table would fail every later read (the reader refuses
-    * missing ids rather than silently matching by name). Enabling the
-    * session's by-id parquet resolution rides along the first id hit, so
-    * programmatic readers that never initialized a catalog still resolve
-    * renamed columns correctly.
+    * missing ids rather than silently matching by name). Read from the
+    * cached sidecar ([[GraftDdl.sidecar]]: one status call when warm, and
+    * the refusals of an unreadable or vanished id map on a miss). Enabling
+    * the session's by-id parquet resolution rides along the first id hit,
+    * so programmatic readers that never initialized a catalog still
+    * resolve renamed columns correctly.
     */
-  def of(spark: SparkSession, root: String): Map[String, Int] = {
-    val p = new Path(root, GraftDdl.FileName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stamp =
-      try { val st = fs.getFileStatus(p); (st.getModificationTime, st.getLen) }
-      catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
-    memo.get(root) match {
-      case (`stamp`, ids) => enable(spark, ids)
-      case prev =>
-        // full load (staged-#ddl authority + self-healing promote included)
-        // only on miss — i.e. first touch per process, or a sidecar change
-        def statNow(): (Long, Long) =
-          try { val st = fs.getFileStatus(p); (st.getModificationTime, st.getLen) }
-          catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
-        // None = the sidecar existed at stat time but the load missed it
-        // (or vice versa) — a transient stat-vs-load disagreement, never a
-        // steady state. Some(empty) = genuinely id-less (path-first root,
-        // or a declared pre-field-id table) — the common case, zero retries.
-        def loadNow(st: (Long, Long)): Option[Map[String, Int]] =
-          if (st == (-1L, -1L) && !GraftDdl.hasStaged(spark, root)) Some(Map.empty[String, Int])
-          else GraftDdl.load(spark, root).map(d => parse(d.props))
-        // An id-carrying table's sidecar cannot legitimately become id-less
-        // mid-process: an empty/missing read here means a CONCURRENT
-        // ALTER's install is inside its replacement window in another JVM
-        // (found by the two-JVM ALTER race, r20 — the insert that lost
-        // this race wrote ONE id-less file and bricked every later read of
-        // the table). Wait out the window; if the sidecar truly vanished,
-        // failing the write loudly beats poisoning the table.
-        val prevIds = Option(prev).map(_._2).getOrElse(Map.empty[String, Int])
-        var st = stamp
-        var loaded = loadNow(st)
-        var attempt = 0
-        while (attempt < 5 &&
-            (loaded.isEmpty || (loaded.get.isEmpty && prevIds.nonEmpty))) {
-          attempt += 1
-          Thread.sleep(20L * attempt)
-          st = statNow()
-          loaded = loadNow(st)
-        }
-        // loaded == None after every retry while the stat stamp STILL says
-        // the sidecar exists is the same poisoning hazard with no prior
-        // memo (ADVICE r20): a first-touch process falling back to
-        // Map.empty here would memoize "id-less" under the current stamp
-        // and write the one id-less file that bricks every later read —
-        // refuse loudly instead. The Map.empty fallback stays only for the
-        // genuinely sidecar-less root: no _ddl.json at final stat (an
-        // orphan staged .ddl-*.json with no manifest directive is
-        // pre-publish crash debris, not authority — vacuum sweeps it).
-        // hasStaged: ids may live ONLY in a staged-#ddl directive while the
-        // published sidecar is still absent — a persistent load failure
-        // there is the same poisoning hazard, not a sidecar-less root
-        // (ADVICE r21)
-        if (loaded.isEmpty && (st != (-1L, -1L) || GraftDdl.hasStaged(spark, root)))
-          throw new IllegalStateException(
-            s"field-id sidecar for $root is unreadable: ${GraftDdl.FileName} " +
-              "(or its staged-#ddl authority) exists but did not load after " +
-              "retries — refusing to guess an id-less schema (one id-less " +
-              "data file would fail every later read of an id-carrying table)")
-        val ids = loaded.getOrElse(Map.empty)
-        if (ids.isEmpty && prevIds.nonEmpty)
-          throw new IllegalStateException(
-            s"field-id sidecar for $root vanished: the table declared field ids " +
-              s"(${prevIds.size} columns) but ${GraftDdl.FileName} is unreadable " +
-              "after retries — refusing to proceed with an id-less schema (one " +
-              "id-less data file would fail every later read of this table)")
-        memo.put(root, (st, ids))
-        enable(spark, ids)
-    }
-  }
+  def of(spark: SparkSession, root: String): Map[String, Int] =
+    enable(spark, GraftDdl.sidecar(spark, root).fieldIds)
 
   private def enable(spark: SparkSession, ids: Map[String, Int]): Map[String, Int] = {
     if (ids.nonEmpty &&
@@ -1312,9 +1236,7 @@ object Checks {
     * have none.
     */
   def forTable(spark: SparkSession, root: String): Map[String, String] =
-    GraftDdl.load(spark, root)
-      .map(_.props.view.filterKeys(_.startsWith(Prefix)).toMap)
-      .getOrElse(Map.empty)
+    GraftDdl.sidecar(spark, root).checks
 
   /** The predicate must analyze against the declared schema (zero-row
     * probe — no data touched) and be deterministic.
@@ -1429,8 +1351,7 @@ private[sources] object GraftDdl {
             (if (old.isDefined) " (previous sidecar re-installed)" else ""))
       }
     }
-    FieldIds.invalidate(root)
-    PartSpecs.invalidate(root)
+    invalidate(root)
   }
 
   /** Write the DDL under a unique invisible staged name inside `root` and
@@ -1447,42 +1368,20 @@ private[sources] object GraftDdl {
     name
   }
 
-  /** Name of the live staged-DDL authority, if any: the NEWEST retained
-    * manifest's `#ddl` directive, when the staged file it names still
-    * exists (i.e. an RTAS committed but its sidecar promotion has not
-    * completed). Gated on a cheap staged-file listing so the common no-RTAS
-    * load never scans manifests. A staged file no directive names is
-    * pre-publish crash debris, never authority — vacuum sweeps it.
+  /** Name of the live staged-DDL authority in listing `l`, if any: the
+    * NEWEST retained manifest's `#ddl` directive, when the staged file it
+    * names still exists (i.e. an RTAS committed but its sidecar promotion
+    * has not completed). Gated on the listing's staged names so the common
+    * no-RTAS load never reads a manifest. A staged file no directive names
+    * is pre-publish crash debris, never authority — vacuum sweeps it.
     */
-  private def stagedName(spark: SparkSession, root: String): Option[String] = {
-    val rootP = new Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootP)) return None
-    val stagedNames = fs.listStatus(rootP).map(_.getPath.getName)
-      .filter(n => n.startsWith(StagedPrefix) && n.endsWith(".json")).toSet
-    if (stagedNames.isEmpty) return None
-    ManifestTable.versions(spark, root).reverseIterator
+  private def stagedName(spark: SparkSession, root: String,
+                         l: ManifestTable.RootListing): Option[String] =
+    if (l.stagedDdl.isEmpty) None
+    else l.versions.reverseIterator
       .flatMap(v => ManifestTable.directiveOf(spark, root, v, "ddl"))
       .nextOption()                       // ONLY the newest directive counts
-      .filter(stagedNames.contains)       // promoted already -> sidecar rules
-  }
-
-  /** Whether the table's schema authority may live ONLY in a staged file
-    * while `_ddl.json` is still absent — the one case where a sidecar-less
-    * root is not simply id-less ([[FieldIds.of]], [[PartSpecs.of]]).
-    */
-  def hasStaged(spark: SparkSession, root: String): Boolean =
-    stagedName(spark, root).isDefined
-
-  private def stagedAuthority(spark: SparkSession, root: String): Option[(Path, Ddl)] =
-    stagedName(spark, root).flatMap { name =>
-      val p = new Path(root, name)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // a CONCURRENT loader can promote-and-delete between our listing
-      // and this read — by then the sidecar it installed is authoritative
-      try Some((p, parse(readBytes(fs, p))))
-      catch { case _: java.io.FileNotFoundException => None }
-    }
+      .filter(l.stagedDdl.contains)       // promoted already -> sidecar rules
 
   /** Parse a STAGED sidecar by name without promoting it — the write
     * seam's lookahead for commits that flip the schema atomically with
@@ -1497,41 +1396,165 @@ private[sources] object GraftDdl {
     if (!fs.exists(p)) None else Some(parse(readBytes(fs, p)))
   }
 
-  def load(spark: SparkSession, root: String): Option[Ddl] = {
-    stagedAuthority(spark, root) match {
-      case Some((stagedP, d)) =>
+  def load(spark: SparkSession, root: String): Option[Ddl] =
+    load(spark, root, ManifestTable.listRoot(spark, root))
+
+  /** The table's DDL as of root listing `l`: the staged `#ddl` authority,
+    * promoted, else the live `_ddl.json` through the [[sidecar]] cache
+    * (the listing's status of the file is its stamp, so a warm load reads
+    * nothing more).
+    */
+  def load(spark: SparkSession, root: String, l: ManifestTable.RootListing): Option[Ddl] = {
+    val staged = stagedName(spark, root, l).map(new Path(root, _))
+    staged.flatMap(readLive(l.fs, _)) match {
+      case Some(d) =>
         // promote: install the sidecar, then retire the staged authority —
         // self-heals the crash window between the RTAS manifest rename and
         // sidecar install. Failure to promote (read-only reader) still
         // serves the correct schema from the staged copy.
         try {
           d.schema.foreach(s => save(spark, root, s, d.partCol, d.props))
-          val fs = stagedP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(stagedP, false)
+          l.fs.delete(staged.get, false)
         } catch { case scala.util.control.NonFatal(_) => () }
         Some(d)
-      case None =>
-        val p = new Path(root, FileName)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // TRANSIENT-read tolerance (r18, found by the two-JVM ALTER race):
-        // the sidecar install is one atomic data-file rename, but
-        // Hadoop's LocalFileSystem moves the `.crc` shadow SEPARATELY — a
-        // reader landing between the two sees a ChecksumException (and an
-        // object store's eventual list could briefly miss the fresh
-        // rename). The file is tiny and the install atomic, so a short
-        // bounded retry always converges to a complete old or new body.
-        var attempt = 0
-        while (true) {
-          try {
-            return if (!fs.exists(p)) None else Some(parse(readBytes(fs, p)))
-          } catch {
-            case e: java.io.IOException if attempt < 5 =>
-              attempt += 1
-              Thread.sleep(20L * attempt)
-          }
+      // a CONCURRENT loader promoted-and-deleted it after our listing — the
+      // sidecar it installed is authoritative
+      case None if staged.isDefined => readLive(l.fs, new Path(root, FileName))
+      case None => l.ddl.flatMap { st =>
+        val stamp = (st.getModificationTime, st.getLen)
+        Option(cache.get(root)).filter(_.stamp == stamp).map(_.ddl).getOrElse {
+          val d = readLive(l.fs, st.getPath)
+          d.foreach(x => cache.put(root, new Sidecar(stamp, Some(x))))
+          d
         }
-        None // unreachable
+      }
     }
+  }
+
+  /** The live `_ddl.json`, None when it is gone. TRANSIENT-read tolerance
+    * (r18, found by the two-JVM ALTER race): the sidecar install is one
+    * atomic data-file rename, but Hadoop's LocalFileSystem moves the
+    * `.crc` shadow SEPARATELY — a reader landing between the two sees a
+    * ChecksumException (and an object store's eventual list could briefly
+    * miss the fresh rename). The file is tiny and the install atomic, so a
+    * short bounded retry always converges to a complete old or new body.
+    */
+  private def readLive(fs: org.apache.hadoop.fs.FileSystem, p: Path): Option[Ddl] = {
+    var attempt = 0
+    while (true) {
+      try return Some(parse(readBytes(fs, p)))
+      catch {
+        case _: java.io.FileNotFoundException => return None
+        case _: java.io.IOException if attempt < 5 =>
+          attempt += 1
+          Thread.sleep(20L * attempt)
+      }
+    }
+    None // unreachable
+  }
+
+  /** One parsed sidecar, stamped with the `_ddl.json` (mtime, len) it was
+    * read at (`Missing` for a sidecar-less root), and the views of it
+    * every per-read and per-commit seam takes: field ids ([[FieldIds.of]]),
+    * partition specs and the [[PartSpecs.LayoutFromProp]] version
+    * ([[PartSpecs.layout]]) and CHECK constraints ([[Checks.forTable]]).
+    */
+  final class Sidecar(val stamp: (Long, Long), val ddl: Option[Ddl]) {
+    lazy val fieldIds: Map[String, Int] =
+      ddl.fold(Map.empty[String, Int])(d => FieldIds.parse(d.props))
+    /** Current-first: the active spec, then the history, newest first. */
+    lazy val specs: Seq[PartSpec] = ddl.toSeq.flatMap { d =>
+      d.schema.toSeq.flatMap { sch =>
+        d.partCol.map(PartSpec.parse(_, sch)).toSeq ++
+          PartSpecs.parseHistory(d.props).map(PartSpec.parse(_, sch))
+      }
+    }
+    lazy val layoutFrom: Long =
+      ddl.flatMap(_.props.get(PartSpecs.LayoutFromProp)).fold(0L)(_.toLong)
+    lazy val checks: Map[String, String] = ddl.fold(Map.empty[String, String])(
+      _.props.filter(_._1.startsWith(Checks.Prefix)))
+  }
+
+  private val Missing = (-1L, -1L)
+
+  // the ONE cache of parsed sidecars, per root. One getFileStatus validates
+  // a hit, so the per-read/per-commit seams never re-list or re-parse on
+  // the hot path. Same-process sidecar rewrites invalidate explicitly
+  // ([[save]], a dropped table); the stamp covers other processes.
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Sidecar]()
+
+  /** Forget the cached sidecar of every root under `root`. */
+  def invalidate(root: String): Unit = cache.keySet.removeIf(_.startsWith(root))
+
+  private def stampOf(fs: org.apache.hadoop.fs.FileSystem, p: Path): (Long, Long) =
+    try { val st = fs.getFileStatus(p); (st.getModificationTime, st.getLen) }
+    catch { case _: java.io.FileNotFoundException => Missing }
+
+  /** The table's sidecar: the cached parse while `_ddl.json`'s stamp — one
+    * status call — is unchanged, else a full [[load]] (staged-#ddl
+    * authority and its promotion included).
+    */
+  def sidecar(spark: SparkSession, root: String): Sidecar = {
+    val p = new Path(root, FileName)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stamp = stampOf(fs, p)
+    val hit = cache.get(root)
+    if (hit != null && hit.stamp == stamp) hit else refresh(spark, root, fs, p, stamp, hit)
+  }
+
+  private def refresh(spark: SparkSession, root: String, fs: org.apache.hadoop.fs.FileSystem,
+                      p: Path, stamp: (Long, Long), prev: Sidecar): Sidecar = {
+    // one load at stamp `st`: the sidecar, None when the stat and the load
+    // disagree (a transient window, never a steady state), and whether a
+    // staged-#ddl authority exists — ids may live ONLY there while the
+    // published sidecar is still absent (ADVICE r21)
+    def loadAt(st: (Long, Long)): (Option[Sidecar], Boolean) = {
+      val l = ManifestTable.listRoot(fs, p.getParent)
+      val staged = stagedName(spark, root, l).isDefined
+      (if (st == Missing && !staged) Some(new Sidecar(st, None))
+       else load(spark, root, l).map(d => new Sidecar(st, Some(d))), staged)
+    }
+    // An id-carrying table's sidecar cannot legitimately become id-less
+    // mid-process: an empty/missing read here means a CONCURRENT
+    // ALTER's install is inside its replacement window in another JVM
+    // (found by the two-JVM ALTER race, r20 — the insert that lost
+    // this race wrote ONE id-less file and bricked every later read of
+    // the table). Wait out the window; if the sidecar truly vanished,
+    // failing the write loudly beats poisoning the table.
+    val prevIds = Option(prev).fold(Map.empty[String, Int])(_.fieldIds)
+    var st = stamp
+    var (loaded, staged) = loadAt(st)
+    var attempt = 0
+    while (attempt < 5 && loaded.forall(_.fieldIds.isEmpty && prevIds.nonEmpty)) {
+      attempt += 1
+      Thread.sleep(20L * attempt)
+      st = stampOf(fs, p)
+      val again = loadAt(st)
+      loaded = again._1; staged = again._2
+    }
+    // loaded == None after every retry while the stat stamp STILL says
+    // the sidecar exists is the same poisoning hazard with no prior
+    // cache (ADVICE r20): caching "id-less" under the current stamp would
+    // write the one id-less file that bricks every later read — refuse
+    // loudly instead. The id-less fallback stays only for the genuinely
+    // sidecar-less root: no _ddl.json at final stat and no staged
+    // authority (an orphan staged .ddl-*.json with no manifest directive
+    // is pre-publish crash debris, not authority — vacuum sweeps it)
+    if (loaded.isEmpty && (st != Missing || staged))
+      throw new IllegalStateException(
+        s"field-id sidecar for $root is unreadable: $FileName " +
+          "(or its staged-#ddl authority) exists but did not load after " +
+          "retries — refusing to guess an id-less schema (one id-less " +
+          "data file would fail every later read of an id-carrying table)")
+    val side = loaded.getOrElse(new Sidecar(st, None))
+    if (side.fieldIds.isEmpty && prevIds.nonEmpty)
+      throw new IllegalStateException(
+        s"field-id sidecar for $root vanished: the table declared field ids " +
+          s"(${prevIds.size} columns) but $FileName is unreadable " +
+          "after retries — refusing to proceed with an id-less schema (one " +
+          "id-less data file would fail every later read of this table)")
+    cache.put(root, side)
+    side
   }
 }
 
@@ -1557,14 +1580,18 @@ private[sources] object GraftDdl {
   * (only the table LOCATION flows from the fallback), so sink modes stay
   * `.option("mergeKey", ...)`-addressed as documented on the provider.
   */
-class GraftV2Table(val root: String, displayName: String, asOf: Option[Long])
+class GraftV2Table(val root: String, displayName: String, asOf: Option[Long],
+                   listed: Option[ManifestTable.RootListing] = None)
     extends Table with SupportsRead with SupportsWrite with SupportsDeleteV2
     with SupportsRowLevelOperations with SupportsMetadataColumns
     with org.apache.spark.sql.graft.V1FallbackTable {
 
   private def spark: SparkSession = SparkSession.active
 
-  private lazy val ddl: Option[GraftDdl.Ddl] = GraftDdl.load(spark, root)
+  // the root listing the catalog resolved this table from, if any, also
+  // answers the DDL load's staged-authority and sidecar questions
+  private lazy val ddl: Option[GraftDdl.Ddl] =
+    GraftDdl.load(spark, root, listed.getOrElse(ManifestTable.listRoot(spark, root)))
 
   override def name(): String = displayName
 
@@ -2943,8 +2970,7 @@ private[sources] object GraftProcedures {
             Some(System.currentTimeMillis() * 1000L - (h * 3600e6).toLong)
           case _ => None
         }
-        ManifestTable.vacuum(s, t.root, args.getInt(1), cutoff)
-        Seq(row(ManifestTable.currentVersion(s, t.root).getOrElse(-1L)))
+        Seq(row(ManifestTable.vacuum(s, t.root, args.getInt(1), cutoff).getOrElse(-1L)))
       }
     })
 

@@ -43,6 +43,12 @@ object ManifestTable {
   private val StatsPrefix = "_stats."
   private val NdvPrefix = "_ndv."
   private def fmt(v: Long) = f"$v%08d"
+  /** `n`'s version number after `pfx` (`v00000003`, `_manifest.00000003`). */
+  private def numberAfter(n: String, pfx: String): Option[Long] = {
+    val rest = n.stripPrefix(pfx)
+    if (rest.length == n.length || rest.isEmpty || !rest.forall(_.isDigit)) None
+    else rest.toLongOption
+  }
 
   /** Inclusive column-range predicate for [[readPruned]]: rows with
     * `lo <= col <= hi`. Numeric bounds (and timestamps, as µs) compare in
@@ -69,41 +75,96 @@ object ManifestTable {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Head version of the session's ref, or None for a table that has never
-    * committed (orphan data dirs from a crashed first commit don't count —
-    * only a manifest makes a version real).
-    *
-    * UNBRANCHED tables (no `_ref.*` markers — every table until
-    * [[createBranch]]): the highest manifest number, as ever. BRANCHED
-    * tables share one manifest log across lineages (the Iceberg
-    * snapshots+refs model), so "current" is the head MARKER of the
-    * session's ref — `main` outside [[onBranch]] — not the numeric max;
-    * the ref check rides the same listing, zero extra I/O.
+  /** `_sink.batch.<id>`: a [[org.apache.spark.sql.graft.GraftStreamSink]]
+    * progress marker (the batch id rides the file name).
     */
-  def currentVersion(spark: SparkSession, root: String): Option[Long] = {
-    val (fs, p) = fsOf(spark, root)
-    if (!fs.exists(p)) None
-    else {
-      val names = fs.listStatus(p).map(_.getPath.getName)
-      val vs = names.filter(_.startsWith(ManifestPrefix))
-        .map(_.stripPrefix(ManifestPrefix).toLong)
-      if (vs.isEmpty) None
-      else if (!names.exists(_.startsWith(RefPrefix))) {
-        if (commitRefTL.get().isDefined) throw new IllegalStateException(
-          s"no such branch '${currentRef}' on $root — the table has no branches " +
-            "(CALL system.create_branch first)")
-        Some(vs.max)
-      } else {
-        val pfx = RefPrefix + currentRef + "."
-        val heads = names.filter(_.startsWith(pfx))
-          .flatMap(_.stripPrefix(pfx).toLongOption)
-        if (heads.isEmpty) throw new IllegalStateException(
-          s"no such branch '${currentRef}' on $root — known: " +
-            refNamesOf(names).sorted.mkString(", "))
-        Some(heads.max)
-      }
+  val SinkMarkerPrefix = "_sink.batch."
+
+  /** One listing of a table root, every name in it classified once: the
+    * ONE reader of the root directory. Manifest versions, branch ref
+    * markers and heads, the `_ddl.json` sidecar's status, the staged
+    * `.ddl-*.json` names and the sink's progress markers are all answers
+    * of this one listing; [[vacuum]] sweeps its raw `entries`. A caller
+    * that asks several questions about one moment, with no write of its
+    * own in between, lists once and asks them all here; the commit
+    * protocol's decisions (claim number, lineage head, rebase) always read
+    * a fresh listing taken after staging.
+    */
+  final class RootListing private[sources] (val fs: FileSystem, val rootP: Path,
+                                            val entries: Seq[FileStatus]) {
+    private def numbered(pfx: String): Seq[Long] =
+      entries.flatMap(st => numberAfter(st.getPath.getName, pfx)).sorted
+
+    /** Committed manifest versions on disk, ascending. */
+    val versions: Seq[Long] = numbered(ManifestPrefix)
+    /** Max over ALL lineages' manifests (0 when none): the claim floor. */
+    def maxVersion: Long = versions.lastOption.getOrElse(0L)
+
+    /** Whether the table is branched: any `_ref.` name at all. */
+    val hasRefs: Boolean = entries.exists(_.getPath.getName.startsWith(RefPrefix))
+    /** Every `_ref.<name>.<v>` marker: (ref name, version, status). */
+    val refMarkers: Seq[(String, Long, FileStatus)] = entries.flatMap { st =>
+      val n = st.getPath.getName
+      val s = n.stripPrefix(RefPrefix)
+      val i = s.lastIndexOf('.')
+      if (!n.startsWith(RefPrefix) || i <= 0) None
+      else s.substring(i + 1).toLongOption.map(v => (s.substring(0, i), v, st))
     }
+    /** Branch → head version (the max marker per name); empty when unbranched. */
+    lazy val refHeads: Map[String, Long] =
+      refMarkers.groupBy(_._1).map { case (n, ms) => n -> ms.map(_._2).max }
+
+    /** The `_ddl.json` sidecar's status, if present. */
+    val ddl: Option[FileStatus] = entries.find(_.getPath.getName == GraftDdl.FileName)
+    /** Names of the staged RTAS sidecars (`.ddl-*.json`). */
+    val stagedDdl: Set[String] = entries.iterator.map(_.getPath.getName)
+      .filter(n => n.startsWith(GraftDdl.StagedPrefix) && n.endsWith(".json")).toSet
+    /** Whether `_tags.json` is present. */
+    val hasTags: Boolean = entries.exists(_.getPath.getName == TagsFile)
+    /** Sink progress markers' batch ids, ascending. */
+    val sinkBatches: Seq[Long] = numbered(SinkMarkerPrefix)
+
+    /** Head version of the session's ref, or None for a table that has
+      * never committed (orphan data dirs from a crashed first commit don't
+      * count — only a manifest makes a version real).
+      *
+      * UNBRANCHED tables (no `_ref.*` markers — every table until
+      * [[createBranch]]): the highest manifest number, as ever. BRANCHED
+      * tables share one manifest log across lineages (the Iceberg
+      * snapshots+refs model), so "current" is the head MARKER of the
+      * session's ref — `main` outside [[onBranch]] — not the numeric max.
+      */
+    def head: Option[Long] =
+      if (versions.isEmpty) None
+      else if (!hasRefs) {
+        if (commitRefTL.get().isDefined) throw new IllegalStateException(
+          s"no such branch '${currentRef}' on $rootP — the table has no branches " +
+            "(CALL system.create_branch first)")
+        Some(maxVersion)
+      } else Some(refHeads.getOrElse(currentRef, throw new IllegalStateException(
+        s"no such branch '${currentRef}' on $rootP — known: " +
+          refHeads.keys.toSeq.sorted.mkString(", "))))
+
+    /** A declared (`_ddl.json`) or committed table lives here. */
+    def isTable: Boolean = ddl.isDefined || head.isDefined
   }
+
+  /** List the table root once (no `exists` probe: a missing root lists
+    * as empty, the FileSystem contract's `FileNotFoundException`).
+    */
+  private[graft] def listRoot(fs: FileSystem, rootP: Path): RootListing =
+    new RootListing(fs, rootP,
+      try fs.listStatus(rootP).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil })
+
+  def listRoot(spark: SparkSession, root: String): RootListing = {
+    val (fs, p) = fsOf(spark, root)
+    listRoot(fs, p)
+  }
+
+  /** Head version of the session's ref ([[RootListing.head]]). */
+  def currentVersion(spark: SparkSession, root: String): Option[Long] =
+    listRoot(spark, root).head
 
   def exists(spark: SparkSession, root: String): Boolean =
     currentVersion(spark, root).isDefined
@@ -175,8 +236,8 @@ object ManifestTable {
 
   /** Manifest `v`'s commit wall-clock directive (`#ts`, epoch µs) — the ONE
     * parser for the directive (ADVICE r15: three inlined copies had started
-    * to drift); [[commitTimestampMicros]]/[[history]]/[[versionAtTimestamp]]
-    * all route here.
+    * to drift); [[history]], [[versionAtTimestamp]], [[vacuum]] and
+    * [[publishManifest]] all route here.
     */
   private def tsOf(fs: FileSystem, root: Path, v: Long): Option[Long] =
     manifestBody(fs, root, v).linesIterator
@@ -256,27 +317,16 @@ object ManifestTable {
       .map(_.toLong).nextOption()
   }
 
-  /** The highest `#batch` id recorded in any still-on-disk manifest —
+  /** The highest `#batch` id recorded in any manifest of the listing —
     * scan newest-first so the common case reads ONE manifest. `None` when
     * no retained manifest carries one (vacuum can trim history past the
     * last sink commit; callers combine with their own marker fast path).
     */
-  def lastBatchId(spark: SparkSession, root: String): Option[Long] = {
-    val (fs, rootP) = fsOf(spark, root)
-    versions(spark, root).reverseIterator.flatMap { v =>
-      manifestBody(fs, rootP, v).linesIterator
+  def lastBatchId(l: RootListing): Option[Long] =
+    l.versions.reverseIterator.flatMap { v =>
+      manifestBody(l.fs, l.rootP, v).linesIterator
         .find(_.startsWith("#batch\t")).map(_.stripPrefix("#batch\t").toLong)
     }.nextOption()
-  }
-
-  /** Commit wall-clock of manifest `v` in epoch MICROSECONDS (the `#ts`
-    * directive), `None` for manifests published before the directive
-    * existed.
-    */
-  def commitTimestampMicros(spark: SparkSession, root: String, v: Long): Option[Long] = {
-    val (fs, rootP) = fsOf(spark, root)
-    tsOf(fs, rootP, v)
-  }
 
   /** `TIMESTAMP AS OF` floor-resolution: the highest still-on-disk version
     * whose commit wall-clock is <= `tsMicros` (Delta/Iceberg semantics —
@@ -292,11 +342,13 @@ object ManifestTable {
     * Delta's commit-timestamp adjustment applied at read time), so a
     * skewed stamp can never hide the versions after it.
     */
-  def versionAtTimestamp(spark: SparkSession, root: String, tsMicros: Long): Option[Long] = {
-    val (fs, rootP) = fsOf(spark, root)
+  def versionAtTimestamp(spark: SparkSession, root: String, tsMicros: Long): Option[Long] =
+    versionAtTimestamp(listRoot(spark, root), tsMicros)
+
+  private[graft] def versionAtTimestamp(l: RootListing, tsMicros: Long): Option[Long] = {
     var runMax = Long.MinValue
-    versions(spark, root).takeWhile { v =>
-      tsOf(fs, rootP, v).foreach(ts => runMax = math.max(runMax, ts))
+    l.versions.takeWhile { v =>
+      tsOf(l.fs, l.rootP, v).foreach(ts => runMax = math.max(runMax, ts))
       runMax == Long.MinValue || runMax <= tsMicros
     }.lastOption
   }
@@ -328,11 +380,8 @@ object ManifestTable {
       try tsOf(fs, rootP, pv)
       catch { case _: java.io.FileNotFoundException => None }
     }.orElse {
-      (if (fs.exists(rootP)) fs.listStatus(rootP) else Array.empty[FileStatus])
-        .map(_.getPath.getName)
-        .filter(_.startsWith(ManifestPrefix))
-        .map(_.stripPrefix(ManifestPrefix).toLong).filter(_ < v)
-        .sorted.reverseIterator.flatMap(pv => tsOf(fs, rootP, pv)).nextOption()
+      listRoot(fs, rootP).versions.filter(_ < v)
+        .reverseIterator.flatMap(pv => tsOf(fs, rootP, pv)).nextOption()
     }
     val ts = math.max(prevTs.map(_ + 1L).getOrElse(Long.MinValue),
       System.currentTimeMillis() * 1000L)
@@ -553,15 +602,17 @@ object ManifestTable {
     // BRANCHED tables (refs present): lineages share the manifest log, so
     // the claim number floor is the GLOBAL max (another lineage may hold
     // base+1..) while the semantic base stays this ref's head; after the
-    // publish, one atomic marker create advances the ref.
+    // publish, one atomic marker create advances the ref. Each attempt
+    // reads all three from one listing taken after staging.
     val refName = currentRef
-    val hasRefs = refsExist(fs, rootP)
+    val listed = listRoot(fs, rootP)
+    val hasRefs = listed.hasRefs
     if (commitRefTL.get().isDefined && !hasRefs) throw new IllegalStateException(
       s"no such branch '$refName' on $root — the table has no branches " +
         "(CALL system.create_branch first)")
     var lineageBase = baseV
     var myNext = baseV.map(_ + 1).getOrElse(1L)
-    if (hasRefs) myNext = math.max(myNext, maxManifestV(fs, rootP) + 1)
+    if (hasRefs) myNext = math.max(myNext, listed.maxVersion + 1)
     var prev = baseEntries
     var dvCarry = dvCarry0
     var attempt = 0
@@ -570,8 +621,9 @@ object ManifestTable {
     fs.create(new Path(stage, claimName), true).close()
     // rebase on the winner's manifest, or abort on budget/conflict/non-retryable
     def reResolve(cause: IllegalStateException): Unit = {
-      if (hasRefs && refs(spark, root).get(refName) == lineageBase
-          && sameLineageHead(fs, rootP, refName, lineageBase) == lineageBase) {
+      val l = listRoot(fs, rootP)
+      if (hasRefs && l.refHeads.get(refName) == lineageBase
+          && sameLineageHead(l, refName, lineageBase) == lineageBase) {
         // every manifest above our head belongs to a FOREIGN lineage (our
         // ref's marker is unchanged AND no unmarked child carries our
         // `#ref` — a same-ref winner inside its publish→refMark window
@@ -581,7 +633,7 @@ object ManifestTable {
         // snapshot commits: no state of ours was invalidated)
         attempt += 1
         if (attempt > CommitRetries) throw cause
-        myNext = math.max(maxManifestV(fs, rootP), myNext) + 1
+        myNext = math.max(l.maxVersion, myNext) + 1
         return
       }
       attempt += 1
@@ -591,10 +643,10 @@ object ManifestTable {
           // rebase on the EFFECTIVE head: the winner's manifest (stamped
           // `#ref`/`#parent` atomically with its rename) is the durable
           // commit point even before its ref marker lands
-          val marked = refs(spark, root).getOrElse(refName, throw cause)
-          sameLineageHead(fs, rootP, refName, Some(marked)).getOrElse(marked)
+          val marked = l.refHeads.getOrElse(refName, throw cause)
+          sameLineageHead(l, refName, Some(marked)).getOrElse(marked)
         }
-        else currentVersion(spark, root).filter(_ >= myNext).getOrElse(throw cause)
+        else l.head.filter(_ >= myNext).getOrElse(throw cause)
       val newEntries = entriesOf(fs, rootP, newCur)
       val newSets = entrySetsOf(newEntries)
       val newDv = dvOf(fs, rootP, newCur)
@@ -641,7 +693,7 @@ object ManifestTable {
       prev = newEntries
       dvCarry = newDv
       lineageBase = Some(newCur)
-      myNext = (if (hasRefs) math.max(maxManifestV(fs, rootP), newCur) else newCur) + 1
+      myNext = (if (hasRefs) math.max(l.maxVersion, newCur) else newCur) + 1
     }
     // Branched commits jump to the GLOBAL max + 1, so unlike the unbranched
     // consecutive-number protocol a same-ref winner that landed between the
@@ -651,8 +703,8 @@ object ManifestTable {
     // marker pending). Rebase up front, or this publish would fork the
     // lineage and the winner's rows would vanish from the head once both
     // markers land (ADVICE r19).
-    if (hasRefs && (refs(spark, root).get(refName) != lineageBase ||
-        sameLineageHead(fs, rootP, refName, lineageBase) != lineageBase))
+    if (hasRefs && (listed.refHeads.get(refName) != lineageBase ||
+        sameLineageHead(listed, refName, lineageBase) != lineageBase))
       reResolve(new IllegalStateException(
         "commit collision: a same-branch writer published after this " +
           "commit's base snapshot was resolved"))
@@ -792,22 +844,8 @@ object ManifestTable {
     * bounded by vacuum cadence (the Delta/Iceberg VACUUM-vs-time-travel
     * tradeoff, verbatim).
     */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val (fs, p) = fsOf(spark, root)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith(ManifestPrefix))
-      .map(_.stripPrefix(ManifestPrefix).toLong).toSeq.sorted
-  }
-
-  /** Numeric max over ALL manifests, every lineage — the claim-number
-    * floor on branched tables (0 when none exist).
-    */
-  private def maxManifestV(fs: FileSystem, rootP: Path): Long =
-    (if (fs.exists(rootP)) fs.listStatus(rootP) else Array.empty[FileStatus])
-      .map(_.getPath.getName).filter(_.startsWith(ManifestPrefix))
-      .map(_.stripPrefix(ManifestPrefix).toLong)
-      .foldLeft(0L)(math.max)
+  def versions(spark: SparkSession, root: String): Seq[Long] =
+    listRoot(spark, root).versions
 
   /** The committed table as of the current manifest — or, with
     * `asOfVersion`, TIME TRAVEL to any still-on-disk manifest (immutable
@@ -2049,8 +2087,9 @@ object ManifestTable {
     require(keys.nonEmpty, "changes: at least one key column is required")
     require(fromV <= toV, s"changes: fromV=$fromV must be <= toV=$toV")
     val (fs, rootP) = fsOf(spark, root)
+    val listed = listRoot(fs, rootP)
     Seq(fromV, toV).foreach { v =>
-      if (!fs.exists(new Path(rootP, ManifestPrefix + fmt(v))))
+      if (!listed.versions.contains(v))
         throw new IllegalStateException(
           s"manifest table $root has no version $v on disk (vacuumed or never committed)")
     }
@@ -2066,7 +2105,7 @@ object ManifestTable {
     // replicator that walks RAW numbers across a foreign branch's commits
     // fails HERE, loudly, instead of silently diffing two unrelated
     // snapshots (branch rows reported deleted, main rows inserted).
-    if (refsExist(fs, rootP) && fromV < toV) {
+    if (listed.hasRefs && fromV < toV) {
       var v = toV
       try {
         while (v > fromV)
@@ -2310,16 +2349,13 @@ object ManifestTable {
     * manifest ENTRY names; depth always equals the spec's field count for
     * a write staged under that spec.
     */
-  private def listStagedPartDirs(fs: FileSystem, stage: Path, depth: Int): Seq[String] = {
-    def go(p: Path, d: Int): Seq[String] =
-      fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-        .flatMap { st =>
-          if (d <= 1) Seq(st.getPath.getName)
-          else go(st.getPath, d - 1).map(st.getPath.getName + "/" + _)
-        }
-    go(stage, depth)
-  }
+  private def listStagedPartDirs(fs: FileSystem, stage: Path, depth: Int): Seq[String] =
+    fs.listStatus(stage).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+      .flatMap { st =>
+        if (depth <= 1) Seq(st.getPath.getName)
+        else listStagedPartDirs(fs, st.getPath, depth - 1).map(st.getPath.getName + "/" + _)
+      }
 
   /** A staged data write: its `.stage-*` dir, the partition entry names it
     * touched, its sidecar payloads and the tap its write read through.
@@ -2864,8 +2900,9 @@ object ManifestTable {
   def history(spark: SparkSession,
               root: String): Seq[(Long, Int, Option[Long], Boolean, Option[Long])] = {
     val (fs, rootP) = fsOf(spark, root)
-    val cur = currentVersion(spark, root)
-    versions(spark, root).sorted.map { v =>
+    val listed = listRoot(fs, rootP)
+    val cur = listed.head
+    listed.versions.map { v =>
       val n = manifestBody(fs, rootP, v).linesIterator
         .count(l => l.nonEmpty && !l.startsWith("#"))
       (v, n, dvOf(fs, rootP, v), cur.contains(v), tsOf(fs, rootP, v))
@@ -2911,14 +2948,15 @@ object ManifestTable {
     */
   def restore(spark: SparkSession, root: String, toVersion: Long): Long = {
     val (fs, rootP) = fsOf(spark, root)
-    if (!fs.exists(new Path(rootP, ManifestPrefix + fmt(toVersion))))
+    val listed = listRoot(fs, rootP)
+    if (!listed.versions.contains(toVersion))
       throw new IllegalStateException(
         s"restore: $root has no version $toVersion on disk (vacuumed or never committed)")
-    val cur = currentVersion(spark, root).get
-    val hasRefs = refsExist(fs, rootP)
+    val cur = listed.head.get
+    val hasRefs = listed.hasRefs
     // branched: claim above the GLOBAL max (another lineage may hold cur+1)
     // and advance this ref's marker; the #parent keeps fast-forward walkable
-    val next = (if (hasRefs) math.max(maxManifestV(fs, rootP), cur) else cur) + 1
+    val next = (if (hasRefs) math.max(listed.maxVersion, cur) else cur) + 1
     def pub(): Unit = publishManifest(fs, rootP, next,
       entriesOf(fs, rootP, toVersion), dvOf(fs, rootP, toVersion),
       priorV = Some(cur))
@@ -3091,13 +3129,14 @@ object ManifestTable {
     require(name.nonEmpty && name.toLongOption.isEmpty,
       s"tag name '$name' must be non-empty and non-numeric (numeric strings " +
         "resolve as literal versions in VERSION AS OF)")
-    require(!refs(spark, root).contains(name),
+    val (fs, rootP) = fsOf(spark, root)
+    val listed = listRoot(fs, rootP)
+    require(!listed.refHeads.contains(name),
       s"tag name '$name' collides with an existing branch (both resolve in " +
         "VERSION AS OF)")
-    val v = version.getOrElse(currentVersion(spark, root).getOrElse(
+    val v = version.getOrElse(listed.head.getOrElse(
       throw new IllegalStateException(s"cannot tag $root: no committed version")))
-    val (fs, rootP) = fsOf(spark, root)
-    require(fs.exists(new Path(rootP, ManifestPrefix + fmt(v))),
+    require(listed.versions.contains(v),
       s"cannot tag version $v of $root: no such manifest on disk")
     writeTags(fs, rootP, tags(spark, root) + (name -> v))
     v
@@ -3193,27 +3232,9 @@ object ManifestTable {
     n.nonEmpty && n.toLongOption.isEmpty && n != MainRef &&
       n.forall(c => c.isLetterOrDigit || c == '_' || c == '-')
 
-  private def refNamesOf(names: Seq[String]): Seq[String] =
-    names.filter(_.startsWith(RefPrefix)).flatMap { n =>
-      val s = n.stripPrefix(RefPrefix)
-      val i = s.lastIndexOf('.')
-      if (i <= 0) None else Some(s.substring(0, i))
-    }.distinct
-
   /** Branch → head version. Empty for unbranched tables. */
-  def refs(spark: SparkSession, root: String): Map[String, Long] = {
-    val (fs, rootP) = fsOf(spark, root)
-    if (!fs.exists(rootP)) Map.empty
-    else fs.listStatus(rootP).map(_.getPath.getName).toSeq
-      .filter(_.startsWith(RefPrefix))
-      .flatMap { n =>
-        val s = n.stripPrefix(RefPrefix)
-        val i = s.lastIndexOf('.')
-        if (i <= 0) None
-        else s.substring(i + 1).toLongOption.map(s.substring(0, i) -> _)
-      }
-      .groupBy(_._1).map { case (name, vs) => name -> vs.map(_._2).max }
-  }
+  def refs(spark: SparkSession, root: String): Map[String, Long] =
+    listRoot(spark, root).refHeads
 
   private def refMark(fs: FileSystem, rootP: Path, name: String, v: Long): Unit =
     fs.create(new Path(rootP, RefPrefix + name + "." + fmt(v)), true).close()
@@ -3237,17 +3258,14 @@ object ManifestTable {
     * parent — reachable only through the documented claim grace-window
     * clobber) resolves to the LOWEST-numbered child, deterministically.
     */
-  private def sameLineageHead(fs: FileSystem, rootP: Path, refName: String,
+  private def sameLineageHead(l: RootListing, refName: String,
                               from: Option[Long]): Option[Long] = {
     var h = from
-    val above = (if (fs.exists(rootP)) fs.listStatus(rootP) else Array.empty[FileStatus])
-      .map(_.getPath.getName).filter(_.startsWith(ManifestPrefix))
-      .map(_.stripPrefix(ManifestPrefix).toLong)
-      .filter(_ > h.getOrElse(0L)).sorted
+    val above = l.versions.filter(_ > h.getOrElse(0L))
     if (above.isEmpty) return h
     val meta: Map[Long, (Option[Long], Option[String])] = above.flatMap { v =>
       try {
-        val body = manifestBody(fs, rootP, v)
+        val body = manifestBody(l.fs, l.rootP, v)
         val p = body.linesIterator.find(_.startsWith("#parent\t"))
           .flatMap(_.stripPrefix("#parent\t").toLongOption)
         val r = body.linesIterator.find(_.startsWith("#ref\t"))
@@ -3266,10 +3284,6 @@ object ManifestTable {
     h
   }
 
-  private[sources] def refsExist(fs: FileSystem, rootP: Path): Boolean =
-    fs.exists(rootP) &&
-      fs.listStatus(rootP).exists(_.getPath.getName.startsWith(RefPrefix))
-
   /** Create branch `name` at the current MAIN head (materializing main's
     * own marker on first use — the moment a table becomes "branched").
     * Returns the fork version. Single-writer DDL-family contract.
@@ -3282,10 +3296,11 @@ object ManifestTable {
       s"branch name '$name' collides with an existing tag (both resolve in " +
         "VERSION AS OF)")
     val (fs, rootP) = fsOf(spark, root)
-    val cur = withRef(None)(currentVersion(spark, root)).getOrElse(
+    val listed = listRoot(fs, rootP)
+    val cur = withRef(None)(listed.head).getOrElse(
       throw new IllegalStateException(s"cannot branch $root: no committed version"))
-    require(!refs(spark, root).contains(name), s"branch '$name' already exists on $root")
-    if (!refsExist(fs, rootP)) refMark(fs, rootP, MainRef, cur)
+    require(!listed.refHeads.contains(name), s"branch '$name' already exists on $root")
+    if (!listed.hasRefs) refMark(fs, rootP, MainRef, cur)
     refMark(fs, rootP, name, cur)
     cur
   }
@@ -3296,11 +3311,8 @@ object ManifestTable {
   def dropBranch(spark: SparkSession, root: String, name: String): Boolean = {
     require(name != MainRef, "cannot drop the main branch")
     val (fs, rootP) = fsOf(spark, root)
-    val mine = if (!fs.exists(rootP)) Nil
-      else fs.listStatus(rootP).map(_.getPath.getName).toSeq
-        .filter(n => n.startsWith(RefPrefix + name + ".") &&
-          n.stripPrefix(RefPrefix + name + ".").toLongOption.isDefined)
-    mine.foreach(n => fs.delete(new Path(rootP, n), false))
+    val mine = listRoot(fs, rootP).refMarkers.filter(_._1 == name)
+    mine.foreach(m => fs.delete(m._3.getPath, false))
     mine.nonEmpty
   }
 
@@ -3344,16 +3356,20 @@ object ManifestTable {
     * r16, so "first version at/after the cutoff" is a well-defined
     * floor). Versions predating the `#ts` directive count as old. The
     * current head, tagged versions, and branch heads survive any window.
+    * The retention decision and the sweep read ONE root listing, so a
+    * file created after it is never deleted by this run. Returns the
+    * session ref's head from that listing (vacuum never moves a head).
     */
   def vacuum(spark: SparkSession, root: String, retainVersions: Int = 0,
-             olderThanMicros: Option[Long] = None): Unit = {
+             olderThanMicros: Option[Long] = None): Option[Long] = {
     require(retainVersions >= 0, s"retainVersions must be >= 0, got $retainVersions")
+    val (fs, rootP) = fsOf(spark, root)
+    val listed = listRoot(fs, rootP)
     // the retention window floors on MAIN whatever scope called us —
     // vacuum is a whole-table operation, not a per-branch one
-    withRef(None)(currentVersion(spark, root)).foreach { cur =>
-      val (fs, rootP) = fsOf(spark, root)
+    withRef(None)(listed.head).foreach { cur =>
       val floorByTime = olderThanMicros.map { cutoff =>
-        versions(spark, root)
+        listed.versions
           .find(v => tsOf(fs, rootP, v).exists(_ >= cutoff)) // ascending + monotone ts
           .getOrElse(cur)
       }
@@ -3364,65 +3380,51 @@ object ManifestTable {
       // they reference (a tag is a promise that `VERSION AS OF 'name'`
       // keeps answering; a branch head is a promise its lineage stays
       // readable and fast-forwardable)
-      val refHeads = refs(spark, root)
-      val tagged = (tags(spark, root).values.toSet ++ refHeads.values)
-        .filter(v => fs.exists(new Path(rootP, ManifestPrefix + fmt(v))))
-      val retained = versions(spark, root).filter(v => v >= floor || tagged.contains(v))
+      val tagged = ((if (listed.hasTags) tags(spark, root).values else Nil) ++
+        listed.refHeads.values).toSet.filter(listed.versions.contains)
+      val retained = listed.versions.filter(v => v >= floor || tagged.contains(v))
       val live = retained.flatMap(v => entriesOf(fs, rootP, v).map(_._2)).toSet
       val liveDv = retained.flatMap(v => dvOf(fs, rootP, v)).toSet
       // the one staged-DDL file that may still hold schema authority: the
       // NEWEST retained manifest's #ddl payload (see GraftDdl — an
       // unpromoted RTAS schema flip). Everything else .ddl-* is debris
       // from a crashed-before-commit or superseded RTAS.
-      val liveDdl = retained.sorted.reverseIterator
+      val liveDdl = retained.reverseIterator
         .flatMap(v => manifestBody(fs, rootP, v).linesIterator
           .find(_.startsWith("#ddl\t")).map(_.stripPrefix("#ddl\t")))
         .nextOption()
-      fs.listStatus(rootP).foreach { st =>
+      // superseded ref markers (head = max per name; the rest is debris)
+      val superseded = listed.refMarkers.collect {
+        case (ref, v, st) if v < listed.refHeads(ref) => st.getPath.getName
+      }.toSet
+      // crashed manifest, tag and sidecar installs' staging debris
+      val tmps = Seq(".manifest-", "." + TagsFile + "-", "." + GraftDdl.FileName + "-")
+      listed.entries.foreach { st =>
         val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("v") && n.drop(1).forall(_.isDigit)
-            && !live.contains(n.drop(1).toLong))
-          fs.delete(st.getPath, true)
-        else if (st.isDirectory && n.startsWith("v") && n.drop(1).forall(_.isDigit))
-          // live version: reclaim a claim marker a crash between publish
-          // and marker-delete left behind (harmless to scans, but bounded
-          // cleanup belongs here)
-          fs.listStatus(st.getPath).filter(_.getPath.getName.startsWith(".claim-"))
-            .foreach(m => fs.delete(m.getPath, false))
-        else if (st.isDirectory && n.startsWith("d") && n.drop(1).forall(_.isDigit)
-            && !liveDv.contains(n.drop(1).toLong))
-          fs.delete(st.getPath, true) // deletion vectors of reclaimed manifests
-        else if (n.startsWith(ManifestPrefix) && n.stripPrefix(ManifestPrefix).toLong < floor
-            && !tagged.contains(n.stripPrefix(ManifestPrefix).toLong))
+        val at = numberAfter(n, _: String)
+        if (st.isDirectory) {
+          if (at("v").exists(live.contains))
+            // live version: reclaim a claim marker a crash between publish
+            // and marker-delete left behind (harmless to scans, but bounded
+            // cleanup belongs here)
+            fs.listStatus(st.getPath).filter(_.getPath.getName.startsWith(".claim-"))
+              .foreach(m => fs.delete(m.getPath, false))
+          // reclaimed data versions and their deletion vectors; crashed
+          // commits' orphaned stages — vacuum must not run concurrently
+          // with an in-flight commit (the same retention-window contract
+          // as the version floor)
+          else if (at("v").isDefined || at("d").exists(!liveDv.contains(_)) ||
+              n.startsWith(".stage-"))
+            fs.delete(st.getPath, true)
+        } else if (at(ManifestPrefix).exists(v => v < floor && !tagged.contains(v)) ||
+            // zone maps, bloom sidecars and NDV sketches of reclaimed versions
+            Seq(StatsPrefix, BloomPrefix, NdvPrefix).exists(at(_).exists(!live.contains(_))) ||
+            superseded.contains(n) ||
+            (tmps.exists(n.startsWith) && n.endsWith(".tmp")) ||
+            // crashed/superseded RTAS staged schemas (same
+            // no-in-flight-commit contract as .stage-*)
+            (listed.stagedDdl.contains(n) && !liveDdl.contains(n)))
           fs.delete(st.getPath, false)
-        else if (n.startsWith(StatsPrefix) && !live.contains(n.stripPrefix(StatsPrefix).toLong))
-          fs.delete(st.getPath, false) // zone maps of reclaimed data versions
-        else if (n.startsWith(BloomPrefix) && !live.contains(n.stripPrefix(BloomPrefix).toLong))
-          fs.delete(st.getPath, false) // bloom sidecars of reclaimed versions
-        else if (n.startsWith(NdvPrefix) && !live.contains(n.stripPrefix(NdvPrefix).toLong))
-          fs.delete(st.getPath, false) // NDV sketches of reclaimed versions
-        else if (n.startsWith(".manifest-") && n.endsWith(".tmp"))
-          fs.delete(st.getPath, false)
-        else if (n.startsWith("." + TagsFile + "-") && n.endsWith(".tmp"))
-          fs.delete(st.getPath, false) // crashed tag-write staging debris
-        else if (n.startsWith(RefPrefix)) {
-          // superseded ref markers (head = max per name; the rest is debris)
-          val s = n.stripPrefix(RefPrefix)
-          val i = s.lastIndexOf('.')
-          if (i > 0) for {
-            v <- s.substring(i + 1).toLongOption
-            head <- refHeads.get(s.substring(0, i))
-            if v < head
-          } fs.delete(st.getPath, false)
-        }
-        else if (st.isDirectory && n.startsWith(".stage-"))
-          fs.delete(st.getPath, true) // crashed commits' orphaned stages —
-          // vacuum must not run concurrently with an in-flight commit
-          // (the same retention-window contract as the version floor)
-        else if (!st.isDirectory && n.startsWith(GraftDdl.StagedPrefix)
-            && n.endsWith(".json") && !liveDdl.contains(n))
-          fs.delete(st.getPath, false) // crashed/superseded RTAS staged
-          // schemas (same no-in-flight-commit contract as .stage-*)
       }
       // ChecksumFileSystem hides `.crc` sidecars from listStatus — sweep
       // manifest-tmp crcs orphaned by pre-fix commits with raw nio
@@ -3436,5 +3438,6 @@ object ManifestTable {
         } finally it.close()
       }
     }
+    listed.head
   }
 }

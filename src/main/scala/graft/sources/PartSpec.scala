@@ -404,8 +404,8 @@ object PartSpec {
 
 /** Sidecar-backed spec resolution for a table root: the CURRENT spec from
   * the sidecar's `partCol` (rendered form) plus prior specs from the
-  * `graft.partSpecHistory` property — memoized per (root, sidecar stamp)
-  * like [[FieldIds.of]], so the per-read cost is one `getFileStatus`.
+  * `graft.partSpecHistory` property — views of the cached sidecar
+  * ([[GraftDdl.sidecar]]), so the per-read cost is one `getFileStatus`.
   * Roots without a sidecar (path-first manifest tables) have no specs and
   * keep the legacy identity behavior everywhere.
   */
@@ -419,9 +419,6 @@ object PartSpecs {
     */
   val LayoutFromProp = "graft.partSpecFrom"
 
-  private val memo = java.util.Collections.synchronizedMap(
-    new java.util.HashMap[String, ((Long, Long), (Seq[PartSpec], Long))]())
-
   /** Current-first: head (if any) is the active spec, tail the history
     * (newest first). Pruning matches directories against ALL of them by
     * physical column name.
@@ -430,38 +427,12 @@ object PartSpecs {
 
   /** [[of]] and the [[LayoutFromProp]] data version (0 when unset). */
   def layout(spark: SparkSession, root: String): (Seq[PartSpec], Long) = {
-    val p = new org.apache.hadoop.fs.Path(root, GraftDdl.FileName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stamp =
-      try { val st = fs.getFileStatus(p); (st.getModificationTime, st.getLen) }
-      catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
-    memo.get(root) match {
-      case (`stamp`, known) => known
-      case _ =>
-        // full load only on miss (first touch per process / sidecar change);
-        // a staged-#ddl RTAS authority is honored like FieldIds.of does
-        val ddl =
-          if (stamp == ((-1L, -1L)) && !GraftDdl.hasStaged(spark, root)) None
-          else GraftDdl.load(spark, root)
-        val specs = ddl.toSeq.flatMap { d =>
-          d.schema.toSeq.flatMap { sch =>
-            val cur = d.partCol.map(r => PartSpec.parse(r, sch))
-            val hist = parseHistory(d.props).map(r => PartSpec.parse(r, sch))
-            cur.toSeq ++ hist
-          }
-        }
-        val known = (specs, ddl.flatMap(_.props.get(LayoutFromProp)).fold(0L)(_.toLong))
-        memo.put(root, (stamp, known))
-        known
-    }
+    val s = GraftDdl.sidecar(spark, root)
+    (s.specs, s.layoutFrom)
   }
 
   def currentOf(spark: SparkSession, root: String): Option[PartSpec] =
     of(spark, root).headOption
-
-  def invalidate(root: String): Unit = memo.synchronized {
-    memo.keySet.removeIf((k: String) => k.startsWith(root))
-  }
 
   def parseHistory(props: Map[String, String]): Seq[String] =
     props.get(HistoryProp).toSeq.flatMap { json =>

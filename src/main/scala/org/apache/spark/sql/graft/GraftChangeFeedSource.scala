@@ -52,11 +52,12 @@ class GraftChangeFeedSource(sqlContext: SQLContext, root: String,
   private var lastOffered: Option[Long] = None
 
   override def getOffset: Option[Offset] = {
-    val cur = ManifestTable.currentVersion(spark, root).getOrElse(return None)
+    val listed = ManifestTable.listRoot(spark, root)
+    val cur = listed.head.getOrElse(return None)
     val target = lastOffered match {
       case None =>
         // first batch = the seed snapshot at the starting version
-        val vs = ManifestTable.versions(spark, root)
+        val vs = listed.versions
         startingVersion.map(v => math.min(math.max(v, vs.head), cur))
           .getOrElse(vs.head)
       case Some(x) => math.min(cur, x + maxVersionsPerBatch)

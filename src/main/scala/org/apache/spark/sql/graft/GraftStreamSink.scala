@@ -64,41 +64,31 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
 
   private val spark = sqlContext.sparkSession
 
-  // fast-path marker: the batch id rides the file's NAME, not its content
-  // (create+close of an empty file appears atomically — no
-  // truncate-then-write window where a crash leaves a partial marker that
-  // wedges every restart); the highest number wins, older markers are
-  // best-effort swept after each commit. The ATOMIC record is the
-  // manifest's own #batch directive; the marker additionally survives a
-  // vacuum that trims history past the last sink commit.
-  private val MarkerPrefix = "_sink.batch."
-
-  private def fs0 = new Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def markerIds(): Seq[Long] = {
-    val fs = fs0
-    val rootP = new Path(root)
-    if (!fs.exists(rootP)) Nil
-    else fs.listStatus(rootP).map(_.getPath.getName)
-      .filter(_.startsWith(MarkerPrefix))
-      .flatMap(n => scala.util.Try(n.stripPrefix(MarkerPrefix).toLong).toOption)
-      .toSeq
-  }
-
   /** The highest batch id this sink committed at `root`, -1 when none: the
     * progress record a caller resumes from. The manifest directive is the
     * atomic truth; markers are a fast path that can lag one batch behind
-    * after a crash in the marker-write window.
+    * after a crash in the marker-write window. Both come from one root
+    * listing.
     */
-  def lastCommitted(): Long =
-    (markerIds() ++ ManifestTable.lastBatchId(spark, root)).foldLeft(-1L)(math.max)
+  def lastCommitted(): Long = lastCommitted(ManifestTable.listRoot(spark, root))
 
-  private def writeMarker(batchId: Long): Unit = {
-    val fs = fs0
-    fs.create(new Path(root, MarkerPrefix + batchId), true).close()
-    markerIds().filter(_ < batchId).foreach(i =>
-      fs.delete(new Path(root, MarkerPrefix + i), false))
+  private def lastCommitted(l: ManifestTable.RootListing): Long =
+    (l.sinkBatches ++ ManifestTable.lastBatchId(l)).foldLeft(-1L)(math.max)
+
+  /** Mark `batchId` committed. The fast-path marker
+    * ([[ManifestTable.SinkMarkerPrefix]] + id) carries the id in its NAME:
+    * create+close of an empty file appears atomically, so no crash leaves
+    * a partial marker that wedges every restart. The ATOMIC record is the
+    * manifest's own #batch directive; the marker additionally survives a
+    * vacuum that trims history past the last sink commit. The highest
+    * number wins; the older markers `l` listed are swept (this sink is the
+    * table's one marker writer).
+    */
+  private def writeMarker(batchId: Long, l: ManifestTable.RootListing): Unit = {
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new Path(root, ManifestTable.SinkMarkerPrefix + batchId), true).close()
+    l.sinkBatches.filter(_ < batchId).foreach(i =>
+      fs.delete(new Path(root, ManifestTable.SinkMarkerPrefix + i), false))
   }
 
   /** The ACTIVE partition spec, resolved per batch: a sidecar-declared
@@ -111,7 +101,10 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
       .orElse(partCol.map(graft.sources.PartSpec.Identity))
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    if (batchId <= lastCommitted()) return // crash-replay of a committed batch
+    // one listing answers progress, the older markers and whether the
+    // table exists yet; the batch's own commits list afresh
+    val listed = ManifestTable.listRoot(spark, root)
+    if (batchId <= lastCommitted(listed)) return // crash-replay of a committed batch
     if (cdf) {
       require(mergeKeys.nonEmpty,
         "graft sink: cdf mode requires option 'mergeKey' (the table's merge key columns)")
@@ -143,7 +136,7 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
     lazy val delParts = idSrc.map(s =>
       delRows.toSeq.map(r => ManifestTable.partDirName(s, r.get(delCols.indexOf(s)))).distinct)
     ManifestTable.withBatchId(batchId) {
-      if (!ManifestTable.exists(spark, root)) {
+      if (listed.head.isEmpty) {
         ManifestTable.commit(checked, root, spec)
         // a mixed first cdf batch (dst dropped while the source checkpoint
         // survived) must not silently drop its delete rows
@@ -153,7 +146,7 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
       else ManifestTable.mergeDv(checked, root, ups.schema, mergeKeys, spec,
         Nil, Nil, dels, delParts)
     }
-    writeMarker(batchId)
+    writeMarker(batchId, listed)
     // the merge-on-read + OPTIMIZE pairing, inline; the version the batch
     // started from is where a change-feed reader one batch behind resumes,
     // and where a concurrent reader's snapshot may still be mid-scan

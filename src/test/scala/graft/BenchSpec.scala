@@ -178,6 +178,22 @@ class BenchSpec extends SparkSuite {
       ("ManifestTable.scala", "planPrune", "listDataStatus(")), calls)
   }
 
+  test("ManifestTable.listRoot is the only reader of a table root") {
+    // a second parser of the root listing re-grows per-question listings;
+    // only the data-dir listings (a version's files, a stage's partition
+    // dirs, vacuum's per-version claim sweep) and the catalog's namespace
+    // listings list anything else
+    val namespaces = Set("listTables", "listNamespaces", "dropNamespace")
+    val calls = callSites(Seq("listStatus"))
+      .filter(c => Set("ManifestTable.scala", "GraftStreamSink.scala", "GraftCatalog.scala")
+        .contains(c._1))
+      .filterNot(c => c._1 == "GraftCatalog.scala" && namespaces.contains(c._2))
+    assert(calls == Seq(("ManifestTable.scala", "listDataStatus", "listStatus("),
+      ("ManifestTable.scala", "listRoot", "listStatus("),
+      ("ManifestTable.scala", "listStagedPartDirs", "listStatus("),
+      ("ManifestTable.scala", "vacuum", "listStatus(")), calls)
+  }
+
   test("a change batch applies in one pass: no sink checkpoint, no mergeDv broadcast join, no schema-merge job") {
     // the sink's stage write gathers its delete leg, mergeDv's positions
     // scan filters by a broadcast variable, and schema inference reads

@@ -132,7 +132,7 @@ class MultiProcessCommitSpec extends SparkSuite {
     // this writer's wall clock is now BEHIND the newest stamp: publish must
     // monotonize, not regress — or TIMESTAMP AS OF would hide v2 forever
     ManifestTable.commit(Seq((2L, "b")).toDF("k", "v"), root, None) // v2
-    val ts2 = ManifestTable.commitTimestampMicros(spark, root, 2L).get
+    val ts2 = ManifestTable.history(spark, root).find(_._1 == 2L).flatMap(_._5).get
     assert(ts2 == future + 1,
       s"expected max(prior #ts + 1, now) = ${future + 1}, got $ts2")
     assert(ManifestTable.versionAtTimestamp(spark, root, future).contains(1L))

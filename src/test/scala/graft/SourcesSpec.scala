@@ -2436,6 +2436,77 @@ class SourcesSpec extends SparkSuite {
     assert(fileStats.isEmpty, fileStats.mkString(", "))
   }
 
+  test("vacuum reads the table root once: one listing, no exists or status probe of the root") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val local = Files.createTempDirectory("manvac1").toString + "/t"
+    val spec = Some(PartSpec.Identity("p"))
+    ManifestTable.commit(Seq((1L, 1, 1L), (2L, 2, 2L)).toDF("id", "p", "v"), local, spec)
+    for (i <- 3L to 5L)
+      ManifestTable.append(Seq((i, (i % 2).toInt, i)).toDF("id", "p", "v"), local, spec)
+    ManifestTable.setTag(spark, local, "pinned", Some(2L))
+    ManifestTable.createBranch(spark, local, "wip")
+    ManifestTable.append(Seq((6L, 1, 6L)).toDF("id", "p", "v"), local, spec)
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", classOf[ListCountingFs].getName)
+    ListCountingFs.clear()
+    assert(ManifestTable.vacuum(spark, "cntfs://" + local, retainVersions = 1).contains(5L))
+    assert((ListCountingFs.listsOf(local), ListCountingFs.probesOf(local)) == ((1, 0)),
+      s"root listings ${ListCountingFs.listsOf(local)}, root probes ${ListCountingFs.probesOf(local)}")
+    // the head, the window behind it, the tag and the branch head survive
+    assert(ManifestTable.versions(spark, local) == Seq(2L, 4L, 5L))
+    assert(ManifestTable.read(spark, local, StructType.fromDDL("id BIGINT, p INT, v BIGINT"))
+      .count() == 6)
+  }
+
+  test("currentVersion of a missing root is None from one listing and no exists probe") {
+    import graft.sources.ManifestTable
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", classOf[ListCountingFs].getName)
+    val missing = Files.createTempDirectory("manmiss").toString + "/none"
+    ListCountingFs.clear()
+    assert(ManifestTable.currentVersion(spark, "cntfs://" + missing).isEmpty)
+    assert((ListCountingFs.listsOf(missing), ListCountingFs.probesOf(missing)) == ((1, 0)),
+      s"root listings ${ListCountingFs.listsOf(missing)}, " +
+        s"root probes ${ListCountingFs.probesOf(missing)}")
+  }
+
+  test("vacuum sweeps a crashed sidecar install's temp file and keeps the live sidecars") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val root = Files.createTempDirectory("manvacddl").toString + "/t"
+    ManifestTable.commit(Seq((1L, "a")).toDF("k", "v"), root, None)
+    val ddl = s"""{"schema": ${new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(StructType.fromDDL("k BIGINT, v STRING").json)}, "props": {}}"""
+    def plant(name: String): java.nio.file.Path =
+      Files.write(java.nio.file.Paths.get(root, name), ddl.getBytes("UTF-8"))
+    val live = plant("_ddl.json")
+    // the staged sidecar the newest manifest's #ddl directive names holds
+    // schema authority until promoted: vacuum must keep it
+    val staged = plant(".ddl-livestaged.json")
+    ManifestTable.withDirective("#ddl\t.ddl-livestaged.json") {
+      ManifestTable.commit(Seq((2L, "b")).toDF("k", "v"), root, None)
+    }
+    val tmp = plant("._ddl.json-deadbeef.tmp") // a save that crashed before its rename
+    ManifestTable.vacuum(spark, root, retainVersions = 1)
+    assert(!Files.exists(tmp), "the crashed install's temp survived vacuum")
+    assert(Files.exists(live) && Files.exists(staged))
+  }
+
+  test("CALL system.vacuum lists the table root at most twice") {
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", classOf[ListCountingFs].getName)
+    val dir = Files.createTempDirectory("graft-cat-vac").toString
+    spark.conf.set("spark.sql.catalog.gvac", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gvac.warehouse", "cntfs://" + dir)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gvac.db")
+    spark.sql("CREATE TABLE gvac.db.t (k BIGINT, v STRING) PARTITIONED BY (v)")
+    for (i <- 1 to 3) spark.sql(s"INSERT INTO gvac.db.t VALUES ($i, 'a')")
+    ListCountingFs.clear()
+    val out = spark.sql("CALL gvac.system.vacuum(table => 'db.t', retain => 1)").collect()
+    val lists = ListCountingFs.listsOf(s"$dir/db/t")
+    assert(out.map(_.getLong(0)).toSeq ==
+      graft.sources.ManifestTable.currentVersion(spark, s"$dir/db/t").toSeq)
+    assert(lists <= 2, s"CALL system.vacuum listed the table root $lists times")
+  }
+
   test("snapshot read: an unpartitioned-era layout beside an identity layout reads every row once") {
     import spark.implicits._
     import graft.sources.ManifestTable
@@ -2461,11 +2532,18 @@ class SourcesSpec extends SparkSuite {
 }
 
 /** Local file system under the `cntfs` scheme that records every path it
-  * lists, opens and stats — the I/O spy for partition-pruning tests. Stats
-  * the local listing makes of each child itself are not recorded: only a
-  * caller's own `getFileStatus` is.
+  * lists, opens, stats and probes — the I/O spy for partition-pruning and
+  * listing-budget tests. Stats the local listing makes of each child itself
+  * are not recorded: only a caller's own `getFileStatus` is.
   */
 class ListCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  // RawLocalFileSystem answers `exists` from java.io.File without calling
+  // getFileStatus, so without this override every `exists` probe would go
+  // uncounted and the spy would under-count status round trips
+  override def exists(p: org.apache.hadoop.fs.Path): Boolean = {
+    ListCountingFs.probed.add(p)
+    super.exists(p)
+  }
   override def getScheme: String = "cntfs"
   override def getUri: java.net.URI = java.net.URI.create("cntfs:///")
   override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
@@ -2488,8 +2566,15 @@ object ListCountingFs {
   val listed = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]()
   val opened = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]()
   val statted = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]()
+  val probed = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]()
   private val listing = ThreadLocal.withInitial[Boolean](() => false)
-  def clear(): Unit = { listed.clear(); opened.clear(); statted.clear() }
+  def clear(): Unit = { listed.clear(); opened.clear(); statted.clear(); probed.clear() }
+  private def at(q: java.util.Collection[org.apache.hadoop.fs.Path], dir: String): Int =
+    q.toArray.count(p => p.asInstanceOf[org.apache.hadoop.fs.Path].toUri.getPath == dir)
+  /** Listings of the directory `dir` (a scheme-free local path). */
+  def listsOf(dir: String): Int = at(listed, dir)
+  /** `exists` and `getFileStatus` probes of `dir` itself. */
+  def probesOf(dir: String): Int = at(probed, dir) + at(statted, dir)
   /** The data version dirs listed, as `v########/<partition dir>` strings. */
   def listedDataDirs: Seq[String] = listed.toArray.toSeq.map(_.toString)
     .flatMap(s => "/(v\\d{8}/.*)$".r.findFirstMatchIn(s).map(_.group(1)))

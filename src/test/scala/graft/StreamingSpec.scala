@@ -631,6 +631,31 @@ class StreamingSpec extends SparkSuite {
     assert(ManifestTable.deletedRowCount(spark, root) <= 2L)
   }
 
+  test("a merge sink batch with compactEvery = 4 lists the table root at most 8 times, 12 when compacting") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    import org.apache.spark.sql.graft.GraftStreamSink
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", classOf[ListCountingFs].getName)
+    val local = java.nio.file.Files.createTempDirectory("gsinklist").toString + "/t"
+    val sink = new GraftStreamSink(spark.sqlContext, "cntfs://" + local, Some("p"), Seq("id"),
+      cdf = false, compactEvery = 4)
+    sink.addBatch(0L, Seq((1L, "a", 0L), (2L, "b", 0L)).toDF("id", "p", "v"))
+    // root listings per batch: batches 4 and 8 compact
+    val lists = (1L to 8L).map { b =>
+      ListCountingFs.clear()
+      sink.addBatch(b, Seq((1L, "a", b), (2L, "b", b * 10), (100L + b, "a", b)).toDF("id", "p", "v"))
+      b -> ListCountingFs.listsOf(local)
+    }.toMap
+    val (compacting, steady) = lists.partition(_._1 % 4 == 0)
+    assert(steady.values.max <= 8 && compacting.values.max <= 12,
+      s"root listings per batch: ${lists.toSeq.sorted.mkString(", ")}")
+    assert(ManifestTable.read(spark, local,
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, p STRING, v BIGINT"))
+      .as[(Long, String, Long)].collect().toSet ==
+      (1L to 8L).map(b => (100L + b, "a", b)).toSet + ((1L, "a", 8L)) + ((2L, "b", 80L)))
+    assert(sink.lastCommitted() == 8L)
+  }
+
   test("graft sink compactEvery keeps the version a change-feed reader one batch behind resumes from") {
     import spark.implicits._
     import graft.sources.ManifestTable
