@@ -332,7 +332,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     val specLeaves: Seq[PartSpec] = specs.flatMap(_.leaves)
     val specSources: Set[String] =
       if (specLeaves.nonEmpty) specLeaves.map(_.source).toSet
-      else ManifestTable.partitionColumn(spark, root).toSet
+      else ManifestTable.snapshot(spark, root).dirSpec.map(_.source).toSet
     val specPhys: Set[String] =
       specLeaves.filterNot(_.isIdentity).map(_.physName).toSet
     val bucketSources: Set[String] =
@@ -638,7 +638,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     // the physical layout from the manifest or every subsequent catalog
     // write silently lands unpartitioned (ADVICE r18).
     val partColSaved = cur.flatMap(_.partCol).orElse(
-      if (cur.isEmpty) ManifestTable.partitionColumn(spark, root) else None)
+      if (cur.isEmpty) ManifestTable.snapshot(spark, root).dirSpec.map(_.source) else None)
     GraftDdl.save(spark, root, schema, partColSaved, props)
     new GraftV2Table(root, display(ident), None)
   }
@@ -1108,24 +1108,17 @@ private[sources] object FieldIds {
       }.toIndexedSeq: _*)
     }
 
-  /** The declared field ids of the table at `root` — `Map.empty` for
-    * id-less (pre-field-id or path-first) tables. This is THE seam every
-    * [[ManifestTable]] data read and write consults, so whichever path
-    * produced a frame (catalog INSERT, streaming sink, CDC replicate,
+  /** Pass a table's declared field ids through, enabling the session's
+    * by-id parquet resolution on the first id hit — so programmatic readers
+    * that never initialized a catalog still resolve renamed columns
+    * correctly. Every [[ManifestTable]] data read and write attaches its
+    * snapshot's ids through here ([[ManifestTable.Snapshot]]), so whichever
+    * path produced a frame (catalog INSERT, streaming sink, CDC replicate,
     * programmatic commit, compaction) the table's files stay uniformly
     * id-annotated and its reads id-resolved: ONE id-less data file in an
-    * id-carrying table would fail every later read (the reader refuses
-    * missing ids rather than silently matching by name). Read from the
-    * cached sidecar ([[GraftDdl.sidecar]]: one status call when warm, and
-    * the refusals of an unreadable or vanished id map on a miss). Enabling
-    * the session's by-id parquet resolution rides along the first id hit,
-    * so programmatic readers that never initialized a catalog still
-    * resolve renamed columns correctly.
+    * id-carrying table would fail every later read.
     */
-  def of(spark: SparkSession, root: String): Map[String, Int] =
-    enable(spark, GraftDdl.sidecar(spark, root).fieldIds)
-
-  private def enable(spark: SparkSession, ids: Map[String, Int]): Map[String, Int] = {
+  private[sources] def enable(spark: SparkSession, ids: Map[String, Int]): Map[String, Int] = {
     if (ids.nonEmpty &&
         !spark.conf.get("spark.sql.parquet.fieldId.read.enabled", "false").toBoolean)
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
@@ -1231,13 +1224,6 @@ object Checks {
       case (k, v) if k.startsWith(Prefix) => (k.stripPrefix(Prefix), v)
     }.sortBy(_._1)
 
-  /** A table root's constraints from its DDL sidecar — the lookup the
-    * path-first (V1) and streaming write seams use; sidecar-less roots
-    * have none.
-    */
-  def forTable(spark: SparkSession, root: String): Map[String, String] =
-    GraftDdl.sidecar(spark, root).checks
-
   /** The predicate must analyze against the declared schema (zero-row
     * probe — no data touched) and be deterministic.
     */
@@ -1273,7 +1259,7 @@ object Checks {
   }
 }
 
-private[sources] object GraftDdl {
+private[graft] object GraftDdl {
   val FileName = "_ddl.json"
   val StagedPrefix = ".ddl-"
 
@@ -1454,25 +1440,36 @@ private[sources] object GraftDdl {
   }
 
   /** One parsed sidecar, stamped with the `_ddl.json` (mtime, len) it was
-    * read at (`Missing` for a sidecar-less root), and the views of it
-    * every per-read and per-commit seam takes: field ids ([[FieldIds.of]]),
-    * partition specs and the [[PartSpecs.LayoutFromProp]] version
-    * ([[PartSpecs.layout]]) and CHECK constraints ([[Checks.forTable]]).
+    * read at (`Missing` for a sidecar-less root), and the table's DDL view
+    * every snapshot carries ([[ManifestTable.Snapshot]]): its declared
+    * write contract and the views every read and commit takes.
     */
   final class Sidecar(val stamp: (Long, Long), val ddl: Option[Ddl]) {
-    lazy val fieldIds: Map[String, Int] =
-      ddl.fold(Map.empty[String, Int])(d => FieldIds.parse(d.props))
-    /** Current-first: the active spec, then the history, newest first. */
-    lazy val specs: Seq[PartSpec] = ddl.toSeq.flatMap { d =>
-      d.schema.toSeq.flatMap { sch =>
-        d.partCol.map(PartSpec.parse(_, sch)).toSeq ++
-          PartSpecs.parseHistory(d.props).map(PartSpec.parse(_, sch))
-      }
-    }
-    lazy val layoutFrom: Long =
-      ddl.flatMap(_.props.get(PartSpecs.LayoutFromProp)).fold(0L)(_.toLong)
-    lazy val checks: Map[String, String] = ddl.fold(Map.empty[String, String])(
-      _.props.filter(_._1.startsWith(Checks.Prefix)))
+    private def props: Map[String, String] = ddl.fold(Map.empty[String, String])(_.props)
+    private def parsed(render: String): Option[PartSpec] =
+      ddl.flatMap(_.schema).map(PartSpec.parse(render, _))
+    lazy val fieldIds: Map[String, Int] = FieldIds.parse(props)
+    /** The ACTIVE spec: the sidecar's `partCol` alone. */
+    lazy val spec: Option[PartSpec] = ddl.flatMap(_.partCol).flatMap(parsed)
+    /** Retired specs, newest first: their dirs keep pruning under them. */
+    lazy val history: Seq[PartSpec] = PartSpecs.parseHistory(props).flatMap(parsed)
+    /** Every spec a live dir may be written under, active first. */
+    def specs: Seq[PartSpec] = spec.toSeq ++ history
+    /** The first data version the specs describe ([[PartSpecs.LayoutFromProp]]). */
+    lazy val layoutFrom: Long = props.get(PartSpecs.LayoutFromProp).fold(0L)(_.toLong)
+    lazy val checks: Map[String, String] = props.filter(_._1.startsWith(Checks.Prefix))
+    private def cols(key: String): Seq[String] =
+      props.get(key).toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+    /** Columns every commit zone-maps / Bloom-indexes (`statsCols`/`bloomCols`). */
+    lazy val statsCols: Seq[String] = cols("statsCols")
+    lazy val bloomCols: Seq[String] = cols("bloomCols")
+    /** OPTIMIZED WRITE: declared tables cluster a partitioned write by its
+      * partition tuple unless `graft.optimizeWrite=false`; path-first
+      * tables keep the task-per-dir write (their callers pre-shape their
+      * own parallelism).
+      */
+    def optimizeWrite: Boolean =
+      ddl.isDefined && !props.get("graft.optimizeWrite").exists(_.equalsIgnoreCase("false"))
   }
 
   private val Missing = (-1L, -1L)
@@ -1486,30 +1483,27 @@ private[sources] object GraftDdl {
   /** Forget the cached sidecar of every root under `root`. */
   def invalidate(root: String): Unit = cache.keySet.removeIf(_.startsWith(root))
 
-  private def stampOf(fs: org.apache.hadoop.fs.FileSystem, p: Path): (Long, Long) =
-    try { val st = fs.getFileStatus(p); (st.getModificationTime, st.getLen) }
-    catch { case _: java.io.FileNotFoundException => Missing }
+  private def stampOf(l: ManifestTable.RootListing): (Long, Long) =
+    l.ddl.fold(Missing)(st => (st.getModificationTime, st.getLen))
 
-  /** The table's sidecar: the cached parse while `_ddl.json`'s stamp — one
-    * status call — is unchanged, else a full [[load]] (staged-#ddl
-    * authority and its promotion included).
+  /** The table's sidecar as of root listing `l`: the cached parse while the
+    * listed `_ddl.json` stamp is unchanged — no further I/O — else a full
+    * [[load]] (staged-#ddl authority and its promotion included).
     */
-  def sidecar(spark: SparkSession, root: String): Sidecar = {
-    val p = new Path(root, FileName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stamp = stampOf(fs, p)
+  def sidecar(spark: SparkSession, root: String, l: ManifestTable.RootListing): Sidecar = {
+    val stamp = stampOf(l)
     val hit = cache.get(root)
-    if (hit != null && hit.stamp == stamp) hit else refresh(spark, root, fs, p, stamp, hit)
+    if (hit != null && hit.stamp == stamp) hit else refresh(spark, root, l, hit)
   }
 
-  private def refresh(spark: SparkSession, root: String, fs: org.apache.hadoop.fs.FileSystem,
-                      p: Path, stamp: (Long, Long), prev: Sidecar): Sidecar = {
-    // one load at stamp `st`: the sidecar, None when the stat and the load
-    // disagree (a transient window, never a steady state), and whether a
-    // staged-#ddl authority exists — ids may live ONLY there while the
+  private def refresh(spark: SparkSession, root: String, l0: ManifestTable.RootListing,
+                      prev: Sidecar): Sidecar = {
+    // one load from listing `l`: the sidecar, None when the listing and the
+    // load disagree (a transient window, never a steady state), and whether
+    // a staged-#ddl authority exists — ids may live ONLY there while the
     // published sidecar is still absent (ADVICE r21)
-    def loadAt(st: (Long, Long)): (Option[Sidecar], Boolean) = {
-      val l = ManifestTable.listRoot(fs, p.getParent)
+    def loadAt(l: ManifestTable.RootListing): (Option[Sidecar], Boolean) = {
+      val st = stampOf(l)
       val staged = stagedName(spark, root, l).isDefined
       (if (st == Missing && !staged) Some(new Sidecar(st, None))
        else load(spark, root, l).map(d => new Sidecar(st, Some(d))), staged)
@@ -1522,16 +1516,17 @@ private[sources] object GraftDdl {
     // the table). Wait out the window; if the sidecar truly vanished,
     // failing the write loudly beats poisoning the table.
     val prevIds = Option(prev).fold(Map.empty[String, Int])(_.fieldIds)
-    var st = stamp
-    var (loaded, staged) = loadAt(st)
+    var l = l0
+    var (loaded, staged) = loadAt(l)
     var attempt = 0
     while (attempt < 5 && loaded.forall(_.fieldIds.isEmpty && prevIds.nonEmpty)) {
       attempt += 1
       Thread.sleep(20L * attempt)
-      st = stampOf(fs, p)
-      val again = loadAt(st)
+      l = ManifestTable.listRoot(l0.fs, l0.rootP)
+      val again = loadAt(l)
       loaded = again._1; staged = again._2
     }
+    val st = stampOf(l)
     // loaded == None after every retry while the stat stamp STILL says
     // the sidecar exists is the same poisoning hazard with no prior
     // cache (ADVICE r20): caching "id-less" under the current stamp would
@@ -1608,32 +1603,13 @@ class GraftV2Table(val root: String, displayName: String, asOf: Option[Long],
     */
   private[sources] lazy val idSchema: StructType = FieldIds.attach(schema, fieldIds)
 
-  private[sources] def partCol: Option[String] =
-    ddl.flatMap(_.partCol).orElse(ManifestTable.partitionColumn(spark, root))
-
-  /** The ACTIVE partition spec — identity or a hidden transform, parsed
-    * from the sidecar's rendered form against the declared schema; the
-    * path-first fallback (no sidecar) recovers an identity spec from the
-    * manifest's own directory names.
+  /** The ACTIVE partition spec — a declared table's sidecar `partCol`
+    * (authoritative: absent means unpartitioned), a path-first table's
+    * identity dir column ([[ManifestTable.Snapshot.spec]]).
     */
-  private[sources] def partSpec: Option[PartSpec] = ddl match {
-    // a sidecar is AUTHORITATIVE either way: partCol absent means the
-    // table is (or evolved to be) unpartitioned — falling through to the
-    // manifest-dir recovery would resurrect an evolved-away layout's
-    // derived column as a phantom identity spec
-    case Some(d) => d.partCol.map(r => PartSpec.parse(r, d.schema.getOrElse(idSchema)))
-    case None => ManifestTable.partitionColumn(spark, root).map(PartSpec.Identity)
-  }
-
-  private def propCols(key: String): Seq[String] =
-    ddl.flatMap(_.props.get(key)).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-
-  private[sources] def statsColsProp: Seq[String] = propCols("statsCols")
-  private[sources] def bloomColsProp: Seq[String] = propCols("bloomCols")
-
   override def partitioning(): Array[Transform] =
-    partSpec.toSeq.flatMap(_.leaves).map {
+    (if (ddl.isDefined) new GraftDdl.Sidecar((-1L, -1L), ddl).spec
+     else ManifestTable.snapshot(spark, root, asOf).spec).toSeq.flatMap(_.leaves).map {
       case PartSpec.Identity(c) => Expressions.identity(c)
       case PartSpec.Days(c) => Expressions.days(c)
       case PartSpec.Hours(c) => Expressions.hours(c)
@@ -1695,9 +1671,7 @@ class GraftV2Table(val root: String, displayName: String, asOf: Option[Long],
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(asOf.isEmpty, "cannot write to a time-travel (VERSION AS OF) graft table")
-    new GraftWriteBuilder(root, idSchema, partSpec,
-      propCols("statsCols"), propCols("bloomCols"),
-      ddl.map(_.props).getOrElse(Map.empty))
+    new GraftWriteBuilder(root, idSchema)
   }
 
   /** TRUNCATE TABLE as ONE empty snapshot commit — `SupportsDeleteV2`'s
@@ -1707,10 +1681,11 @@ class GraftV2Table(val root: String, displayName: String, asOf: Option[Long],
     */
   override def truncateTable(): Boolean = {
     require(asOf.isEmpty, "cannot TRUNCATE a time-travel graft table")
-    if (ManifestTable.currentVersion(spark, root).isDefined) {
+    val snap = ManifestTable.snapshot(spark, root)
+    if (snap.version.isDefined) {
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], idSchema)
-      ManifestTable.commit(empty, root, partSpec, carryForward = false)
+      ManifestTable.commit(empty, snap, snap.spec, carryForward = false, Nil, Nil)
     }
     true
   }
@@ -1722,10 +1697,11 @@ class GraftV2Table(val root: String, displayName: String, asOf: Option[Long],
 
   override def deleteWhere(predicates: Array[Predicate]): Unit = {
     require(asOf.isEmpty, "cannot DELETE from a time-travel graft table")
-    if (ManifestTable.currentVersion(spark, root).isEmpty) return // empty table: no-op
+    val snap = ManifestTable.snapshot(spark, root)
+    if (snap.version.isEmpty) return // empty table: no-op
     val cond = predicates.toSeq.flatMap(V2Predicates.toColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    ManifestTable.deleteWhere(spark, root, idSchema, cond)
+    ManifestTable.deleteWhere(spark, snap, idSchema, cond)
   }
 
   // ----------------- row-level DML (UPDATE / MERGE) ---------------------
@@ -1733,9 +1709,7 @@ class GraftV2Table(val root: String, displayName: String, asOf: Option[Long],
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder = {
     require(asOf.isEmpty, "cannot run DML against a time-travel graft table")
-    val sc = propCols("statsCols"); val bc = propCols("bloomCols")
-    () => new GraftRowLevelOperation(info.command(), root, idSchema, partSpec, sc, bc,
-      ddl.map(_.props).getOrElse(Map.empty))
+    () => new GraftRowLevelOperation(info.command(), root, idSchema)
   }
 }
 
@@ -1961,8 +1935,7 @@ private[sources] object GraftPartFunctions {
   * irregular (DV present, evolved layout, other transforms, metadata
   * columns, time travel) falls back to [[GraftV1ScanImpl]].
   */
-private[sources] class GraftSpjScan(session: SparkSession, root: String,
-                                    tableSchema: StructType,
+private[sources] class GraftSpjScan(session: SparkSession, tableSchema: StructType,
                                     required: StructType, filters: Array[Filter],
                                     plan: ManifestTable.PrunePlan,
                                     leaves: Seq[PartSpec],
@@ -2007,29 +1980,29 @@ private[sources] class GraftSpjScan(session: SparkSession, root: String,
 
   // byte/row/NDV statistics are layout-independent: the V1 scan's, of the same plan
   private lazy val stats =
-    GraftV1ScanImpl.statistics(session, root, tableSchema, required, Some(plan))
+    GraftV1ScanImpl.statistics(session, plan.snap, tableSchema, required, Some(plan))
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = stats
 
   override def description(): String =
-    s"GraftSpjScan(root=$root, spec=${leaves.map(_.render).mkString(",")}, " +
+    s"GraftSpjScan(root=${plan.snap.root}, spec=${leaves.map(_.render).mkString(",")}, " +
       s"groups=${groups.size}, files=${groups.map(_._2.size).sum})"
 }
 
 private[sources] object GraftSpjScan {
   /** The scan when eligible — gated on Spark's own SPJ switch
     * (`spark.sql.sources.v2.bucketing.enabled`) so default sessions keep
-    * the V1 plan shape byte-for-byte. `planAt` is the fallback V1 scan's
-    * memoized plan, so either scan lists the snapshot once.
+    * the V1 plan shape byte-for-byte. `plan` is the fallback V1 scan's
+    * plan of the same snapshot, so either scan lists the snapshot once.
     */
-  def forTable(spark: SparkSession, root: String, tableSchema: StructType,
+  def forTable(spark: SparkSession, tableSchema: StructType,
                required: StructType, filters: Array[Filter],
-               planAt: Long => ManifestTable.PrunePlan): Option[Scan] = {
+               plan: => Option[ManifestTable.PrunePlan]): Option[Scan] = {
     if (!spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean)
       return None
     if (required.isEmpty ||
         required.fieldNames.exists(n => n == "__f" || n == "__pos")) return None
-    val plan = planAt(ManifestTable.currentVersion(spark, root).getOrElse(return None))
-    ManifestTable.spjLayout(spark, root, plan).map {
+    val p = plan.getOrElse(return None)
+    ManifestTable.spjLayout(p).map {
       case (leaves, groups) =>
         // the reported clustering transforms resolve against the scan
         // OUTPUT: a pruned-away source column (joining on k without
@@ -2040,14 +2013,18 @@ private[sources] object GraftSpjScan {
           leaves.map(_.source).distinct
             .filterNot(required.fieldNames.contains)
             .flatMap(c => tableSchema.fields.find(_.name == c)))
-        new GraftSpjScan(spark, root, tableSchema, withSources, filters, plan,
-          leaves, groups)
+        new GraftSpjScan(spark, tableSchema, withSources, filters, p, leaves, groups)
     }
   }
 }
 
+/** `pinned`: the row-level operation's snapshot its scan reads; otherwise
+  * every [[build]] resolves a fresh one (`asOf`, else the head), so a
+  * reused DataFrame sees later commits.
+  */
 private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
-                                        asOf: Option[Long])
+                                        asOf: Option[Long],
+                                        pinned: Option[ManifestTable.Snapshot] = None)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
 
@@ -2107,14 +2084,14 @@ private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
   }
 
   private def doPlan(agg: Aggregation): Option[(StructType, Array[Any])] = {
-    if (asOf.isDefined || filters.nonEmpty || agg.groupByExpressions().nonEmpty)
-      return None
+    if (asOf.isDefined || pinned.isDefined || filters.nonEmpty ||
+        agg.groupByExpressions().nonEmpty) return None
     val spark = SparkSession.active
+    val snap = ManifestTable.snapshot(spark, root)
     val fields = scala.collection.mutable.ArrayBuffer[StructField]()
     val values = scala.collection.mutable.ArrayBuffer[Any]()
     lazy val countStar: Long =
-      if (ManifestTable.currentVersion(spark, root).isEmpty) 0L
-      else ManifestTable.rowCount(spark, root)
+      if (snap.version.isEmpty) 0L else ManifestTable.rowCount(spark, snap)
     val boundsOf = scala.collection.mutable.Map[String, Option[Option[(Char, String, String)]]]()
     def fieldOf(e: VExpr): Option[StructField] = e match {
       case r: NamedReference if r.fieldNames().length == 1 =>
@@ -2124,7 +2101,7 @@ private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
     def minMax(column: VExpr, wantMax: Boolean): Boolean = fieldOf(column) match {
       case Some(f) if "LD".exists(GraftV1ScanImpl.boundValue(f.dataType, _, "0").isDefined) =>
         boundsOf.getOrElseUpdate(f.name,
-          ManifestTable.colBounds(spark, root, f.name)) match {
+          ManifestTable.colBounds(spark, snap, f.name)) match {
           case Some(b) =>
             val v = b.map { case (tag, mn, mx) =>
               GraftV1ScanImpl.boundValue(f.dataType, tag, if (wantMax) mx else mn) }
@@ -2159,52 +2136,46 @@ private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
         s"GraftMetadataAggregate(root=$root, ${aggSchema.fieldNames.mkString(",")})"
     }
     case None =>
+      // ONE snapshot per build: statistics, SPJ eligibility and the read share it
+      val spark = SparkSession.active
+      val v1 = new GraftV1ScanImpl(pinned.getOrElse(ManifestTable.snapshot(spark, root, asOf)),
+        tableSchema, required, filters)
       // SPJ groups the CURRENT version only: a pinned read stays on the V1 scan
-      val v1 = new GraftV1ScanImpl(root, tableSchema, required, filters, asOf)
-      val spj = if (asOf.isEmpty)
-        GraftSpjScan.forTable(SparkSession.active, root, tableSchema, required, filters, v1.planAt)
+      val spj = if (asOf.isEmpty && pinned.isEmpty)
+        GraftSpjScan.forTable(spark, tableSchema, required, filters, v1.plan)
       else None
       spj.getOrElse(v1)
   }
 }
 
-private[sources] class GraftV1ScanImpl(root: String, tableSchema: StructType,
-                                       required: StructType, filters: Array[Filter],
-                                       asOf: Option[Long]) extends V1Scan
+private[sources] class GraftV1ScanImpl(snap: ManifestTable.Snapshot, tableSchema: StructType,
+                                       required: StructType, filters: Array[Filter]) extends V1Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
   override def readSchema(): StructType = required
 
   override def description(): String =
-    s"GraftScan(root=$root, asOf=$asOf, columns=${required.fieldNames.mkString(",")})"
+    s"GraftScan(root=${snap.root}, version=${snap.version}, " +
+      s"columns=${required.fieldNames.mkString(",")})"
 
-  private var planned: Option[ManifestTable.PrunePlan] = None
-
-  /** ONE pruned plan per scan and version, pruned by the pushed filters
-    * whatever version the scan pins: the statistics estimate and the read
-    * share its listing and sidecar loads.
+  /** The scan's ONE plan of its snapshot, pruned by the pushed filters
+    * whatever version the snapshot pins: the statistics estimate and the
+    * read share its listing and sidecar loads. None for a never-committed
+    * table.
     */
-  private[sources] def planAt(v: Long): ManifestTable.PrunePlan = synchronized {
-    planned.filter(_.v == v).getOrElse {
-      val (ranges, points, pointsAny) = GraftRelation.hints(filters)
-      val p = ManifestTable.planPrune(SparkSession.active, root, v, ranges, points, pointsAny)
-      planned = Some(p)
-      p
-    }
+  private[sources] lazy val plan: Option[ManifestTable.PrunePlan] = snap.version.map { _ =>
+    val (ranges, points, pointsAny) = GraftRelation.hints(filters)
+    ManifestTable.planPrune(snap, ranges, points, pointsAny)
   }
 
-  private lazy val stats = {
-    val spark = SparkSession.active
-    GraftV1ScanImpl.statistics(spark, root, tableSchema, required,
-      asOf.orElse(ManifestTable.currentVersion(spark, root)).map(planAt))
-  }
+  private lazy val stats =
+    GraftV1ScanImpl.statistics(SparkSession.active, snap, tableSchema, required, plan)
 
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
     stats
 
   override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new GraftV1TableScan(context, root, tableSchema, required, asOf, planAt)
-      .asInstanceOf[T]
+    new GraftV1TableScan(context, tableSchema, required, plan).asInstanceOf[T]
 }
 
 private[sources] object GraftV1ScanImpl {
@@ -2243,12 +2214,12 @@ private[sources] object GraftV1ScanImpl {
     * exact-looking count into CBO's cardinality estimation; bytes alone
     * keep their superset contract). Both catalog scans report through here.
     */
-  def statistics(spark: SparkSession, root: String, tableSchema: StructType,
+  def statistics(spark: SparkSession, snap: ManifestTable.Snapshot, tableSchema: StructType,
                  required: StructType, plan: Option[ManifestTable.PrunePlan])
       : org.apache.spark.sql.connector.read.Statistics = {
     val factor = spark.conf.get("spark.sql.sources.fileCompressionFactor", "1.0").toDouble
     val (bytes: Long, rows: Option[Long], ndv: Map[String, Long]) = plan.fold(
-      (0L, Some(0L): Option[Long], Map.empty[String, Long]))(ManifestTable.estimatePruned(spark, root, _))
+      (0L, Some(0L): Option[Long], Map.empty[String, Long]))(ManifestTable.estimatePruned)
     val sized = math.max(1L, (bytes * factor).toLong)
     // per-column NDV from the bloom columns' merged KMV sketches (exactly
     // the kept files — the pruned-slice distinct count CBO's join and
@@ -2270,7 +2241,7 @@ private[sources] object GraftV1ScanImpl {
         if (required.fieldNames.contains(c)) {
           val bounds: Option[(Any, Any)] = for {
             f <- tableSchema.fields.find(_.name == c)
-            bs <- ManifestTable.colBounds(spark, root, c)
+            bs <- ManifestTable.colBounds(spark, snap, c)
             (tag, mn, mx) <- bs
             lo <- boundValue(f.dataType, tag, mn)
             hi <- boundValue(f.dataType, tag, mx)
@@ -2306,10 +2277,9 @@ private[sources] object GraftV1ScanImpl {
   }
 }
 
-private[sources] class GraftV1TableScan(ctx: SQLContext, root: String,
+private[sources] class GraftV1TableScan(ctx: SQLContext,
                                         tableSchema: StructType, required: StructType,
-                                        asOf: Option[Long],
-                                        planAt: Long => ManifestTable.PrunePlan)
+                                        plan: Option[ManifestTable.PrunePlan])
     extends BaseRelation with TableScan {
 
   override def sqlContext: SQLContext = ctx
@@ -2322,10 +2292,10 @@ private[sources] class GraftV1TableScan(ctx: SQLContext, root: String,
   override def buildScan(): RDD[Row] = {
     val ss = ctx.sparkSession
     val wantsMeta = required.fieldNames.exists(n => n == "__f" || n == "__pos")
-    val frame = asOf.orElse(ManifestTable.currentVersion(ss, root)) match {
+    val frame = plan match {
       // created-but-never-committed table: an empty relation, not an error
       case None => ss.createDataFrame(ss.sparkContext.emptyRDD[Row], required)
-      case Some(v) => ManifestTable.scanFiles(ss, root, tableSchema, planAt(v), wantsMeta)
+      case Some(p) => ManifestTable.scanFiles(ss, tableSchema, p, wantsMeta)
     }
     frame.select(required.fieldNames.map(col).toIndexedSeq: _*)
       .queryExecution.toRdd.asInstanceOf[RDD[Row]]
@@ -2336,10 +2306,7 @@ private[sources] class GraftV1TableScan(ctx: SQLContext, root: String,
   * fallback — the same staged commits as the programmatic and V1-format
   * paths, so catalog writes inherit the optimistic-concurrency rules.
   */
-private[sources] class GraftWriteBuilder(root: String, tableSchema: StructType,
-                                         spec: Option[PartSpec], statsCols: Seq[String],
-                                         bloomCols: Seq[String],
-                                         tableProps: Map[String, String] = Map.empty)
+private[sources] class GraftWriteBuilder(root: String, tableSchema: StructType)
     extends WriteBuilder with SupportsTruncate {
 
   private var overwrite = false
@@ -2349,13 +2316,13 @@ private[sources] class GraftWriteBuilder(root: String, tableSchema: StructType,
   override def build(): Write = new V1Write {
     override def toInsertableRelation(): InsertableRelation = new InsertableRelation {
       override def insert(data: DataFrame, ow: Boolean): Unit = {
+        val snap = ManifestTable.snapshot(data.sparkSession, root)
         val aligned = Checks.enforce(
-          data.toDF(tableSchema.fieldNames.toIndexedSeq: _*), tableProps)
+          data.toDF(tableSchema.fieldNames.toIndexedSeq: _*), snap.checks)
         if (overwrite || ow)
-          ManifestTable.commit(aligned, root, spec, carryForward = false,
-            statsCols = statsCols, bloomCols = bloomCols)
+          ManifestTable.commit(aligned, snap, snap.spec, carryForward = false, Nil, Nil)
         else
-          ManifestTable.append(aligned, root, spec, statsCols, bloomCols)
+          ManifestTable.append(aligned, snap, snap.spec, Nil, Nil)
       }
     }
   }
@@ -2425,31 +2392,27 @@ private[sources] object V2Predicates {
 
 /** Delta-based row-level operation (the Iceberg position-delta shape):
   * rowId = `(__f, __pos)`, updates split into delete + reinsert, and the
-  * write lands as ONE merge-on-read commit. The table's current version is
-  * pinned HERE — scan and commit both speak about the same snapshot.
+  * write lands as ONE merge-on-read commit. The table's snapshot is pinned
+  * HERE — scan and commit both speak about it, and the commit stages under
+  * its write contract.
   */
 private[sources] class GraftRowLevelOperation(cmd: RowLevelOperation.Command,
-                                              root: String, tableSchema: StructType,
-                                              spec: Option[PartSpec],
-                                              statsCols: Seq[String], bloomCols: Seq[String],
-                                              tableProps: Map[String, String] = Map.empty)
+                                              root: String, tableSchema: StructType)
     extends RowLevelOperation with SupportsDelta {
 
-  private val baseVersion: Option[Long] =
-    ManifestTable.currentVersion(SparkSession.active, root)
+  private val base = ManifestTable.snapshot(SparkSession.active, root)
 
   override def command(): RowLevelOperation.Command = cmd
 
-  override def description(): String = s"GraftRowLevelOperation($cmd, $root, base=$baseVersion)"
+  override def description(): String =
+    s"GraftRowLevelOperation($cmd, $root, base=${base.version})"
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(root, tableSchema, baseVersion)
+    new GraftScanBuilder(root, tableSchema, None, Some(base))
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
-      override def build(): DeltaWrite =
-        new GraftDeltaWrite(root, tableSchema, spec, statsCols, bloomCols,
-          baseVersion, info, tableProps)
+      override def build(): DeltaWrite = new GraftDeltaWrite(tableSchema, base, info)
     }
 
   override def rowId(): Array[NamedReference] =
@@ -2464,24 +2427,20 @@ private[sources] object GraftDeltaWrite {
     StructField("__pos", LongType, nullable = false)))
 }
 
-private[sources] class GraftDeltaWrite(root: String, tableSchema: StructType,
-                                       spec: Option[PartSpec], statsCols: Seq[String],
-                                       bloomCols: Seq[String], baseVersion: Option[Long],
-                                       info: LogicalWriteInfo,
-                                       tableProps: Map[String, String] = Map.empty)
+private[sources] class GraftDeltaWrite(tableSchema: StructType, base: ManifestTable.Snapshot,
+                                       info: LogicalWriteInfo)
     extends DeltaWrite {
 
   private val staging: String =
-    root + "/.stage-" + java.util.UUID.randomUUID().toString.take(12) + "-dml"
+    base.root + "/.stage-" + java.util.UUID.randomUUID().toString.take(12) + "-dml"
 
-  override def description(): String = s"GraftDeltaWrite($root, base=$baseVersion)"
+  override def description(): String = s"GraftDeltaWrite(${base.root}, base=${base.version})"
 
   override def toBatch(): DeltaBatchWrite = {
     val rowIdSchema =
       if (info.rowIdSchema().isPresent) info.rowIdSchema().get()
       else GraftDeltaWrite.DelSchema
-    new GraftDeltaBatchWrite(root, tableSchema, spec, statsCols, bloomCols,
-      baseVersion, info.schema(), rowIdSchema, staging, tableProps)
+    new GraftDeltaBatchWrite(tableSchema, base, info.schema(), rowIdSchema, staging)
   }
 }
 
@@ -2491,12 +2450,10 @@ private[sources] class GraftDeltaWrite(root: String, tableSchema: StructType,
   * task messages count — a speculative or failed attempt's stragglers in
   * the staging dir are never picked up.
   */
-private[sources] class GraftDeltaBatchWrite(root: String, tableSchema: StructType,
-                                            spec: Option[PartSpec], statsCols: Seq[String],
-                                            bloomCols: Seq[String], baseVersion: Option[Long],
+private[sources] class GraftDeltaBatchWrite(tableSchema: StructType,
+                                            base: ManifestTable.Snapshot,
                                             dataSchema: StructType, rowIdSchema: StructType,
-                                            staging: String,
-                                            tableProps: Map[String, String] = Map.empty)
+                                            staging: String)
     extends DeltaBatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
@@ -2523,20 +2480,17 @@ private[sources] class GraftDeltaBatchWrite(root: String, tableSchema: StructTyp
           if (dataFiles.isEmpty) None
           else Some(Checks.enforce(
             spark.read.schema(dataSchema).parquet(dataFiles: _*)
-              .select(tableSchema.fieldNames.map(col).toIndexedSeq: _*), tableProps))
-        baseVersion match {
-          case Some(v) =>
-            // insert-only DML stages no DV at all (commitDelta carries the
-            // base pointer forward) — a pure append commit
-            ManifestTable.commitDelta(spark, root, v, batch, deletes, spec,
-              statsCols, bloomCols)
-          case None =>
-            // DML against a created-but-empty table: nothing existed to
-            // delete, the inserts are a plain first append
-            require(deletes.isEmpty,
-              "row-level DML produced deletes against a table with no committed version")
-            batch.foreach(b =>
-              ManifestTable.append(b, root, spec, statsCols, bloomCols))
+              .select(tableSchema.fieldNames.map(col).toIndexedSeq: _*), base.checks))
+        if (base.version.isDefined)
+          // insert-only DML stages no DV at all (commitDelta carries the
+          // base pointer forward) — a pure append commit
+          ManifestTable.commitDelta(spark, base, batch, deletes, base.spec)
+        else {
+          // DML against a created-but-empty table: nothing existed to
+          // delete, the inserts are a plain first append
+          require(deletes.isEmpty,
+            "row-level DML produced deletes against a table with no committed version")
+          batch.foreach(ManifestTable.append(_, base, base.spec, Nil, Nil))
         }
       }
     } finally cleanup(spark)
@@ -2752,21 +2706,21 @@ private[sources] object GraftProcedures {
           "partition skew"
       override def run(args: InternalRow): Seq[InternalRow] = {
         val t = cat.tableNamed(args.getUTF8String(0).toString)
+        val s = SparkSession.active
+        val spec = ManifestTable.snapshot(s, t.root).spec
         val pv = Option(args.getUTF8String(2)).map(_.toString).filter(_.nonEmpty)
         val v = (pv, args.getInt(3)) match {
           case (Some(value), _) =>
-            val sp = t.partSpec.getOrElse(throw new IllegalArgumentException(
+            val sp = spec.getOrElse(throw new IllegalArgumentException(
               s"compact(partition => ...) needs a partitioned table"))
-            ManifestTable.compactPartition(SparkSession.active, t.root, t.schema,
-              sp, value, args.getInt(1), t.statsColsProp)
+            ManifestTable.compactPartition(s, t.root, t.schema, sp, value, args.getInt(1))
           case (None, mb) if mb > 0 =>
-            val full = ManifestTable.compactTargetBytes(SparkSession.active, t.root,
-              t.schema, t.partSpec, mb.toLong * 1024L * 1024L, t.statsColsProp)
+            val full = ManifestTable.compactTargetBytes(s, t.root,
+              t.schema, spec, mb.toLong * 1024L * 1024L)
             cat.clearPartSpecHistory(t.root, full) // full rewrite, as below
             full
           case (None, _) =>
-            val full = ManifestTable.compact(SparkSession.active, t.root,
-              t.schema, t.partSpec, args.getInt(1), t.statsColsProp)
+            val full = ManifestTable.compact(s, t.root, t.schema, spec, args.getInt(1))
             // a full rewrite re-derives every row under the CURRENT spec —
             // the mixed layout (and with it, any pruning/carry-forward
             // debt of partition evolution) ends here, so retire history
@@ -2786,8 +2740,9 @@ private[sources] object GraftProcedures {
       override def run(args: InternalRow): Seq[InternalRow] = {
         val t = cat.tableNamed(args.getUTF8String(0).toString)
         val cols = args.getUTF8String(1).toString.split(",").map(_.trim).filter(_.nonEmpty)
-        val v = ManifestTable.compactZOrder(SparkSession.active, t.root, t.schema,
-          t.partSpec, cols.toIndexedSeq, args.getInt(2), t.statsColsProp)
+        val s = SparkSession.active
+        val v = ManifestTable.compactZOrder(s, t.root, t.schema,
+          ManifestTable.snapshot(s, t.root).spec, cols.toIndexedSeq, args.getInt(2))
         cat.clearPartSpecHistory(t.root, v) // full rewrite: mixed layout ends
         Seq(row(v))
       }
@@ -2941,10 +2896,9 @@ private[sources] object GraftProcedures {
               else survivors.repartitionByRange(
                 (cluster :+ key).map(col).toIndexedSeq: _*)
             val corpusNow = ManifestTable.currentVersion(s, corp.root).getOrElse(0L)
+            val snap = ManifestTable.snapshot(s, idx.root)
             val v = ManifestTable.withBasedOn(corpusNow) {
-              ManifestTable.commit(clustered, idx.root, idx.partSpec,
-                carryForward = false, statsCols = idx.statsColsProp,
-                bloomCols = idx.bloomColsProp)
+              ManifestTable.commit(clustered, snap, snap.spec, carryForward = false, Nil, Nil)
             }
             Seq(row(true, fraction, corpusNow, v))
           } else
@@ -3046,11 +3000,12 @@ private[sources] object GraftMetaTables {
           new GenericInternalRow(Array[Any](UTF8String.fromString(n), v)): InternalRow
       }.toArray
       case "partitions" =>
-        if (ManifestTable.currentVersion(spark, root).isEmpty) Array.empty
+        val snap = ManifestTable.snapshot(spark, root)
+        if (snap.version.isEmpty) Array.empty
         else {
-          val specsByPhys = PartSpecs.of(spark, root).flatMap(_.leaves)
+          val specsByPhys = snap.ddl.specs.flatMap(_.leaves)
             .map(s => s.physName -> s.render).toMap
-          ManifestTable.liveFileSkipping(spark, root).groupBy(_._2).toSeq
+          ManifestTable.liveFileSkipping(spark, snap).groupBy(_._2).toSeq
             .sortBy(_._1).map { case (part, fs) =>
               // composite layouts render the comma list of their segments'
               // field specs, mirroring the sidecar form
@@ -3075,8 +3030,9 @@ private[sources] object GraftMetaTables {
           new GenericArrayData(kv.map(e => UTF8String.fromString(e._2)).toArray[Any]))
         def strArr(xs: Seq[String]) =
           new GenericArrayData(xs.map(UTF8String.fromString).toArray[Any])
-        if (ManifestTable.currentVersion(spark, root).isEmpty) Array.empty
-        else ManifestTable.liveFileSkipping(spark, root).map {
+        val snap = ManifestTable.snapshot(spark, root)
+        if (snap.version.isEmpty) Array.empty
+        else ManifestTable.liveFileSkipping(spark, snap).map {
           case (p, part, dv, b, zones, bloomCols) =>
             val nonNull = zones.filterNot(_._5)
             new GenericInternalRow(Array[Any](

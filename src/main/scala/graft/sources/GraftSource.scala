@@ -222,11 +222,11 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
     // silently dropping the option (ADVICE r19 — a user appending a
     // drifted frame got neither evolution nor an error). A fresh root is
     // different: the first write DEFINES the schema, nothing can drift.
+    val spark = sqlContext.sparkSession
     val data1 =
       if (parameters.get("mergeSchema").exists(_.equalsIgnoreCase("true"))) {
-        if (GraftDdl.load(sqlContext.sparkSession, r).isDefined ||
-            ManifestTable.exists(sqlContext.sparkSession, r)) {
-          val evolved = SchemaEvolve.evolve(sqlContext.sparkSession, r, data0.schema)
+        if (ManifestTable.listRoot(spark, r).isTable) {
+          val evolved = SchemaEvolve.evolve(spark, r, data0.schema)
           SchemaEvolve.alignTo(data0, evolved)
         } else data0
       } else data0
@@ -235,43 +235,37 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
     // comma-separated composites too: `days(ts),bucket(4,k)`); otherwise a
     // sidecar-declared spec drives the write, so path-addressed saves land
     // partitioned like the catalog table they extend
-    val ddlOpt0 = GraftDdl.load(sqlContext.sparkSession, r)
     val optSpec: Option[PartSpec] = parameters.get("partitionBy")
       .map(rd => PartSpec.validate(PartSpec.parse(rd, data1.schema), data1.schema))
+    val snap0 = ManifestTable.snapshot(spark, r)
     // a TRANSFORM spec on a sidecar-less root bootstraps the DDL sidecar:
     // the spec must live SOMEWHERE for pruning to map predicates through
     // it and for reads to resolve the declared (derived-column-free)
     // schema — without this, the hidden layout would leak its dir columns
     // into inferred reads and never prune (an identity partitionBy keeps
     // the legacy sidecar-less behavior byte-for-byte)
-    if (ddlOpt0.isEmpty && optSpec.exists(!_.isIdentity))
-      GraftDdl.save(sqlContext.sparkSession, r, data1.schema,
-        optSpec.map(_.render), Map.empty)
-    val ddlOpt = GraftDdl.load(sqlContext.sparkSession, r)
-    val spec: Option[PartSpec] = optSpec
-      .orElse(ddlOpt.flatMap(d =>
-        for { sch <- d.schema; rd <- d.partCol } yield PartSpec.parse(rd, sch)))
-    val data = Checks.enforce(data1, ddlOpt.map(_.props).getOrElse(Map.empty))
+    val snap =
+      if (snap0.declared || !optSpec.exists(!_.isIdentity)) snap0
+      else {
+        GraftDdl.save(spark, r, data1.schema, optSpec.map(_.render), Map.empty)
+        ManifestTable.snapshot(spark, r)
+      }
+    val spec: Option[PartSpec] = optSpec.orElse(snap.spec(None))
+    val data = Checks.enforce(data1, snap.checks)
     val statsCols = parameters.get("statsCols").map(_.split(",").toSeq).getOrElse(Nil)
     val bloomCols = parameters.get("bloomCols").map(_.split(",").toSeq).getOrElse(Nil)
-    val exists = ManifestTable.exists(sqlContext.sparkSession, r)
+    def create(): Long = ManifestTable.commit(data, snap, spec, true, statsCols, bloomCols)
+    val exists = snap.version.isDefined
     mode match {
       case SaveMode.Overwrite =>
-        ManifestTable.commit(data, r, spec, carryForward = false,
-          statsCols = statsCols, bloomCols = bloomCols)
+        ManifestTable.commit(data, snap, spec, carryForward = false, statsCols, bloomCols)
       case SaveMode.Append =>
-        if (exists) ManifestTable.append(data, r, spec,
-          statsCols = statsCols, bloomCols = bloomCols)
-        else ManifestTable.commit(data, r, spec,
-          statsCols = statsCols, bloomCols = bloomCols)
+        if (exists) ManifestTable.append(data, snap, spec, statsCols, bloomCols)
+        else create()
       case SaveMode.ErrorIfExists if exists =>
         throw new IllegalStateException(s"graft table $r already exists (ErrorIfExists)")
-      case SaveMode.ErrorIfExists =>
-        ManifestTable.commit(data, r, spec,
-          statsCols = statsCols, bloomCols = bloomCols)
-      case SaveMode.Ignore =>
-        if (!exists) ManifestTable.commit(data, r, spec,
-          statsCols = statsCols, bloomCols = bloomCols)
+      case SaveMode.ErrorIfExists => create()
+      case SaveMode.Ignore => if (!exists) create()
     }
     GraftRelation(sqlContext, r, data.schema, None)
   }
@@ -302,22 +296,16 @@ final case class GraftRelation(sqlContext: SQLContext, root: String,
     require(asOf.isEmpty,
       "cannot INSERT into a time-travel (versionAsOf) graft relation — load the " +
         "current snapshot instead")
-    // a sidecar is authoritative either way (partCol absent = declared
-    // unpartitioned); only sidecar-LESS path-first tables recover an
-    // identity column from the manifest's own directory names. The same
-    // sidecar carries CHECK constraints, enforced inside the write.
-    val ddlOpt = GraftDdl.load(spark, root)
-    val aligned = Checks.enforce(data.toDF(schema.fieldNames.toIndexedSeq: _*),
-      ddlOpt.map(_.props).getOrElse(Map.empty))
-    val spec = ddlOpt match {
-      case Some(d) => for { sch <- d.schema; r <- d.partCol }
-        yield PartSpec.parse(r, sch)
-      case None => ManifestTable.partitionColumn(spark, root).map(PartSpec.Identity)
-    }
+    // the snapshot's write contract: its spec (a sidecar is authoritative,
+    // partCol absent = declared unpartitioned; only sidecar-LESS path-first
+    // tables keep the identity column of their own directory names), its
+    // CHECK constraints, enforced inside the write, and its skipping columns
+    val snap = ManifestTable.snapshot(spark, root)
+    val aligned = Checks.enforce(data.toDF(schema.fieldNames.toIndexedSeq: _*), snap.checks)
     if (overwrite)
-      ManifestTable.commit(aligned, root, spec, carryForward = false)
+      ManifestTable.commit(aligned, snap, snap.spec, carryForward = false, Nil, Nil)
     else
-      ManifestTable.append(aligned, root, spec)
+      ManifestTable.append(aligned, snap, snap.spec, Nil, Nil)
   }
 
   // buildScan hands back InternalRow-backed RDDs from the delegated plan
@@ -327,9 +315,9 @@ final case class GraftRelation(sqlContext: SQLContext, root: String,
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
     import org.apache.spark.sql.functions.col
     val (ranges, points, pointsAny) = GraftRelation.hints(filters)
-    val plan = ManifestTable.planPrune(spark, root, ManifestTable.versionOf(spark, root, asOf),
+    val plan = ManifestTable.planPrune(ManifestTable.snapshot(spark, root, asOf),
       ranges, points, pointsAny)
-    ManifestTable.scanFiles(spark, root, schema, plan, withMeta = false)
+    ManifestTable.scanFiles(spark, schema, plan, withMeta = false)
       .select(requiredColumns.map(col).toIndexedSeq: _*)
       .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }

@@ -169,79 +169,139 @@ object ManifestTable {
   def exists(spark: SparkSession, root: String): Boolean =
     currentVersion(spark, root).isDefined
 
-  /** (partitionDirName, data version) entries of the given manifest. A
-    * partition may appear under SEVERAL data versions — a [[mergeDv]] append
-    * adds a new version alongside the partition's existing files, so the
-    * partition's content is the union of its entries (minus the deletion
-    * vector). Lines starting with `#` are directives (e.g. the
-    * [[deleteWhere]] deletion-vector pointer), not partition entries.
+  /** One parsed manifest body: its `(partitionDirName, data version)`
+    * entries and its directive payloads by key. A partition may appear
+    * under SEVERAL data versions — a [[mergeDv]] append adds a new version
+    * alongside the partition's existing files, so the partition's content
+    * is the union of its entries (minus the deletion vector). Lines
+    * starting with `#` are directives (`#dv`, `#ts`, `#batch`, `#ddl`,
+    * `#basedOn`, `#ref`, `#parent`), not entries; the first line of a key
+    * is its payload.
     */
-  private def entriesOf(fs: FileSystem, root: Path, v: Long): Seq[(String, Long)] = {
-    manifestBody(fs, root, v).linesIterator
-      .filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
-        val Array(name, ver) = line.split("\t", 2)
-        name -> ver.toLong
-      }.toSeq
+  final case class Manifest(entries: Seq[(String, Long)], directives: Map[String, String]) {
+    def directive(key: String): Option[String] = directives.get(key)
+    /** The deletion-vector version (`d<v>`) the manifest points at. */
+    def dv: Option[Long] = directive("dv").map(_.toLong)
+    /** The commit wall-clock, epoch µs. */
+    def ts: Option[Long] = directive("ts").map(_.toLong)
+    /** The stream-sink batch id the commit recorded. */
+    def batch: Option[Long] = directive(BatchKey).map(_.toLong)
   }
 
-  /** Manifest bodies are IMMUTABLE once published (the create-exclusive
-    * arbiter never rewrites a number), so reads memoize per absolute path,
-    * validated by (modificationTime, length) — one cheap `getFileStatus`
-    * round trip instead of open+read+close. The commit path alone re-reads
-    * the SAME current manifest 3-5× per commit (`entriesOf` + `dvOf` ×2 +
-    * the publish's prior-`#ts` resolve), and at object-store latencies
-    * each body read is a full GET (r17 commit-path shave, measured by the
-    * StressBench `commit_meta_*` probes). The validation stamp guards the
-    * delete-and-recreate-same-path case (table drops, test temp reuse):
-    * a new incarnation's same-numbered manifest carries a different
-    * (mtime, len). Small bounded LRU — only recently-touched tables'
-    * newest manifests matter.
+  /** THE parser of the manifest body format ([[publishManifest]] is its
+    * one writer).
     */
-  private val bodyCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (Long, Long, String)](64, 0.75f, true) {
+  private def parseManifest(body: String): Manifest = {
+    val (dirs, entries) = body.linesIterator.filter(_.nonEmpty).toSeq.partition(_.startsWith("#"))
+    Manifest(entries.map { line =>
+      val Array(name, ver) = line.split("\t", 2)
+      name -> ver.toLong
+    }, dirs.reverseIterator.flatMap { line =>
+      val i = line.indexOf('\t')
+      if (i < 0) None else Some(line.substring(1, i) -> line.substring(i + 1))
+    }.toMap)
+  }
+
+  /** Manifests are IMMUTABLE once published (the create-exclusive arbiter
+    * never rewrites a number), so parses memoize per absolute path,
+    * validated by (modificationTime, length) — one `getFileStatus` round
+    * trip instead of open+read+parse. The stamp guards the
+    * delete-and-recreate-same-path case (table drops, test temp reuse): a
+    * new incarnation's same-numbered manifest carries a different (mtime,
+    * len). Small bounded LRU — only recently-touched tables' newest
+    * manifests matter.
+    */
+  private val manifestCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, (Long, Long, Manifest)](64, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, Long, String)]): Boolean = size > 256
+          e: java.util.Map.Entry[String, (Long, Long, Manifest)]): Boolean = size > 256
     })
 
-  /** Drop every memoized manifest body and deletion vector under
-    * `rootPrefix` — called by table-dropping paths so a recreate at the
-    * same path starts cold.
+  /** Drop every memoized manifest and deletion vector under `rootPrefix` —
+    * called by table-dropping paths so a recreate at the same path starts
+    * cold.
     */
   private[sources] def invalidateBodyCache(rootPrefix: String): Unit = {
-    bodyCache.synchronized(bodyCache.keySet.removeIf(_.startsWith(rootPrefix)))
+    manifestCache.synchronized(manifestCache.keySet.removeIf(_.startsWith(rootPrefix)))
     dvCache.synchronized(dvCache.keySet.removeIf(_.startsWith(rootPrefix)))
   }
 
-  private def manifestBody(fs: FileSystem, root: Path, v: Long): String = {
+  /** Manifest `v`, parsed: one status call, and a read only on a cache
+    * miss. A manifest that is not on disk throws `FileNotFoundException`.
+    */
+  private def manifestAt(fs: FileSystem, root: Path, v: Long): Manifest = {
     val p = new Path(root, ManifestPrefix + fmt(v))
     val st = fs.getFileStatus(p)
     val key = p.toString
-    val cached = bodyCache.get(key)
+    val cached = manifestCache.get(key)
     if (cached != null && cached._1 == st.getModificationTime && cached._2 == st.getLen)
       cached._3
     else {
       val in = fs.open(p)
-      val body =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      val m =
+        try parseManifest(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
         finally in.close()
-      bodyCache.put(key, (st.getModificationTime, st.getLen, body))
-      body
+      manifestCache.put(key, (st.getModificationTime, st.getLen, m))
+      m
     }
   }
 
-  /** The deletion-vector version (`d<v>`) a manifest points at, if any. */
-  private def dvOf(fs: FileSystem, root: Path, v: Long): Option[Long] =
-    manifestBody(fs, root, v).linesIterator
-      .find(_.startsWith("#dv\t")).map(_.stripPrefix("#dv\t").toLong)
+  /** [[manifestAt]], None when the manifest is not on disk. */
+  private def manifestIfAny(fs: FileSystem, root: Path, v: Long): Option[Manifest] =
+    try Some(manifestAt(fs, root, v))
+    catch { case _: java.io.FileNotFoundException => None }
 
-  /** Manifest `v`'s commit wall-clock directive (`#ts`, epoch µs) — the ONE
-    * parser for the directive (ADVICE r15: three inlined copies had started
-    * to drift); [[history]], [[versionAtTimestamp]], [[vacuum]] and
-    * [[publishManifest]] all route here.
+  /** One table state: the version, its parsed manifest (entries, DV
+    * pointer, directives) and the table's DDL view (active spec, spec
+    * history, `graft.partSpecFrom`, field ids, checks and the declared
+    * `statsCols`/`bloomCols`/`graft.optimizeWrite`). A statement resolves
+    * it ONCE ([[snapshot]]) and passes it through its read, its commit
+    * and the commit's rebase base; a catalog scan resolves one per scan
+    * build. It is never cached on a table object nor reused across a
+    * write of the statement's own, and the commit protocol's decisions
+    * (claim number, lineage head, rebase) always read a fresh listing.
+    * `version = None`: a declared table that never committed.
     */
-  private def tsOf(fs: FileSystem, root: Path, v: Long): Option[Long] =
-    manifestBody(fs, root, v).linesIterator
-      .find(_.startsWith("#ts\t")).map(_.stripPrefix("#ts\t").toLong)
+  final class Snapshot private[sources] (val root: String, val fs: FileSystem, val rootP: Path,
+                                         val version: Option[Long], val manifest: Manifest,
+                                         private[graft] val ddl: GraftDdl.Sidecar) {
+    def v: Long = version.getOrElse(
+      throw new IllegalStateException(s"manifest table $root has no committed version"))
+    def entries: Seq[(String, Long)] = manifest.entries
+    def dv: Option[Long] = manifest.dv
+    /** Whether the table declares its DDL in a `_ddl.json` sidecar. */
+    def declared: Boolean = ddl.ddl.isDefined
+    /** The table's CHECK constraints (`graft.check.*` properties). */
+    def checks: Map[String, String] = ddl.checks
+    /** The identity spec a path-first table's manifest dir names carry. */
+    def dirSpec: Option[PartSpec] = entries.collectFirst {
+      case (n, _) if n.contains("=") => PartSpec.Identity(n.substring(0, n.indexOf('=')))
+    }
+    /** The spec a write lands under: a declared table's active spec (the
+      * sidecar is authoritative — no `partCol` means unpartitioned), else
+      * `pathFirst`.
+      */
+    def spec(pathFirst: => Option[PartSpec]): Option[PartSpec] =
+      if (declared) ddl.spec else pathFirst
+    /** [[spec]], path-first tables keeping the layout of their dir names. */
+    def spec: Option[PartSpec] = spec(dirSpec)
+  }
+
+  /** The table at `root` as of its session-ref head, or `asOf`. */
+  def snapshot(spark: SparkSession, root: String, asOf: Option[Long] = None): Snapshot =
+    snapshot(spark, root, listRoot(spark, root), asOf)
+
+  /** [[snapshot]] from a root listing the caller already holds: one status
+    * call for the manifest, none for a warm `_ddl.json`. A version no
+    * manifest on disk holds fails with an `IllegalStateException`.
+    */
+  def snapshot(spark: SparkSession, root: String, l: RootListing, asOf: Option[Long]): Snapshot = {
+    val v = asOf.orElse(l.head)
+    val m = v.fold(Manifest(Nil, Map.empty))(x => manifestIfAny(l.fs, l.rootP, x).getOrElse(
+      throw new IllegalStateException(
+        s"manifest table $root has no version $x on disk (vacuumed or never committed)")))
+    new Snapshot(root, l.fs, l.rootP, v, m, GraftDdl.sidecar(spark, root, l))
+  }
 
   // ------------------- atomic commit-metadata directives -----------------
   //
@@ -258,7 +318,8 @@ object ManifestTable {
   /** Run `f` with every manifest this thread publishes carrying a
     * `#batch\t<id>` directive — the [[GraftStreamSink]] exactly-once seam.
     */
-  def withBatchId[T](id: Long)(f: => T): T = withDirective(s"#batch\t$id")(f)
+  def withBatchId[T](id: Long)(f: => T): T = withDirective(s"#$BatchKey\t$id")(f)
+  private val BatchKey = "batch"
 
   /** Run `f` with every manifest this thread publishes carrying an extra
     * directive line (APPENDED to any already in scope) — the general form
@@ -276,25 +337,23 @@ object ManifestTable {
   /** Directive payload (`#<key>\t<payload>`) of manifest `v`, if present. */
   def directiveOf(spark: SparkSession, root: String, v: Long, key: String): Option[String] = {
     val (fs, rootP) = fsOf(spark, root)
-    manifestBody(fs, rootP, v).linesIterator
-      .find(_.startsWith(s"#$key\t")).map(_.stripPrefix(s"#$key\t"))
+    manifestAt(fs, rootP, v).directive(key)
   }
 
   /** The field-id map a COMMIT must attach to the data it writes
-    * ([[FieldIds.attachDf]] seam): normally the live sidecar's
-    * ([[FieldIds.of]]), but a commit carrying a `#ddl` directive flips the
+    * ([[FieldIds.attachDf]] seam): normally the snapshot's, but a commit carrying a `#ddl` directive flips the
     * schema ATOMICALLY with its own manifest rename (the RTAS adopt /
     * torn-flip shape) — the staged sidecar it names becomes authoritative
     * the instant this commit lands, so the data must carry the STAGED
     * map's ids; attaching the dying map would refuse the new columns as
     * schema drift (r18).
     */
-  private def fieldIdsForWrite(spark: SparkSession, root: String): Map[String, Int] =
-    commitDirectives.value
+  private def fieldIdsForWrite(spark: SparkSession, snap: Snapshot): Map[String, Int] =
+    FieldIds.enable(spark, commitDirectives.value
       .find(_.startsWith("#ddl\t")).map(_.stripPrefix("#ddl\t"))
-      .flatMap(name => GraftDdl.loadStaged(spark, root, name))
+      .flatMap(name => GraftDdl.loadStaged(spark, snap.root, name))
       .map(d => FieldIds.parse(d.props))
-      .getOrElse(FieldIds.of(spark, root))
+      .getOrElse(snap.ddl.fieldIds))
 
   /** ANN-index lifecycle base pointer (VERDICT r17 #2): an index table
     * records WHICH corpus version it is complete as of via a `#basedOn`
@@ -323,10 +382,7 @@ object ManifestTable {
     * last sink commit; callers combine with their own marker fast path).
     */
   def lastBatchId(l: RootListing): Option[Long] =
-    l.versions.reverseIterator.flatMap { v =>
-      manifestBody(l.fs, l.rootP, v).linesIterator
-        .find(_.startsWith("#batch\t")).map(_.stripPrefix("#batch\t").toLong)
-    }.nextOption()
+    l.versions.reverseIterator.flatMap(manifestAt(l.fs, l.rootP, _).batch).nextOption()
 
   /** `TIMESTAMP AS OF` floor-resolution: the highest still-on-disk version
     * whose commit wall-clock is <= `tsMicros` (Delta/Iceberg semantics —
@@ -348,7 +404,7 @@ object ManifestTable {
   private[graft] def versionAtTimestamp(l: RootListing, tsMicros: Long): Option[Long] = {
     var runMax = Long.MinValue
     l.versions.takeWhile { v =>
-      tsOf(l.fs, l.rootP, v).foreach(ts => runMax = math.max(runMax, ts))
+      manifestAt(l.fs, l.rootP, v).ts.foreach(ts => runMax = math.max(runMax, ts))
       runMax == Long.MinValue || runMax <= tsMicros
     }.lastOption
   }
@@ -358,7 +414,7 @@ object ManifestTable {
     */
   private[graft] def publishManifest(fs: FileSystem, rootP: Path, v: Long,
                                      entries: Seq[(String, Long)], dv: Option[Long],
-                                     priorV: Option[Long] = None): Unit = {
+                                     prior: Option[Manifest] = None): Unit = {
     // every manifest records its commit wall-clock (µs) as a `#ts`
     // directive — the TIMESTAMP AS OF resolution point. Clock values are
     // deliberately kept OFF oracled query paths (wall time isn't
@@ -370,18 +426,15 @@ object ManifestTable {
     // commits inside one clock millisecond (the µs stamp has ms
     // granularity: currentTimeMillis * 1000 — without it they'd tie and
     // floor-resolution would defensibly-but-surprisingly pick the later).
-    // `priorV` (r17 shave): every caller that already resolved the base
-    // version passes it, so the common case is one memoized tsOf instead
-    // of a root LISTING + manifest read per commit — at object-store
-    // latencies the listing is the single most expensive metadata op on
-    // this path. Falls back to the full scan when the hint is absent,
-    // vanished (concurrent vacuum), or stampless (pre-r15 history).
-    val prevTs = priorV.flatMap { pv =>
-      try tsOf(fs, rootP, pv)
-      catch { case _: java.io.FileNotFoundException => None }
-    }.orElse {
+    // `prior`: the newest earlier manifest the caller already holds (its
+    // base snapshot's, or the winner's it rebased on), so the common case
+    // reads no manifest and lists nothing — at object-store latencies the
+    // listing is the single most expensive metadata op on this path.
+    // Falls back to the full scan when it is absent or stampless (pre-r15
+    // history).
+    val prevTs = prior.flatMap(_.ts).orElse {
       listRoot(fs, rootP).versions.filter(_ < v)
-        .reverseIterator.flatMap(pv => tsOf(fs, rootP, pv)).nextOption()
+        .reverseIterator.flatMap(manifestIfAny(fs, rootP, _).flatMap(_.ts)).nextOption()
     }
     val ts = math.max(prevTs.map(_ + 1L).getOrElse(Long.MinValue),
       System.currentTimeMillis() * 1000L)
@@ -580,15 +633,22 @@ object ManifestTable {
     * (base DV ∪ this batch's masked positions — the [[mergeDv]] and
     * [[deleteWhere]] shapes); the staged DV is claimed into `d<myNext>`
     * alongside the data claim and the manifest's `#dv` points at it.
+    *
+    * `base` is the snapshot the commit was computed against: its version
+    * is the semantic base, and every shape but [[CommitShape.Snapshot]]
+    * (a wholesale replace) carries its entries and DV pointer forward.
     */
   private[graft] def publishStaged(
-      spark: SparkSession, root: String, stage: Path, baseV: Option[Long],
-      baseEntries: Seq[(String, Long)], touchedNames: Seq[String],
-      dvCarry0: Option[Long], stats: Seq[(String, String, ColZone)],
+      spark: SparkSession, root: String, stage: Path, base: Snapshot,
+      touchedNames: Seq[String], stats: Seq[(String, String, ColZone)],
       blooms: Seq[(String, String, Array[Long])], shape: CommitShape,
       dvStage: Option[Path] = None,
       ndv: Seq[(String, String, Array[Long])] = Nil): Long = {
     import CommitShape._
+    val baseV = base.version
+    val carried = Option.when(shape != Snapshot)(base)
+    val baseEntries = carried.fold(Seq.empty[(String, Long)])(_.entries)
+    val dvCarry0 = carried.flatMap(_.dv)
     // the entry rule (supersede the touched names, or add them) and
     // whether a collision may rebase at all
     val (supersede, retryable) = shape match {
@@ -615,6 +675,8 @@ object ManifestTable {
     if (hasRefs) myNext = math.max(myNext, listed.maxVersion + 1)
     var prev = baseEntries
     var dvCarry = dvCarry0
+    // the newest manifest in hand, whose `#ts` the publish floors on
+    var known: Option[(Long, Manifest)] = baseV.map(_ -> base.manifest)
     var attempt = 0
     var committed = -1L
     val claimName = ".claim-" + java.util.UUID.randomUUID().toString.take(12)
@@ -647,9 +709,10 @@ object ManifestTable {
           sameLineageHead(l, refName, Some(marked)).getOrElse(marked)
         }
         else l.head.filter(_ >= myNext).getOrElse(throw cause)
-      val newEntries = entriesOf(fs, rootP, newCur)
+      val newM = manifestAt(fs, rootP, newCur)
+      val newEntries = newM.entries
       val newSets = entrySetsOf(newEntries)
-      val newDv = dvOf(fs, rootP, newCur)
+      val newDv = newM.dv
       if (shape == Append) {
         // a BLIND APPEND references no base state, so it commutes with ANY
         // winner (Delta's blind-append rule) — no conflict check
@@ -692,6 +755,7 @@ object ManifestTable {
       }
       prev = newEntries
       dvCarry = newDv
+      known = Some(newCur -> newM)
       lineageBase = Some(newCur)
       myNext = (if (hasRefs) math.max(l.maxVersion, newCur) else newCur) + 1
     }
@@ -756,9 +820,12 @@ object ManifestTable {
         // grace branch above waits for its publish or reclaims its orphan
       } else {
         dirAt = Some(myNext)
-        if (stats.nonEmpty) writeStats(fs, rootP, myNext, stats)
-        if (blooms.nonEmpty) writeBlooms(fs, rootP, myNext, blooms)
-        if (ndv.nonEmpty) writeNdv(fs, rootP, myNext, ndv)
+        if (stats.nonEmpty) writeSidecar(fs, rootP, StatsPrefix, myNext,
+          stats.map { case (rel, c, z) => (rel, c, zoneText(z)) })
+        Seq(BloomPrefix -> blooms, NdvPrefix -> ndv).foreach { case (pfx, rows) =>
+          if (rows.nonEmpty) writeSidecar(fs, rootP, pfx, myNext,
+            rows.map { case (rel, c, arr) => (rel, c, wordsText(arr)) })
+        }
         // claim the staged DV into d<myNext>. Safe to reclaim a
         // pre-existing d-dir: every DV writer stages and claims its data
         // dir FIRST (deleteWhere included), so a d<myNext> with no
@@ -779,9 +846,10 @@ object ManifestTable {
           val entries =
             if (supersede) prev.filterNot(e => touchedNames.contains(e._1)) ++ touched
             else prev ++ touched
+          val prior = known.filter(_._1 == myNext - 1).map(_._2)
+            .orElse(Some(myNext - 1).filter(_ > 0).flatMap(manifestIfAny(fs, rootP, _)))
           def pub(): Unit = publishManifest(fs, rootP, myNext, entries,
-            if (dvStage.isDefined) Some(myNext) else dvCarry,
-            priorV = Some(myNext - 1).filter(_ > 0))
+            if (dvStage.isDefined) Some(myNext) else dvCarry, prior)
           // branched: record the lineage parent AND ref name atomically
           // with the rename (fast-forward's ancestry walk; the `#ref` lets
           // a same-ref committer racing this one's publish→refMark window
@@ -825,17 +893,13 @@ object ManifestTable {
     */
   private[graft] def metadataCommitProbe(spark: SparkSession, root: String,
                                          staged: Boolean): Long = {
-    val (fs, rootP) = fsOf(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"metadataCommitProbe: $root has no committed version"))
-    val entries = entriesOf(fs, rootP, cur)
-    val dv = dvOf(fs, rootP, cur)
+    val snap = snapshot(spark, root)
     if (staged) {
-      publishStaged(spark, root, stageData(spark, root, None, None, Nil, Nil).dir,
-        Some(cur), entries, Nil, dv, Nil, Nil, CommitShape.Delete)
+      publishStaged(spark, root, stageData(spark, snap, None, None, Nil, Nil).dir,
+        snap, Nil, Nil, Nil, CommitShape.Delete)
     } else {
-      publishManifest(fs, rootP, cur + 1, entries, dv, priorV = Some(cur))
-      cur + 1
+      publishManifest(snap.fs, snap.rootP, snap.v + 1, snap.entries, snap.dv, Some(snap.manifest))
+      snap.v + 1
     }
   }
 
@@ -860,8 +924,11 @@ object ManifestTable {
     */
   def read(spark: SparkSession, root: String, schema: StructType,
            asOfVersion: Option[Long] = None): DataFrame =
-    scanFiles(spark, root, schema, planPrune(spark, root, versionOf(spark, root, asOfVersion)),
-      withMeta = false)
+    read(spark, snapshot(spark, root, asOfVersion), schema)
+
+  /** [[read]] of a resolved snapshot. */
+  def read(spark: SparkSession, snap: Snapshot, schema: StructType): DataFrame =
+    scanFiles(spark, schema, planPrune(snap), withMeta = false)
 
   /** [[read]] with the `__f`/`__pos` file-identity columns kept (scheme-
     * free path + parquet row index — the coordinates the deletion-vector
@@ -869,14 +936,8 @@ object ManifestTable {
     */
   def readWithMeta(spark: SparkSession, root: String, schema: StructType,
                    asOfVersion: Option[Long] = None): DataFrame =
-    scanFiles(spark, root, schema, planPrune(spark, root, versionOf(spark, root, asOfVersion)),
+    scanFiles(spark, schema, planPrune(snapshot(spark, root, asOfVersion)),
       withMeta = true)
-
-  /** `asOf`, else the head version of the session's ref. */
-  private[graft] def versionOf(spark: SparkSession, root: String,
-                               asOf: Option[Long] = None): Long =
-    asOf.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no committed version"))
 
   /** Scheme-free path: `file:///a/b` and `file:/a/b` both normalize to
     * `/a/b`, so a deletion vector's stored paths compare stably against
@@ -915,7 +976,7 @@ object ManifestTable {
     org.apache.spark.sql.types.StructField("__f", org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("__pos", org.apache.spark.sql.types.LongType)))
 
-  /** Decoded DVs by `d<v>` dir, memoized like [[manifestBody]]: validated
+  /** Decoded DVs by `d<v>` dir, memoized like [[manifestAt]]: validated
     * by the bitmap file's (mtime, len) — a parquet-era dir by its own mtime
     * and len -1, so a bitmap file at the same path never matches it — and
     * cleared by [[invalidateBodyCache]]. Entries are shared by concurrent
@@ -1032,19 +1093,6 @@ object ManifestTable {
       }
     }
 
-  /** The table's physical partition column, recovered from the current
-    * manifest's hive-style entry names (`col=value`) — None for an
-    * unpartitioned table. The front door's write side uses this so an
-    * `INSERT INTO` lands partitioned like the table it extends.
-    */
-  def partitionColumn(spark: SparkSession, root: String): Option[String] = {
-    val (fs, rootP) = fsOf(spark, root)
-    currentVersion(spark, root).flatMap(v =>
-      entriesOf(fs, rootP, v).collectFirst {
-        case (n, _) if n.contains("=") => n.substring(0, n.indexOf('='))
-      })
-  }
-
   /** Hive-style partition dir name for a value, matching Spark's own
     * partitioned-write rendering (escaped specials; NULL as the Hive
     * default-partition token). The dir text is the value's string form,
@@ -1065,13 +1113,13 @@ object ManifestTable {
     * Every snapshot read is this scan — the one place the DV filter and
     * the field ids apply.
     */
-  private[graft] def scanFiles(spark: SparkSession, root: String, schema0: StructType,
+  private[graft] def scanFiles(spark: SparkSession, schema0: StructType,
                                plan: PrunePlan, withMeta: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     // resolve columns by FIELD ID when the table declares ids ([[FieldIds]])
     // — files written under since-renamed names surface under the current
     // name with values intact; id-less tables read by name as ever
-    val schema = FieldIds.attach(schema0, FieldIds.of(spark, root))
+    val schema = FieldIds.attach(schema0, FieldIds.enable(spark, plan.snap.ddl.fieldIds))
     val needMeta = withMeta || plan.dv.isDefined
     val cols = schema.fieldNames.toSeq.map(col)
     val meta = Seq(normPath(col("_metadata.file_path")).as("__f"),
@@ -1089,7 +1137,7 @@ object ManifestTable {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], if (needMeta) metaSchema else schema)
       else rels.reduce(_ unionByName _)
     // the DV rides a broadcast variable (no job) into a position filter
-    val masked = plan.dv.map(dvBitmaps(spark, root, _)).filter(_.nonEmpty).fold(assembled) { m =>
+    val masked = plan.dv.map(dvBitmaps(spark, plan.snap.root, _)).filter(_.nonEmpty).fold(assembled) { m =>
       val bc = spark.sparkContext.broadcast(m)
       val live = org.apache.spark.sql.functions.udf((f: String, pos: Long) =>
         !bc.value.get(f).exists(b => pos <= Int.MaxValue && b.contains(pos.toInt)))
@@ -1250,39 +1298,52 @@ object ManifestTable {
     }
   }
 
-  /** Sidecar line format: `relPathHex \t col \t tag \t allNull \t minHex \t
-    * maxHex` — hex framing so partition values / string bounds can't break
-    * the TSV, and every number rides its locale-free `toString`.
+  /** THE skipping-sidecar codec — `_stats.`, `_bloom.` and `_ndv.` plus
+    * the data version: one line per (file, column), `relPathHex \t colHex
+    * \t payload` — hex framing so partition values / string bounds can't
+    * break the TSV. Zone payloads are `tag \t allNull \t minHex \t maxHex`
+    * (every number rides its locale-free `toString`); Bloom words and KMV
+    * minima are 16-hex-digit longs.
     */
-  private def writeStats(fs: FileSystem, rootP: Path, dataVersion: Long,
-                         entries: Seq[(String, String, ColZone)]): Unit = {
-    val body = entries.map { case (rel, c, z) =>
-      s"${hex(rel)}\t${hex(c)}\t${z.tag}\t${if (z.allNull) 1 else 0}\t${hex(z.minS)}\t${hex(z.maxS)}"
-    }.mkString("", "\n", "\n")
-    val out = fs.create(new Path(rootP, StatsPrefix + fmt(dataVersion)), true)
+  private def writeSidecar(fs: FileSystem, rootP: Path, pfx: String, dataVersion: Long,
+                           rows: Seq[(String, String, String)]): Unit = {
+    val body = rows.map { case (rel, c, payload) => s"${hex(rel)}\t${hex(c)}\t$payload" }
+      .mkString("", "\n", "\n")
+    val out = fs.create(new Path(rootP, pfx + fmt(dataVersion)), true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
   }
 
-  /** relPath → (col → zone) of a data version, or None when the version
-    * committed without stats (pruning then falls back to reading it whole).
+  /** relPath → (col → decoded payload) of a data version's `pfx` sidecar,
+    * or None when the version committed without one (pruning then falls
+    * back to reading it whole).
     */
-  private def loadStats(fs: FileSystem, rootP: Path,
-                        dataVersion: Long): Option[Map[String, Map[String, ColZone]]] = {
-    val p = new Path(rootP, StatsPrefix + fmt(dataVersion))
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(body.linesIterator.filter(_.nonEmpty).map { line =>
-        val Array(rel, c, tag, nul, mn, mx) = line.split("\t", 6)
-        (unhex(rel), unhex(c), ColZone(tag.head, unhex(mn), unhex(mx), nul == "1"))
-      }.toSeq.groupBy(_._1).map { case (rel, rows) =>
-        rel -> rows.map(r => r._2 -> r._3).toMap
-      })
-    }
+  private def loadSidecar[T](fs: FileSystem, rootP: Path, pfx: String, dataVersion: Long)
+                            (decode: String => T): Option[Map[String, Map[String, T]]] = {
+    val in = try fs.open(new Path(rootP, pfx + fmt(dataVersion)))
+      catch { case _: java.io.FileNotFoundException => return None }
+    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    Some(body.linesIterator.filter(_.nonEmpty).map { line =>
+      val Array(rel, c, payload) = line.split("\t", 3)
+      (unhex(rel), unhex(c), decode(payload))
+    }.toSeq.groupBy(_._1).map { case (rel, rows) => rel -> rows.map(r => r._2 -> r._3).toMap })
   }
+
+  private def zoneText(z: ColZone): String =
+    s"${z.tag}\t${if (z.allNull) 1 else 0}\t${hex(z.minS)}\t${hex(z.maxS)}"
+  private def zoneOf(payload: String): ColZone = {
+    val Array(tag, nul, mn, mx) = payload.split("\t", 4)
+    ColZone(tag.head, unhex(mn), unhex(mx), nul == "1")
+  }
+  private def wordsText(arr: Array[Long]): String = arr.map(w => f"$w%016x").mkString
+  private def wordsOf(payload: String): Array[Long] =
+    payload.grouped(16).map(java.lang.Long.parseUnsignedLong(_, 16)).toArray
+
+  private def loadStats(fs: FileSystem, rootP: Path, dataVersion: Long) =
+    loadSidecar(fs, rootP, StatsPrefix, dataVersion)(zoneOf)
+  private def loadBlooms(fs: FileSystem, rootP: Path, dataVersion: Long) =
+    loadSidecar(fs, rootP, BloomPrefix, dataVersion)(wordsOf)
+  private def loadNdv(fs: FileSystem, rootP: Path, dataVersion: Long) =
+    loadSidecar(fs, rootP, NdvPrefix, dataVersion)(wordsOf)
 
   /** Can a file with these zones hold a row matching every range? */
   private def survives(zones: Map[String, ColZone], ranges: Seq[ColRange]): Boolean =
@@ -1408,37 +1469,6 @@ object ManifestTable {
 
   private val NdvK = 128
 
-  private def writeNdv(fs: FileSystem, rootP: Path, dataVersion: Long,
-                       ndv: Seq[(String, String, Array[Long])]): Unit = {
-    val body = ndv.map { case (rel, c, arr) =>
-      s"${hex(rel)}\t${hex(c)}\t${arr.map(v => f"$v%016x").mkString}"
-    }.mkString("", "\n", "\n")
-    val out = fs.create(new Path(rootP, NdvPrefix + fmt(dataVersion)), true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** relPath → (col → KMV minima) of a data version; None when the version
-    * committed without NDV sketches.
-    */
-  private def loadNdv(fs: FileSystem, rootP: Path,
-                      dataVersion: Long): Option[Map[String, Map[String, Array[Long]]]] = {
-    val p = new Path(rootP, NdvPrefix + fmt(dataVersion))
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(body.linesIterator.filter(_.nonEmpty).map { line =>
-        val Array(rel, c, hs) = line.split("\t", 3)
-        val arr = hs.grouped(16).map(java.lang.Long.parseUnsignedLong(_, 16)).toArray
-        (unhex(rel), unhex(c), arr)
-      }.toSeq.groupBy(_._1).map { case (rel, rows) =>
-        rel -> rows.map(r => r._2 -> r._3).toMap
-      })
-    }
-  }
-
   private def ndvOfPerFile(perFile: Seq[Map[String, Array[Long]]]): Map[String, Long] =
     if (perFile.isEmpty) Map.empty
     else {
@@ -1453,37 +1483,6 @@ object ManifestTable {
         c -> org.apache.spark.sql.graft.KmvSketch.estimate(set, NdvK)
       }.toMap
     }
-
-  private def writeBlooms(fs: FileSystem, rootP: Path, dataVersion: Long,
-                          blooms: Seq[(String, String, Array[Long])]): Unit = {
-    val body = blooms.map { case (rel, c, arr) =>
-      s"${hex(rel)}\t${hex(c)}\t${arr.map(w => f"$w%016x").mkString}"
-    }.mkString("", "\n", "\n")
-    val out = fs.create(new Path(rootP, BloomPrefix + fmt(dataVersion)), true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** relPath → (col → filter words) for a data version, None when the
-    * version committed without blooms.
-    */
-  private def loadBlooms(fs: FileSystem, rootP: Path,
-                         dataVersion: Long): Option[Map[String, Map[String, Array[Long]]]] = {
-    val p = new Path(rootP, BloomPrefix + fmt(dataVersion))
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(body.linesIterator.filter(_.nonEmpty).map { line =>
-        val Array(rel, c, bits) = line.split("\t", 3)
-        val arr = bits.grouped(16).map(java.lang.Long.parseUnsignedLong(_, 16)).toArray
-        (unhex(rel), unhex(c), arr)
-      }.toSeq.groupBy(_._1).map { case (rel, rows) =>
-        rel -> rows.map(r => r._2 -> r._3).toMap
-      })
-    }
-  }
 
   /** Driver-side replay of [[bloomPositions]] on a point value. */
   private def pointPositions(value: Any): Seq[Int] = {
@@ -1507,7 +1506,7 @@ object ManifestTable {
   def pruneCounts(spark: SparkSession, root: String, ranges: Seq[ColRange],
                   points: Seq[(String, Any)] = Nil,
                   pointsAny: Seq[(String, Seq[Any])] = Nil): (Int, Int) =
-    planPrune(spark, root, versionOf(spark, root), ranges, points, pointsAny).counts
+    planPrune(snapshot(spark, root), ranges, points, pointsAny).counts
 
   /** Does the (possibly NESTED — composite specs write
     * `ts_day=…/user_id_bucket=…`) hive-style dir path survive the
@@ -1660,14 +1659,13 @@ object ManifestTable {
                      points: Seq[(String, Any)] = Nil,
                      pointsAny: Seq[(String, Seq[Any])] = Nil)
       : (Long, Option[Long], Map[String, Long]) =
-    estimatePruned(spark, root, planPrune(spark, root, v, ranges, points, pointsAny))
+    estimatePruned(planPrune(snapshot(spark, root, Some(v)), ranges, points, pointsAny))
 
   /** [[estimatePruned]] of an already planned prune — one plan serves a
     * catalog scan's statistics and its read ([[scanFiles]]).
     */
-  private[graft] def estimatePruned(spark: SparkSession, root: String, plan: PrunePlan)
-      : (Long, Option[Long], Map[String, Long]) = {
-    val (fs, rootP) = fsOf(spark, root)
+  private[graft] def estimatePruned(plan: PrunePlan): (Long, Option[Long], Map[String, Long]) = {
+    val (fs, rootP) = (plan.snap.fs, plan.snap.rootP)
     var bytes = 0L
     var rows = 0L
     var haveRows = plan.dv.isEmpty
@@ -1714,13 +1712,10 @@ object ManifestTable {
     * is present (the raw per-bucket file read has no position-mask seam —
     * resurrecting deleted rows is never an option).
     */
-  private[graft] def spjLayout(spark: SparkSession, root: String, plan: PrunePlan)
+  private[graft] def spjLayout(plan: PrunePlan)
       : Option[(Seq[PartSpec], Seq[(Seq[Any], Seq[(String, Long)])])] = {
-    val (fs, rootP) = fsOf(spark, root)
     if (plan.dv.isDefined) return None
-    val leaves: Seq[PartSpec] = GraftDdl.load(spark, root).flatMap(d =>
-      for { sch <- d.schema; rd <- d.partCol } yield PartSpec.parse(rd, sch))
-      .map(_.leaves).getOrElse(return None)
+    val leaves: Seq[PartSpec] = plan.snap.ddl.spec.map(_.leaves).getOrElse(return None)
     val eligible = leaves.nonEmpty &&
       leaves.exists(_.isInstanceOf[PartSpec.Bucket]) &&
       leaves.forall {
@@ -1750,7 +1745,7 @@ object ManifestTable {
     }
     // every live entry must conform to the CURRENT layout — a "" entry or
     // a foreign dir is pre-evolution data outside the clustering
-    if (!entriesOf(fs, rootP, plan.v).forall(e => dirValues(e._1).isDefined))
+    if (!plan.snap.entries.forall(e => dirValues(e._1).isDefined))
       return None
     val groups = scala.collection.mutable.LinkedHashMap[
       Seq[Any], scala.collection.mutable.Builder[(String, Long), Seq[(String, Long)]]]()
@@ -1777,35 +1772,37 @@ object ManifestTable {
   def prunePartitionCounts(spark: SparkSession, root: String, ranges: Seq[ColRange],
                            points: Seq[(String, Any)] = Nil,
                            pointsAny: Seq[(String, Seq[Any])] = Nil): (Int, Int) = {
-    val (fs, rootP) = fsOf(spark, root)
-    val dirs = entriesOf(fs, rootP, versionOf(spark, root)).filter(_._1.nonEmpty).groupBy(_._1)
-    val keep = dirFilter(spark, root, ranges, points, pointsAny)
+    val snap = snapshot(spark, root)
+    val dirs = snap.entries.filter(_._1.nonEmpty).groupBy(_._1)
+    snap.v // a never-committed table has no snapshot to count
+    val keep = dirFilter(snap, ranges, points, pointsAny)
     (dirs.count { case (d, es) => es.exists(e => keep(e._2, d)) }, dirs.size)
   }
 
   /** Does dir `dir` of data version `dv` survive the hints, mapped through
-    * the partition specs (current AND historical, by the dir's own column
-    * name)? Dirs of data versions the specs do not describe
-    * ([[PartSpecs.layout]]) always survive: pruning is a correct superset.
+    * the snapshot's partition specs (current AND historical, by the dir's
+    * own column name)? Dirs of data versions older than the specs describe
+    * (`graft.partSpecFrom`) always survive: pruning is a correct superset.
     */
-  private def dirFilter(spark: SparkSession, root: String, ranges: Seq[ColRange],
+  private def dirFilter(snap: Snapshot, ranges: Seq[ColRange],
                         points: Seq[(String, Any)],
                         pointsAny: Seq[(String, Seq[Any])]): (Long, String) => Boolean = {
-    val (specs, layoutFrom) = PartSpecs.layout(spark, root)
-    val specsByPhys = specs.flatMap(_.leaves).map(s => s.physName -> s).toMap
-    (dv, dir) => dv < layoutFrom || dirSurvives(dir, specsByPhys, ranges, points, pointsAny)
+    val specsByPhys = snap.ddl.specs.flatMap(_.leaves).map(s => s.physName -> s).toMap
+    (dv, dir) => dv < snap.ddl.layoutFrom ||
+      dirSurvives(dir, specsByPhys, ranges, points, pointsAny)
   }
 
-  /** A snapshot's file plan: manifest version `v`, its deletion-vector
-    * pointer `dv`, and per data version (ascending) the qualified version
-    * dir and the data files (path relative to it, status) the hints keep;
-    * `counts` = (kept, total) files over the versions whose sidecars the
-    * hints consulted — for an unhinted plan, which consults none, every
-    * listed file, all kept.
+  /** A snapshot's file plan: the snapshot, and per data version
+    * (ascending) the qualified version dir and the data files (path
+    * relative to it, status) the hints keep; `counts` = (kept, total) files
+    * over the versions whose sidecars the hints consulted — for an unhinted
+    * plan, which consults none, every listed file, all kept.
     */
-  private[graft] final case class PrunePlan(v: Long, dv: Option[Long],
+  private[graft] final case class PrunePlan(snap: Snapshot,
                                             kept: Seq[(Long, Path, Seq[(String, FileStatus)])],
                                             counts: (Int, Int)) {
+    def v: Long = snap.v
+    def dv: Option[Long] = snap.dv
     /** Every kept file paired with its qualified data version dir. */
     def files: Seq[(Path, FileStatus)] =
       kept.flatMap { case (_, vdir, fs) => fs.map(f => vdir -> f._2) }
@@ -1825,24 +1822,21 @@ object ManifestTable {
     * long as its data dirs ([[vacuum]] reclaims both together), so pinned
     * reads skip by them too. Dirs prune by partition spec only for the
     * data versions the specs describe ([[dirFilter]]).
-    * An unhinted plan opens no sidecar and no partition spec: it costs one
-    * manifest read and one listing per live dir.
+    * An unhinted plan opens no sidecar: it costs one listing per live dir.
     */
-  private[graft] def planPrune(spark: SparkSession, root: String, v: Long,
+  private[graft] def planPrune(snap: Snapshot,
                                ranges: Seq[ColRange] = Nil, points: Seq[(String, Any)] = Nil,
                                pointsAny: Seq[(String, Seq[Any])] = Nil,
                                restrictTo: Option[Set[String]] = None): PrunePlan = {
-    val (fs, rootP) = fsOf(spark, root)
-    val entries = try entriesOf(fs, rootP, v) catch {
-      case _: java.io.FileNotFoundException => throw new IllegalStateException(
-        s"manifest table $root has no version $v on disk (vacuumed or never committed)")
-    }
+    val (fs, rootP) = (snap.fs, snap.rootP)
+    snap.v // a never-committed table has no snapshot to plan
+    val entries = snap.entries
     val hinted = ranges.nonEmpty || points.nonEmpty || pointsAny.nonEmpty
     // PARTITION-DIR pruning before any file listing ([[dirFilter]]): at
     // 10k partitions a point query lists ONE dir's files instead of the
     // table's. Unmatched hints leave the dir in.
     val keepDir: (Long, String) => Boolean =
-      if (!hinted) (_, _) => true else dirFilter(spark, root, ranges, points, pointsAny)
+      if (!hinted) (_, _) => true else dirFilter(snap, ranges, points, pointsAny)
     var keptN = 0; var totalN = 0
     val byVersion = entries.filter(e => restrictTo.forall(_.contains(e._1)))
       .groupBy(_._2).toSeq.sortBy(_._1)
@@ -1878,7 +1872,7 @@ object ManifestTable {
     }
     // unhinted, nothing was consulted and every listed file is kept
     val counts = if (hinted) (keptN, totalN) else { val n = plan.map(_._3.size).sum; (n, n) }
-    PrunePlan(v, dvOf(fs, rootP, v), plan, counts)
+    PrunePlan(snap, plan, counts)
   }
 
   /** The current snapshot with zone-map/Bloom file skipping: the
@@ -1891,8 +1885,8 @@ object ManifestTable {
                  ranges: Seq[ColRange],
                  points: Seq[(String, Any)] = Nil,
                  pointsAny: Seq[(String, Seq[Any])] = Nil): DataFrame =
-    scanFiles(spark, root, schema0,
-      planPrune(spark, root, versionOf(spark, root), ranges, points, pointsAny), withMeta = false)
+    scanFiles(spark, schema0,
+      planPrune(snapshot(spark, root), ranges, points, pointsAny), withMeta = false)
 
   /** [[readPruned]] with the skipping hints derived from the PREDICATE
     * ITSELF: the conjunctive equality/range constraints on top-level
@@ -2048,7 +2042,7 @@ object ManifestTable {
   def deletedKeysSince(spark: SparkSession, root: String, schema: StructType,
                        keys: Seq[String], fromV: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val cur = versionOf(spark, root)
+    val cur = snapshot(spark, root).v
     if (cur <= fromV)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(keys.map(k => schema(k))))
@@ -2109,7 +2103,7 @@ object ManifestTable {
       var v = toV
       try {
         while (v > fromV)
-          v = directiveOf(spark, root, v, "parent")
+          v = manifestAt(fs, rootP, v).directive("parent")
             .flatMap(_.toLongOption).getOrElse(v - 1)
       } catch {
         case e: java.io.IOException => throw new IllegalStateException(
@@ -2124,11 +2118,10 @@ object ManifestTable {
           "lineage — the head sequence a streaming source observes stays valid " +
           "across fast_forward — or re-seed the consumer from a full snapshot.")
     }
-    def entrySets(v: Long): Map[String, Set[Long]] =
-      entriesOf(fs, rootP, v).groupBy(_._1).map { case (p, es) => p -> es.map(_._2).toSet }
-    val eF = entrySets(fromV); val eT = entrySets(toV)
+    val Seq(sF, sT) = Seq(fromV, toV).map(v => snapshot(spark, root, listed, Some(v)))
+    val eF = entrySetsOf(sF.entries); val eT = entrySetsOf(sT.entries)
     val affected = (eF.keySet ++ eT.keySet).filter(p => eF.get(p) != eT.get(p)) ++
-      dvDeltaDirs(spark, root, dvOf(fs, rootP, fromV), dvOf(fs, rootP, toV))
+      dvDeltaDirs(spark, root, sF.dv, sT.dv)
     val cdfSchema = StructType(
       org.apache.spark.sql.types.StructField("_change_type",
         org.apache.spark.sql.types.StringType) +: schema.fields)
@@ -2136,14 +2129,14 @@ object ManifestTable {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cdfSchema)
     val fields = schema.fieldNames.toSeq
-    def side(v: Long, tag: String): DataFrame = {
-      val df = scanFiles(spark, root, schema,
-        planPrune(spark, root, v, restrictTo = Some(affected)), withMeta = false)
+    def side(snap: Snapshot, tag: String): DataFrame = {
+      val df = scanFiles(spark, schema,
+        planPrune(snap, restrictTo = Some(affected)), withMeta = false)
       df.select(struct(keys.map(col): _*).as("__k"),
         struct(fields.map(col): _*).as(s"__$tag"),
         graft.ops.Diff.rowFingerprint(fields.map(col)).as(s"__${tag}fp"))
     }
-    val j = side(fromV, "o").join(side(toV, "n"), Seq("__k"), "full_outer")
+    val j = side(sF, "o").join(side(sT, "n"), Seq("__k"), "full_outer")
     val ct = when(col("__ofp").isNull, array(lit("insert")))
       .when(col("__nfp").isNull, array(lit("delete")))
       .when(col("__ofp") =!= col("__nfp"),
@@ -2184,21 +2177,24 @@ object ManifestTable {
     * mutation on this table.
     */
   def deleteWhere(spark: SparkSession, root: String, schema: StructType,
+                  predicate: org.apache.spark.sql.Column): Long =
+    deleteWhere(spark, snapshot(spark, root), schema, predicate)
+
+  /** [[deleteWhere]] against a snapshot the caller resolved. */
+  def deleteWhere(spark: SparkSession, snap: Snapshot, schema: StructType,
                   predicate: org.apache.spark.sql.Column): Long = {
-    val (fs, rootP) = fsOf(spark, root)
     val (ranges, points, pointsAny) = extractHintsFor(spark, schema, predicate)
-    val plan = planPrune(spark, root, versionOf(spark, root), ranges, points, pointsAny)
+    val plan = planPrune(snap, ranges, points, pointsAny)
     // STAGE the DV and claim at publish like every other commit: writing
     // d<next> directly would occupy the number while the positions are
     // collected, and a concurrent claimed committer would reclaim-or-corrupt
     // it (the d-dir is unverifiable without the claim protocol). The data
     // stage is an empty claim vehicle — the committed v-dir holds no files
     // and no entry references it.
-    val dvStage = stageDv(spark, root, plan.dv, collectDv(
-      scanFiles(spark, root, schema, plan, withMeta = true).filter(predicate)))
-    publishStaged(spark, root, stageData(spark, root, None, None, Nil, Nil).dir,
-      Some(plan.v), entriesOf(fs, rootP, plan.v), Nil, plan.dv, Nil, Nil,
-      CommitShape.Delete, Some(dvStage))
+    val dvStage = stageDv(spark, snap.root, plan.dv, collectDv(
+      scanFiles(spark, schema, plan, withMeta = true).filter(predicate)))
+    publishStaged(spark, snap.root, stageData(spark, snap, None, None, Nil, Nil).dir,
+      snap, Nil, Nil, Nil, CommitShape.Delete, Some(dvStage))
   }
 
   /** Commit `df` as the next version. `spec = Some(s)`: `df` must hold
@@ -2242,34 +2238,33 @@ object ManifestTable {
     * `bloomCols`: columns to Bloom-index per file for point-lookup
     * skipping — one scan of the JUST-written version (O(commit) I/O),
     * published as a `_bloom` sidecar under the same ordering guarantee.
+    * Both add to the columns the table declares ([[stageData]]).
     */
   def commit(df: DataFrame, root: String, spec: Option[PartSpec],
              carryForward: Boolean = true,
              statsCols: Seq[String] = Nil,
-             bloomCols: Seq[String] = Nil): Long = {
+             bloomCols: Seq[String] = Nil): Long =
+    commit(df, snapshot(df.sparkSession, root), spec, carryForward, statsCols, bloomCols)
+
+  /** [[commit]] against a snapshot the caller resolved: its base. */
+  def commit(df: DataFrame, snap: Snapshot, spec: Option[PartSpec], carryForward: Boolean,
+             statsCols: Seq[String], bloomCols: Seq[String]): Long = {
     val spark = df.sparkSession
-    val (fs, rootP) = fsOf(spark, root)
-    val st = stageData(spark, root, Some(df), spec, statsCols, bloomCols)
+    val st = stageData(spark, snap, Some(df), spec, statsCols, bloomCols)
     // carry-forward merge commits keep the previous entries AND the previous
     // deletion vector (untouched partitions must keep their deleted rows
     // masked); snapshot/compact commits (carryForward=false or spec=None)
     // replace the table wholesale, so the DV pointer drops with the entries.
     // A touched partition's rewrite supersedes all its previous entries.
-    val base = currentVersion(spark, root)
     val rewrite = spec.isDefined && carryForward
-    val (prev, dvCarry) =
-      if (rewrite)
-        base.map(v => (entriesOf(fs, rootP, v), dvOf(fs, rootP, v)))
-          .getOrElse((Seq.empty[(String, Long)], None))
-      else (Seq.empty[(String, Long)], None)
-    if (rewrite && mixedLayout(spark, root, prev, spec.get))
+    if (rewrite && mixedLayout(snap, spec.get))
       throw new IllegalStateException(
-        s"carry-forward commit on $root: the table holds partitions under an " +
+        s"carry-forward commit on ${snap.root}: the table holds partitions under an " +
           s"older partition spec than ${spec.get.render} (partition evolution) — " +
           "a partition rewrite cannot supersede the other layout's entries for " +
           "the same rows; compact the table (full rewrite under the current " +
           "spec) or write through append/mergeDv")
-    publishStaged(spark, root, st.dir, base, prev, st.touched, dvCarry, st.stats, st.blooms,
+    publishStaged(spark, snap.root, st.dir, snap, st.touched, st.stats, st.blooms,
       if (rewrite) CommitShape.Rewrite else CommitShape.Snapshot, ndv = st.ndv)
   }
 
@@ -2287,10 +2282,10 @@ object ManifestTable {
     * files) or unpartitioned.
     */
   private def stageWrite(df: DataFrame, spec: Option[PartSpec], stage: Path,
-                         root: String): Unit = {
+                         snap: Snapshot): Unit = {
     if (!stageWriteSafe(df.sparkSession.sparkContext.getConf))
       throw new IllegalStateException(
-        s"manifest-table write to $root refused: spark.speculation is on, and a " +
+        s"manifest-table write to ${snap.root} refused: spark.speculation is on, and a " +
           "speculative duplicate task can leave orphan files in a committer-v2 " +
           "stage that later publishes; run manifest-table writes with " +
           "spark.speculation=false")
@@ -2305,7 +2300,7 @@ object ManifestTable {
         // commits). The bucket count is pinned to defaultParallelism (r22):
         // `repartition(cols)` alone lets AQE coalesce a small commit's write
         // to ONE task that pays every dir's per-file cost serially.
-        (if (optimizeWrite(df.sparkSession, root, s))
+        (if (!preShuffled.get() && snap.ddl.optimizeWrite)
           derived.repartition(math.max(1, df.sparkSession.sparkContext.defaultParallelism),
             s.physNames.map(org.apache.spark.sql.functions.col): _*)
         else derived, s.physNames)
@@ -2322,16 +2317,6 @@ object ManifestTable {
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .mode("overwrite").parquet(stage.toString)
   }
-
-  // DECLARED (sidecar) tables only — they own the property that opts out;
-  // path-first tables keep the legacy task-per-dir write byte-for-byte
-  // (their callers pre-shape their own parallelism)
-  private def optimizeWrite(spark: SparkSession, root: String, s: PartSpec): Boolean =
-    !preShuffled.get() && (GraftDdl.load(spark, root) match {
-      case None => false
-      case Some(d) =>
-        !d.props.get("graft.optimizeWrite").exists(_.equalsIgnoreCase("false"))
-    })
 
   // compaction paths choose their own clustering (hash buckets, byte-sized
   // ranges, Z-order) — the optimized-write repartition would destroy it
@@ -2366,34 +2351,38 @@ object ManifestTable {
                                   ndv: Seq[(String, String, Array[Long])],
                                   tap: Option[KeyProbe.Tap] = None)
 
-  /** The one staging step of every data commit: attach the table's field
-    * ids (id-carrying tables write EVERY data file id-annotated, whatever
-    * path produced the frame — one id-less file would fail later by-id
-    * reads), write `df` under a fresh `.stage-*` dir ([[stageWrite]]), list
-    * the partition dirs it touched and harvest its sidecars. Sidecars
-    * harvest from the STAGE (rel paths are version-agnostic) and are dropped
-    * next to whatever number the claim lands on. `df = None` stages an
-    * empty claim vehicle: no entry, no sidecar. `tapKeys = Some(ks)` writes
+  /** The one staging step of every data commit, under the write contract
+    * its snapshot declares: attach the table's field ids (id-carrying
+    * tables write EVERY data file id-annotated, whatever path produced the
+    * frame — one id-less file would fail later by-id reads), write `df`
+    * under a fresh `.stage-*` dir ([[stageWrite]]), list the partition dirs
+    * it touched and harvest its sidecars for the caller's `statsCols` and
+    * `bloomCols` together with the table's declared ones. Sidecars harvest
+    * from the STAGE (rel paths are version-agnostic) and are dropped next
+    * to whatever number the claim lands on. `df = None` stages an empty
+    * claim vehicle: no entry, no sidecar. `tapKeys = Some(ks)` writes
     * through a [[KeyProbe.tap]] that counts the rows and gathers their `ks`
     * tuples in the same job.
     */
-  private def stageData(spark: SparkSession, root: String, df: Option[DataFrame],
+  private def stageData(spark: SparkSession, snap: Snapshot, df: Option[DataFrame],
                         spec: Option[PartSpec], statsCols: Seq[String],
                         bloomCols: Seq[String], tapKeys: Option[Seq[String]] = None): Staged = {
-    val (fs, rootP) = fsOf(spark, root)
-    val dir = new Path(rootP, ".stage-" + java.util.UUID.randomUUID().toString.take(12))
+    val fs = snap.fs
+    val dir = new Path(snap.rootP, ".stage-" + java.util.UUID.randomUUID().toString.take(12))
     df match {
       case None =>
         fs.mkdirs(dir)
         Staged(dir, Nil, Nil, Nil, Nil)
       case Some(d0) =>
         val tap = tapKeys.map(KeyProbe.tap(d0, _))
-        val d = FieldIds.attachDf(tap.fold(d0)(_.frame), fieldIdsForWrite(spark, root))
-        stageWrite(d, spec, dir, root)
+        val d = FieldIds.attachDf(tap.fold(d0)(_.frame), fieldIdsForWrite(spark, snap))
+        stageWrite(d, spec, dir, snap)
         val touched = spec.fold(Seq(""))(s => listStagedPartDirs(fs, dir, s.physNames.length))
-        val stats = if (statsCols.nonEmpty) harvestStats(fs, dir, statsCols) else Nil
+        val zoned = (statsCols ++ snap.ddl.statsCols).distinct
+        val bloomed = (bloomCols ++ snap.ddl.bloomCols).distinct
+        val stats = if (zoned.nonEmpty) harvestStats(fs, dir, zoned) else Nil
         val (blooms, ndv) =
-          if (bloomCols.nonEmpty) harvestBloomsAndNdv(spark, fs, dir, bloomCols, Some(d.schema))
+          if (bloomed.nonEmpty) harvestBloomsAndNdv(spark, fs, dir, bloomed, Some(d.schema))
           else (Nil, Nil)
         Staged(dir, touched, stats, blooms, ndv, tap)
     }
@@ -2407,13 +2396,10 @@ object ManifestTable {
     * restriction (ADVICE r18 — the old `p.nonEmpty` guard let mergeDv keep
     * its touched-partition fast path and leave stale rows unmasked after
     * set_partitioning evolved an unpartitioned table), and so is a data
-    * version older than the specs describe ([[PartSpecs.layout]]).
+    * version older than the specs describe (`graft.partSpecFrom`).
     */
-  private def mixedLayout(spark: SparkSession, root: String, entries: Seq[(String, Long)],
-                          spec: PartSpec): Boolean = {
-    val from = PartSpecs.layout(spark, root)._2
-    entries.exists { case (p, dv) => dv < from || !spec.matchesLayout(p) }
-  }
+  private def mixedLayout(snap: Snapshot, spec: PartSpec): Boolean =
+    snap.entries.exists { case (p, dv) => dv < snap.ddl.layoutFrom || !spec.matchesLayout(p) }
 
   /** INSERT-only commit: `df`'s rows land as a fresh data version ADDED
     * alongside every touched partition's existing entries — no read, no
@@ -2428,16 +2414,16 @@ object ManifestTable {
     */
   def append(df: DataFrame, root: String, spec: Option[PartSpec],
              statsCols: Seq[String] = Nil,
-             bloomCols: Seq[String] = Nil): Long = {
-    val spark = df.sparkSession
-    val (fs, rootP) = fsOf(spark, root)
-    val base = currentVersion(spark, root)
-    val st = stageData(spark, root, Some(df), spec, statsCols, bloomCols, base.map(_ => Nil))
-    if (st.tap.exists(_.count() == 0)) { fs.delete(st.dir, true); return base.get }
-    val (prev, dvCarry) = base
-      .map(v => (entriesOf(fs, rootP, v), dvOf(fs, rootP, v)))
-      .getOrElse((Seq.empty[(String, Long)], None))
-    publishStaged(spark, root, st.dir, base, prev, st.touched, dvCarry,
+             bloomCols: Seq[String] = Nil): Long =
+    append(df, snapshot(df.sparkSession, root), spec, statsCols, bloomCols)
+
+  /** [[append]] against a snapshot the caller resolved: its base. */
+  def append(df: DataFrame, snap: Snapshot, spec: Option[PartSpec],
+             statsCols: Seq[String], bloomCols: Seq[String]): Long = {
+    val st = stageData(df.sparkSession, snap, Some(df), spec, statsCols, bloomCols,
+      snap.version.map(_ => Nil))
+    if (st.tap.exists(_.count() == 0)) { snap.fs.delete(st.dir, true); return snap.v }
+    publishStaged(df.sparkSession, snap.root, st.dir, snap, st.touched,
       st.stats, st.blooms, CommitShape.Append, ndv = st.ndv)
   }
 
@@ -2452,12 +2438,12 @@ object ManifestTable {
     * previous versions stay on disk for time travel until vacuumed.
     */
   def adoptSnapshot(spark: SparkSession, srcRoot: String, dstRoot: String): Long = {
-    val (fs, srcP) = fsOf(spark, srcRoot)
-    val srcV = currentVersion(spark, srcRoot).getOrElse(
-      throw new IllegalStateException(
-        s"adoptSnapshot: staging table $srcRoot never committed"))
-    val entries = entriesOf(fs, srcP, srcV)
-    require(dvOf(fs, srcP, srcV).isEmpty,
+    val src = snapshot(spark, srcRoot)
+    val (fs, srcP) = (src.fs, src.rootP)
+    if (src.version.isEmpty) throw new IllegalStateException(
+      s"adoptSnapshot: staging table $srcRoot never committed")
+    val entries = src.entries
+    require(src.dv.isEmpty,
       s"adoptSnapshot: staging table $srcRoot carries a deletion vector")
     val dataV = entries.map(_._2).distinct match {
       case Seq(d) => d
@@ -2470,15 +2456,14 @@ object ManifestTable {
       case (rel, cols) => cols.toSeq.map { case (c, a) => (rel, c, a) } }
     val ndv = loadNdv(fs, srcP, dataV).getOrElse(Map.empty).toSeq.flatMap {
       case (rel, cols) => cols.toSeq.map { case (c, a) => (rel, c, a) } }
-    val (_, dstP) = fsOf(spark, dstRoot)
-    fs.mkdirs(dstP)
-    val stage = new Path(dstP,
+    val dst = snapshot(spark, dstRoot)
+    fs.mkdirs(dst.rootP)
+    val stage = new Path(dst.rootP,
       ".stage-" + java.util.UUID.randomUUID().toString.take(12))
     require(fs.rename(new Path(srcP, "v" + fmt(dataV)), stage),
       s"adoptSnapshot: moving staged data into $dstRoot failed")
-    val base = currentVersion(spark, dstRoot)
-    publishStaged(spark, dstRoot, stage, base, Nil, entries.map(_._1).distinct,
-      None, stats, blooms, CommitShape.Snapshot, ndv = ndv)
+    publishStaged(spark, dstRoot, stage, dst, entries.map(_._1).distinct,
+      stats, blooms, CommitShape.Snapshot, ndv = ndv)
   }
 
   /** Schema of the current (or `asOfVersion`) snapshot, inferred from the
@@ -2492,7 +2477,7 @@ object ManifestTable {
   def inferSchema(spark: SparkSession, root: String,
                   asOfVersion: Option[Long] = None): StructType = {
     import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
-    val plan = planPrune(spark, root, versionOf(spark, root, asOfVersion))
+    val plan = planPrune(snapshot(spark, root, asOfVersion))
     require(plan.kept.nonEmpty, s"manifest table $root version ${plan.v} holds no partitions")
     val conf = fsOf(spark, root)._1.getConf
     ManifestScan.inferSchema(spark, plan.files,
@@ -2545,22 +2530,25 @@ object ManifestTable {
               keys: Seq[String], spec: Option[PartSpec],
               statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
               deleteKeys: => Option[DataFrame] = None,
-              deletePartitions: => Option[Seq[String]] = None): Long = {
+              deletePartitions: => Option[Seq[String]] = None): Long =
+    mergeDv(batch, snapshot(batch.sparkSession, root), schema, keys, spec, statsCols, bloomCols,
+      deleteKeys, deletePartitions)
+
+  /** [[mergeDv]] against a snapshot the caller resolved: its base. */
+  def mergeDv(batch: DataFrame, snap: Snapshot, schema: StructType,
+              keys: Seq[String], spec: Option[PartSpec],
+              statsCols: Seq[String], bloomCols: Seq[String],
+              deleteKeys: => Option[DataFrame],
+              deletePartitions: => Option[Seq[String]]): Long = {
     import org.apache.spark.sql.functions.col
     require(keys.nonEmpty, "mergeDv: at least one key column is required")
     val spark = batch.sparkSession
-    val (fs, rootP) = fsOf(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"mergeDv: $root has no committed version — create the table with commit() first"))
-    val st = stageData(spark, root, Some(batch), spec, statsCols, bloomCols, Some(keys))
+    val cur = snap.version.getOrElse(throw new IllegalStateException(
+      s"mergeDv: ${snap.root} has no committed version — create the table with commit() first"))
+    val st = stageData(spark, snap, Some(batch), spec, statsCols, bloomCols, Some(keys))
     val (dels, delParts) = (deleteKeys, deletePartitions)
-    if (st.tap.get.count() == 0 && dels.isEmpty) { fs.delete(st.dir, true); return cur }
-    // one manifest read serves the mixed-layout check and the publish args
-    // (was three reads of the same file per merge commit)
-    val curEntries = entriesOf(fs, rootP, cur)
-    val curDv = dvOf(fs, rootP, cur)
-    val mixed = spec.exists(s => mixedLayout(spark, root, curEntries, s))
+    if (st.tap.get.count() == 0 && dels.isEmpty) { snap.fs.delete(st.dir, true); return cur }
+    val mixed = spec.exists(mixedLayout(snap, _))
     // DV delta = positions of the upsert keys ∪ the delete leg's keys, from
     // the touched partitions ∪ `deletePartitions`; deleted keys may live
     // anywhere, so a delete leg without that hint scans the full snapshot
@@ -2569,13 +2557,13 @@ object ManifestTable {
     val deleteRestrict = dels.fold(Option(Seq.empty[String]))(_ => delParts)
     val restrict =
       if (mixed) None else for (_ <- spec; d <- deleteRestrict) yield st.touched.toSet ++ d
-    val dvStage = stageDv(spark, root, curDv, KeyProbe.semiJoin(
-      scanFiles(spark, root, schema, planPrune(spark, root, cur, restrictTo = restrict),
+    val dvStage = stageDv(spark, snap.root, snap.dv, KeyProbe.semiJoin(
+      scanFiles(spark, schema, planPrune(snap, restrictTo = restrict),
         withMeta = true), keySet, keys).fold(Map.empty: Dv)(collectDv))
-    // dvCarry0 = the base DV this commit's union consumed — the rebase
-    // conflict check compares the winner's DV pointer against it (the
-    // manifest's own #dv comes from dvStage, not the carry)
-    publishStaged(spark, root, st.dir, Some(cur), curEntries, st.touched, curDv,
+    // the base DV this commit's union consumed rides the snapshot — the
+    // rebase conflict check compares the winner's DV pointer against it
+    // (the manifest's own #dv comes from dvStage, not the carry)
+    publishStaged(spark, snap.root, st.dir, snap, st.touched,
       st.stats, st.blooms, CommitShape.Merge, Some(dvStage), st.ndv)
   }
 
@@ -2592,7 +2580,7 @@ object ManifestTable {
     * stays a pure append commit: zero O(accumulated-deletes) rewrite bytes,
     * and a DV-free table stays DV-free (keeping [[colBounds]] aggregate
     * pushdown alive). Positions must come from a [[readWithMeta]] scan of
-    * `baseVersion`'s snapshot (same path normalization as the DV).
+    * the `base` snapshot (same path normalization as the DV).
     *
     * Bytes written = O(batch rows + positions); concurrency follows
     * [[mergeDv]] in EVERY shape (insert-only included — its not-matched
@@ -2606,15 +2594,12 @@ object ManifestTable {
     * partition-restricted), and the insert leg is a blind append under the
     * current spec.
     */
-  private[graft] def commitDelta(spark: SparkSession, root: String, baseVersion: Long,
+  private[graft] def commitDelta(spark: SparkSession, base: Snapshot,
                                  batch: Option[DataFrame], deletes: Option[Dv],
-                                 spec: Option[PartSpec], statsCols: Seq[String] = Nil,
-                                 bloomCols: Seq[String] = Nil): Long = {
-    val (fs, rootP) = fsOf(spark, root)
-    val st = stageData(spark, root, batch, spec, statsCols, bloomCols)
-    val dvStage = deletes.map(stageDv(spark, root, dvOf(fs, rootP, baseVersion), _))
-    publishStaged(spark, root, st.dir, Some(baseVersion),
-      entriesOf(fs, rootP, baseVersion), st.touched, dvOf(fs, rootP, baseVersion),
+                                 spec: Option[PartSpec]): Long = {
+    val st = stageData(spark, base, batch, spec, Nil, Nil)
+    val dvStage = deletes.map(stageDv(spark, base.root, base.dv, _))
+    publishStaged(spark, base.root, st.dir, base, st.touched,
       st.stats, st.blooms, CommitShape.Merge, dvStage, st.ndv)
   }
 
@@ -2693,7 +2678,8 @@ object ManifestTable {
               statsCols: Seq[String] = Nil): Long = {
     require(filesPerPartition >= 1, s"filesPerPartition=$filesPerPartition")
     import org.apache.spark.sql.functions._
-    val df0 = read(spark, root, schema)
+    val snap = snapshot(spark, root)
+    val df0 = read(spark, snap, schema)
     val df = spec.fold(df0)(_.derive(df0))
     // bucket count pinned (r22, as in stageWrite): an un-numbered
     // repartition lets AQE coalesce the rewrite to ONE task on a small
@@ -2711,7 +2697,7 @@ object ManifestTable {
     // for the staged write): the staging id-attach treats any non-schema
     // column as drift, and a select keeps the repartitioning
     withPreShuffled(commit(out.select(schema.fieldNames.map(col).toSeq: _*),
-      root, spec, carryForward = false, statsCols = statsCols))
+      snap, spec, carryForward = false, statsCols, Nil))
   }
 
   /** OPTIMIZE to a TARGET FILE SIZE — the knob operators actually tune
@@ -2734,11 +2720,12 @@ object ManifestTable {
                          statsCols: Seq[String] = Nil): Long = {
     require(targetBytes >= 1L, s"targetBytes=$targetBytes")
     import org.apache.spark.sql.functions._
-    val cur = versionOf(spark, root)
-    val (totalBytes, _, _) = estimatePruned(spark, root, cur, Nil)
+    val snap = snapshot(spark, root)
+    val plan = planPrune(snap)
+    val (totalBytes, _, _) = estimatePruned(plan)
     val targetFiles = math.max(1L,
       (totalBytes + targetBytes - 1) / targetBytes).min(1 << 20).toInt
-    val df0 = read(spark, root, schema)
+    val df0 = scanFiles(spark, schema, plan, withMeta = false)
     val df = spec.fold(df0)(_.derive(df0))
     val salt = xxhash64(schema.fieldNames.map(col).toSeq: _*)
     val ranged = spec match {
@@ -2747,7 +2734,7 @@ object ManifestTable {
       case None => df.repartitionByRange(targetFiles, salt)
     }
     withPreShuffled(commit(ranged.select(schema.fieldNames.map(col).toSeq: _*),
-      root, spec, carryForward = false, statsCols = statsCols))
+      snap, spec, carryForward = false, statsCols, Nil))
   }
 
   /** OPTIMIZE scoped to ONE partition — the hot-partition case: a
@@ -2779,12 +2766,13 @@ object ManifestTable {
     require(filesPerPartition >= 1, s"filesPerPartition=$filesPerPartition")
     import org.apache.spark.sql.functions._
     val pc = spec.physName
+    val snap = snapshot(spark, root)
     val df =
       if (spec.isIdentity) {
         // the literal is cast to the column's type so Spark's own
         // partition-dir pruning keeps this a directory-scoped scan
         val dt = schema(pc).dataType
-        read(spark, root, schema).filter(col(pc) === lit(partValue).cast(dt))
+        read(spark, snap, schema).filter(col(pc) === lit(partValue).cast(dt))
       } else {
         // hidden or composite spec: the derived value(s) exist only in the
         // dir name — assemble exactly that directory (derived values render
@@ -2800,9 +2788,8 @@ object ManifestTable {
           case _ => pc + "=" + org.apache.spark.sql.catalyst.catalog
             .ExternalCatalogUtils.escapePathName(partValue)
         }
-        spec.derive(scanFiles(spark, root, schema,
-          planPrune(spark, root, versionOf(spark, root), restrictTo = Some(Set(dirName))),
-          withMeta = false))
+        spec.derive(scanFiles(spark, schema,
+          planPrune(snap, restrictTo = Some(Set(dirName))), withMeta = false))
       }
     val out =
       if (filesPerPartition == 1) df.repartition(spec.physNames.map(col): _*)
@@ -2811,7 +2798,7 @@ object ManifestTable {
           .map(col).toSeq: _*), lit(filesPerPartition.toLong))): _*)
     // as in [[compact]]: re-select the declared schema before the commit
     withPreShuffled(commit(out.select(schema.fieldNames.map(col).toSeq: _*),
-      root, Some(spec), carryForward = true, statsCols = statsCols))
+      snap, Some(spec), carryForward = true, statsCols, Nil))
   }
 
   /** OPTIMIZE ZORDER — multi-column clustering compaction: rewrite the
@@ -2844,7 +2831,9 @@ object ManifestTable {
       s"zorderBy must hold 1-3 columns (3×16 bits keeps z positive), got ${zorderBy.size}")
     require(targetFiles >= 1, s"targetFiles=$targetFiles")
     import org.apache.spark.sql.functions._
-    val df = spec.fold(read(spark, root, schema))(_.derive(read(spark, root, schema)))
+    val snap = snapshot(spark, root)
+    val df0 = read(spark, snap, schema)
+    val df = spec.fold(df0)(_.derive(df0))
     val aggs = zorderBy.flatMap(c => Seq(
       min(col(c).cast("double")).as(s"mn_$c"),
       max(col(c).cast("double")).as(s"mx_$c")))
@@ -2871,8 +2860,8 @@ object ManifestTable {
     }
     val out = ranged.sortWithinPartitions(col("__z"))
       .select(schema.fieldNames.map(col).toSeq: _*)
-    withPreShuffled(commit(out, root, spec, carryForward = false,
-      statsCols = (zorderBy ++ statsCols).distinct))
+    withPreShuffled(commit(out, snap, spec, carryForward = false,
+      (zorderBy ++ statsCols).distinct, Nil))
   }
 
   /** Table health report — one row per live data version: its manifest
@@ -2883,9 +2872,8 @@ object ManifestTable {
     * [[planPrune]] of the current version — O(files) metadata, no data scan.
     */
   def detail(spark: SparkSession, root: String): Seq[(Long, Int, Int, Long)] = {
-    val (fs, rootP) = fsOf(spark, root)
-    val plan = planPrune(spark, root, versionOf(spark, root))
-    val refs = entriesOf(fs, rootP, plan.v).groupBy(_._2)
+    val plan = planPrune(snapshot(spark, root))
+    val refs = plan.snap.entries.groupBy(_._2)
     plan.kept.map { case (dataV, _, files) =>
       (dataV, refs(dataV).size, files.size, files.map(_._2.getLen).sum)
     }
@@ -2903,9 +2891,8 @@ object ManifestTable {
     val listed = listRoot(fs, rootP)
     val cur = listed.head
     listed.versions.map { v =>
-      val n = manifestBody(fs, rootP, v).linesIterator
-        .count(l => l.nonEmpty && !l.startsWith("#"))
-      (v, n, dvOf(fs, rootP, v), cur.contains(v), tsOf(fs, rootP, v))
+      val m = manifestAt(fs, rootP, v)
+      (v, m.entries.size, m.dv, cur.contains(v), m.ts)
     }
   }
 
@@ -2919,10 +2906,10 @@ object ManifestTable {
     * against `__f` provenance directly under any partition value. O(live
     * dirs) listings + O(data versions) sidecar reads, no data scan.
     */
-  def liveFileSkipping(spark: SparkSession, root: String)
+  def liveFileSkipping(spark: SparkSession, snap: Snapshot)
       : Seq[(String, String, Long, Long, Seq[(String, Char, String, String, Boolean)], Seq[String])] = {
-    val (fs, rootP) = fsOf(spark, root)
-    planPrune(spark, root, versionOf(spark, root)).kept.flatMap { case (dv, _, files) =>
+    val (fs, rootP) = (snap.fs, snap.rootP)
+    planPrune(snap).kept.flatMap { case (dv, _, files) =>
       val stats = loadStats(fs, rootP, dv).getOrElse(Map.empty)
       val blooms = loadBlooms(fs, rootP, dv).getOrElse(Map.empty)
       files.map { case (rel, st) =>
@@ -2957,9 +2944,9 @@ object ManifestTable {
     // branched: claim above the GLOBAL max (another lineage may hold cur+1)
     // and advance this ref's marker; the #parent keeps fast-forward walkable
     val next = (if (hasRefs) math.max(listed.maxVersion, cur) else cur) + 1
-    def pub(): Unit = publishManifest(fs, rootP, next,
-      entriesOf(fs, rootP, toVersion), dvOf(fs, rootP, toVersion),
-      priorV = Some(cur))
+    val target = manifestAt(fs, rootP, toVersion)
+    def pub(): Unit = publishManifest(fs, rootP, next, target.entries, target.dv,
+      manifestIfAny(fs, rootP, cur))
     if (hasRefs) {
       withDirective(s"#ref\t$currentRef")(
         withDirective(s"#parent\t$cur")(pub()))
@@ -2975,30 +2962,30 @@ object ManifestTable {
     * serves from its manifest). DV bitmaps of files a later rewrite
     * superseded are inert and are NOT subtracted.
     */
-  def rowCount(spark: SparkSession, root: String): Long = {
+  def rowCount(spark: SparkSession, root: String): Long = rowCount(spark, snapshot(spark, root))
+
+  /** [[rowCount]] of a resolved snapshot. */
+  def rowCount(spark: SparkSession, snap: Snapshot): Long = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val (fs, _) = fsOf(spark, root)
-    val plan = planPrune(spark, root, versionOf(spark, root))
+    val plan = planPrune(snap)
     val files = plan.files.map(_._2.getPath)
     val total = files.map { p =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, fs.getConf))
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, snap.fs.getConf))
       try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
       finally reader.close()
     }.sum
-    val dv = plan.dv.fold(Map.empty: Dv)(dvBitmaps(spark, root, _))
+    val dv = plan.dv.fold(Map.empty: Dv)(dvBitmaps(spark, snap.root, _))
     total - files.flatMap(p => dv.get(fileKey(p))).map(_.getLongCardinality).sum
   }
 
   /** Rows currently masked by the table's deletion vector (0 when none) —
     * the purge-backlog gauge for [[detail]]'s consumers; no Spark job.
     */
-  def deletedRowCount(spark: SparkSession, root: String): Long = {
-    val cur = currentVersion(spark, root).getOrElse(return 0L)
-    val (fs, rootP) = fsOf(spark, root)
-    dvOf(fs, rootP, cur).fold(0L)(dvBitmaps(spark, root, _).values.map(_.getLongCardinality).sum)
-  }
+  def deletedRowCount(spark: SparkSession, root: String): Long =
+    snapshot(spark, root).dv.fold(0L)(
+      dvBitmaps(spark, root, _).values.map(_.getLongCardinality).sum)
 
   /** Exact global (min, max) of a top-level NUMERIC column across the
     * current snapshot, answered from zone-map sidecars only — O(files)
@@ -3019,14 +3006,18 @@ object ManifestTable {
     * sidecar's locale-free strings ('L' parses as Long, 'D' as Double).
     */
   def colBounds(spark: SparkSession, root: String,
+                column: String): Option[Option[(Char, String, String)]] =
+    colBounds(spark, snapshot(spark, root), column)
+
+  /** [[colBounds]] of a resolved snapshot. */
+  def colBounds(spark: SparkSession, snap: Snapshot,
                 column: String): Option[Option[(Char, String, String)]] = {
-    val v = currentVersion(spark, root).getOrElse(return Some(None))
-    val (fs, rootP) = fsOf(spark, root)
+    if (snap.version.isEmpty) return Some(None)
     // the DV check lists nothing: a DV table declines before planning
-    if (dvOf(fs, rootP, v).isDefined) return None
+    if (snap.dv.isDefined) return None
     val zones = scala.collection.mutable.ArrayBuffer[ColZone]()
-    planPrune(spark, root, v).kept.foreach { case (dv, _, files) =>
-      val stats = loadStats(fs, rootP, dv).getOrElse(return None)
+    planPrune(snap).kept.foreach { case (dv, _, files) =>
+      val stats = loadStats(snap.fs, snap.rootP, dv).getOrElse(return None)
       files.foreach { case (rel, _) =>
         stats.get(rel).flatMap(_.get(column)) match {
           case Some(z) if z.tag == 'L' || z.tag == 'D' => zones += z
@@ -3265,12 +3256,8 @@ object ManifestTable {
     if (above.isEmpty) return h
     val meta: Map[Long, (Option[Long], Option[String])] = above.flatMap { v =>
       try {
-        val body = manifestBody(l.fs, l.rootP, v)
-        val p = body.linesIterator.find(_.startsWith("#parent\t"))
-          .flatMap(_.stripPrefix("#parent\t").toLongOption)
-        val r = body.linesIterator.find(_.startsWith("#ref\t"))
-          .map(_.stripPrefix("#ref\t"))
-        Some(v -> (p, r))
+        val m = manifestAt(l.fs, l.rootP, v)
+        Some(v -> (m.directive("parent").flatMap(_.toLongOption), m.directive("ref")))
       } catch { case _: java.io.IOException => None }
     }.toMap
     var advanced = true
@@ -3334,7 +3321,7 @@ object ManifestTable {
     var v = bHead
     var reached = false
     while (!reached && v > mHead)
-      directiveOf(spark, root, v, "parent").flatMap(_.toLongOption) match {
+      manifestAt(fs, rootP, v).directive("parent").flatMap(_.toLongOption) match {
         case Some(p) => if (p == mHead) reached = true else v = p
         case None => v = -1L
       }
@@ -3370,7 +3357,7 @@ object ManifestTable {
     withRef(None)(listed.head).foreach { cur =>
       val floorByTime = olderThanMicros.map { cutoff =>
         listed.versions
-          .find(v => tsOf(fs, rootP, v).exists(_ >= cutoff)) // ascending + monotone ts
+          .find(v => manifestAt(fs, rootP, v).ts.exists(_ >= cutoff)) // ascending + monotone ts
           .getOrElse(cur)
       }
       val floor = floorByTime.fold(cur - retainVersions)(ft =>
@@ -3383,16 +3370,14 @@ object ManifestTable {
       val tagged = ((if (listed.hasTags) tags(spark, root).values else Nil) ++
         listed.refHeads.values).toSet.filter(listed.versions.contains)
       val retained = listed.versions.filter(v => v >= floor || tagged.contains(v))
-      val live = retained.flatMap(v => entriesOf(fs, rootP, v).map(_._2)).toSet
-      val liveDv = retained.flatMap(v => dvOf(fs, rootP, v)).toSet
+      val manifests = retained.map(manifestAt(fs, rootP, _))
+      val live = manifests.flatMap(_.entries.map(_._2)).toSet
+      val liveDv = manifests.flatMap(_.dv).toSet
       // the one staged-DDL file that may still hold schema authority: the
       // NEWEST retained manifest's #ddl payload (see GraftDdl — an
       // unpromoted RTAS schema flip). Everything else .ddl-* is debris
       // from a crashed-before-commit or superseded RTAS.
-      val liveDdl = retained.reverseIterator
-        .flatMap(v => manifestBody(fs, rootP, v).linesIterator
-          .find(_.startsWith("#ddl\t")).map(_.stripPrefix("#ddl\t")))
-        .nextOption()
+      val liveDdl = manifests.reverseIterator.flatMap(_.directive("ddl")).nextOption()
       // superseded ref markers (head = max per name; the rest is debris)
       val superseded = listed.refMarkers.collect {
         case (ref, v, st) if v < listed.refHeads(ref) => st.getPath.getName

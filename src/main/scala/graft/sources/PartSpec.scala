@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -418,21 +418,6 @@ object PartSpecs {
     * carry a retired layout whose dir column names a later spec reuses.
     */
   val LayoutFromProp = "graft.partSpecFrom"
-
-  /** Current-first: head (if any) is the active spec, tail the history
-    * (newest first). Pruning matches directories against ALL of them by
-    * physical column name.
-    */
-  def of(spark: SparkSession, root: String): Seq[PartSpec] = layout(spark, root)._1
-
-  /** [[of]] and the [[LayoutFromProp]] data version (0 when unset). */
-  def layout(spark: SparkSession, root: String): (Seq[PartSpec], Long) = {
-    val s = GraftDdl.sidecar(spark, root)
-    (s.specs, s.layoutFrom)
-  }
-
-  def currentOf(spark: SparkSession, root: String): Option[PartSpec] =
-    of(spark, root).headOption
 
   def parseHistory(props: Map[String, String]): Seq[String] =
     props.get(HistoryProp).toSeq.flatMap { json =>

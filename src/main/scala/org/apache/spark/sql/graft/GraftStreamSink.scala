@@ -91,18 +91,9 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
       fs.delete(new Path(root, ManifestTable.SinkMarkerPrefix + i), false))
   }
 
-  /** The ACTIVE partition spec, resolved per batch: a sidecar-declared
-    * spec (identity or hidden transform — and any partition EVOLUTION
-    * between restarts) wins over the stream's static `partitionBy`
-    * option, which stays the identity fallback for path-first targets.
-    */
-  private def activeSpec: Option[graft.sources.PartSpec] =
-    graft.sources.PartSpecs.currentOf(spark, root)
-      .orElse(partCol.map(graft.sources.PartSpec.Identity))
-
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    // one listing answers progress, the older markers and whether the
-    // table exists yet; the batch's own commits list afresh
+    // one listing answers progress, the older markers and the snapshot the
+    // batch's first commit lands on; its later commits resolve afresh
     val listed = ManifestTable.listRoot(spark, root)
     if (batchId <= lastCommitted(listed)) return // crash-replay of a committed batch
     if (cdf) {
@@ -111,7 +102,12 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
       require(data.columns.contains("_change_type"),
         "graft sink: cdf mode expects a _change_type column (a graft change-feed stream)")
     }
-    val spec = activeSpec
+    val snap = ManifestTable.snapshot(spark, root, listed, None)
+    // the ACTIVE spec, resolved per batch: a declared table's (identity or
+    // hidden transform — and any partition EVOLUTION between restarts,
+    // unpartitioning included) wins over the stream's static `partitionBy`
+    // option, which stays the identity spec of path-first targets
+    val spec = snap.spec(partCol.map(graft.sources.PartSpec.Identity))
     val idSrc = spec.filter(_.isIdentity).map(_.source)
     // ONE pass: the re-rooted batch feeds the stage write inside commit/
     // append/mergeDv, which gathers the cdf delete rows' key tuples
@@ -125,8 +121,7 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
         .drop("_change_type")
     // CHECK constraints guard the rows that LAND; delete rows carry keys
     // only and are masks, not writes
-    val checked = graft.sources.Checks.enforce(ups,
-      graft.sources.Checks.forTable(spark, root))
+    val checked = graft.sources.Checks.enforce(ups, snap.checks)
     // a delete leg only when the batch held delete rows: without one, the
     // position scan stays on the touched partitions whatever the spec
     lazy val delRows = tap.picked().collect() // a local frame: no job
@@ -136,14 +131,14 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
     lazy val delParts = idSrc.map(s =>
       delRows.toSeq.map(r => ManifestTable.partDirName(s, r.get(delCols.indexOf(s)))).distinct)
     ManifestTable.withBatchId(batchId) {
-      if (listed.head.isEmpty) {
-        ManifestTable.commit(checked, root, spec)
+      if (snap.version.isEmpty) {
+        ManifestTable.commit(checked, snap, spec, true, Nil, Nil)
         // a mixed first cdf batch (dst dropped while the source checkpoint
         // survived) must not silently drop its delete rows
         dels.foreach(d => ManifestTable.mergeDv(checked.limit(0), root, ups.schema,
           mergeKeys, spec, Nil, Nil, Some(d), delParts))
-      } else if (mergeKeys.isEmpty) ManifestTable.append(checked, root, spec)
-      else ManifestTable.mergeDv(checked, root, ups.schema, mergeKeys, spec,
+      } else if (mergeKeys.isEmpty) ManifestTable.append(checked, snap, spec, Nil, Nil)
+      else ManifestTable.mergeDv(checked, snap, ups.schema, mergeKeys, spec,
         Nil, Nil, dels, delParts)
     }
     writeMarker(batchId, listed)

@@ -141,7 +141,11 @@ class BenchSpec extends SparkSuite {
   /** (file, enclosing def, call) of every non-comment call of `names` in
     * `src/main`, skipping their own definitions.
     */
-  private def callSites(names: Seq[String]): Seq[(String, String, String)] = {
+  /** Every non-comment line of main code containing one of `needles`, as
+    * (file, enclosing def, needle) — a line that itself defines the needle
+    * does not count.
+    */
+  private def sites(needles: Seq[String]): Seq[(String, String, String)] = {
     import scala.jdk.CollectionConverters._
     val Def = """.*\bdef (\w+)\b.*""".r
     java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
@@ -150,13 +154,33 @@ class BenchSpec extends SparkSuite {
         lines.indices.flatMap { i =>
           val code = lines(i).trim
           val comment = code.startsWith("*") || code.startsWith("//") || code.startsWith("/*")
-          names.map(_ + "(").filter(c => !comment && code.contains(c) &&
+          needles.filter(c => !comment && code.contains(c) &&
             !code.contains("def " + c)).map { c =>
             val owner = lines.take(i + 1).reverseIterator.collectFirst { case Def(d) => d }
             (p.getFileName.toString, owner.getOrElse(""), c)
           }
         }
       }.sorted
+  }
+
+  private def callSites(names: Seq[String]): Seq[(String, String, String)] =
+    sites(names.map(_ + "("))
+
+  test("the manifest body has one parser, and publishManifest writes its #dv/#ts/#batch lines") {
+    // one parse per manifest read yields every field a snapshot carries; a
+    // second scan of the body text re-grows the per-field readers
+    assert(callSites(Seq("parseManifest")) ==
+      Seq(("ManifestTable.scala", "manifestAt", "parseManifest(")))
+    val literals = sites(Seq("\"#dv", "\"#ts", "\"#batch"))
+    assert(literals.map(_._2).distinct == Seq("publishManifest"), literals)
+  }
+
+  test("ManifestTable reads a table's DDL only through its snapshot") {
+    // GraftDdl.load re-lists the root; the snapshot's DDL view carries the
+    // spec, field ids, checks and declared columns of the write contract
+    assert(callSites(Seq("GraftDdl.load")).filter(_._1 == "ManifestTable.scala").isEmpty)
+    // the active spec is the sidecar's partCol alone, never a history head
+    assert(callSites(Seq("currentOf")).isEmpty)
   }
 
   test("ManifestTable.stageData is the only main code that stages a data write") {

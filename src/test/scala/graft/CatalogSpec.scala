@@ -258,7 +258,7 @@ class CatalogSpec extends SparkSuite {
     spark.sql(s"CALL gcat.system.restore('db.t_relayout_merge', $v1)")
     val schema = org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, v STRING")
     ManifestTable.mergeDv(Seq((3500L, "z")).toDF("k", "v"), root, schema, Seq("k"),
-      graft.sources.PartSpecs.currentOf(spark, root))
+      ManifestTable.snapshot(spark, root).spec)
     assert(ManifestTable.read(spark, root, schema).filter("k = 3500").select("v")
       .as[String].collect().toSeq == Seq("z"))
     assert(ManifestTable.read(spark, root, schema).count() == 10)
@@ -337,7 +337,7 @@ class CatalogSpec extends SparkSuite {
       spark.createDataFrame(Seq((7L, "g", "x"))).toDF("k", "v", "p"),
       root, Some(PartSpec.Identity("p")))
     // … and the delta commit (deliberately stale base) must rebase, not lose it
-    ManifestTable.commitDelta(spark, root, base, Some(reinsert),
+    ManifestTable.commitDelta(spark, ManifestTable.snapshot(spark, root, Some(base)), Some(reinsert),
       Some(ManifestTable.collectDv(positions)), Some(PartSpec.Identity("p")))
     assert(rowsOf(t) == Set((1L, "A", "x"), (2L, "b", "y"), (7L, "g", "x")))
   }
@@ -726,6 +726,37 @@ class CatalogSpec extends SparkSuite {
       s"""CREATE TABLE gcat.db.$name (k BIGINT, v STRING, p STRING)
          |PARTITIONED BY (p) TBLPROPERTIES ('statsCols'='k')""".stripMargin)
     s"gcat.db.$name"
+  }
+
+  test("compaction keeps the table's declared skipping columns on every rewritten file") {
+    wh
+    spark.sql("DROP TABLE IF EXISTS gcat.db.t_keepcols")
+    spark.sql(
+      """CREATE TABLE gcat.db.t_keepcols (k BIGINT, v STRING, p STRING)
+        |PARTITIONED BY (p) TBLPROPERTIES ('statsCols'='k', 'bloomCols'='v')""".stripMargin)
+    val t = "gcat.db.t_keepcols"
+    spark.sql(s"INSERT INTO $t SELECT id, CAST(id AS STRING), " +
+      "CASE WHEN id % 2 = 0 THEN 'x' ELSE 'y' END FROM range(0, 40)")
+    spark.sql(s"INSERT INTO $t SELECT id, CAST(id AS STRING), 'x' FROM range(40, 60)")
+    def declaredOnEveryFile(what: String): Unit = {
+      val files = spark.sql(s"SELECT zone_mins, bloom_cols FROM $t.files").collect()
+      assert(files.nonEmpty && files.forall(r =>
+        r.getMap[String, String](0).contains("k") && r.getSeq[String](1).contains("v")),
+        s"$what: ${files.mkString("; ")}")
+    }
+    declaredOnEveryFile("insert")
+    spark.sql("CALL gcat.system.compact(table => 'db.t_keepcols')")
+    declaredOnEveryFile("compact")
+    spark.sql(s"INSERT INTO $t VALUES (100, '100', 'x')")
+    spark.sql("CALL gcat.system.compact(table => 'db.t_keepcols', partition => 'x')")
+    declaredOnEveryFile("compact(partition)")
+    spark.sql("CALL gcat.system.zorder(table => 'db.t_keepcols', columns => 'k', target_files => 2)")
+    declaredOnEveryFile("zorder")
+    assert(spark.table(t).count() == 61)
+    // a point read on the Bloom column still prunes after the rewrites
+    val root = s"$wh/db/t_keepcols"
+    val (kept, total) = ManifestTable.pruneCounts(spark, root, Nil, points = Seq("v" -> "17"))
+    assert(kept < total, s"$kept of $total files kept")
   }
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =

@@ -287,8 +287,8 @@ class PartSpecSpec extends SparkSuite {
       .map(_.getName).filter(_.contains("="))
     val cur = ManifestTable.currentVersion(spark, root).get
     assert(spark.table("gps.db.e1").count() == 24)
-    assert(PartSpecs.of(spark, root).size == 1, // history cleared
-      PartSpecs.of(spark, root).map(_.render).mkString(","))
+    assert(ManifestTable.snapshot(spark, root).ddl.specs.size == 1, // history cleared
+      ManifestTable.snapshot(spark, root).ddl.specs.map(_.render).mkString(","))
     // and carry-forward reopens
     ManifestTable.commit(
       src(0, 1).select(col("k"), lit("X").as("region"), col("ts")),
@@ -329,7 +329,7 @@ class PartSpecSpec extends SparkSuite {
       spark.sql("CALL gps.system.set_partitioning('db.e2', 'bucket(8, k)')")
     ).getMessage.contains("compact"))
     spark.sql("CALL gps.system.set_partitioning('db.e2', 'bucket(4, k)')")
-    assert(PartSpecs.of(spark, rootOf("e2")).head.render == "bucket(4,k)")
+    assert(ManifestTable.snapshot(spark, rootOf("e2")).ddl.specs.head.render == "bucket(4,k)")
   }
 
   test("time travel reads the pre-evolution snapshot under its own layout") {
@@ -625,7 +625,7 @@ class PartSpecSpec extends SparkSuite {
     val after = spark.table("gps.db.c2.partitions").select("partition")
       .as[String].collect()
     assert(after.forall(_.contains("/k_bucket=")), after.mkString(","))
-    assert(PartSpecs.of(spark, root).size == 1)
+    assert(ManifestTable.snapshot(spark, root).ddl.specs.size == 1)
   }
 
   test("V1 front door partitionBy option accepts transform renders (r19)") {

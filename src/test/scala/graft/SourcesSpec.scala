@@ -954,8 +954,8 @@ class SourcesSpec extends SparkSuite {
       Some(PartSpec.Identity("p")))
     assert(ManifestTable.currentVersion(spark, root).contains(2L))
     // the loser's publish from the stale base must REBASE and land at v3
-    val landed = ManifestTable.publishStaged(spark, root, stage, Some(1L),
-      Seq("p=a" -> 1L, "p=b" -> 1L), Seq("p=b"), None, Nil, Nil,
+    val landed = ManifestTable.publishStaged(spark, root, stage,
+      ManifestTable.snapshot(spark, root, Some(1L)), Seq("p=b"), Nil, Nil,
       ManifestTable.CommitShape.Rewrite)
     assert(landed == 3L)
     assert(ManifestTable.read(spark, root, schema)
@@ -966,8 +966,8 @@ class SourcesSpec extends SparkSuite {
     Seq((1L, "a", 77L)).toDF("id", "p", "v")
       .write.partitionBy("p").parquet(stage2.toString)
     val e = intercept[IllegalStateException](
-      ManifestTable.publishStaged(spark, root, stage2, Some(1L),
-        Seq("p=a" -> 1L, "p=b" -> 1L), Seq("p=a"), None, Nil, Nil,
+      ManifestTable.publishStaged(spark, root, stage2,
+        ManifestTable.snapshot(spark, root, Some(1L)), Seq("p=a"), Nil, Nil,
         ManifestTable.CommitShape.Rewrite))
     assert(e.getMessage.contains("commit conflict"))
     // the conflicting writer changed nothing
@@ -1114,6 +1114,25 @@ class SourcesSpec extends SparkSuite {
     assert(new java.io.File(s"$root/v00000001/p=y").exists())
     assert(ManifestTable.read(spark, root, schema)
       .as[(Long, String)].collect().toSet == got)
+  }
+
+  test("a snapshot commit staged from a superseded snapshot fails loudly, never drops the winner's rows") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    val root = Files.createTempDirectory("manstale").toString + "/t"
+    val schema = StructType.fromDDL("id BIGINT, p STRING, v BIGINT")
+    val spec = Some(PartSpec.Identity("p"))
+    ManifestTable.commit(Seq((1L, "a", 1L)).toDF("id", "p", "v"), root, spec)
+    // a compaction reads and rewrites v1 ...
+    val base = ManifestTable.snapshot(spark, root)
+    val rewrite = ManifestTable.read(spark, base, schema)
+    // ... while a blind append lands v2
+    ManifestTable.append(Seq((2L, "b", 2L)).toDF("id", "p", "v"), root, spec)
+    val e = intercept[IllegalStateException](
+      ManifestTable.commit(rewrite, base, spec, carryForward = false, Nil, Nil))
+    assert(e.getMessage.contains("commit collision"), e.getMessage)
+    assert(ManifestTable.read(spark, root, schema).as[(Long, String, Long)].collect().toSet ==
+      Set((1L, "a", 1L), (2L, "b", 2L)))
   }
 
   test("ManifestTable.compact: row-identical snapshot, one file per partition, old versions reclaimable") {
@@ -1417,8 +1436,8 @@ class SourcesSpec extends SparkSuite {
       Some(PartSpec.Identity("p")))
     assert(ManifestTable.currentVersion(spark, root).contains(2L))
     // the merge's publish from the stale base must REBASE and land at v3
-    val landed = ManifestTable.publishStaged(spark, root, stage, Some(1L),
-      Seq("p=a" -> 1L, "p=b" -> 1L), Seq("p=b"), None, Nil, Nil,
+    val landed = ManifestTable.publishStaged(spark, root, stage,
+      ManifestTable.snapshot(spark, root, Some(1L)), Seq("p=b"), Nil, Nil,
       ManifestTable.CommitShape.Merge, dvStage = Some(dvStage))
     assert(landed == 3L)
     assert(ManifestTable.read(spark, root, schema)
@@ -1432,9 +1451,8 @@ class SourcesSpec extends SparkSuite {
     Seq((pbFile, 0L)).toDF("__f", "__pos").write.parquet(dvStage2.toString)
     ManifestTable.deleteWhere(spark, root, schema, col("id") === 1L) // v4: DV moves
     val e = intercept[IllegalStateException](
-      ManifestTable.publishStaged(spark, root, stage2, Some(3L),
-        Seq("p=a" -> 1L, "p=b" -> 1L, "p=b" -> 3L, "p=c" -> 2L), Seq("p=b"),
-        Some(3L), Nil, Nil,
+      ManifestTable.publishStaged(spark, root, stage2,
+        ManifestTable.snapshot(spark, root, Some(3L)), Seq("p=b"), Nil, Nil,
         ManifestTable.CommitShape.Merge, dvStage = Some(dvStage2)))
     assert(e.getMessage.contains("commit conflict"))
   }
@@ -1499,8 +1517,11 @@ class SourcesSpec extends SparkSuite {
         dir
       }
       win(root) // v2
-      def publish(): Long = ManifestTable.publishStaged(spark, root, stage, Some(1L),
-        base, touched, None, Nil, Nil, shape, dvStage)
+      val v1 = ManifestTable.snapshot(spark, root, Some(1L))
+      // a snapshot commit carries no base state; every other shape carries v1's
+      assert(shape == Snapshot || v1.entries.sorted == base.sorted)
+      def publish(): Long = ManifestTable.publishStaged(spark, root, stage, v1,
+        touched, Nil, Nil, shape, dvStage)
       withClue(s"$lName vs $wName: ") {
         if (want == "lands") {
           assert(publish() == 3L)
@@ -1534,8 +1555,8 @@ class SourcesSpec extends SparkSuite {
     // entry sets are IDENTICAL to the base, so the old check would rebase
     // "cleanly" and resurrect id=2 — the DV-delta check must conflict
     val e = intercept[IllegalStateException](
-      ManifestTable.publishStaged(spark, root, stage, Some(1L),
-        Seq("p=a" -> 1L, "p=b" -> 1L), Seq("p=a"), None, Nil, Nil,
+      ManifestTable.publishStaged(spark, root, stage,
+        ManifestTable.snapshot(spark, root, Some(1L)), Seq("p=a"), Nil, Nil,
         ManifestTable.CommitShape.Rewrite))
     assert(e.getMessage.contains("commit conflict"))
     assert(e.getMessage.contains("deletion vector"))
@@ -1543,8 +1564,8 @@ class SourcesSpec extends SparkSuite {
     val stage2 = new org.apache.hadoop.fs.Path(root, ".stage-rw2")
     Seq((3L, "b", 30L)).toDF("id", "p", "v")
       .write.partitionBy("p").parquet(stage2.toString)
-    val landed = ManifestTable.publishStaged(spark, root, stage2, Some(1L),
-      Seq("p=a" -> 1L, "p=b" -> 1L), Seq("p=b"), None, Nil, Nil,
+    val landed = ManifestTable.publishStaged(spark, root, stage2,
+      ManifestTable.snapshot(spark, root, Some(1L)), Seq("p=b"), Nil, Nil,
       ManifestTable.CommitShape.Rewrite)
     assert(landed == 3L)
     assert(ManifestTable.read(spark, root, schema)
@@ -2297,7 +2318,8 @@ class SourcesSpec extends SparkSuite {
       Some(PartSpec.Identity("p")))
     val f = ManifestTable.readWithMeta(spark, root, StructType(Seq(StructField("id", LongType),
       StructField("p", IntegerType), StructField("v", LongType)))).select("__f").as[String].head()
-    val e = intercept[Exception](ManifestTable.commitDelta(spark, root, v1, None,
+    val e = intercept[Exception](ManifestTable.commitDelta(spark,
+      ManifestTable.snapshot(spark, root, Some(v1)), None,
       Some(ManifestTable.collectDv(Seq((f, 1L << 31)).toDF("__f", "__pos"))),
       Some(PartSpec.Identity("p"))))
     assert(e.getMessage.contains("2^31"), e.getMessage)
@@ -2429,7 +2451,7 @@ class SourcesSpec extends SparkSuite {
       ListCountingFs.listedDataDirs.mkString(", "))
     // t.files' source: lengths from the plan's listing, no per-file stat
     ListCountingFs.clear()
-    val files = ManifestTable.liveFileSkipping(spark, root)
+    val files = ManifestTable.liveFileSkipping(spark, ManifestTable.snapshot(spark, root))
     assert(files.size == ManifestTable.detail(spark, local).map(_._3).sum)
     val fileStats = ListCountingFs.statted.toArray.toSeq.map(_.toString)
       .filter(_.contains("/part-"))
@@ -2507,6 +2529,55 @@ class SourcesSpec extends SparkSuite {
     assert(lists <= 2, s"CALL system.vacuum listed the table root $lists times")
   }
 
+  test("a path-first mergeDv resolves its table once: 2 root listings, 2 manifest and 1 _ddl.json status") {
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", classOf[ListCountingFs].getName)
+    val local = Files.createTempDirectory("manmbud").toString + "/t"
+    val root = "cntfs://" + local
+    val schema = StructType.fromDDL("id BIGINT, p STRING, v BIGINT")
+    val spec = Some(PartSpec.Identity("p"))
+    ManifestTable.commit(Seq((1L, "a", 1L), (2L, "b", 2L)).toDF("id", "p", "v"), root, spec)
+    for (i <- 1 to 3)
+      ManifestTable.mergeDv(Seq((1L, "a", i * 10L)).toDF("id", "p", "v"), root, schema,
+        Seq("id"), spec)
+    ListCountingFs.clear()
+    ManifestTable.mergeDv(Seq((2L, "b", 99L)).toDF("id", "p", "v"), root, schema, Seq("id"), spec)
+    val io = (ListCountingFs.listsOf(local),
+      ListCountingFs.statusCallsOf(local)(_.startsWith("_manifest.")),
+      ListCountingFs.statusCallsOf(local)(_ == "_ddl.json"))
+    assert(io._1 <= 2 && io._2 <= 2 && io._3 <= 1,
+      s"(root listings, manifest status, _ddl.json status) = $io")
+    assert(ManifestTable.read(spark, local, schema).as[(Long, String, Long)].collect().toSet ==
+      Set((1L, "a", 30L), (2L, "b", 99L)))
+  }
+
+  test("SQL UPDATE and MERGE resolve their table once: 3 root listings, 2 manifest status") {
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", classOf[ListCountingFs].getName)
+    val dir = Files.createTempDirectory("graft-cat-bud").toString
+    spark.conf.set("spark.sql.catalog.gbud", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gbud.warehouse", "cntfs://" + dir)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gbud.db")
+    spark.sql("CREATE TABLE gbud.db.t (k BIGINT, v STRING, p STRING) PARTITIONED BY (p) " +
+      "TBLPROPERTIES ('statsCols'='k', 'bloomCols'='v')")
+    spark.sql("INSERT INTO gbud.db.t SELECT id, 'a', CAST(id % 3 AS STRING) FROM range(30)")
+    spark.range(25, 35).selectExpr("id AS k", "'m' AS v", "CAST(id % 3 AS STRING) AS p")
+      .createOrReplaceTempView("gbud_src")
+    val local = s"$dir/db/t"
+    def io(sql: String): (Int, Int) = {
+      ListCountingFs.clear()
+      spark.sql(sql)
+      (ListCountingFs.listsOf(local), ListCountingFs.statusCallsOf(local)(_.startsWith("_manifest.")))
+    }
+    val update = io("UPDATE gbud.db.t SET v = 'u' WHERE k = 3")
+    val merge = io("MERGE INTO gbud.db.t t USING gbud_src s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *")
+    assert(update._1 <= 3 && update._2 <= 2 && merge._1 <= 3 && merge._2 <= 2,
+      s"(root listings, manifest status): UPDATE $update, MERGE $merge")
+    assert(spark.sql("SELECT count(*), count_if(v = 'm'), count_if(v = 'u') FROM gbud.db.t")
+      .collect().head.toSeq == Seq(35L, 10L, 1L))
+  }
+
   test("snapshot read: an unpartitioned-era layout beside an identity layout reads every row once") {
     import spark.implicits._
     import graft.sources.ManifestTable
@@ -2575,6 +2646,11 @@ object ListCountingFs {
   def listsOf(dir: String): Int = at(listed, dir)
   /** `exists` and `getFileStatus` probes of `dir` itself. */
   def probesOf(dir: String): Int = at(probed, dir) + at(statted, dir)
+  /** `getFileStatus` calls on the files directly under `dir` whose name passes `name`. */
+  def statusCallsOf(dir: String)(name: String => Boolean): Int = statted.toArray.count { x =>
+    val p = x.asInstanceOf[org.apache.hadoop.fs.Path]
+    p.getParent != null && p.getParent.toUri.getPath == dir && name(p.getName)
+  }
   /** The data version dirs listed, as `v########/<partition dir>` strings. */
   def listedDataDirs: Seq[String] = listed.toArray.toSeq.map(_.toString)
     .flatMap(s => "/(v\\d{8}/.*)$".r.findFirstMatchIn(s).map(_.group(1)))
