@@ -3791,7 +3791,8 @@ object Queries {
           .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("s"))
           .withColumn("stage", lit(stage))
       val masked = agg(ManifestTable.read(s, root, schema), "dv")
-      ManifestTable.compact(s, root, schema, Some(PartSpec.Identity("o_orderpriority")))
+      ManifestTable.compact(s, ManifestTable.snapshot(s, root), schema,
+        Some(PartSpec.Identity("o_orderpriority")))
       val compacted = agg(ManifestTable.read(s, root, schema), "compacted")
       masked.unionByName(compacted)
         .select(col("stage"), col("o_orderpriority"), col("n"), col("s"))

@@ -755,7 +755,8 @@ object StressBench {
         }
         graft.sources.ManifestTable.deleteWhere(spark, root, schema,
           col("id") % 977 === 0)
-        graft.sources.ManifestTable.compact(spark, root, schema, Some(PartSpec.Identity("p")))
+        graft.sources.ManifestTable.compact(spark,
+          graft.sources.ManifestTable.snapshot(spark, root), schema, Some(PartSpec.Identity("p")))
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"""[stress] {"op":"commit_full","factor":$f,"commits":6,"sec":$sec%.2f,"sec_per_commit":${sec / 6}%.3f}""")
       }
@@ -969,11 +970,12 @@ object StressBench {
                 lit("p0").as("p"), (col("id") * 0.5).as("v")),
               root, Some(PartSpec.Identity("p")))
           val t0 = System.nanoTime()
+          val snap = graft.sources.ManifestTable.snapshot(spark, root)
           if (mode == "table")
-            graft.sources.ManifestTable.compact(spark, root, schema, Some(PartSpec.Identity("p")))
+            graft.sources.ManifestTable.compact(spark, snap, schema, Some(PartSpec.Identity("p")))
           else
             graft.sources.ManifestTable.compactPartition(
-              spark, root, schema, PartSpec.Identity("p"), "p0")
+              spark, snap, schema, PartSpec.Identity("p"), "p0")
           val sec = (System.nanoTime() - t0) / 1e9
           val v = graft.sources.ManifestTable.currentVersion(spark, root).get
           val written = dirBytes(new java.io.File(f"$root/v$v%08d"))
@@ -1143,8 +1145,8 @@ object StressBench {
     }
     // SCAN-STATISTICS JOIN BENEFIT (r18): what the post-pruning size
     // estimate unlocks — a fact table joined to a partition-pruned slice
-    // of a catalog dimension. With the ForwardV1ScanStats rule the pruned
-    // slice reports its real (small) bytes and auto-broadcasts; the
+    // of a catalog dimension. The catalog scan's statistics let the pruned
+    // slice report its real (small) bytes and auto-broadcast; the
     // control forces the no-stats outcome (sort-merge, via
     // autoBroadcastJoinThreshold=-1 — exactly what a Long.Max size
     // estimate produces at any threshold). The gap is the price every

@@ -3,20 +3,21 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.{expressions => E}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform, Expression => VExpr, Literal => VLit}
 import org.apache.spark.sql.connector.expressions.filter.{AlwaysFalse, AlwaysTrue, Predicate, And => VAnd, Not => VNot, Or => VOr}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
-import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, LocalScan, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics}
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, MapType, MetadataBuilder, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -60,10 +61,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the source-side join and writes only the delta; the unmatched 99.99% of
   * the table is never rewritten.
   *
-  * Reads reuse the V1 relation's file-skipping pruning verbatim
-  * ([[GraftRelation.buildScan]] behind a [[V1Scan]] adapter), so zone
-  * maps, Blooms, and IN-list probes prune files under catalog-resolved
-  * scans exactly as under path-resolved ones; `__f`/`__pos` surface as
+  * Reads plan through the V1 relation's hint extraction
+  * ([[GraftRelation.hints]]) into one [[GraftScan]], so zone maps,
+  * Blooms, and IN-list probes prune files under catalog-resolved scans
+  * exactly as under path-resolved ones; `__f`/`__pos` surface as
   * METADATA COLUMNS ([[SupportsMetadataColumns]]) for row provenance.
   *
   * Snapshot isolation: a row-level operation pins the table's current
@@ -318,7 +319,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     if (!isTable(root)) throw new NoSuchTableException(ident)
     val cur = GraftDdl.load(spark, root)
     var schema = cur.flatMap(_.schema).getOrElse(
-      ManifestTable.inferSchema(spark, root))
+      ManifestTable.inferSchema(spark, ManifestTable.snapshot(spark, root)))
     var props = cur.map(_.props).getOrElse(Map.empty)
     // the partition specs whose integrity ALTER must protect: the current
     // spec plus every historical one (evolution keeps old dirs pruning
@@ -826,7 +827,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
   // `bucket(n, col)` partition transform ([[PartSpec.Bucket]]). Exposing
   // it through [[FunctionCatalog]] is what lets the analyzer's
   // V2ScanPartitioningAndOrdering rule resolve the `KeyGroupedPartitioning`
-  // a [[GraftSpjScan]] reports into a catalyst TransformExpression — the
+  // a key-grouped [[GraftScan]] reports into a catalyst TransformExpression — the
   // storage-partitioned-join seam (two graft tables bucketed the same way
   // join with ZERO Exchange). Both join sides resolve the same
   // canonicalName, so compatibility holds across catalog instances.
@@ -1553,8 +1554,8 @@ private[graft] object GraftDdl {
   }
 }
 
-/** One graft table as a V2 [[Table]]: reads via the V1-scan adapter
-  * (zone/Bloom file skipping intact), writes via the V1 write fallback
+/** One graft table as a V2 [[Table]]: reads via [[GraftScan]] (zone/Bloom
+  * file skipping intact), writes via the V1 write fallback
   * (blind-append / snapshot commits), metadata-only DELETE via
   * [[SupportsDeleteV2]], and delta-based row-level DML via
   * [[SupportsRowLevelOperations]] — see [[GraftCatalog]] for the surface.
@@ -1591,7 +1592,8 @@ class GraftV2Table(val root: String, displayName: String, asOf: Option[Long],
   override def name(): String = displayName
 
   override lazy val schema: StructType =
-    ddl.flatMap(_.schema).getOrElse(ManifestTable.inferSchema(spark, root, asOf))
+    ddl.flatMap(_.schema).getOrElse(
+      ManifestTable.inferSchema(spark, ManifestTable.snapshot(spark, root, asOf)))
 
   /** Field ids ([[FieldIds]]) — empty for pre-field-id tables. */
   private[sources] lazy val fieldIds: Map[String, Int] =
@@ -1638,7 +1640,7 @@ class GraftV2Table(val root: String, displayName: String, asOf: Option[Long],
       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
 
   override def metadataColumns(): Array[MetadataColumn] =
-    Array(GraftMetaColumns.File, GraftMetaColumns.Pos)
+    GraftMetaColumns.columns
 
   /** The V1 streaming fallback (see class doc): consulted ONLY on the
     * `readStream.table` / `writeStream.toTable` analyzer paths, never for
@@ -1809,28 +1811,19 @@ private[sources] class StagedGraftTable(ident: Identifier, stagingRoot: String,
   }
 }
 
-private[sources] object GraftMetaColumns {
-  val File: MetadataColumn = new MetadataColumn {
-    override def name: String = "__f"
-    override def dataType: org.apache.spark.sql.types.DataType = StringType
+/** The deletion-vector coordinates of a row: `__f`, the scheme-free path
+  * of its parquet file, and `__pos`, its row index in that file.
+  */
+private[graft] object GraftMetaColumns {
+  val Schema: StructType = StructType(Seq(StructField("__f", StringType, nullable = false),
+    StructField("__pos", LongType, nullable = false)))
+  val columns: Array[MetadataColumn] = Schema.fields.map(f => new MetadataColumn {
+    override def name: String = f.name
+    override def dataType: DataType = f.dataType
     override def isNullable: Boolean = false
-    override def comment: String = "scheme-free path of the row's parquet file"
-  }
-  val Pos: MetadataColumn = new MetadataColumn {
-    override def name: String = "__pos"
-    override def dataType: org.apache.spark.sql.types.DataType = LongType
-    override def isNullable: Boolean = false
-    override def comment: String = "row index within the file (deletion-vector coordinate)"
-  }
+  })
 }
 
-/** Scan builder shared by plain reads and row-level-operation target
-  * scans. Filters push as HINTS (zone ranges / Bloom points prune files;
-  * Spark re-applies every predicate — the correct file-skipping posture),
-  * columns prune, and a required schema containing `__f`/`__pos` switches
-  * to the with-metadata snapshot read (no file skipping there: a DML scan
-  * must see every candidate row of its pinned version).
-  */
 /** The canonical V2 partition-transform functions — each replays EXACTLY
   * the expression its [[PartSpec]] leaf writes directories with, so
   * Spark's storage-partitioned-join machinery can (a) resolve a reported
@@ -1913,114 +1906,14 @@ private[sources] object GraftPartFunctions {
     }
 }
 
-/** Storage-partitioned scan (r20): when a declared bucket-bearing table's
-  * snapshot is cleanly layout-clustered ([[ManifestTable.spjLayout]] —
-  * a single `bucket(n, col)` leaf, or a composite of time transforms plus
-  * a bucket, the `days(ts), bucket(n, k)` production layout), the scan
-  * plans ONE key-grouped input partition per partition tuple and reports
-  * `KeyGroupedPartitioning(transforms, |groups|)` — so an equi-join of
-  * two same-spec tables on the bucket column plans with ZERO Exchange
-  * (Spark's storage-partitioned join, the reason to bucket a fact–fact
-  * join at 100 TB). Composite layouts additionally need Spark's
-  * `spark.sql.sources.v2.bucketing.pushPartValues.enabled` (pad days one
-  * side lacks) and, when joining on the bucket key alone,
-  * `spark.sql.sources.v2.bucketing.allowJoinKeysSubsetOfPartitionKeys
-  * .enabled` — both Spark's own SPJ switches, same as Iceberg. Rows are
-  * read by Spark's own V2 parquet reader factory
-  * ([[org.apache.spark.sql.graft.SpjBridge]]) over exactly the file set
-  * the ordinary scan would read (same dir pruning, same zone/Bloom file
-  * skipping — the one [[ManifestTable.planPrune]] plan both scans share),
-  * so results are identical to the V1 path — only the physical
-  * partitioning differs. Eligibility is checked per scan; anything
-  * irregular (DV present, evolved layout, other transforms, metadata
-  * columns, time travel) falls back to [[GraftV1ScanImpl]].
-  */
-private[sources] class GraftSpjScan(session: SparkSession, tableSchema: StructType,
-                                    required: StructType, filters: Array[Filter],
-                                    plan: ManifestTable.PrunePlan,
-                                    leaves: Seq[PartSpec],
-                                    groups: Seq[(Seq[Any], Seq[(String, Long)])])
-    extends Scan with org.apache.spark.sql.connector.read.Batch
-    with org.apache.spark.sql.connector.read.SupportsReportPartitioning
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-
-  override def readSchema(): StructType = required
-  override def toBatch: org.apache.spark.sql.connector.read.Batch = this
-
-  private def v2Transform(leaf: PartSpec): Transform = leaf match {
-    case b: PartSpec.Bucket => Expressions.bucket(b.n, b.source)
-    case d: PartSpec.Days => Expressions.days(d.source)
-    case h: PartSpec.Hours => Expressions.hours(h.source)
-    case m: PartSpec.Months => Expressions.months(m.source)
-    case y: PartSpec.Years => Expressions.years(y.source)
-    case other => throw new IllegalStateException(
-      s"spjLayout admitted a non-SPJ transform: ${other.render}")
-  }
-
-  override def outputPartitioning()
-      : org.apache.spark.sql.connector.read.partitioning.Partitioning =
-    new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-      leaves.map(l => v2Transform(l): VExpr).toArray, groups.size)
-
-  override def planInputPartitions()
-      : Array[org.apache.spark.sql.connector.read.InputPartition] =
-    groups.zipWithIndex.map { case ((key, files), i) =>
-      org.apache.spark.sql.graft.SpjBridge.keyedPartition(i, key, files)
-    }.toArray
-
-  // the PLANNING session, captured at construction: createReaderFactory
-  // runs at execution time on whatever thread drives the job, where
-  // SparkSession.active can be a DIFFERENT session (a q212-style
-  // newSession Dataset collected from the parent session's thread) — the
-  // factory must snapshot the conf the plan was built under
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    org.apache.spark.sql.graft.SpjBridge.parquetReaderFactory(
-      session, tableSchema, required, filters)
-
-  // byte/row/NDV statistics are layout-independent: the V1 scan's, of the same plan
-  private lazy val stats =
-    GraftV1ScanImpl.statistics(session, plan.snap, tableSchema, required, Some(plan))
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = stats
-
-  override def description(): String =
-    s"GraftSpjScan(root=${plan.snap.root}, spec=${leaves.map(_.render).mkString(",")}, " +
-      s"groups=${groups.size}, files=${groups.map(_._2.size).sum})"
-}
-
-private[sources] object GraftSpjScan {
-  /** The scan when eligible — gated on Spark's own SPJ switch
-    * (`spark.sql.sources.v2.bucketing.enabled`) so default sessions keep
-    * the V1 plan shape byte-for-byte. `plan` is the fallback V1 scan's
-    * plan of the same snapshot, so either scan lists the snapshot once.
-    */
-  def forTable(spark: SparkSession, tableSchema: StructType,
-               required: StructType, filters: Array[Filter],
-               plan: => Option[ManifestTable.PrunePlan]): Option[Scan] = {
-    if (!spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean)
-      return None
-    if (required.isEmpty ||
-        required.fieldNames.exists(n => n == "__f" || n == "__pos")) return None
-    val p = plan.getOrElse(return None)
-    ManifestTable.spjLayout(p).map {
-      case (leaves, groups) =>
-        // the reported clustering transforms resolve against the scan
-        // OUTPUT: a pruned-away source column (joining on k without
-        // selecting ts under a days(ts),bucket(n,k) spec) would silently
-        // drop the partitioning — keep leaf sources in the read schema
-        // (legal: pruning is best-effort, Spark projects above the scan)
-        val withSources = StructType(required.fields ++
-          leaves.map(_.source).distinct
-            .filterNot(required.fieldNames.contains)
-            .flatMap(c => tableSchema.fields.find(_.name == c)))
-        new GraftSpjScan(spark, tableSchema, withSources, filters, p, leaves, groups)
-    }
-  }
-}
-
-/** `pinned`: the row-level operation's snapshot its scan reads; otherwise
-  * every [[build]] resolves a fresh one (`asOf`, else the head), so a
-  * reused DataFrame sees later commits.
+/** Scan builder shared by plain reads and row-level-operation target
+  * scans. Filters push as HINTS (zone ranges / Bloom points prune files;
+  * Spark re-applies every predicate — the correct file-skipping posture),
+  * columns prune, and a required schema containing `__f`/`__pos` reads
+  * the file-identity columns. `pinned`: the row-level operation's snapshot
+  * its scan reads; otherwise each builder resolves ONE fresh snapshot
+  * (`asOf`, else the head) that aggregate pushdown, statistics, SPJ and
+  * the read share, so a reused DataFrame sees later commits.
   */
 private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
                                         asOf: Option[Long],
@@ -2034,6 +1927,8 @@ private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
   // supportCompletePushDown and pushAggregation both plan the same
   // Aggregation; cache by reference so the metadata pass runs once
   private var planned: Option[(Aggregation, Option[(StructType, Array[Any])])] = None
+  private lazy val snap: ManifestTable.Snapshot =
+    pinned.getOrElse(ManifestTable.snapshot(SparkSession.active, root, asOf))
 
   override def pushFilters(fs: Array[Filter]): Array[Filter] = {
     filters = fs
@@ -2043,17 +1938,7 @@ private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
   override def pushedFilters(): Array[Filter] = filters
 
   override def pruneColumns(requiredSchema: StructType): Unit =
-    // accept TOP-LEVEL pruning only: Spark also offers NESTED-pruned
-    // struct layouts here (struct<conf> for a tags[0].conf query), but
-    // this scan delegates to a V1 relation whose buildScan selects whole
-    // top-level columns — advertising the nested-pruned readSchema while
-    // producing full structs makes the engine misread the rows
-    // POSITIONALLY (garbage doubles, r18 find). Swapping each required
-    // field's type back to the table's declared type keeps the contract
-    // honest; `__f`/`__pos` metadata columns aren't in the table schema
-    // and pass through as requested.
-    required = StructType(requiredSchema.fields.map(f =>
-      tableSchema.fields.find(_.name == f.name).getOrElse(f)))
+    required = GraftScan.topLevel(tableSchema, requiredSchema)
 
   // ------------- metadata-only COMPLETE aggregate pushdown --------------
   // A global (no GROUP BY, no residual filter) COUNT(*) / MIN / MAX is the
@@ -2087,7 +1972,6 @@ private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
     if (asOf.isDefined || pinned.isDefined || filters.nonEmpty ||
         agg.groupByExpressions().nonEmpty) return None
     val spark = SparkSession.active
-    val snap = ManifestTable.snapshot(spark, root)
     val fields = scala.collection.mutable.ArrayBuffer[StructField]()
     val values = scala.collection.mutable.ArrayBuffer[Any]()
     lazy val countStar: Long =
@@ -2099,12 +1983,12 @@ private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
       case _ => None
     }
     def minMax(column: VExpr, wantMax: Boolean): Boolean = fieldOf(column) match {
-      case Some(f) if "LD".exists(GraftV1ScanImpl.boundValue(f.dataType, _, "0").isDefined) =>
+      case Some(f) if "LD".exists(GraftScan.boundValue(f.dataType, _, "0").isDefined) =>
         boundsOf.getOrElseUpdate(f.name,
           ManifestTable.colBounds(spark, snap, f.name)) match {
           case Some(b) =>
             val v = b.map { case (tag, mn, mx) =>
-              GraftV1ScanImpl.boundValue(f.dataType, tag, if (wantMax) mx else mn) }
+              GraftScan.boundValue(f.dataType, tag, if (wantMax) mx else mn) }
             // a zone tag that does not fit the column's type declines —
             // only an all-NULL column (b = None) answers NULL
             if (v.exists(_.isEmpty)) return false
@@ -2136,49 +2020,188 @@ private[sources] class GraftScanBuilder(root: String, tableSchema: StructType,
         s"GraftMetadataAggregate(root=$root, ${aggSchema.fieldNames.mkString(",")})"
     }
     case None =>
-      // ONE snapshot per build: statistics, SPJ eligibility and the read share it
       val spark = SparkSession.active
-      val v1 = new GraftV1ScanImpl(pinned.getOrElse(ManifestTable.snapshot(spark, root, asOf)),
-        tableSchema, required, filters)
-      // SPJ groups the CURRENT version only: a pinned read stays on the V1 scan
-      val spj = if (asOf.isEmpty && pinned.isEmpty)
-        GraftSpjScan.forTable(spark, tableSchema, required, filters, v1.plan)
-      else None
-      spj.getOrElse(v1)
+      // the scan's ONE plan of its snapshot, pruned by the pushed filters
+      // whatever version the snapshot pins; None for a never-committed table
+      val plan = snap.version.map { _ =>
+        val (ranges, points, pointsAny) = GraftRelation.hints(filters)
+        ManifestTable.planPrune(snap, ranges, points, pointsAny)
+      }
+      // storage-partitioned layout: the CURRENT version only, gated on
+      // Spark's own SPJ switch so default sessions keep the plain partitioning
+      val keyed =
+        if (asOf.isDefined || pinned.isDefined || required.isEmpty ||
+            required.fieldNames.exists(n => n == "__f" || n == "__pos") ||
+            !spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean) None
+        else plan.flatMap(ManifestTable.spjLayout)
+      // the reported clustering transforms resolve against the scan OUTPUT:
+      // a pruned-away source column (joining on k without selecting ts
+      // under a days(ts),bucket(n,k) spec) would silently drop the
+      // partitioning — keep leaf sources in the read schema (legal:
+      // pruning is best-effort, Spark projects above the scan)
+      val read = keyed.fold(required) { case (leaves, _) =>
+        StructType(required.fields ++ leaves.map(_.source).distinct
+          .filterNot(required.fieldNames.contains)
+          .flatMap(c => tableSchema.fields.find(_.name == c)))
+      }
+      new GraftScan(spark, plan, tableSchema, read, filters, keyed, sidecarStats = true)
   }
 }
 
-private[sources] class GraftV1ScanImpl(snap: ManifestTable.Snapshot, tableSchema: StructType,
-                                       required: StructType, filters: Array[Filter]) extends V1Scan
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+/** THE scan of a snapshot's files: catalog reads, DML target scans, SPJ
+  * reads and every [[ManifestTable.scanFiles]] frame plan as one
+  * `BatchScanExec` over one [[ManifestTable.PrunePlan]].
+  *  - Files: the plan's, minus the dirs whose partition values fail a
+  *    pushed filter (Spark re-applies every filter). A dir column the table
+  *    schema names is a partition column, cast from the dir name
+  *    (`__HIVE_DEFAULT_PARTITION__` is NULL); a hidden transform's is not.
+  *  - Partitions: Spark's own split packing, or, when `keyed`
+  *    ([[ManifestTable.spjLayout]]), one whole-file partition per tuple
+  *    reported as `KeyGroupedPartitioning` (storage-partitioned joins).
+  *  - Rows: in the read schema, via Spark's V2 parquet reader
+  *    ([[org.apache.spark.sql.graft.SpjBridge.readerFactory]]), DV-masked.
+  *  - Statistics: with `sidecarStats` (catalog scans) the plan's harvested
+  *    rows and NDVs, else file bytes alone, opening no sidecar.
+  *  - Equality: two reads of one snapshot can share one exchange.
+  */
+private[graft] class GraftScan(session: SparkSession, plan: Option[ManifestTable.PrunePlan],
+                               tableSchema: StructType, required: StructType,
+                               filters: Array[Filter],
+                               keyed: Option[(Seq[PartSpec], Seq[(Seq[Any], Seq[FileStatus])])],
+                               sidecarStats: Boolean)
+    extends Scan with Batch with SupportsReportPartitioning with SupportsReportStatistics {
+  import org.apache.spark.sql.graft.{ScanLayout, SpjBridge}
 
   override def readSchema(): StructType = required
+  override def toBatch: Batch = this
 
-  override def description(): String =
-    s"GraftScan(root=${snap.root}, version=${snap.version}, " +
-      s"columns=${required.fieldNames.mkString(",")})"
+  // resolve columns by FIELD ID when the table declares ids ([[FieldIds]])
+  // — files written under since-renamed names surface under the current
+  // name with values intact; id-less tables read by name as ever
+  private val ids = plan.fold(Map.empty[String, Int])(p =>
+    FieldIds.enable(session, p.snap.ddl.fieldIds))
 
-  /** The scan's ONE plan of its snapshot, pruned by the pushed filters
-    * whatever version the snapshot pins: the statistics estimate and the
-    * read share its listing and sidecar loads. None for a never-committed
-    * table.
+  /** Each layout (dir columns in the table schema), and each kept file
+    * with its partition values (the read schema's dir columns) and layout.
     */
-  private[sources] lazy val plan: Option[ManifestTable.PrunePlan] = snap.version.map { _ =>
-    val (ranges, points, pointsAny) = GraftRelation.hints(filters)
-    ManifestTable.planPrune(snap, ranges, points, pointsAny)
+  private lazy val (layouts: Seq[ScanLayout], files: Seq[(FileStatus, InternalRow, Int)]) = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{DEFAULT_PARTITION_NAME, unescapePathName}
+    import E.{Cast, Literal}
+    val tz = session.sessionState.conf.sessionLocalTimeZone
+    val index = scala.collection.mutable.LinkedHashMap[Seq[String], Int]()
+    val dirs = scala.collection.mutable.HashMap[Path, Option[(InternalRow, Int)]]()
+    val kept = plan.fold(Seq.empty[(Path, FileStatus)])(_.files).flatMap {
+      case (base, st) => dirs.getOrElseUpdate(st.getPath.getParent, {
+        val values = org.apache.spark.sql.graft.ManifestScan.dirColumns(base, st.getPath.getParent)
+          .filter(c => tableSchema.fieldNames.contains(c._1)).map { case (c, raw) =>
+            val dt = tableSchema(c).dataType
+            c -> Literal(if (raw == DEFAULT_PARTITION_NAME) null
+              else Cast(Literal(unescapePathName(raw)), dt, Some(tz)).eval(), dt)
+          }
+        Option.when(GraftScan.admits(filters, values.toMap)) {
+          val layout = index.getOrElseUpdate(values.map(_._1), index.size)
+          (InternalRow.fromSeq(required.fieldNames.toSeq.flatMap(n =>
+            values.find(_._1 == n).map(_._2.value))), layout)
+        }
+      }).map { case (row, layout) => (st, row, layout) }
+    }
+    val data = FieldIds.attach(StructType(tableSchema.filterNot(f =>
+      f.name == "__f" || f.name == "__pos")), ids)
+    (index.keys.toSeq.map(cols => ScanLayout(required.fieldNames.toSeq.filter(cols.contains),
+      StructType(data.filterNot(f => cols.contains(f.name))))), kept)
   }
 
-  private lazy val stats =
-    GraftV1ScanImpl.statistics(SparkSession.active, snap, tableSchema, required, plan)
+  private lazy val partitions: Array[InputPartition] = keyed match {
+    case Some((_, groups)) =>
+      val byPath = files.map(f => f._1.getPath -> f).toMap
+      groups.zipWithIndex.map { case ((key, fs), i) =>
+        SpjBridge.keyedPartition(i, key, fs.flatMap(st => byPath.get(st.getPath)))
+      }.toArray
+    case None => SpjBridge.packedPartitions(session, files).toArray
+  }
 
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-    stats
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
-  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new GraftV1TableScan(context, tableSchema, required, plan).asInstanceOf[T]
+  override def outputPartitioning(): Partitioning = keyed match {
+    case Some((leaves, groups)) =>
+      new KeyGroupedPartitioning(leaves.map(l => GraftScan.v2Transform(l): VExpr).toArray, groups.size)
+    case None => new UnknownPartitioning(partitions.length)
+  }
+
+  // the PLANNING session, captured at construction: createReaderFactory
+  // runs at execution time on whatever thread drives the job, where
+  // SparkSession.active can be a DIFFERENT session (a q212-style
+  // newSession Dataset collected from the parent session's thread) — the
+  // factory must snapshot the conf the plan was built under. One factory
+  // per scan: its DV load and broadcasts serve every copy of the plan.
+  override def createReaderFactory(): PartitionReaderFactory = readers
+  private lazy val readers = SpjBridge.readerFactory(session, FieldIds.attach(required, ids),
+    layouts, filters, plan.flatMap(p => p.dv.map(ManifestTable.dvBitmaps(session, p.snap.root, _)))
+      .filter(_.nonEmpty))
+
+  private lazy val stats = GraftScan.statistics(session, plan, tableSchema, required, sidecarStats)
+  override def estimateStatistics(): Statistics = stats
+
+  override def description(): String =
+    s"GraftScan(root=${plan.fold("")(_.snap.root)}, version=${plan.map(_.v)}, " +
+      s"columns=${required.fieldNames.mkString(",")}" + keyed.fold("") { case (leaves, groups) =>
+        s", keyGrouped=${leaves.map(_.render).mkString(",")}, groups=${groups.size}" } + ")"
+
+  private lazy val identity = (plan.map(GraftScan.planKey), required, filters.toSeq, keyed.map(_._1))
+  override def equals(o: Any): Boolean =
+    o match { case s: GraftScan => s.identity == identity; case _ => false }
+  override def hashCode(): Int = identity.hashCode
 }
 
-private[sources] object GraftV1ScanImpl {
+private[graft] object GraftScan {
+
+  /** The requested columns at their TABLE types: top-level pruning only
+    * (Spark also offers nested-pruned structs); `__f`/`__pos` pass through.
+    */
+  def topLevel(tableSchema: StructType, requested: StructType): StructType =
+    StructType(requested.fields.map(f => tableSchema.fields.find(_.name == f.name).getOrElse(f)))
+
+  /** What a plan's files are: root, version, deletion vector and paths. */
+  def planKey(p: ManifestTable.PrunePlan): Any =
+    (p.snap.root, p.v, p.dv, p.files.map(_._2.getPath.toString))
+
+  private def v2Transform(leaf: PartSpec): Transform = leaf match {
+    case b: PartSpec.Bucket => Expressions.bucket(b.n, b.source)
+    case d: PartSpec.Days => Expressions.days(d.source)
+    case h: PartSpec.Hours => Expressions.hours(h.source)
+    case m: PartSpec.Months => Expressions.months(m.source)
+    case y: PartSpec.Years => Expressions.years(y.source)
+    case other => throw new IllegalStateException(
+      s"spjLayout admitted a non-SPJ transform: ${other.render}")
+  }
+
+  /** Can a dir whose partition columns hold `values` hold rows passing
+    * every pushed filter? A filter naming a non-dir column, of an unknown
+    * shape, or failing to evaluate keeps the dir.
+    */
+  private def admits(filters: Array[Filter], values: Map[String, E.Literal]): Boolean = {
+    import org.apache.spark.sql.{sources => S}
+    def cmp(a: String, v: Any)(f: (E.Expression, E.Expression) => E.Expression) =
+      values.get(a).map(l => f(l, E.Literal.create(v, l.dataType)))
+    def expr(f: Filter): Option[E.Expression] = f match {
+      case S.EqualTo(a, v) => cmp(a, v)(E.EqualTo(_, _))
+      case S.EqualNullSafe(a, v) => cmp(a, v)(E.EqualNullSafe(_, _))
+      case S.GreaterThan(a, v) => cmp(a, v)(E.GreaterThan(_, _))
+      case S.GreaterThanOrEqual(a, v) => cmp(a, v)(E.GreaterThanOrEqual(_, _))
+      case S.LessThan(a, v) => cmp(a, v)(E.LessThan(_, _))
+      case S.LessThanOrEqual(a, v) => cmp(a, v)(E.LessThanOrEqual(_, _))
+      case S.In(a, vs) => values.get(a).map(l =>
+        E.In(l, vs.toSeq.map(E.Literal.create(_, l.dataType))))
+      case S.IsNull(a) => values.get(a).map(E.IsNull(_))
+      case S.IsNotNull(a) => values.get(a).map(E.IsNotNull(_))
+      case S.And(l, r) => for (x <- expr(l); y <- expr(r)) yield E.And(x, y)
+      case S.Or(l, r) => for (x <- expr(l); y <- expr(r)) yield E.Or(x, y)
+      case S.Not(c) => expr(c).map(E.Not(_))
+      case _ => None
+    }
+    values.isEmpty || filters.forall(f =>
+      scala.util.Try(expr(f).forall(_.eval(InternalRow.empty) == true)).getOrElse(true))
+  }
 
   /** Zone-bound string → the CATALYST value of a `tag`-typed zone ('L'
     * Long strings, 'D' Double strings) under column type `dt` — the
@@ -2212,14 +2235,18 @@ private[sources] object GraftV1ScanImpl {
     * [[ManifestTable.estimatePruned]]'s all-or-nothing contract) and NEVER
     * when a deletion vector is present (the masked rows would inflate an
     * exact-looking count into CBO's cardinality estimation; bytes alone
-    * keep their superset contract). Both catalog scans report through here.
+    * keep their superset contract). Without `sidecars`: the kept files'
+    * bytes alone, as a file-source relation reports them.
     */
-  def statistics(spark: SparkSession, snap: ManifestTable.Snapshot, tableSchema: StructType,
-                 required: StructType, plan: Option[ManifestTable.PrunePlan])
-      : org.apache.spark.sql.connector.read.Statistics = {
+  private def statistics(spark: SparkSession, plan: Option[ManifestTable.PrunePlan],
+                         tableSchema: StructType, required: StructType,
+                         sidecars: Boolean): Statistics = {
     val factor = spark.conf.get("spark.sql.sources.fileCompressionFactor", "1.0").toDouble
-    val (bytes: Long, rows: Option[Long], ndv: Map[String, Long]) = plan.fold(
-      (0L, Some(0L): Option[Long], Map.empty[String, Long]))(ManifestTable.estimatePruned)
+    val (bytes: Long, rows: Option[Long], ndv: Map[String, Long]) = plan match {
+      case None => (0L, Some(0L), Map.empty[String, Long])
+      case Some(p) if sidecars => ManifestTable.estimatePruned(p)
+      case Some(p) => (p.files.map(_._2.getLen).sum, None, Map.empty[String, Long])
+    }
     val sized = math.max(1L, (bytes * factor).toLong)
     // per-column NDV from the bloom columns' merged KMV sketches (exactly
     // the kept files — the pruned-slice distinct count CBO's join and
@@ -2231,75 +2258,61 @@ private[sources] object GraftV1ScanImpl {
     // estimate ZERO rows (probed r20) — worse than no stats at all.
     // colBounds' global bounds are a superset of any pruned slice's, the
     // safe direction for selectivity.
-    val colStats: java.util.Map[
-        org.apache.spark.sql.connector.expressions.NamedReference,
-        org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
-      val m = new java.util.HashMap[
-        org.apache.spark.sql.connector.expressions.NamedReference,
-        org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-      ndv.foreach { case (c, n) =>
-        if (required.fieldNames.contains(c)) {
-          val bounds: Option[(Any, Any)] = for {
-            f <- tableSchema.fields.find(_.name == c)
-            bs <- ManifestTable.colBounds(spark, snap, c)
-            (tag, mn, mx) <- bs
-            lo <- boundValue(f.dataType, tag, mn)
-            hi <- boundValue(f.dataType, tag, mx)
-          } yield (lo, hi)
-          m.put(org.apache.spark.sql.connector.expressions.Expressions.column(c),
-            new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
-              override def distinctCount(): java.util.OptionalLong =
-                java.util.OptionalLong.of(n)
-              override def min(): java.util.Optional[Object] = bounds match {
-                case Some((lo, _)) => java.util.Optional.of(lo.asInstanceOf[Object])
-                case None => java.util.Optional.empty()
-              }
-              override def max(): java.util.Optional[Object] = bounds match {
-                case Some((_, hi)) => java.util.Optional.of(hi.asInstanceOf[Object])
-                case None => java.util.Optional.empty()
-              }
-            })
-        }
-      }
-      m
+    import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
+    val colStats = new java.util.HashMap[NamedReference, ColumnStatistics]()
+    for (p <- plan; (c, n) <- ndv if required.fieldNames.contains(c)) {
+      val bounds: Option[(Any, Any)] = for {
+        f <- tableSchema.fields.find(_.name == c)
+        bs <- ManifestTable.colBounds(spark, p.snap, c)
+        (tag, mn, mx) <- bs
+        lo <- boundValue(f.dataType, tag, mn)
+        hi <- boundValue(f.dataType, tag, mx)
+      } yield (lo, hi)
+      colStats.put(Expressions.column(c), new ColumnStatistics {
+        override def distinctCount(): java.util.OptionalLong = java.util.OptionalLong.of(n)
+        override def min(): java.util.Optional[Object] =
+          java.util.Optional.ofNullable(bounds.map(_._1.asInstanceOf[Object]).orNull)
+        override def max(): java.util.Optional[Object] =
+          java.util.Optional.ofNullable(bounds.map(_._2.asInstanceOf[Object]).orNull)
+      })
     }
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(sized)
-      override def numRows(): java.util.OptionalLong = rows match {
-        case Some(n) => java.util.OptionalLong.of(n)
-        case None => java.util.OptionalLong.empty()
-      }
-      override def columnStats(): java.util.Map[
-          org.apache.spark.sql.connector.expressions.NamedReference,
-          org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = colStats
+    new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(sized)
+      override def numRows(): java.util.OptionalLong =
+        rows.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
+      override def columnStats(): java.util.Map[NamedReference, ColumnStatistics] = colStats
     }
   }
 }
 
-private[sources] class GraftV1TableScan(ctx: SQLContext,
-                                        tableSchema: StructType, required: StructType,
-                                        plan: Option[ManifestTable.PrunePlan])
-    extends BaseRelation with TableScan {
+/** The read-only table a [[ManifestTable.scanFiles]] frame reads: its
+  * plan's [[GraftScan]], pruned to the columns the query needs and handed
+  * the query's filters. Equal plans and schemas make equal tables.
+  */
+private[graft] class PlannedTable(spark: SparkSession, plan: ManifestTable.PrunePlan,
+                                  override val schema: StructType)
+    extends Table with SupportsRead {
 
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = required
-  override def needConversion: Boolean = false
+  override def name(): String = s"graft.${plan.snap.root}@v${plan.v}"
 
-  /** The plan the statistics used, scanned — with the `__f`/`__pos`
-    * rowId columns when the row-level DML scan asks for them.
-    */
-  override def buildScan(): RDD[Row] = {
-    val ss = ctx.sparkSession
-    val wantsMeta = required.fieldNames.exists(n => n == "__f" || n == "__pos")
-    val frame = plan match {
-      // created-but-never-committed table: an empty relation, not an error
-      case None => ss.createDataFrame(ss.sparkContext.emptyRDD[Row], required)
-      case Some(p) => ManifestTable.scanFiles(ss, tableSchema, p, wantsMeta)
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
+      private var required = schema
+      private var filters = Array.empty[Filter]
+      override def pushFilters(fs: Array[Filter]): Array[Filter] = { filters = fs; fs }
+      override def pushedFilters(): Array[Filter] = filters
+      override def pruneColumns(r: StructType): Unit = required = GraftScan.topLevel(schema, r)
+      override def build(): Scan =
+        new GraftScan(spark, Some(plan), schema, required, filters, None, sidecarStats = false)
     }
-    frame.select(required.fieldNames.map(col).toIndexedSeq: _*)
-      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
-  }
+
+  private lazy val identity = (GraftScan.planKey(plan), schema)
+  override def equals(o: Any): Boolean =
+    o match { case t: PlannedTable => t.identity == identity; case _ => false }
+  override def hashCode(): Int = identity.hashCode
 }
 
 /** INSERT INTO (append) / INSERT OVERWRITE (snapshot) via the V1 write
@@ -2415,16 +2428,9 @@ private[sources] class GraftRowLevelOperation(cmd: RowLevelOperation.Command,
       override def build(): DeltaWrite = new GraftDeltaWrite(tableSchema, base, info)
     }
 
-  override def rowId(): Array[NamedReference] =
-    Array(Expressions.column("__f"), Expressions.column("__pos"))
+  override def rowId(): Array[NamedReference] = GraftMetaColumns.Schema.fieldNames.map(Expressions.column)
 
   override def representUpdateAsDeleteAndInsert(): Boolean = true
-}
-
-private[sources] object GraftDeltaWrite {
-  val DelSchema: StructType = StructType(Seq(
-    StructField("__f", StringType, nullable = false),
-    StructField("__pos", LongType, nullable = false)))
 }
 
 private[sources] class GraftDeltaWrite(tableSchema: StructType, base: ManifestTable.Snapshot,
@@ -2439,7 +2445,7 @@ private[sources] class GraftDeltaWrite(tableSchema: StructType, base: ManifestTa
   override def toBatch(): DeltaBatchWrite = {
     val rowIdSchema =
       if (info.rowIdSchema().isPresent) info.rowIdSchema().get()
-      else GraftDeltaWrite.DelSchema
+      else GraftMetaColumns.Schema
     new GraftDeltaBatchWrite(tableSchema, base, info.schema(), rowIdSchema, staging)
   }
 }
@@ -2707,20 +2713,21 @@ private[sources] object GraftProcedures {
       override def run(args: InternalRow): Seq[InternalRow] = {
         val t = cat.tableNamed(args.getUTF8String(0).toString)
         val s = SparkSession.active
-        val spec = ManifestTable.snapshot(s, t.root).spec
+        val snap = ManifestTable.snapshot(s, t.root)
+        val spec = snap.spec
         val pv = Option(args.getUTF8String(2)).map(_.toString).filter(_.nonEmpty)
         val v = (pv, args.getInt(3)) match {
           case (Some(value), _) =>
             val sp = spec.getOrElse(throw new IllegalArgumentException(
               s"compact(partition => ...) needs a partitioned table"))
-            ManifestTable.compactPartition(s, t.root, t.schema, sp, value, args.getInt(1))
+            ManifestTable.compactPartition(s, snap, t.schema, sp, value, args.getInt(1))
           case (None, mb) if mb > 0 =>
-            val full = ManifestTable.compactTargetBytes(s, t.root,
+            val full = ManifestTable.compactTargetBytes(s, snap,
               t.schema, spec, mb.toLong * 1024L * 1024L)
             cat.clearPartSpecHistory(t.root, full) // full rewrite, as below
             full
           case (None, _) =>
-            val full = ManifestTable.compact(s, t.root, t.schema, spec, args.getInt(1))
+            val full = ManifestTable.compact(s, snap, t.schema, spec, args.getInt(1))
             // a full rewrite re-derives every row under the CURRENT spec —
             // the mixed layout (and with it, any pruning/carry-forward
             // debt of partition evolution) ends here, so retire history
@@ -2741,8 +2748,9 @@ private[sources] object GraftProcedures {
         val t = cat.tableNamed(args.getUTF8String(0).toString)
         val cols = args.getUTF8String(1).toString.split(",").map(_.trim).filter(_.nonEmpty)
         val s = SparkSession.active
-        val v = ManifestTable.compactZOrder(s, t.root, t.schema,
-          ManifestTable.snapshot(s, t.root).spec, cols.toIndexedSeq, args.getInt(2))
+        val snap = ManifestTable.snapshot(s, t.root)
+        val v = ManifestTable.compactZOrder(s, snap, t.schema, snap.spec,
+          cols.toIndexedSeq, args.getInt(2))
         cat.clearPartSpecHistory(t.root, v) // full rewrite: mixed layout ends
         Seq(row(v))
       }

@@ -81,7 +81,8 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
                            parameters: Map[String, String]): StructType =
     schema.orElse( // declared-over-inferred, as in the batch createRelation
       GraftDdl.load(sqlContext.sparkSession, root(parameters)).flatMap(_.schema))
-      .getOrElse(ManifestTable.inferSchema(sqlContext.sparkSession, root(parameters)))
+      .getOrElse(ManifestTable.inferSchema(sqlContext.sparkSession,
+        ManifestTable.snapshot(sqlContext.sparkSession, root(parameters))))
 
   override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
                             providerName: String,
@@ -135,7 +136,8 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
     // and new column names (the union across file generations), where the
     // declared schema reads every generation under the current names by id
     val schema = GraftDdl.load(sqlContext.sparkSession, r).flatMap(_.schema)
-      .getOrElse(ManifestTable.inferSchema(sqlContext.sparkSession, r, asOf))
+      .getOrElse(ManifestTable.inferSchema(sqlContext.sparkSession,
+        ManifestTable.snapshot(sqlContext.sparkSession, r, asOf)))
     if (wantsCdf(parameters)) cdfRelation(sqlContext, parameters, schema)
     else GraftRelation(sqlContext, r, schema, asOf)
   }
@@ -327,7 +329,7 @@ object GraftRelation {
   /** V1 `Filter` → (zone ranges, bloom points, IN-list any-of probes).
     * Unrecognized shapes yield no hint — an unpruned (correct, superset)
     * scan. Shared by the relation's own pruned scan and the catalog
-    * scans' plans ([[GraftV1ScanImpl]], [[GraftSpjScan]]).
+    * scan's plan ([[GraftScanBuilder]]).
     */
   def hints(filters: Array[Filter])
       : (Seq[ManifestTable.ColRange], Seq[(String, Any)], Seq[(String, Seq[Any])]) = {

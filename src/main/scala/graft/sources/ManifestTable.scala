@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graft.{KeyProbe, ManifestScan}
+import org.apache.spark.sql.graft.{KeyProbe, ManifestScan, SpjBridge}
 import org.apache.spark.sql.types.StructType
 
 /** Minimal manifest-committed table — the transactional-MERGE seam the CDC
@@ -915,12 +915,12 @@ object ManifestTable {
     * `asOfVersion`, TIME TRAVEL to any still-on-disk manifest (immutable
     * version dirs make every historical snapshot a plain read; [[vacuum]]
     * bounds how far back this reaches). `schema` pins column types across
-    * versions (include the partition column — Spark resolves it from the
+    * versions (include the partition column — the scan casts it from the
     * hive-style dir names); columns absent from older physical files read
     * as NULL, which is exactly additive schema evolution. The unhinted
-    * [[planPrune]] of the version, scanned: one file-source relation per
-    * partition layout. A version no manifest on disk holds (vacuumed or
-    * never committed) fails with an `IllegalStateException`.
+    * [[planPrune]] of the version, scanned ([[scanFiles]]). A version no
+    * manifest on disk holds (vacuumed or never committed) fails with an
+    * `IllegalStateException`.
     */
   def read(spark: SparkSession, root: String, schema: StructType,
            asOfVersion: Option[Long] = None): DataFrame =
@@ -939,24 +939,9 @@ object ManifestTable {
     scanFiles(spark, schema, planPrune(snapshot(spark, root, asOfVersion)),
       withMeta = true)
 
-  /** Scheme-free path: `file:///a/b` and `file:/a/b` both normalize to
-    * `/a/b`, so a deletion vector's stored paths compare stably against
-    * `_metadata.file_path` regardless of how the scheme rendered.
-    */
-  private def normPath(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.regexp_replace
-    regexp_replace(c, SchemeRx, "/")
-  }
-  private val SchemeRx = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
-
-  /** The [[normPath]] key of a listed data file: Spark's `_metadata.file_path`
-    * is the path's URI string (spaces and `%` escaped), not `Path.toString`.
-    */
-  private def fileKey(p: Path): String = p.toUri.toString.replaceFirst(SchemeRx, "/")
-
   // ---------------- deletion vectors (per-file row bitmaps) ---------------
   //
-  // A deletion vector maps each data file's [[normPath]] key (`__f`) to a
+  // A deletion vector maps each data file's `__f` key (SpjBridge.fileKey) to a
   // Roaring bitmap of its masked parquet row indexes (`__pos`) — the Delta
   // and Iceberg v3 DV shape. `d<v>/` holds ONE driver-written file of them
   // (`DvFile`), so a DV commit runs no Spark write job and a masked scan no
@@ -989,7 +974,7 @@ object ManifestTable {
     })
 
   /** Deletion vector `d<d>` of `root` as per-file bitmaps, on the driver. */
-  private def dvBitmaps(spark: SparkSession, root: String, d: Long): Dv = {
+  private[graft] def dvBitmaps(spark: SparkSession, root: String, d: Long): Dv = {
     val (fs, rootP) = fsOf(spark, root)
     val dir = new Path(rootP, "d" + fmt(d))
     val file = new Path(dir, DvFile)
@@ -1104,46 +1089,15 @@ object ManifestTable {
       .escapePathName(String.valueOf(x))
   }
 
-  /** The scan of `plan`'s files under `schema0` with the rows its version's
-    * deletion vector (if any) masks filtered out: one file-source relation
-    * per partition layout ([[ManifestScan.relations]]), however many data
-    * versions hold the files. `withMeta = true` keeps the `__f`/`__pos`
-    * file identity columns (scheme-free path + parquet row index) the DV
-    * machinery keys on; otherwise the result carries exactly `schema0`.
-    * Every snapshot read is this scan — the one place the DV filter and
-    * the field ids apply.
+  /** `plan`'s files under `schema0`, the rows its deletion vector masks
+    * dropped: a frame over the plan's ONE [[GraftScan]]. `withMeta = true`
+    * appends the `__f`/`__pos` columns (scheme-free path + parquet row
+    * index) the DV machinery keys on.
     */
   private[graft] def scanFiles(spark: SparkSession, schema0: StructType,
                                plan: PrunePlan, withMeta: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    // resolve columns by FIELD ID when the table declares ids ([[FieldIds]])
-    // — files written under since-renamed names surface under the current
-    // name with values intact; id-less tables read by name as ever
-    val schema = FieldIds.attach(schema0, FieldIds.enable(spark, plan.snap.ddl.fieldIds))
-    val needMeta = withMeta || plan.dv.isDefined
-    val cols = schema.fieldNames.toSeq.map(col)
-    val meta = Seq(normPath(col("_metadata.file_path")).as("__f"),
-      col("_metadata.row_index").as("__pos"))
-    val metaSchema = StructType(schema.fields
-      :+ org.apache.spark.sql.types.StructField("__f", org.apache.spark.sql.types.StringType)
-      :+ org.apache.spark.sql.types.StructField("__pos", org.apache.spark.sql.types.LongType))
-    // re-select each relation to its contract BEFORE the union: file
-    // sources put partition columns LAST whatever the schema order
-    val rels = ManifestScan.relations(spark, schema, plan.files)
-      .map(_.select(cols ++ (if (needMeta) meta else Nil): _*))
-    // no files (e.g. an all-invalid first batch) is an empty table
-    val assembled =
-      if (rels.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], if (needMeta) metaSchema else schema)
-      else rels.reduce(_ unionByName _)
-    // the DV rides a broadcast variable (no job) into a position filter
-    val masked = plan.dv.map(dvBitmaps(spark, plan.snap.root, _)).filter(_.nonEmpty).fold(assembled) { m =>
-      val bc = spark.sparkContext.broadcast(m)
-      val live = org.apache.spark.sql.functions.udf((f: String, pos: Long) =>
-        !bc.value.get(f).exists(b => pos <= Int.MaxValue && b.contains(pos.toInt)))
-      assembled.filter(live(col("__f"), col("__pos")))
-    }
-    masked.select(cols ++ (if (withMeta) Seq(col("__f"), col("__pos")) else Nil): _*)
+    val meta = if (withMeta) GraftMetaColumns.Schema else Nil
+    SpjBridge.frame(spark, new PlannedTable(spark, plan, StructType(SpjBridge.nullable(schema0) ++ meta)))
   }
 
   // ===================== zone maps (file skipping) ======================
@@ -1662,7 +1616,7 @@ object ManifestTable {
     estimatePruned(planPrune(snapshot(spark, root, Some(v)), ranges, points, pointsAny))
 
   /** [[estimatePruned]] of an already planned prune — one plan serves a
-    * catalog scan's statistics and its read ([[scanFiles]]).
+    * catalog scan's statistics and its read (`GraftScan`).
     */
   private[graft] def estimatePruned(plan: PrunePlan): (Long, Option[Long], Map[String, Long]) = {
     val (fs, rootP) = (plan.snap.fs, plan.snap.rootP)
@@ -1691,29 +1645,21 @@ object ManifestTable {
   }
 
   /** Storage-partitioned-join layout probe (r20): `Some((leaves, groups))`
-    * when `plan`'s snapshot of a declared bucket-bearing table can be
-    * served as one key-grouped file set per partition tuple — each `groups`
-    * entry is (typed leaf values, the plan's kept files (qualified path,
-    * length)), so the grouping reads exactly the files the ordinary scan
-    * of the same plan would. Eligible specs: a single
-    * `bucket(n, col)` leaf, or a composite whose leaves are all
-    * bucket/days/hours/months/years WITH at least one bucket (the
-    * join-key dimension; `days(ts), bucket(n, k)` — the canonical
-    * production layout). Leaf value types match the catalog's V2 function
-    * results: Int for bucket ids, Long for time transforms. A pure
-    * single-bucket layout enumerates ALL n buckets (empty ones included —
-    * both join sides then expose identical partition-value sets);
-    * composite layouts list OBSERVED tuples only (days are unbounded),
-    * which Spark pads via `spark.sql.sources.v2.bucketing.pushPartValues`.
-    * `None` — the caller falls back to the ordinary shuffling scan,
-    * always correct — when the spec has other leaf shapes, any live entry
-    * does not conform to the current layout (evolution mix, or a NULL
-    * time value's __HIVE_DEFAULT_PARTITION__ dir), or a deletion vector
-    * is present (the raw per-bucket file read has no position-mask seam —
-    * resurrecting deleted rows is never an option).
+    * when `plan`'s snapshot of a declared bucket-bearing table can be read
+    * as one file set per partition tuple — each `groups` entry is (typed
+    * leaf values, the plan's kept files of that tuple). Eligible specs: a
+    * single `bucket(n, col)` leaf, or a composite of bucket/days/hours/
+    * months/years leaves WITH a bucket (`days(ts), bucket(n, k)`). Leaf
+    * values are Int bucket ids and Long time values, as the catalog's V2
+    * functions return them. A single-bucket layout lists ALL n buckets
+    * (both join sides then expose the same keys); composite layouts list
+    * the OBSERVED tuples, which Spark pads (`pushPartValues`). `None` —
+    * the plain scan, always correct — for other leaves, a live entry off
+    * the current layout (evolution mix, a NULL time value's default dir),
+    * or a deletion vector.
     */
   private[graft] def spjLayout(plan: PrunePlan)
-      : Option[(Seq[PartSpec], Seq[(Seq[Any], Seq[(String, Long)])])] = {
+      : Option[(Seq[PartSpec], Seq[(Seq[Any], Seq[FileStatus])])] = {
     if (plan.dv.isDefined) return None
     val leaves: Seq[PartSpec] = plan.snap.ddl.spec.map(_.leaves).getOrElse(return None)
     val eligible = leaves.nonEmpty &&
@@ -1748,7 +1694,7 @@ object ManifestTable {
     if (!plan.snap.entries.forall(e => dirValues(e._1).isDefined))
       return None
     val groups = scala.collection.mutable.LinkedHashMap[
-      Seq[Any], scala.collection.mutable.Builder[(String, Long), Seq[(String, Long)]]]()
+      Seq[Any], scala.collection.mutable.Builder[FileStatus, Seq[FileStatus]]]()
     leaves match {
       case Seq(b: PartSpec.Bucket) =>
         (0 until b.n).foreach(i => groups(Seq(i)) = Seq.newBuilder)
@@ -1759,7 +1705,7 @@ object ManifestTable {
         val key = dirValues(rel.substring(0, math.max(rel.lastIndexOf('/'), 0)))
           .getOrElse(throw new IllegalStateException(
             s"spjLayout: live file $rel escaped the checked layout"))
-        groups.getOrElseUpdate(key, Seq.newBuilder) += ((st.getPath.toString, st.getLen))
+        groups.getOrElseUpdate(key, Seq.newBuilder) += st
       }
     }
     Some((leaves, groups.toSeq.map { case (k, b) => (k, b.result()) }))
@@ -2466,7 +2412,7 @@ object ManifestTable {
       stats, blooms, CommitShape.Snapshot, ndv = ndv)
   }
 
-  /** Schema of the current (or `asOfVersion`) snapshot, inferred from the
+  /** Schema of snapshot `snap`, inferred from the
     * live data versions' parquet footers (merged across versions, so an
     * additively-evolved table reports the union) plus the hive-style
     * partition column — the schema-less front-door load path
@@ -2474,12 +2420,11 @@ object ManifestTable {
     * a version's files come from one staged write of one frame
     * ([[stageData]]; [[adoptSnapshot]] moves such a version), so they share a schema.
     */
-  def inferSchema(spark: SparkSession, root: String,
-                  asOfVersion: Option[Long] = None): StructType = {
+  def inferSchema(spark: SparkSession, snap: Snapshot): StructType = {
     import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
-    val plan = planPrune(snapshot(spark, root, asOfVersion))
-    require(plan.kept.nonEmpty, s"manifest table $root version ${plan.v} holds no partitions")
-    val conf = fsOf(spark, root)._1.getConf
+    val plan = planPrune(snap)
+    require(plan.kept.nonEmpty, s"manifest table ${snap.root} version ${plan.v} holds no partitions")
+    val conf = snap.fs.getConf
     ManifestScan.inferSchema(spark, plan.files,
       parMapOrdered(plan.kept.flatMap(_._3.headOption)) { case (_, st) =>
         new org.apache.parquet.hadoop.Footer(st.getPath, org.apache.spark.sql.execution
@@ -2652,7 +2597,8 @@ object ManifestTable {
     seeded + pending.size
   }
 
-  /** OPTIMIZE — small-file compaction: rewrite the CURRENT snapshot into a
+  /** OPTIMIZE — small-file compaction: rewrite snapshot `snap` (the
+    * caller's resolved head, the base its commit validates against) into a
     * fresh version with bounded file counts (`filesPerPartition` files per
     * partition dir; for a non-partitioned table, that many files total) and
     * commit it atomically. Rows are identical before and after; readers
@@ -2673,12 +2619,11 @@ object ManifestTable {
     * under the CURRENT `spec`, after which the carry-forward fast paths
     * reopen.
     */
-  def compact(spark: SparkSession, root: String, schema: StructType,
+  def compact(spark: SparkSession, snap: Snapshot, schema: StructType,
               spec: Option[PartSpec], filesPerPartition: Int = 1,
               statsCols: Seq[String] = Nil): Long = {
     require(filesPerPartition >= 1, s"filesPerPartition=$filesPerPartition")
     import org.apache.spark.sql.functions._
-    val snap = snapshot(spark, root)
     val df0 = read(spark, snap, schema)
     val df = spec.fold(df0)(_.derive(df0))
     // bucket count pinned (r22, as in stageWrite): an un-numbered
@@ -2715,12 +2660,11 @@ object ManifestTable {
     * smaller than the target still emit one small file each — the hive
     * layout cannot merge across directories.
     */
-  def compactTargetBytes(spark: SparkSession, root: String, schema: StructType,
+  def compactTargetBytes(spark: SparkSession, snap: Snapshot, schema: StructType,
                          spec: Option[PartSpec], targetBytes: Long,
                          statsCols: Seq[String] = Nil): Long = {
     require(targetBytes >= 1L, s"targetBytes=$targetBytes")
     import org.apache.spark.sql.functions._
-    val snap = snapshot(spark, root)
     val plan = planPrune(snap)
     val (totalBytes, _, _) = estimatePruned(plan)
     val targetFiles = math.max(1L,
@@ -2759,14 +2703,13 @@ object ManifestTable {
     * refusal — a single-partition rewrite cannot retire an evolved-away
     * layout's entries; run the full [[compact]] first.
     */
-  def compactPartition(spark: SparkSession, root: String, schema: StructType,
+  def compactPartition(spark: SparkSession, snap: Snapshot, schema: StructType,
                        spec: PartSpec, partValue: String,
                        filesPerPartition: Int = 1,
                        statsCols: Seq[String] = Nil): Long = {
     require(filesPerPartition >= 1, s"filesPerPartition=$filesPerPartition")
     import org.apache.spark.sql.functions._
     val pc = spec.physName
-    val snap = snapshot(spark, root)
     val df =
       if (spec.isIdentity) {
         // the literal is cast to the column's type so Spark's own
@@ -2824,14 +2767,13 @@ object ManifestTable {
     * clusters on (derived partition value, z), so the Z-curve stays
     * partition-local exactly as with an identity layout.
     */
-  def compactZOrder(spark: SparkSession, root: String, schema: StructType,
+  def compactZOrder(spark: SparkSession, snap: Snapshot, schema: StructType,
                     spec: Option[PartSpec], zorderBy: Seq[String],
                     targetFiles: Int, statsCols: Seq[String] = Nil): Long = {
     require(zorderBy.nonEmpty && zorderBy.size <= 3,
       s"zorderBy must hold 1-3 columns (3×16 bits keeps z positive), got ${zorderBy.size}")
     require(targetFiles >= 1, s"targetFiles=$targetFiles")
     import org.apache.spark.sql.functions._
-    val snap = snapshot(spark, root)
     val df0 = read(spark, snap, schema)
     val df = spec.fold(df0)(_.derive(df0))
     val aggs = zorderBy.flatMap(c => Seq(
@@ -2902,7 +2844,7 @@ object ManifestTable {
     * per-column zone ranges `(col, tag, min, max, allNull)` exactly as
     * [[planPrune]] evaluates them, and the columns carrying a Bloom filter.
     * Files and lengths come from the unhinted plan; paths normalize
-    * exactly like the deletion vector's keys ([[fileKey]]), so they join
+    * exactly like the deletion vector's keys (`SpjBridge.fileKey`), so they join
     * against `__f` provenance directly under any partition value. O(live
     * dirs) listings + O(data versions) sidecar reads, no data scan.
     */
@@ -2919,7 +2861,7 @@ object ManifestTable {
           .sortBy(_._1)
           .map { case (c, z) => (c, z.tag, z.minS, z.maxS, z.allNull) }
         val bloomCols = blooms.getOrElse(rel, Map.empty).keys.toSeq.sorted
-        (fileKey(st.getPath), part, dv, st.getLen, zones, bloomCols)
+        (SpjBridge.fileKey(st.getPath.toUri.toString), part, dv, st.getLen, zones, bloomCols)
       }
     }
   }
@@ -2977,7 +2919,8 @@ object ManifestTable {
       finally reader.close()
     }.sum
     val dv = plan.dv.fold(Map.empty: Dv)(dvBitmaps(spark, snap.root, _))
-    total - files.flatMap(p => dv.get(fileKey(p))).map(_.getLongCardinality).sum
+    total - files.flatMap(p => dv.get(SpjBridge.fileKey(p.toUri.toString)))
+      .map(_.getLongCardinality).sum
   }
 
   /** Rows currently masked by the table's deletion vector (0 when none) —

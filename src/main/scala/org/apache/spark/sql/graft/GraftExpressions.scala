@@ -444,9 +444,6 @@ object GraftFunctions {
     if (!spark.experimental.extraOptimizations.contains(ReplaceMd5WithFast))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ ReplaceMd5WithFast
-    if (!spark.experimental.extraOptimizations.contains(ForwardV1ScanStats))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ForwardV1ScanStats
   }
 }
 

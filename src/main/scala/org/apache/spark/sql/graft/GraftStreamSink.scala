@@ -147,8 +147,10 @@ class GraftStreamSink(sqlContext: SQLContext, root: String,
     // and where a concurrent reader's snapshot may still be mid-scan
     if (compactEvery > 0) {
       val compacting = batchId > 0 && batchId % compactEvery == 0
-      if (compacting)
-        ManifestTable.compact(spark, root, ManifestTable.inferSchema(spark, root), spec)
+      if (compacting) {
+        val head = ManifestTable.snapshot(spark, root)
+        ManifestTable.compact(spark, head, ManifestTable.inferSchema(spark, head), spec)
+      }
       ManifestTable.vacuum(spark, root, retainVersions = if (compacting) 2 else 1)
     }
   }

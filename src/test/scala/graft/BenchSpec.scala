@@ -125,7 +125,6 @@ class BenchSpec extends SparkSuite {
     // and the runtime Bloom filter
     val rules = spark.experimental.extraOptimizations
     assert(rules.contains(org.apache.spark.sql.graft.ReplaceMd5WithFast), rules)
-    assert(rules.contains(org.apache.spark.sql.graft.ForwardV1ScanStats), rules)
     assert(spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.enabled") == "true")
   }
 
@@ -189,6 +188,24 @@ class BenchSpec extends SparkSuite {
     val calls = callSites(Seq("stageWrite", "attachDf"))
     assert(calls == Seq(("ManifestTable.scala", "stageData", "attachDf("),
       ("ManifestTable.scala", "stageData", "stageWrite(")), calls)
+  }
+
+  test("GraftScan is the one scan of a snapshot's files") {
+    // no V1 bridge in the catalog and no file-source relation in the
+    // manifest layer: catalog, DML, SPJ and scanFiles reads all plan as one
+    // BatchScanExec over GraftScan
+    def src(f: String) = java.nio.file.Files.readString(java.nio.file.Paths.get(f))
+    val catalog = src("src/main/scala/graft/sources/GraftCatalog.scala")
+    assert(!catalog.contains("V1Scan") && !catalog.contains("TableScan"))
+    for (f <- Seq("src/main/scala/graft/sources/ManifestTable.scala",
+        "src/main/scala/org/apache/spark/sql/graft/ManifestScan.scala"))
+      assert(!src(f).contains("HadoopFsRelation") && !src(f).contains("baseRelationToDataFrame"), f)
+    // only GraftScan builds a parquet reader factory
+    assert(callSites(Seq("SpjBridge.readerFactory")) ==
+      Seq(("GraftCatalog.scala", "createReaderFactory", "SpjBridge.readerFactory(")))
+    assert(callSites(Seq("parquetReaderFactory", "ParquetPartitionReaderFactory")) ==
+      Seq(("SpjBridge.scala", "parquetReaderFactory", "ParquetPartitionReaderFactory("),
+        ("SpjBridge.scala", "readerFactory", "parquetReaderFactory(")))
   }
 
   test("ManifestTable.planPrune is the only main code that lists a snapshot's files") {

@@ -337,7 +337,8 @@ class CdcSpec extends SparkSuite {
     // an offline retain-0 vacuum (no concurrent readers) reclaims them once
     // a compaction has folded v1's files, which the merge-on-read commit 2
     // carried forward, into a fresh version
-    graft.sources.ManifestTable.compact(spark, tgt, partSchema, Some(PartSpec.Identity("p")))
+    graft.sources.ManifestTable.compact(spark, graft.sources.ManifestTable.snapshot(spark, tgt),
+      partSchema, Some(PartSpec.Identity("p")))
     graft.sources.ManifestTable.vacuum(spark, tgt)
     assert(!new java.io.File(s"$tgt/v00000001").exists())
     assert(!new java.io.File(s"$tgt/_manifest.00000001").exists())
@@ -624,8 +625,8 @@ class CdcSpec extends SparkSuite {
       partSchema, identity, "id", "id", "v", partCol = "p")
       .awaitTermination(60000)
     // out-of-band OPTIMIZE between micro-batches: atomic v2, self-contained
-    val v = graft.sources.ManifestTable.compact(spark, tgt, partSchema,
-      Some(PartSpec.Identity("p")))
+    val v = graft.sources.ManifestTable.compact(spark,
+      graft.sources.ManifestTable.snapshot(spark, tgt), partSchema, Some(PartSpec.Identity("p")))
     assert(v == 2L)
     graft.sources.ManifestTable.vacuum(spark, tgt)
     assert(!new java.io.File(s"$tgt/v00000001").exists())

@@ -461,29 +461,40 @@ class PlanSpec extends SparkSuite {
     assert(!fin.contains("CartesianProduct") && !fin.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  /** The final section of query `name`'s executed plan, and how many of
+    * its scans are key-grouped graft scans.
+    */
+  private def keyGroupedScans(name: String): (String, Int) = {
+    import org.apache.spark.sql.catalyst.plans.physical.KeyGroupedPartitioning
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val df = Queries.queries(name)(spark, sfDir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val keyed = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) { case s: BatchScanExec if s.scan.isInstanceOf[graft.sources.GraftScan] &&
+        s.outputPartitioning.isInstanceOf[KeyGroupedPartitioning] => s }
+    (plan.toString.split("== Initial Plan ==").head, keyed.size)
+  }
+
   test("q212: the fact–fact join rides two SPJ scans with no join-side Exchange") {
-    val p = finalPlan("q212_spj_join")
-    val fin = p.split("== Initial Plan ==").head
-    assert("GraftSpjScan".r.findAllIn(fin).size == 2,
-      s"both sides must take the key-grouped scan path:\n$p")
+    val (fin, keyed) = keyGroupedScans("q212_spj_join")
+    assert(keyed == 2, s"both sides must take the key-grouped scan path:\n$fin")
     // the aggregation above the join still shuffles (count distinct expands
     // twice); the JOIN KEYS must never — that's the storage-partitioned win
     assert(!fin.contains("hashpartitioning(l_orderkey") &&
       !fin.contains("hashpartitioning(o_orderkey"),
-      s"join keys must not reach an Exchange:\n$p")
-    assert(fin.contains("SortMergeJoin"), p)
+      s"join keys must not reach an Exchange:\n$fin")
+    assert(fin.contains("SortMergeJoin"), fin)
   }
 
   test("q214: the composite-layout self-join key-groups on (day, bucket) with no join-side Exchange") {
-    val p = finalPlan("q214_spj_composite")
-    val fin = p.split("== Initial Plan ==").head
-    assert("GraftSpjScan".r.findAllIn(fin).size == 2,
-      s"both halves must take the key-grouped scan path:\n$p")
+    val (fin, keyed) = keyGroupedScans("q214_spj_composite")
+    assert(keyed == 2, s"both halves must take the key-grouped scan path:\n$fin")
     // the aggregation above still shuffles on the event-type pair; the
     // JOIN keys (user_id, ts) must never reach an Exchange
     assert(!fin.contains("hashpartitioning(user_id"),
-      s"join keys must not reach an Exchange:\n$p")
-    assert(fin.contains("SortMergeJoin"), p)
+      s"join keys must not reach an Exchange:\n$fin")
+    assert(fin.contains("SortMergeJoin"), fin)
   }
 
   test("q191: trace joins broadcast and the top-k rank is a bounded heap, not a sort-all") {
